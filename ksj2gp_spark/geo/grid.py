@@ -78,18 +78,12 @@ def cover_bbox(
 
 
 def cover_geometry(geom, res: int) -> np.ndarray:
-    """Cell ids forming a superset cover of a Polygon/MultiPolygon."""
-    from .geom import distance_to_geometry
+    """Cell ids forming a superset cover of a Polygon/MultiPolygon
+    (ascending): the layer-wide kernel of :mod:`.cover` on one
+    geometry, see there for the sampling rule and the superset proof."""
+    from .cover import cover_geometry
 
-    minx, miny, maxx, maxy = geom.bounds()
-    size = cell_size(res)
-    cells = cover_bbox(minx, miny, maxx, maxy, res)
-    if len(cells) > 4:  # prune cells far from the polygon
-        cx, cy = cell_center(cells)
-        d = distance_to_geometry(cx, cy, geom)
-        # keep any cell whose center is within its own circumradius
-        cells = cells[d <= size * np.sqrt(2.0) / 2.0 + 1e-12]
-    return cells
+    return cover_geometry(geom, "grid", res)
 
 
 def oracle_sql_expr(lon_expr: str, lat_expr: str, res: int) -> str:

@@ -122,26 +122,12 @@ def grid_disk(cell: int, k: int = 1) -> np.ndarray:
 
 
 def cover_geometry(geom, res: int) -> np.ndarray:
-    """Hex ids forming a superset cover of a Polygon/MultiPolygon.
+    """Cell ids forming a superset cover of a Polygon/MultiPolygon
+    (ascending): the layer-wide kernel of :mod:`.cover` on one
+    geometry, see there for the sampling rule and the superset proof."""
+    from .cover import cover_geometry
 
-    Samples the bbox at half the hex inradius (guaranteeing every hex
-    overlapping the polygon contains a sample), keeps hexes whose sample
-    is within one hex diameter of the polygon — a strict cover with a
-    thin ring of false positives that exact refinement removes.
-    """
-    from .geom import distance_to_geometry
-
-    size = edge_length(res)
-    inradius = size * _SQRT3 / 2.0
-    step = inradius  # sample spacing ≤ inradius ⇒ ≥1 sample per hex
-    minx, miny, maxx, maxy = geom.bounds()
-    xs = np.arange(minx - size, maxx + size + step, step)
-    ys = np.arange(miny - size, maxy + size + step, step)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    gx, gy = gx.ravel(), gy.ravel()
-    d = distance_to_geometry(gx, gy, geom)
-    keep = d <= 2.0 * size + 1e-12  # one hex diameter
-    return np.unique(latlng_to_cell(gx[keep], gy[keep], res))
+    return cover_geometry(geom, "hex", res)
 
 
 def cell_to_boundary(cell: int) -> np.ndarray:

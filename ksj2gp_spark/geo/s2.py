@@ -227,17 +227,9 @@ def approx_edge_deg(level: int) -> float:
 
 
 def cover_geometry(geom, level: int) -> np.ndarray:
-    """S2 cell ids forming a superset cover of a Polygon/MultiPolygon
-    (fixed-level raster cover; refinement removes false positives)."""
-    from .geom import distance_to_geometry
+    """Cell ids forming a superset cover of a Polygon/MultiPolygon
+    (ascending): the layer-wide kernel of :mod:`.cover` on one
+    geometry, see there for the sampling rule and the superset proof."""
+    from .cover import cover_geometry
 
-    edge = approx_edge_deg(level)
-    step = edge / 2.0
-    minx, miny, maxx, maxy = geom.bounds()
-    xs = np.arange(minx - edge, maxx + edge + step, step)
-    ys = np.arange(miny - edge, maxy + edge + step, step)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    gx, gy = gx.ravel(), gy.ravel()
-    d = distance_to_geometry(gx, gy, geom)
-    keep = d <= 2.0 * edge * np.sqrt(2.0)
-    return np.unique(latlng_to_cell(gx[keep], gy[keep], level))
+    return cover_geometry(geom, "s2", level)

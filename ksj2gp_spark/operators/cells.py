@@ -5,10 +5,12 @@ Spark mapping (SURVEY.md §2, operators "Index"):
 * point → cell is a vectorized pandas UDF (Arrow batches, numpy inside;
   no per-row Python) — except the grid scheme, which is pure Catalyst
   integer arithmetic (whole-stage codegen, no Python at all).
-* polygon → cover is computed once per polygon; the polygons side of
-  the join is small (KSJ admin layers), so covers are built driver-side
-  and broadcast. A distributed ``applyInPandas`` path exists for large
-  layers.
+* polygon → cover is one vectorised pass over the whole layer
+  (``geo/cover.py``: scanline fill plus a band around the rasterised
+  rings, no per-polygon Python); the polygons side of the join is small
+  (KSJ admin layers), so covers are built driver-side and broadcast. A
+  distributed ``mapInPandas`` path runs the same kernel per batch for
+  large layers.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..geo import geom as geom_mod
+from ..geo import cover as cover_mod
 from ..geo import grid, hexgrid, s2, transform, wkb
 
 SCHEMES = ("hex", "s2", "grid")
@@ -179,13 +182,11 @@ def cell_pyramid(
 
 
 def cover_fn(scheme: str, res: int):
-    if scheme == "hex":
-        return lambda g: hexgrid.cover_geometry(g, res)
-    if scheme == "s2":
-        return lambda g: s2.cover_geometry(g, res)
-    if scheme == "grid":
-        return lambda g: grid.cover_geometry(g, res)
-    raise ValueError(f"unknown cell scheme: {scheme}")
+    """One-polygon cover function (the layer kernel on a single
+    geometry)."""
+    if scheme not in SCHEMES:
+        raise ValueError(f"unknown cell scheme: {scheme}")
+    return lambda g: cover_mod.cover_geometry(g, scheme, res)
 
 
 def normalize_polygons(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -231,23 +232,18 @@ def polygon_cover_pdf(
     id_col: str = "polygon_id",
     extra_cols: Iterable[str] = (),
 ) -> pd.DataFrame:
-    """Driver-side cover: long (cell, polygon_id, *extra) DataFrame.
-    The polygons layer is assumed broadcast-small (KSJ scale)."""
-    fn = cover_fn(scheme, res)
-    cells_out: list[np.ndarray] = []
-    ids_out: list[str] = []
-    extras: dict[str, list] = {c: [] for c in extra_cols}
-    for _, row in polygons.iterrows():
-        cells = fn(wkb.loads(row["geometry"]))
-        cells_out.append(cells)
-        ids_out.extend([row[id_col]] * len(cells))
-        for c in extra_cols:
-            extras[c].extend([row[c]] * len(cells))
-    data = {
-        "cell": np.concatenate(cells_out) if cells_out else np.array([], dtype=np.int64),
-        id_col: ids_out,
-    }
-    data.update(extras)
+    """Driver-side cover: long (cell, polygon_id, *extra) DataFrame,
+    polygons in layer order, each polygon's cells ascending. Built by
+    one vectorised pass over the whole layer
+    (:func:`ksj2gp_spark.geo.cover.cover_layer`); every cell the
+    per-polygon sampling rule would keep is in it. The polygons layer
+    is assumed broadcast-small (KSJ scale)."""
+    poly, cells = cover_mod.cover_layer(
+        [wkb.loads(buf) for buf in polygons["geometry"]], scheme, res
+    )
+    data = {"cell": cells, id_col: polygons[id_col].to_numpy()[poly]}
+    for c in extra_cols:
+        data[c] = polygons[c].to_numpy()[poly]
     return pd.DataFrame(data)
 
 
@@ -257,18 +253,15 @@ def polygon_cover_df(
     res: int,
     id_col: str = "polygon_id",
 ) -> DataFrame:
-    """Distributed cover for large polygon layers: one applyInPandas
-    pass, output long (cell, polygon_id). Partitioned by polygon id so
-    cover computation parallelizes across executors."""
-    fn = cover_fn(scheme, res)
+    """Distributed cover for large polygon layers: one mapInPandas
+    pass, output long (cell, polygon_id); each Arrow batch of polygons
+    goes through the layer kernel at once."""
+    if scheme not in SCHEMES:
+        raise ValueError(f"unknown cell scheme: {scheme}")
 
     def explode(batches):
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                cells = fn(wkb.loads(row["geometry"]))
-                yield pd.DataFrame(
-                    {"cell": cells, id_col: [row[id_col]] * len(cells)}
-                )
+            yield polygon_cover_pdf(pdf, scheme, res, id_col)
 
     return polygons.mapInPandas(explode, schema=f"cell long, {id_col} string")
 

@@ -22,6 +22,8 @@ through the join.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -502,11 +504,7 @@ def knn_join(
     (grid_disk) — the per-batch kernel below is unchanged by that.
     """
     spark = images.sparkSession
-    polys = normalize_polygons(polygons_pdf)
-    payload = [
-        (row["polygon_id"], row[admin_col], bytes(row["geometry"]))
-        for _, row in polys.iterrows()
-    ]
+    payload = _payload(normalize_polygons(polygons_pdf), admin_col)
     b = spark.sparkContext.broadcast(payload)
     images = images.select("image_id", lon_col, lat_col)
 
@@ -559,6 +557,13 @@ def knn_join(
     )
 
 
+def _payload(polys: pd.DataFrame, admin_col: str) -> list[tuple]:
+    """[(polygon_id, admin_code, wkb)] in layer order."""
+    return list(
+        zip(polys["polygon_id"], polys[admin_col], map(bytes, polys["geometry"]))
+    )
+
+
 def _knn_payload_and_cellmap(
     polys: pd.DataFrame, admin_col: str, res: int
 ) -> tuple[list[tuple], dict[int, list[int]]]:
@@ -572,11 +577,7 @@ def _knn_payload_and_cellmap(
     cell_map: dict[int, list[int]] = {}
     for cell, pid in zip(cover_pdf["cell"], cover_pdf["polygon_id"]):
         cell_map.setdefault(int(cell), []).append(pid_order[pid])
-    payload = [
-        (row["polygon_id"], row[admin_col], bytes(row["geometry"]))
-        for _, row in polys.iterrows()
-    ]
-    return payload, cell_map
+    return _payload(polys, admin_col), cell_map
 
 
 def _cand_meta(c: int, geo, meta: dict[int, tuple]) -> tuple:
@@ -786,9 +787,65 @@ def knn_join_pruned(
     )
 
 
+@dataclass(frozen=True)
+class PolygonIndex:
+    """The polygon side of the tile join, built once per pipeline call
+    and shipped to the executors in one broadcast.
+
+    ``layer`` is the normalised (WGS84) layer; ``cover`` the scheme
+    cover ``(cell, polygon_id, admin_code)``; ``payload`` the
+    ``(polygon_id, admin_code, wkb)`` rows in layer order; and
+    ``knn_cell_map`` the grid-``knn_res`` cell → payload-index map of
+    the ring-kNN ocean lane, or None when the layer is small enough
+    for the dense distance matrix."""
+
+    layer: pd.DataFrame
+    cover: pd.DataFrame
+    payload: list[tuple]
+    knn_cell_map: dict[int, list[int]] | None
+    scheme: str
+    res: int
+    knn_res: int
+    # the broadcast of (cover, payload, knn_cell_map), made on first use
+    _shipped: list = field(default_factory=list, repr=False, compare=False)
+
+    @classmethod
+    def build(
+        cls,
+        polygons_pdf: pd.DataFrame,
+        scheme: str = "grid",
+        res: int | None = None,
+        admin_col: str = "行政区域コード",
+        knn_dense_max: int = 64,
+        knn_res: int = 10,
+    ) -> "PolygonIndex":
+        res = res if res is not None else DEFAULT_RES[scheme]
+        polys = normalize_polygons(polygons_pdf)
+        cover = polygon_cover_pdf(polys, scheme, res, extra_cols=(admin_col,))
+        cover = cover.rename(columns={admin_col: "admin_code"})
+        if len(polys) > knn_dense_max:
+            payload, cell_map = _knn_payload_and_cellmap(polys, admin_col, knn_res)
+        else:
+            payload, cell_map = _payload(polys, admin_col), None
+        return cls(polys, cover, payload, cell_map, scheme, res, knn_res)
+
+    def broadcast(self, spark: SparkSession):
+        """The index's one broadcast, made on the first call."""
+        if not self._shipped:
+            self._shipped.append(spark.sparkContext.broadcast(
+                (self.cover, self.payload, self.knn_cell_map)
+            ))
+        return self._shipped[0]
+
+    def release(self) -> None:
+        """Destroy the broadcast; a later ``broadcast`` makes a new one."""
+        while self._shipped:
+            self._shipped.pop().destroy()
+
+
 def fused_assign_or_knn(
     images: DataFrame,
-    polygons_pdf: pd.DataFrame,
+    polygons_pdf: pd.DataFrame | PolygonIndex,
     scheme: str = "grid",
     res: int | None = None,
     k: int = 3,
@@ -809,6 +866,12 @@ def fused_assign_or_knn(
     rows emit ``rank = 0``, ocean rows emit ranks ``1..k`` with their
     distance.
 
+    ``polygons_pdf`` is a pandas layer, or a :class:`PolygonIndex`
+    built for the same ``scheme`` and ``res``: the pipelines build one
+    per call and pass it to every chunk, so the cover is built and
+    broadcast once (``admin_col``, ``knn_dense_max`` and ``knn_res``
+    then come from the index). A pandas layer gets its own index here.
+
     The ocean lane picks its kernel by layer size: up to
     ``knn_dense_max`` polygons a dense points×polygons distance matrix
     is cheapest; above it the ring-pruned kernel (``_ring_knn_batch``,
@@ -823,21 +886,20 @@ def fused_assign_or_knn(
     from .cells import _cell_fn
 
     res = res if res is not None else DEFAULT_RES[scheme]
-    spark = images.sparkSession
-    polys = normalize_polygons(polygons_pdf)
-    cover_pdf = polygon_cover_pdf(polys, scheme, res, extra_cols=(admin_col,))
-    cover_b = spark.sparkContext.broadcast(cover_pdf)
-    payload = [
-        (row["polygon_id"], row[admin_col], bytes(row["geometry"]))
-        for _, row in polys.iterrows()
-    ]
-    use_ring_knn = len(payload) > knn_dense_max
-    knn_k = min(k, len(payload))
-    if use_ring_knn:
-        _, knn_cell_map = _knn_payload_and_cellmap(polys, admin_col, knn_res)
+    if isinstance(polygons_pdf, PolygonIndex):
+        index = polygons_pdf
+        if (index.scheme, index.res) != (scheme, res):
+            raise ValueError(
+                f"index built for {index.scheme} res {index.res}, "
+                f"join asks for {scheme} res {res}"
+            )
     else:
-        knn_cell_map = None
-    geos_b = spark.sparkContext.broadcast((payload, knn_cell_map))
+        index = PolygonIndex.build(
+            polygons_pdf, scheme, res, admin_col, knn_dense_max, knn_res
+        )
+    shipped = index.broadcast(images.sparkSession)
+    knn_k = min(k, len(index.payload))
+    knn_res = index.knn_res
     cell_fn = _cell_fn(scheme, res)
 
     crs_name = crs
@@ -845,8 +907,7 @@ def fused_assign_or_knn(
     def run(batches):
         from ..geo import transform as _tf
 
-        cover = cover_b.value
-        payload_v, knn_cmap = geos_b.value
+        cover, payload_v, knn_cmap = shipped.value
         geo_map = {pid: buf for pid, _, buf in payload_v}
         parsed: dict[str, wkb.Geometry] = {}
         ring_cache: dict[int, wkb.Geometry] = {}
@@ -879,7 +940,7 @@ def fused_assign_or_knn(
                         "image_id": ids[sel],
                         "cell": hit["cell"].to_numpy(),
                         "polygon_id": hit["polygon_id"].to_numpy(),
-                        "admin_code": hit[admin_col].to_numpy(),
+                        "admin_code": hit["admin_code"].to_numpy(),
                         "rank": np.zeros(len(hit), dtype=np.int32),
                         "distance": np.zeros(len(hit)),
                     }

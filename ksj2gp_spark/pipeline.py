@@ -139,12 +139,24 @@ def write_tiles(tiles: DataFrame, path: str, chunk: str = "all") -> dict:
 
 
 def _prune_bbox(
-    metas: list[dict], bbox: tuple[float, float, float, float] | None
+    metas: list[dict],
+    bbox: tuple[float, float, float, float] | None,
+    crs: str | None = None,
 ) -> list[dict]:
-    """Drop file manifests whose (lon, lat) stats provably miss bbox."""
+    """Drop file manifests whose (lon, lat) stats provably miss bbox.
+
+    ``bbox`` is in WGS84 (the frame the join runs in); file stats are
+    in the table's source datum, so with a ``crs`` the bbox is first
+    padded by the largest datum shift — a file within the shift of the
+    bbox edge is never wrongly pruned."""
     if bbox is None:
         return metas
     minx, miny, maxx, maxy = bbox
+    if crs:
+        # Tokyo→WGS84 moves points ≤ ~0.0047° anywhere over Japan;
+        # 0.01° is a safe bound (still prunes all but edge files).
+        pad = 0.01
+        minx, miny, maxx, maxy = minx - pad, miny - pad, maxx + pad, maxy + pad
     kept = []
     for f in metas:
         flo, fhi = f["min"], f["max"]
@@ -170,6 +182,7 @@ def _image_file_chunks(
     images_path: str,
     n_chunks: int,
     bbox: tuple[float, float, float, float] | None = None,
+    crs: str | None = None,
 ) -> list[list[str]]:
     """Group the image table's data files into resume chunks. With an
     Iceberg-style table and a ``bbox``, files whose (lon, lat) manifest
@@ -193,7 +206,7 @@ def _image_file_chunks(
                 "unpartitioned / hidden-partitioned image table"
             )
         metas = iceberg._live_files(images_path)
-        metas = _prune_bbox(metas, bbox)
+        metas = _prune_bbox(metas, bbox, crs)
         files = [os.path.join(images_path, f["path"]) for f in metas]
         if not files:
             return []
@@ -233,6 +246,39 @@ def write_images_table(
     return iceberg.append(sorted_df, path)
 
 
+def _tile_chunks(
+    spark: SparkSession,
+    file_map: dict[str, list[str]],
+    polys_pdf: pd.DataFrame,
+    out_path: str,
+    scheme: str,
+    res: int,
+    k_ocean: int,
+    crs: str | None,
+    partition_cols: tuple[str, ...],
+) -> dict:
+    """Tile each uncommitted chunk of ``file_map`` ({chunk id: image
+    files}) into ``out_path``. The polygon index is built and broadcast
+    once, on the first chunk that needs it, and released on return."""
+    built: list[spatial.PolygonIndex] = []
+
+    def process(chunk_id: str) -> DataFrame:
+        if not built:
+            built.append(spatial.PolygonIndex.build(polys_pdf, scheme, res))
+        imgs = spark.read.parquet(*file_map[chunk_id])
+        return spatial.fused_assign_or_knn(
+            imgs, built[0], scheme=scheme, res=res, k=k_ocean, crs=crs
+        )
+
+    try:
+        return write.run_resumable(
+            out_path, list(file_map), process, partition_cols=partition_cols
+        )
+    finally:
+        for index in built:
+            index.release()
+
+
 def run_tile_pipeline(
     spark: SparkSession,
     images_path: str,
@@ -261,26 +307,13 @@ def run_tile_pipeline(
     shift of the bbox edge is never wrongly pruned."""
     polys_pdf = _polygons_for_fused(polygons, max_broadcast_polygons)
     res = res if res is not None else spatial.DEFAULT_RES[scheme]
-    prune_bbox = bbox
-    if bbox is not None and crs:
-        # Tokyo→WGS84 moves points ≤ ~0.0047° anywhere over Japan;
-        # 0.01° is a safe bound (still prunes all but edge files).
-        pad = 0.01
-        prune_bbox = (bbox[0] - pad, bbox[1] - pad, bbox[2] + pad, bbox[3] + pad)
-    chunks = _image_file_chunks(spark, images_path, n_chunks, bbox=prune_bbox)
+    chunks = _image_file_chunks(spark, images_path, n_chunks, bbox=bbox, crs=crs)
     if not chunks:
         return {}
     chunk_ids = [f"{i:05d}" for i in range(len(chunks))]
-    file_map = dict(zip(chunk_ids, chunks))
-
-    def process(chunk_id: str) -> DataFrame:
-        imgs = spark.read.parquet(*file_map[chunk_id])
-        return spatial.fused_assign_or_knn(
-            imgs, polys_pdf, scheme=scheme, res=res, k=k_ocean, crs=crs
-        )
-
-    return write.run_resumable(
-        out_path, chunk_ids, process, partition_cols=partition_cols
+    return _tile_chunks(
+        spark, dict(zip(chunk_ids, chunks)), polys_pdf, out_path, scheme,
+        res, k_ocean, crs, partition_cols,
     )
 
 
@@ -320,27 +353,16 @@ def run_tile_pipeline_incremental(
     meta = iceberg._load_metadata(images_path)
     to_snapshot = meta["current_snapshot_id"]
     metas = iceberg.added_files(images_path, since_snapshot, to_snapshot)
-    prune_bbox = bbox
-    if bbox is not None and crs:
-        pad = 0.01  # datum-shift bound, see run_tile_pipeline
-        prune_bbox = (bbox[0] - pad, bbox[1] - pad, bbox[2] + pad, bbox[3] + pad)
-    metas = _prune_bbox(metas, prune_bbox)
+    metas = _prune_bbox(metas, bbox, crs)
     files = [os.path.join(images_path, f["path"]) for f in metas]
     if not files:
         return {}, to_snapshot
     n_chunks = max(1, min(n_chunks, len(files)))
     chunks = [files[i::n_chunks] for i in range(n_chunks)]
     chunk_ids = [f"s{to_snapshot}-{i:05d}" for i in range(len(chunks))]
-    file_map = dict(zip(chunk_ids, chunks))
-
-    def process(chunk_id: str) -> DataFrame:
-        imgs = spark.read.parquet(*file_map[chunk_id])
-        return spatial.fused_assign_or_knn(
-            imgs, polys_pdf, scheme=scheme, res=res, k=k_ocean, crs=crs
-        )
-
-    summary = write.run_resumable(
-        out_path, chunk_ids, process, partition_cols=partition_cols
+    summary = _tile_chunks(
+        spark, dict(zip(chunk_ids, chunks)), polys_pdf, out_path, scheme,
+        res, k_ocean, crs, partition_cols,
     )
     return summary, to_snapshot
 
@@ -409,13 +431,7 @@ def run_tile_pipeline_iceberg(
     """
     polys_pdf = _polygons_for_fused(polygons, max_broadcast_polygons)
     res = res if res is not None else spatial.DEFAULT_RES[scheme]
-    prune_bbox = bbox
-    if bbox is not None and crs:
-        pad = 0.01  # datum-shift padding, see run_tile_pipeline
-        prune_bbox = (
-            bbox[0] - pad, bbox[1] - pad, bbox[2] + pad, bbox[3] + pad
-        )
-    chunks = _image_file_chunks(spark, images_path, n_chunks, bbox=prune_bbox)
+    chunks = _image_file_chunks(spark, images_path, n_chunks, bbox=bbox, crs=crs)
     all_files = sorted(f for c in chunks for f in c)
     committed = committed_pipeline_files(table_path)
     pending = [
@@ -430,21 +446,25 @@ def run_tile_pipeline_iceberg(
         return done
     n = max(1, min(n_chunks, len(pending)))
     groups = [pending[i::n] for i in range(n)]
-    for i, group in enumerate(groups):
-        cid = f"{i:05d}"
-        imgs = spark.read.parquet(*group)
-        tiles = spatial.fused_assign_or_knn(
-            imgs, polys_pdf, scheme=scheme, res=res, k=k_ocean, crs=crs
-        )
-        done[cid] = iceberg.append(
-            tiles,
-            table_path,
-            summary_extra={
-                "pipeline_chunk": cid,
-                "pipeline_files": sorted(
-                    os.path.relpath(f, images_path) for f in group
-                ),
-            },
-            partition_by=partition_by,
-        )
+    index = spatial.PolygonIndex.build(polys_pdf, scheme, res)
+    try:
+        for i, group in enumerate(groups):
+            cid = f"{i:05d}"
+            imgs = spark.read.parquet(*group)
+            tiles = spatial.fused_assign_or_knn(
+                imgs, index, scheme=scheme, res=res, k=k_ocean, crs=crs
+            )
+            done[cid] = iceberg.append(
+                tiles,
+                table_path,
+                summary_extra={
+                    "pipeline_chunk": cid,
+                    "pipeline_files": sorted(
+                        os.path.relpath(f, images_path) for f in group
+                    ),
+                },
+                partition_by=partition_by,
+            )
+    finally:
+        index.release()
     return done

@@ -46,6 +46,11 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
     def geohash(lon: pd.Series, lat: pd.Series, p: pd.Series) -> pd.Series:
         from .operators.cells import geohash_np
 
+        if p.nunique() > 1:
+            raise ValueError(
+                "geohash precision must be constant within a batch, got "
+                f"{sorted(p.unique().tolist())}; use one precision per query"
+            )
         pr = int(p.iloc[0]) if len(p) else 6
         return pd.Series(
             geohash_np(

@@ -41,9 +41,13 @@ def stream_tile_assign(
     available_now: bool = True,
 ):
     """Incremental tile assignment: stream → fused assign-or-kNN →
-    checkpointed parquet append. Returns the StreamingQuery."""
+    checkpointed parquet append. Returns the StreamingQuery. The
+    polygon index is built and broadcast once; every micro-batch
+    reuses it for the life of the query."""
+    res = res if res is not None else spatial.DEFAULT_RES[scheme]
+    index = spatial.PolygonIndex.build(polygons_pdf, scheme, res)
     tiles = spatial.fused_assign_or_knn(
-        images_stream, polygons_pdf, scheme=scheme, res=res, k=k_ocean
+        images_stream, index, scheme=scheme, res=res, k=k_ocean
     )
 
     def write_batch(batch_df: DataFrame, epoch_id: int):

@@ -504,6 +504,20 @@ class TestGeohashSqlSurface:
         )
         assert (via_sql.gh.values == via_df.gh.values).all()
 
+    def test_sql_function_rejects_varying_precision(self, spark):
+        """A precision column that varies within a batch is refused,
+        not silently encoded at the first row's precision."""
+        from ksj2gp_spark.sql import register_sql_functions
+
+        register_sql_functions(spark)
+        pts = _points_pdf(20, seed=17)
+        pts["p"] = np.where(np.arange(len(pts)) % 2 == 0, 5, 7)
+        spark.createDataFrame(pts).coalesce(1).createOrReplaceTempView(
+            "gh_mixed"
+        )
+        with pytest.raises(Exception, match="precision must be constant"):
+            spark.sql("SELECT geohash(lon, lat, p) AS gh FROM gh_mixed").collect()
+
     def test_numpy_kernel_matches_reference(self):
         from ksj2gp_spark.operators.cells import geohash_np
 

@@ -50,6 +50,34 @@ def test_run_tile_pipeline_end_to_end(spark, images_table, tmp_path):
     assert m0["rows"] > 0 and m0["admin_histogram"]
 
 
+def test_pipeline_builds_cover_once(spark, images_table, tmp_path, monkeypatch):
+    """A two-chunk job builds the polygon cover once, ships it in one
+    broadcast for both chunks, and releases that broadcast on return."""
+    from ksj2gp_spark.operators import spatial
+
+    covers, released = [], []
+    build_cover = spatial.polygon_cover_pdf
+    release = spatial.PolygonIndex.release
+
+    def counting_cover(polys, scheme, res, *a, **kw):
+        covers.append(scheme)
+        return build_cover(polys, scheme, res, *a, **kw)
+
+    def counting_release(index):
+        released.append(len(index._shipped))
+        release(index)
+
+    monkeypatch.setattr(spatial, "polygon_cover_pdf", counting_cover)
+    monkeypatch.setattr(spatial.PolygonIndex, "release", counting_release)
+    summary = pipeline.run_tile_pipeline(
+        spark, images_table, fixtures.polygon_layer(), str(tmp_path / "t"),
+        scheme="hex", res=7, n_chunks=2,
+    )
+    assert len(summary) == 2
+    assert covers == ["hex"]
+    assert released == [1]
+
+
 def test_pipeline_resume_skips_committed(spark, images_table, tmp_path):
     out = str(tmp_path / "tiles_resume")
     calls = []
@@ -210,12 +238,9 @@ def test_py_files_artifact_importable(tmp_path):
     import subprocess
     import sys
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    subprocess.run(
-        [sys.executable, "bench/package.py"], check=True, cwd=repo,
-        capture_output=True,
-    )
-    zip_path = os.path.join(repo, "dist", "ksj2gp_spark.zip")
+    from bench.package import build
+
+    zip_path = build(str(tmp_path / "dist"))
     code = (
         f"import sys; sys.path.insert(0, {zip_path!r}); "
         "from ksj2gp_spark.ksj import extract_ksj_id; "
@@ -445,7 +470,6 @@ def test_spark_submit_py_files_runs_pipeline(tmp_path):
     shipped zip."""
     import shutil
     import subprocess
-    import sys
 
     spark_submit = shutil.which("spark-submit")
     if spark_submit is None:
@@ -454,12 +478,9 @@ def test_spark_submit_py_files_runs_pipeline(tmp_path):
         spark_submit = os.path.join(
             os.path.dirname(pyspark.__file__), "bin", "spark-submit"
         )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    subprocess.run(
-        [sys.executable, "bench/package.py"], check=True, cwd=repo,
-        capture_output=True,
-    )
-    zip_path = os.path.join(repo, "dist", "ksj2gp_spark.zip")
+    from bench.package import build
+
+    zip_path = build(str(tmp_path / "dist"))
     job = tmp_path / "job.py"
     out_dir = tmp_path / "tiles_out"
     job.write_text(

@@ -97,6 +97,60 @@ def test_pip_distance_consistency(px, py):
         assert d > 0.0
 
 
+SCHEME_RES = (("hex", 6, hexgrid), ("s2", 10, s2), ("grid", 8, grid))
+
+
+def _reference_cover(g, scheme, res):
+    """The per-polygon sampling-and-distance cover the layer kernel
+    replaced, kept as the oracle: sample the bbox lattice, keep samples
+    within the scheme's distance threshold of the polygon (0 inside),
+    cover their cells."""
+    minx, miny, maxx, maxy = g.bounds()
+    if scheme == "grid":
+        size = grid.cell_size(res)
+        cells = grid.cover_bbox(minx, miny, maxx, maxy, res)
+        if len(cells) > 4:
+            cx, cy = grid.cell_center(cells)
+            d = geom.distance_to_geometry(cx, cy, g)
+            cells = cells[d <= size * np.sqrt(2.0) / 2.0 + 1e-12]
+        return set(cells.tolist())
+    if scheme == "hex":
+        pad = hexgrid.edge_length(res)
+        step, thresh = pad * np.sqrt(3.0) / 2.0, 2.0 * pad + 1e-12
+        fn = hexgrid.latlng_to_cell
+    else:
+        pad = s2.approx_edge_deg(res)
+        step, thresh = pad / 2.0, 2.0 * pad * np.sqrt(2.0)
+        fn = s2.latlng_to_cell
+    xs = np.arange(minx - pad, maxx + pad + step, step)
+    ys = np.arange(miny - pad, maxy + pad + step, step)
+    gx, gy = np.meshgrid(xs, ys, indexing="ij")
+    gx, gy = gx.ravel(), gy.ravel()
+    keep = geom.distance_to_geometry(gx, gy, g) <= thresh
+    return set(fn(gx[keep], gy[keep], res).tolist())
+
+
+def _jagged_ring(rng, cx, cy, r_lo, r_hi, n):
+    """A closed star-shaped ring with random radii: non-convex, simple."""
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, n))
+    rad = rng.uniform(r_lo, r_hi, n)
+    ring = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+    return np.vstack([ring, ring[:1]])
+
+
+def _shape(kind, rng, cx, cy, r, n):
+    """A jagged polygon, the same with a jagged hole, or a MultiPolygon
+    of two jagged parts."""
+    outer = _jagged_ring(rng, cx, cy, 0.3 * r, r, n)
+    if kind == "jagged":
+        return wkb.Geometry(wkb.POLYGON, [outer])
+    if kind == "hole":
+        hole = _jagged_ring(rng, cx, cy, 0.1 * r, 0.25 * r, n)[::-1]
+        return wkb.Geometry(wkb.POLYGON, [outer, hole])
+    other = _jagged_ring(rng, cx + 3 * r, cy + r, 0.3 * r, r, n)
+    return wkb.Geometry(wkb.MULTIPOLYGON, [[outer], [other]])
+
+
 @settings(max_examples=50, deadline=None)
 @given(
     x0=st.floats(min_value=130, max_value=140, allow_nan=False),
@@ -104,18 +158,60 @@ def test_pip_distance_consistency(px, py):
     w=st.floats(min_value=0.01, max_value=1.0, allow_nan=False),
     h=st.floats(min_value=0.01, max_value=1.0, allow_nan=False),
     seed=st.integers(min_value=0, max_value=10_000),
+    kind=st.sampled_from(["rect", "jagged", "hole", "multi"]),
+    n=st.integers(min_value=5, max_value=40),
 )
-def test_covers_are_supersets(x0, y0, w, h, seed):
-    """Any point inside a random rectangle maps to a cell in the
-    rectangle's cover — the invariant the candidate join depends on."""
-    g = wkb.loads(wkb.polygon([(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)]))
+def test_covers_are_supersets(x0, y0, w, h, seed, kind, n):
+    """Any point inside a random rectangle, jagged non-convex ring,
+    ring with a hole or MultiPolygon maps to a cell in its cover — the
+    invariant the candidate join depends on — and the cover contains
+    the reference sampling-and-distance cover."""
     rng = np.random.default_rng(seed)
-    px = x0 + rng.uniform(0, 1, 50) * w
-    py = y0 + rng.uniform(0, 1, 50) * h
-    for mod, res in ((hexgrid, 6), (s2, 10), (grid, 8)):
+    if kind == "rect":
+        g = wkb.loads(wkb.polygon(
+            [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)]))
+    else:
+        g = _shape(kind, rng, x0, y0, w / 2, n)
+    minx, miny, maxx, maxy = g.bounds()
+    px = rng.uniform(minx, maxx, 400)
+    py = rng.uniform(miny, maxy, 400)
+    inside = geom.geometry_contains(px, py, g)
+    for scheme, res, mod in SCHEME_RES:
         cover = set(mod.cover_geometry(g, res).tolist())
-        cells = mod.latlng_to_cell(px, py, res)
-        assert set(cells.tolist()) <= cover, mod.__name__
+        cells = mod.latlng_to_cell(px[inside], py[inside], res)
+        assert set(cells.tolist()) <= cover, (scheme, kind)
+        assert _reference_cover(g, scheme, res) <= cover, (scheme, kind)
+
+
+def test_layer_cover_contains_reference_cover():
+    """The layer-wide ``polygon_cover_pdf`` contains, polygon by
+    polygon, the per-polygon reference cover on a seeded 100-polygon
+    jagged layer (holes and MultiPolygons included), and stays within
+    a few cells of it."""
+    import pandas as pd
+
+    from ksj2gp_spark.operators import cells
+
+    rng = np.random.default_rng(2026)
+    kinds = ["jagged", "hole", "multi"]
+    geoms = [
+        _shape(kinds[i % 3], rng, rng.uniform(135, 140), rng.uniform(34, 37),
+               rng.uniform(0.02, 0.15), int(rng.integers(8, 200)))
+        for i in range(100)
+    ]
+    layer = pd.DataFrame({
+        "polygon_id": [f"p{i:03d}" for i in range(100)],
+        "geometry": [wkb.dumps(g) for g in geoms],
+    })
+    for scheme, res in (("hex", 7), ("s2", 12), ("grid", 11)):
+        cover = cells.polygon_cover_pdf(layer, scheme, res)
+        got = cover.groupby("polygon_id")["cell"].agg(set)
+        ref_rows = 0
+        for pid, g in zip(layer["polygon_id"], geoms):
+            ref = _reference_cover(g, scheme, res)
+            ref_rows += len(ref)
+            assert ref <= got[pid], (scheme, pid)
+        assert len(cover) <= 1.5 * ref_rows, scheme
 
 
 @given(
