@@ -688,7 +688,8 @@ def main() -> None:
     timed("seq_pack_5m", seq_pack_lane, warm=True, repeats=5)
 
     # Fused assignment at 20k-polygon cardinality: the ocean lane runs
-    # the ring-pruned kNN kernel (no dense points×polygons matrix).
+    # the edge index's bound-pruned kNN over STR leaves (no dense
+    # points×polygons matrix).
     def fused_large_layer():
         import numpy as np
 

@@ -231,16 +231,19 @@ def polygon_cover_pdf(
     res: int,
     id_col: str = "polygon_id",
     extra_cols: Iterable[str] = (),
+    geoms: list[wkb.Geometry] | None = None,
 ) -> pd.DataFrame:
     """Driver-side cover: long (cell, polygon_id, *extra) DataFrame,
     polygons in layer order, each polygon's cells ascending. Built by
     one vectorised pass over the whole layer
     (:func:`ksj2gp_spark.geo.cover.cover_layer`); every cell the
     per-polygon sampling rule would keep is in it. The polygons layer
-    is assumed broadcast-small (KSJ scale)."""
-    poly, cells = cover_mod.cover_layer(
-        [wkb.loads(buf) for buf in polygons["geometry"]], scheme, res
-    )
+    is assumed broadcast-small (KSJ scale). ``geoms``, when given, are
+    the decoded ``geometry`` column (a caller that needs them too
+    decodes the layer once)."""
+    if geoms is None:
+        geoms = [wkb.loads(buf) for buf in polygons["geometry"]]
+    poly, cells = cover_mod.cover_layer(geoms, scheme, res)
     data = {"cell": cells, id_col: polygons[id_col].to_numpy()[poly]}
     for c in extra_cols:
         data[c] = polygons[c].to_numpy()[poly]

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..geo import geom, wkb
+from ..geo.edges import EdgeIndex
 from .cells import (
     normalize_polygons,
     polygon_cover_pdf,
@@ -499,9 +500,8 @@ def knn_join(
     deterministic (distance, admin_code, polygon_id) tie-breaking —
     the same total order as knn_join_pruned and fused_assign_or_knn.
 
-    The polygon side is broadcast; at larger polygon cardinality the
-    candidate set would first be pruned by expanding cell rings
-    (grid_disk) — the per-batch kernel below is unchanged by that.
+    The polygon side is broadcast. This brute-force kernel is the
+    reference the bound-pruned ``knn_join_pruned`` is tested against.
     """
     spark = images.sparkSession
     payload = _payload(normalize_polygons(polygons_pdf), admin_col)
@@ -564,162 +564,20 @@ def _payload(polys: pd.DataFrame, admin_col: str) -> list[tuple]:
     )
 
 
-def _knn_payload_and_cellmap(
-    polys: pd.DataFrame, admin_col: str, res: int
-) -> tuple[list[tuple], dict[int, list[int]]]:
-    """Driver-side broadcast prep for the ring-kNN kernel: the polygon
-    payload [(polygon_id, admin_code, wkb)] and the grid-cell →
-    payload-index inverted cover."""
-    cover_pdf = polygon_cover_pdf(polys, "grid", res, extra_cols=())
-    pid_order = {
-        pid: n for n, pid in enumerate(polys["polygon_id"].tolist())
-    }
-    cell_map: dict[int, list[int]] = {}
-    for cell, pid in zip(cover_pdf["cell"], cover_pdf["polygon_id"]):
-        cell_map.setdefault(int(cell), []).append(pid_order[pid])
-    return _payload(polys, admin_col), cell_map
-
-
-def _cand_meta(c: int, geo, meta: dict[int, tuple]) -> tuple:
-    """(xmin, ymin, xmax, ymax, vx, vy) per candidate: bbox for the
-    distance lower bound, one boundary vertex for the upper bound."""
-    m = meta.get(c)
-    if m is None:
-        g = geo(c)
-        xmin, ymin, xmax, ymax = g.bounds()
-        r = next(iter(g.rings()))
-        m = meta[c] = (xmin, ymin, xmax, ymax, float(r[0][0]), float(r[0][1]))
-    return m
-
-
-def _ring_knn_batch(
-    lons: np.ndarray,
-    lats: np.ndarray,
-    payload: list[tuple],
-    cmap: dict[int, list[int]],
-    res: int,
-    k: int,
-    parsed: dict[int, "wkb.Geometry"],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Ring-pruned exact-kNN kernel for one Arrow batch.
-
-    ``payload`` is [(polygon_id, admin_code, wkb_bytes)], ``cmap`` maps
-    grid cell id → payload indices of polygons covering it. Per
-    occupied point cell, Chebyshev rings of cells are expanded to
-    accumulate candidates; the search stops once ≥k candidates exist
-    AND the next ring's lower bound ((R−1)·cell_size: a polygon absent
-    from every cell within ring R is at least that far) exceeds the
-    worst kth distance. Exact distances are evaluated only against the
-    candidate set — never all polygons. Ties order by
-    (distance, admin_code, polygon_id); ``parsed`` caches decoded WKB
-    across batches. Returns (pid, admin, dist) matrices of shape (n,k).
-    """
-    from ..geo import grid as grid_mod
-
-    size = grid_mod.cell_size(res)
-    res_hi = int(res) << 58
-
-    def geo(c: int) -> wkb.Geometry:
-        g = parsed.get(c)
-        if g is None:
-            g = parsed[c] = wkb.loads(payload[c][2])
-        return g
-
-    meta: dict[int, tuple] = {}
-    n_rows = len(lons)
-    cells_v = grid_mod.latlng_to_cell(lons, lats, res)
-    out_pid = np.empty((n_rows, k), dtype=object)
-    out_adm = np.empty((n_rows, k), dtype=object)
-    out_d = np.empty((n_rows, k), dtype=np.float64)
-    cell_groups = pd.Series(cells_v).groupby(cells_v).indices
-    for cell, idx in cell_groups.items():
-        ci = int((cell >> 29) & ((1 << 29) - 1))
-        cj = int(cell & ((1 << 29) - 1))
-        cand: set[int] = set()
-        R = 0
-        done_bound = False
-        while True:
-            # add ring R cells
-            if R == 0:
-                ring = [(ci, cj)]
-            else:
-                rng_ = range(-R, R + 1)
-                ring = [(ci + d, cj - R) for d in rng_]
-                ring += [(ci + d, cj + R) for d in rng_]
-                ring += [(ci - R, cj + d) for d in rng_[1:-1]]
-                ring += [(ci + R, cj + d) for d in rng_[1:-1]]
-            for (ri, rj) in ring:
-                key = int(res_hi | (np.int64(ri) << 29) | np.int64(rj))
-                hit = cmap.get(key)
-                if hit:
-                    cand.update(hit)
-            if len(cand) >= k:
-                cl = sorted(cand)
-                sub_lon, sub_lat = lons[idx], lats[idx]
-                if len(cl) > 4 * k:
-                    # Vectorized candidate prune before any per-geometry
-                    # Python call: bbox distance is a LOWER bound, the
-                    # distance to one stored vertex an UPPER bound; a
-                    # candidate whose lower bound exceeds every point's
-                    # kth upper bound cannot reach any top-k (ties
-                    # inclusive), so exact evaluation touches only the
-                    # handful of near candidates.
-                    bnds = np.array([_cand_meta(c, geo, meta) for c in cl])
-                    dx = np.maximum(
-                        np.maximum(
-                            bnds[None, :, 0] - sub_lon[:, None],
-                            sub_lon[:, None] - bnds[None, :, 2],
-                        ),
-                        0.0,
-                    )
-                    dy = np.maximum(
-                        np.maximum(
-                            bnds[None, :, 1] - sub_lat[:, None],
-                            sub_lat[:, None] - bnds[None, :, 3],
-                        ),
-                        0.0,
-                    )
-                    d_lb = np.hypot(dx, dy)
-                    d_ub = np.hypot(
-                        sub_lon[:, None] - bnds[None, :, 4],
-                        sub_lat[:, None] - bnds[None, :, 5],
-                    )
-                    kth_ub = np.partition(d_ub, k - 1, axis=1)[:, k - 1]
-                    keep_c = (d_lb <= kth_ub[:, None]).any(axis=0)
-                    cl = [c for c, kp in zip(cl, keep_c) if kp]
-                dmat = np.stack(
-                    [
-                        geom.distance_to_geometry(sub_lon, sub_lat, geo(c))
-                        for c in cl
-                    ],
-                    axis=1,
-                )
-                kth_worst = np.sort(dmat, axis=1)[:, k - 1].max()
-                # polygons not seen within ring R are ≥ R·size away
-                if kth_worst <= R * size or done_bound:
-                    order_keys = np.array(
-                        [(payload[c][1], payload[c][0]) for c in cl],
-                        dtype=object,
-                    )
-                    ord_idx = np.lexsort(
-                        (order_keys[:, 1], order_keys[:, 0])
-                    )
-                    dmat = dmat[:, ord_idx]
-                    cl = [cl[o] for o in ord_idx]
-                    top = np.argsort(dmat, axis=1, kind="stable")[:, :k]
-                    out_pid[idx] = np.array(
-                        [payload[c][0] for c in cl], dtype=object
-                    )[top]
-                    out_adm[idx] = np.array(
-                        [payload[c][1] for c in cl], dtype=object
-                    )[top]
-                    out_d[idx] = np.take_along_axis(dmat, top, axis=1)
-                    break
-            R += 1
-            if R > (1 << res):  # layer exhausted — use all cands
-                done_bound = True
-                cand.update(range(len(payload)))
-    return out_pid, out_adm, out_d
+def _polygon_side(
+    polys: pd.DataFrame, admin_col: str, geoms: list | None = None
+) -> tuple[np.ndarray, np.ndarray, EdgeIndex]:
+    """Per polygon, in layer order: its id and admin code, and the edge
+    index of the layer (``geoms``: the decoded geometries, if at hand)
+    with kNN ties ranked in (admin_code, polygon_id) order, the tie
+    order ``knn_join`` uses."""
+    pids = polys["polygon_id"].to_numpy(dtype=object)
+    admins = polys[admin_col].to_numpy(dtype=object)
+    tie = np.empty(len(polys), dtype=np.int32)
+    tie[np.lexsort((pids, admins))] = np.arange(len(polys))
+    if geoms is None:
+        geoms = [wkb.loads(bytes(buf)) for buf in polys["geometry"]]
+    return pids, admins, EdgeIndex.build(geoms, tie)
 
 
 def knn_join_pruned(
@@ -731,50 +589,41 @@ def knn_join_pruned(
     lat_col: str = "lat",
     admin_col: str = "行政区域コード",
 ) -> DataFrame:
-    """kNN with cell-ring candidate pruning — the large-polygon-set
-    path. ``knn_join`` evaluates every polygon per point (right at 21
-    admin polygons, quadratic-cost wrong at 10^5). Here polygons are
-    bucketed by their grid-cell cover; per occupied *point cell* the
-    kernel expands Chebyshev rings of cells, accumulating candidate
-    polygons, and stops once k candidates are in hand AND the next
-    ring's distance lower bound — a polygon absent from all cells
-    within ring R is at least ``(R-1)·cell_size`` away — exceeds the
-    worst current kth distance. Exact distances are then computed only
-    against the candidate set.
+    """kNN through the layer's flat edge index — the large-layer path.
+    ``knn_join`` evaluates every polygon per point; here
+    :meth:`~ksj2gp_spark.geo.edges.EdgeIndex.knn` computes exact
+    distances only to the polygons whose bbox lies within a k-th
+    distance bound, found through STR-packed bbox leaves.
 
-    Output contract is identical to ``knn_join`` (same deterministic
-    (distance, admin_code, polygon_id) ordering); equality is tested
-    against the brute-force kernel on an 800-polygon layer.
+    ``res`` is kept for callers; it no longer changes the result.
+
+    Output contract is identical to ``knn_join``: the same rows, the
+    same distances bit for bit, and the same (distance, admin_code,
+    polygon_id) order (tested against it).
     """
     spark = images.sparkSession
     polys = normalize_polygons(polygons_pdf)
     k = min(k, len(polys))
-    payload, cell_map = _knn_payload_and_cellmap(polys, admin_col, res)
-    b = spark.sparkContext.broadcast((payload, cell_map))
+    shipped = spark.sparkContext.broadcast(_polygon_side(polys, admin_col))
     images = images.select("image_id", lon_col, lat_col)
 
     def topk(batches):
-        payload_v = None
-        cmap = None
-        parsed: dict[int, wkb.Geometry] = {}
+        pids, admins, index = shipped.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            if payload_v is None:
-                payload_v, cmap = b.value
-            lons = pdf[lon_col].to_numpy(dtype=np.float64)
-            lats = pdf[lat_col].to_numpy(dtype=np.float64)
-            out_pid, out_adm, out_d = _ring_knn_batch(
-                lons, lats, payload_v, cmap, res, k, parsed
+            poly, dist = index.knn(
+                pdf[lon_col].to_numpy(dtype=np.float64),
+                pdf[lat_col].to_numpy(dtype=np.float64),
+                k,
             )
-            n = len(pdf)
             yield pd.DataFrame(
                 {
                     "image_id": np.repeat(pdf["image_id"].to_numpy(), k),
-                    "rank": np.tile(np.arange(1, k + 1), n),
-                    "polygon_id": out_pid.ravel(),
-                    "admin_code": out_adm.ravel(),
-                    "distance": out_d.ravel(),
+                    "rank": np.tile(np.arange(1, k + 1), len(pdf)),
+                    "polygon_id": pids[poly.ravel()],
+                    "admin_code": admins[poly.ravel()],
+                    "distance": dist.ravel(),
                 }
             )
 
@@ -790,23 +639,22 @@ def knn_join_pruned(
 @dataclass(frozen=True)
 class PolygonIndex:
     """The polygon side of the tile join, built once per pipeline call
-    and shipped to the executors in one broadcast.
+    and shipped to the executors in one broadcast of numpy arrays.
 
-    ``layer`` is the normalised (WGS84) layer; ``cover`` the scheme
-    cover ``(cell, polygon_id, admin_code)``; ``payload`` the
-    ``(polygon_id, admin_code, wkb)`` rows in layer order; and
-    ``knn_cell_map`` the grid-``knn_res`` cell → payload-index map of
-    the ring-kNN ocean lane, or None when the layer is small enough
-    for the dense distance matrix."""
+    Polygons are numbered in layer order. ``cells`` holds the scheme
+    cover's cells, sorted, and ``cell_poly`` the polygon number of each
+    (int32); ``polygon_id`` and ``admin_code`` hold one string per
+    polygon; ``edges`` is the layer's flat edge index for the exact
+    PIP and the kNN ocean lane."""
 
-    layer: pd.DataFrame
-    cover: pd.DataFrame
-    payload: list[tuple]
-    knn_cell_map: dict[int, list[int]] | None
+    cells: np.ndarray
+    cell_poly: np.ndarray
+    polygon_id: np.ndarray
+    admin_code: np.ndarray
+    edges: EdgeIndex
     scheme: str
     res: int
-    knn_res: int
-    # the broadcast of (cover, payload, knn_cell_map), made on first use
+    # the broadcast, made on first use
     _shipped: list = field(default_factory=list, repr=False, compare=False)
 
     @classmethod
@@ -816,24 +664,28 @@ class PolygonIndex:
         scheme: str = "grid",
         res: int | None = None,
         admin_col: str = "行政区域コード",
-        knn_dense_max: int = 64,
-        knn_res: int = 10,
     ) -> "PolygonIndex":
         res = res if res is not None else DEFAULT_RES[scheme]
         polys = normalize_polygons(polygons_pdf)
-        cover = polygon_cover_pdf(polys, scheme, res, extra_cols=(admin_col,))
-        cover = cover.rename(columns={admin_col: "admin_code"})
-        if len(polys) > knn_dense_max:
-            payload, cell_map = _knn_payload_and_cellmap(polys, admin_col, knn_res)
-        else:
-            payload, cell_map = _payload(polys, admin_col), None
-        return cls(polys, cover, payload, cell_map, scheme, res, knn_res)
+        geoms = [wkb.loads(bytes(buf)) for buf in polys["geometry"]]
+        cover = polygon_cover_pdf(
+            polys.assign(_poly=np.arange(len(polys))), scheme, res,
+            id_col="_poly", geoms=geoms,
+        )
+        cells = cover["cell"].to_numpy()
+        order = np.argsort(cells, kind="stable")
+        cell_poly = cover["_poly"].to_numpy()[order].astype(np.int32)
+        return cls(
+            cells[order], cell_poly, *_polygon_side(polys, admin_col, geoms),
+            scheme, res,
+        )
 
     def broadcast(self, spark: SparkSession):
         """The index's one broadcast, made on the first call."""
         if not self._shipped:
             self._shipped.append(spark.sparkContext.broadcast(
-                (self.cover, self.payload, self.knn_cell_map)
+                (self.cells, self.cell_poly, self.polygon_id, self.admin_code,
+                 self.edges)
             ))
         return self._shipped[0]
 
@@ -851,37 +703,35 @@ def fused_assign_or_knn(
     k: int = 3,
     admin_col: str = "行政区域コード",
     crs: str | None = None,
-    knn_dense_max: int = 64,
-    knn_res: int = 10,
 ) -> DataFrame:
     """Single-pass tile assignment WITH the ocean/kNN fallback lane.
 
     The relational composition (tile join → left_anti on image_id →
     kNN) shuffles the full probe table twice just to find the ~% of
-    rows that matched nothing. At 10^12 rows that anti-join dominates
-    the job. This operator fuses all three into ONE ``mapInPandas``
-    pass: per Arrow batch it computes cells, probes the broadcast
-    cover, PIP-refines, and — for rows with no polygon hit — runs the
-    vectorized kNN kernel. Zero shuffles, zero recomputation; matched
-    rows emit ``rank = 0``, ocean rows emit ranks ``1..k`` with their
-    distance.
+    rows that matched nothing. This operator fuses all three into ONE
+    ``mapInPandas`` pass with zero shuffles. Per Arrow batch:
+
+    1. the points' cells;
+    2. one ``np.searchsorted`` probe of the index's sorted cover cells,
+       giving every (point, candidate polygon) pair;
+    3. one exact PIP over all those pairs
+       (:meth:`~ksj2gp_spark.geo.edges.EdgeIndex.contains`);
+    4. one kNN (:meth:`~ksj2gp_spark.geo.edges.EdgeIndex.knn`) over the
+       rows no polygon covers.
+
+    Matched rows emit ``rank = 0``; ocean rows emit ranks ``1..k`` with
+    their distance.
 
     ``polygons_pdf`` is a pandas layer, or a :class:`PolygonIndex`
     built for the same ``scheme`` and ``res``: the pipelines build one
-    per call and pass it to every chunk, so the cover is built and
-    broadcast once (``admin_col``, ``knn_dense_max`` and ``knn_res``
-    then come from the index). A pandas layer gets its own index here.
-
-    The ocean lane picks its kernel by layer size: up to
-    ``knn_dense_max`` polygons a dense points×polygons distance matrix
-    is cheapest; above it the ring-pruned kernel (``_ring_knn_batch``,
-    the ``knn_join_pruned`` path) evaluates only cell-ring candidates —
-    the 10⁴⁺-polygon layers never see a dense matrix.
+    per call and pass it to every chunk, so the cover and the edge
+    index are built and broadcast once (``admin_col`` then comes from
+    the index). A pandas layer gets its own index here.
 
     Row-set contract: equal to
-    ``spatial_join_tiles(...)  UNION  knn_join(unmatched, ...)``
-    (asserted in tests/test_spatial_spark.py, incl. a large-layer run
-    against knn_join_pruned).
+    ``spatial_join_tiles(...)  UNION  knn_join(unmatched, ...)``, with
+    the same distances bit for bit (asserted in
+    tests/test_spatial_spark.py, incl. a 2,000-polygon layer).
     """
     from .cells import _cell_fn
 
@@ -894,24 +744,16 @@ def fused_assign_or_knn(
                 f"join asks for {scheme} res {res}"
             )
     else:
-        index = PolygonIndex.build(
-            polygons_pdf, scheme, res, admin_col, knn_dense_max, knn_res
-        )
+        index = PolygonIndex.build(polygons_pdf, scheme, res, admin_col)
     shipped = index.broadcast(images.sparkSession)
-    knn_k = min(k, len(index.payload))
-    knn_res = index.knn_res
+    knn_k = min(k, len(index.polygon_id))
     cell_fn = _cell_fn(scheme, res)
-
     crs_name = crs
 
     def run(batches):
         from ..geo import transform as _tf
 
-        cover, payload_v, knn_cmap = shipped.value
-        geo_map = {pid: buf for pid, _, buf in payload_v}
-        parsed: dict[str, wkb.Geometry] = {}
-        ring_cache: dict[int, wkb.Geometry] = {}
-        knn_geos = None
+        cells, cell_poly, pids, admins, poly_edges = shipped.value
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -920,95 +762,36 @@ def fused_assign_or_knn(
             if crs_name:
                 lons, lats = _tf.to_wgs84(lons, lats, crs_name)
             cells_v = cell_fn(lons, lats)
-            cand = pd.DataFrame(
-                {"i": np.arange(len(pdf)), "cell": cells_v}
-            ).merge(cover, on="cell", sort=False)
-            keep = np.zeros(len(cand), dtype=bool)
-            ci = cand["i"].to_numpy()
-            for pid, idx in cand.groupby("polygon_id").indices.items():
-                g = parsed.get(pid)
-                if g is None:
-                    g = parsed[pid] = wkb.loads(geo_map[pid])
-                rows = ci[idx]
-                keep[idx] = geom.geometry_contains(lons[rows], lats[rows], g)
-            hit = cand.loc[keep]
-            sel = hit["i"].to_numpy()
-            ids = pdf["image_id"].to_numpy()
-            out_parts = [
-                pd.DataFrame(
-                    {
-                        "image_id": ids[sel],
-                        "cell": hit["cell"].to_numpy(),
-                        "polygon_id": hit["polygon_id"].to_numpy(),
-                        "admin_code": hit["admin_code"].to_numpy(),
-                        "rank": np.zeros(len(hit), dtype=np.int32),
-                        "distance": np.zeros(len(hit)),
-                    }
-                )
-            ]
+            # probe: each point's run of equal cells in the sorted cover
+            lo = np.searchsorted(cells, cells_v, "left")
+            n_cand = np.searchsorted(cells, cells_v, "right") - lo
+            row = np.repeat(np.arange(len(pdf)), n_cand)
+            pos = np.arange(len(row)) + np.repeat(
+                lo - (np.cumsum(n_cand) - n_cand), n_cand
+            )
+            poly = cell_poly[pos]
+            hit = poly_edges.contains(lons[row], lats[row], poly)
+            row, poly = row[hit], poly[hit]
             # ocean lane: rows with zero polygon hits
-            matched = np.zeros(len(pdf), dtype=bool)
-            matched[sel] = True
-            ocean = np.flatnonzero(~matched)
-            if len(ocean):
-                olon, olat = lons[ocean], lats[ocean]
-                n = len(ocean)
-                if knn_cmap is not None:
-                    # large layer: ring-pruned kernel, no dense matrix
-                    o_pid, o_adm, o_d = _ring_knn_batch(
-                        olon, olat, payload_v, knn_cmap,
-                        knn_res, knn_k, ring_cache,
-                    )
-                    pid_flat = o_pid.ravel()
-                    adm_flat = o_adm.ravel()
-                    d_flat = o_d.ravel()
-                else:
-                    if knn_geos is None:
-                        knn_geos = [
-                            (pid, code, wkb.loads(buf))
-                            for pid, code, buf in payload_v
-                        ]
-                        order = np.lexsort(
-                            (
-                                np.array(
-                                    [p for p, _, _ in knn_geos], dtype=object
-                                ),
-                                np.array(
-                                    [c for _, c, _ in knn_geos], dtype=object
-                                ),
-                            )
-                        )
-                        knn_geos = [knn_geos[i] for i in order]
-                    dmat = np.stack(
-                        [
-                            geom.distance_to_geometry(olon, olat, g)
-                            for _, _, g in knn_geos
-                        ],
-                        axis=1,
-                    )
-                    top = np.argsort(dmat, axis=1, kind="stable")[:, :knn_k]
-                    pid_flat = np.array(
-                        [knn_geos[j][0] for j in top.ravel()], dtype=object
-                    )
-                    adm_flat = np.array(
-                        [knn_geos[j][1] for j in top.ravel()], dtype=object
-                    )
-                    d_flat = np.take_along_axis(dmat, top, axis=1).ravel()
-                out_parts.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": np.repeat(ids[ocean], knn_k),
-                            "cell": np.repeat(cells_v[ocean], knn_k),
-                            "polygon_id": pid_flat,
-                            "admin_code": adm_flat,
-                            "rank": np.tile(
-                                np.arange(1, knn_k + 1, dtype=np.int32), n
-                            ),
-                            "distance": d_flat,
-                        }
-                    )
-                )
-            yield pd.concat(out_parts, ignore_index=True)
+            ocean = np.ones(len(pdf), dtype=bool)
+            ocean[row] = False
+            ocean = np.flatnonzero(ocean)
+            o_poly, o_dist = poly_edges.knn(lons[ocean], lats[ocean], knn_k)
+            rows = np.r_[row, np.repeat(ocean, knn_k)]
+            poly = np.r_[poly, o_poly.ravel()]
+            yield pd.DataFrame(
+                {
+                    "image_id": pdf["image_id"].to_numpy()[rows],
+                    "cell": cells_v[rows],
+                    "polygon_id": pids[poly],
+                    "admin_code": admins[poly],
+                    "rank": np.r_[
+                        np.zeros(len(row), dtype=np.int32),
+                        np.tile(np.arange(1, knn_k + 1, dtype=np.int32), len(ocean)),
+                    ],
+                    "distance": np.r_[np.zeros(len(row)), o_dist.ravel()],
+                }
+            )
 
     probe = images.select("image_id", "lon", "lat")
     return probe.mapInPandas(
@@ -1037,10 +820,8 @@ def dwithin_join(
     broadcasts with PRECOMPUTED d-expanded bboxes, so the per-batch
     work is a vectorized bbox mask per polygon and the exact
     segment-distance kernel runs only on the points that survive it —
-    never a dense points x polygons distance matrix. At larger
-    polygon cardinality the candidate set would first be pruned by
-    cell rings exactly like knn_join_pruned; the per-batch kernel is
-    unchanged by that.
+    never a dense points x polygons distance matrix. The mask loop
+    is one Python iteration per polygon and batch.
     """
     if d < 0:
         raise ValueError("d must be non-negative")

@@ -2,6 +2,7 @@
 invariants the distributed join relies on, under arbitrary inputs."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from ksj2gp_spark.geo import geom, grid, hexgrid, s2, transform, wkb
@@ -212,6 +213,147 @@ def test_layer_cover_contains_reference_cover():
             ref_rows += len(ref)
             assert ref <= got[pid], (scheme, pid)
         assert len(cover) <= 1.5 * ref_rows, scheme
+
+
+def _edge_probe_points(rng, geoms, n):
+    """Points that stress the boundary rules of every geometry: each
+    ring vertex, points on edges (the horizontal and hole edges of the
+    rectangles included), and uniform points in and around the bboxes."""
+    xs, ys = [], []
+    for g in geoms:
+        for ring in g.rings():
+            xs.append(ring[:, 0])
+            ys.append(ring[:, 1])
+            j = rng.integers(0, len(ring) - 1, n)
+            t = rng.choice([0.0, 0.5, 1.0, rng.uniform()], n)
+            xs.append(ring[j, 0] + t * (ring[j + 1, 0] - ring[j, 0]))
+            ys.append(ring[j, 1] + t * (ring[j + 1, 1] - ring[j, 1]))
+        if g.coords:
+            minx, miny, maxx, maxy = g.bounds()
+            w, h = maxx - minx, maxy - miny
+            xs.append(rng.uniform(minx - w / 2, maxx + w / 2, n))
+            ys.append(rng.uniform(miny - h / 2, maxy + h / 2, n))
+    return np.concatenate(xs), np.concatenate(ys)
+
+
+def _check_edge_index(seed, n):
+    """The edge index's ``contains`` and ``distance`` over every (point,
+    polygon) pair equal ``geom.geometry_contains`` and
+    ``geom.distance_to_geometry`` exactly."""
+    from ksj2gp_spark.geo import edges
+
+    rng = np.random.default_rng(seed)
+    x0, y0 = rng.uniform(130, 140), rng.uniform(30, 40)
+    r = rng.uniform(0.01, 0.5)
+    rect = np.array([(x0, y0), (x0 + 2 * r, y0), (x0 + 2 * r, y0 + r),
+                     (x0, y0 + r), (x0, y0)])
+    hole = np.array([(x0 + r / 2, y0 + r / 4), (x0 + r / 2, y0 + r / 2),
+                     (x0 + r, y0 + r / 2), (x0 + r, y0 + r / 4),
+                     (x0 + r / 2, y0 + r / 4)])
+    geoms = [_shape(kind, rng, x0 + 0.3 * r, y0, r, n)
+             for kind in ("jagged", "hole", "multi")]
+    # at the equator the reference's 1e-15 on-edge pad exceeds an ulp
+    at_zero = rect - rect[0]
+    geoms += [wkb.Geometry(wkb.POLYGON, [rect, hole]),
+              wkb.Geometry(wkb.POLYGON, [at_zero]),
+              wkb.Geometry(wkb.POLYGON, [])]
+    index = edges.EdgeIndex.build(geoms)
+    px, py = _edge_probe_points(rng, geoms, 60)
+    nudge = np.repeat([-2e-15, -1e-15, -4e-16, 4e-16, 1e-15], 12)
+    px = np.r_[px, rng.uniform(-r, 3 * r, 2 * len(nudge))]
+    py = np.r_[py, nudge, r + nudge]
+    for q, g in enumerate(geoms):
+        poly = np.full(len(px), q)
+        assert (index.contains(px, py, poly)
+                == geom.geometry_contains(px, py, g)).all(), q
+        assert (index.distance(px, py, poly)
+                == geom.distance_to_geometry(px, py, g)).all(), q
+
+
+@settings(max_examples=40, deadline=None)
+@given(seed=st.integers(min_value=0, max_value=10_000),
+       n=st.integers(min_value=4, max_value=120))
+def test_edge_index_equals_reference_kernels(seed, n):
+    """Exact PIP and distance through the y-binned edge index are the
+    reference kernels' results bit for bit, on jagged rings, holes,
+    MultiPolygons, a rectangle with a rectangular hole, a rectangle on
+    the equator and an empty polygon, at ring vertices, on edges (and
+    within 1e-15 of the equator's horizontal ones) and off the bbox."""
+    _check_edge_index(seed, n)
+
+
+def test_edge_index_small_blocks(monkeypatch):
+    """The same equalities when every pass is cut into blocks of a few
+    elements, so pairs straddle block boundaries."""
+    from ksj2gp_spark.geo import edges
+
+    monkeypatch.setattr(edges, "_BLOCK", 7)
+    for seed in (1, 2, 3):
+        _check_edge_index(seed, 30)
+
+
+def _squares(corners, side):
+    return [
+        wkb.Geometry(wkb.POLYGON, [np.array(
+            [(a, b), (a + c, b), (a + c, b + c), (a, b + c), (a, b)]
+        )])
+        for (a, b), c in zip(corners, np.broadcast_to(side, len(corners)))
+    ]
+
+
+def _check_knn(geoms, px, py, k, tie=None):
+    """``knn`` equals ranking every polygon by its exact distance and
+    tie rank."""
+    from ksj2gp_spark.geo import edges
+
+    n = len(geoms)
+    tie = np.arange(n) if tie is None else tie
+    index = edges.EdgeIndex.build(geoms, tie)
+    poly, dist = index.knn(px, py, k)
+    for i in range(len(px)):
+        d = index.distance(np.full(n, px[i]), np.full(n, py[i]), np.arange(n))
+        ref = np.lexsort((tie, d))[:k]
+        np.testing.assert_array_equal(poly[i], ref, err_msg=str(i))
+        np.testing.assert_array_equal(dist[i], d[ref], err_msg=str(i))
+
+
+@pytest.mark.parametrize("block", [None, 2_000])
+@pytest.mark.parametrize("k", [1, 3, 40])
+def test_edge_index_knn_equals_brute_force(monkeypatch, block, k):
+    """Clustered, scattered, far-off and NaN points, ties between two
+    mirror-image squares and an empty polygon. With a small block
+    budget the points go in many STR blocks, each pruning the leaves
+    against its own bound."""
+    from ksj2gp_spark.geo import edges
+
+    if block:
+        monkeypatch.setattr(edges, "_BLOCK", block)
+    rng = np.random.default_rng(k)
+    geoms = _squares(
+        np.c_[rng.uniform(130, 140, 400), rng.uniform(30, 40, 400)],
+        rng.uniform(0.005, 0.2, 400),
+    )
+    # two squares equidistant from (135, 35), and an empty polygon
+    geoms += _squares([(134.5, 34.9), (135.3, 34.9)], 0.2)
+    geoms.append(wkb.Geometry(wkb.POLYGON, []))
+    px = np.r_[rng.normal(135, 0.3, 300), rng.uniform(125, 145, 300),
+               [170.0, 100.0, 135.0, np.nan, 133.0]]
+    py = np.r_[rng.normal(35, 0.3, 300), rng.uniform(25, 45, 300),
+               [60.0, 10.0, 35.0, 35.0, np.nan]]
+    _check_knn(geoms, px, py, k, rng.permutation(len(geoms)))
+
+
+def test_edge_index_knn_beyond_the_nearest_leaf():
+    """Points at a leaf of 16 tiny clustered squares whose k = 20
+    nearest polygons reach into other leaves: the block's leaf bound
+    must count k polygons, not one leaf."""
+    rng = np.random.default_rng(3)
+    geoms = _squares(np.r_[
+        np.c_[120 + rng.uniform(0, 1e-3, 16), 20 + rng.uniform(0, 1e-3, 16)],
+        np.c_[rng.uniform(130, 140, 40), rng.uniform(30, 40, 40)],
+    ], 1e-4)
+    px, py = 120 + rng.uniform(0, 1e-3, 50), 20 + rng.uniform(0, 1e-3, 50)
+    _check_knn(geoms, px, py, 20)
 
 
 @given(

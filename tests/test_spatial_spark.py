@@ -175,9 +175,9 @@ def test_fused_assign_or_knn_equals_two_pass(spark, images):
     assert set(map(tuple, got_knn[kk].itertuples(index=False))) == set(
         map(tuple, knn[kk].itertuples(index=False))
     )
-    # distances agree too
+    # distances agree too, bit for bit
     m = got_knn.merge(knn, on=["image_id", "rank"], suffixes=("_f", "_r"))
-    assert np.allclose(m["distance_f"], m["distance_r"])
+    assert (m["distance_f"].to_numpy() == m["distance_r"].to_numpy()).all()
 
 
 def test_auto_strategy_picks_broadcast_small_cover(spark, images, expected):
@@ -256,59 +256,114 @@ def test_join_concave_polygon_with_hole(spark, scheme, res):
         ), f"{scheme}/{strategy}"
 
 
-def test_knn_pruned_equals_brute_force(spark):
-    """Ring-pruned kNN ≡ brute-force kNN on a 800-polygon layer
-    (identical distances and neighbor ids)."""
-    import pandas as pd
+def _rect_layer(rs, n, size, box=(130, 31, 142, 43)):
+    """``n`` random axis-aligned rectangles in ``box``, ids pg00000…"""
+    from ksj2gp_spark.geo import wkb as W
 
+    x = rs.uniform(box[0], box[2], n); y = rs.uniform(box[1], box[3], n)
+    w = rs.uniform(*size, n); h = rs.uniform(*size, n)
+    return pd.DataFrame({
+        "polygon_id": [f"pg{i:05d}" for i in range(n)],
+        "行政区域コード": [f"{10000 + i}" for i in range(n)],
+        "geometry": [
+            W.polygon([(a, b), (a + c, b), (a + c, b + d), (a, b + d), (a, b)])
+            for a, b, c, d in zip(x, y, w, h)
+        ],
+    })
+
+
+def _assert_same_knn(got, want):
+    """Same (image, rank) rows, polygons, admin codes and distances, the
+    distances bit for bit."""
+    m = want.merge(got, on=["image_id", "rank"], suffixes=("_w", "_g"))
+    assert len(m) == len(want) == len(got)
+    assert (m["distance_w"].to_numpy() == m["distance_g"].to_numpy()).all()
+    assert (m["polygon_id_w"] == m["polygon_id_g"]).all()
+    assert (m["admin_code_w"] == m["admin_code_g"]).all()
+
+
+def test_knn_pruned_equals_brute_force(spark):
+    """Bound-pruned kNN ≡ brute-force ``knn_join`` on an 800-polygon
+    layer plus two mirror-image squares and an empty polygon: identical
+    neighbours and distances for points over the layer, points 0.75°
+    offshore and a point equidistant from the mirror pair, whose tie
+    resolves in admin_code order."""
     from ksj2gp_spark.geo import wkb as W
 
     rs = np.random.default_rng(3)
-    NP_, NPT = 800, 1200
-    x = rs.uniform(130, 142, NP_); y = rs.uniform(31, 43, NP_)
-    w = rs.uniform(0.01, 0.08, NP_); h = rs.uniform(0.01, 0.08, NP_)
-    polys = pd.DataFrame({
-        "polygon_id": [f"pg{i:05d}" for i in range(NP_)],
-        "行政区域コード": [f"{10000 + i}" for i in range(NP_)],
+    NPT = 1200
+    sq = [(0.0, -0.25), (0.25, -0.25), (0.25, 0.25), (0.0, 0.25)]
+    extra = pd.DataFrame({
+        "polygon_id": ["tieA", "tieB", "empty"],
+        "行政区域コード": ["99999", "00001", "00000"],
         "geometry": [
-            W.polygon([(a, b), (a + c, b), (a + c, b + d), (a, b + d), (a, b)])
-            for a, b, c, d in zip(x, y, w, h)
+            W.polygon([(145.75 - dx, 40.0 + dy) for dx, dy in sq]),
+            W.polygon([(146.25 + dx, 40.0 + dy) for dx, dy in sq]),
+            W.polygon(),
         ],
     })
+    polys = pd.concat(
+        [_rect_layer(rs, 800, (0.01, 0.08)), extra], ignore_index=True
+    )
+    lon = np.r_[rs.uniform(129.5, 142.5, NPT), np.full(40, 142.75), 146.0]
+    lat = np.r_[rs.uniform(30.5, 43.5, NPT), rs.uniform(31.2, 42.8, 40), 40.0]
     pts = spark.createDataFrame(pd.DataFrame({
-        "image_id": [f"p{i:05d}" for i in range(NPT)],
-        "lon": rs.uniform(129.5, 142.5, NPT),
-        "lat": rs.uniform(30.5, 43.5, NPT),
+        "image_id": [f"p{i:05d}" for i in range(len(lon))],
+        "lon": lon, "lat": lat,
     }))
     brute = spatial.knn_join(pts, polys, k=3).toPandas()
     pruned = spatial.knn_join_pruned(pts, polys, k=3, res=8).toPandas()
-    m = brute.merge(pruned, on=["image_id", "rank"], suffixes=("_b", "_p"))
-    assert len(m) == NPT * 3
-    assert np.allclose(m["distance_b"], m["distance_p"])
-    assert (m["polygon_id_b"] == m["polygon_id_p"]).all()
+    _assert_same_knn(pruned, brute)
+    tie = pruned[pruned["image_id"] == f"p{len(lon) - 1:05d}"].sort_values("rank")
+    assert list(tie["polygon_id"][:2]) == ["tieB", "tieA"]
+    assert tie["distance"].iloc[0] == tie["distance"].iloc[1] == 0.25
+
+
+def test_knn_pruned_k_beyond_layer(spark):
+    """k larger than the layer returns every polygon, ranked as
+    ``knn_join`` ranks them with k = the layer size; the polygon with no
+    vertices comes last, at infinite distance."""
+    from ksj2gp_spark.geo import wkb as W
+
+    rs = np.random.default_rng(5)
+    polys = _rect_layer(rs, 6, (0.1, 0.5))
+    polys.loc[len(polys)] = ["pgempty", "00000", W.polygon()]
+    pts = spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"p{i:03d}" for i in range(50)],
+        "lon": rs.uniform(129, 143, 50), "lat": rs.uniform(30, 44, 50),
+    }))
+    brute = spatial.knn_join(pts, polys, k=len(polys)).toPandas()
+    pruned = spatial.knn_join_pruned(pts, polys, k=50).toPandas()
+    _assert_same_knn(pruned, brute)
+    last = pruned[pruned["rank"] == len(polys)]
+    assert (last["polygon_id"] == "pgempty").all()
+    assert np.isinf(last["distance"]).all()
+
+
+def test_knn_pruned_large_layer_sample(spark):
+    """On a 20,000-polygon layer, where the leaf-block prune does most
+    of the work, a sample of points gets ``knn_join``'s rows."""
+    rs = np.random.default_rng(17)
+    polys = _rect_layer(rs, 20_000, (0.005, 0.03))
+    lon = np.r_[rs.uniform(129.5, 142.5, 150), np.full(10, 142.75)]
+    lat = np.r_[rs.uniform(30.5, 43.5, 150), rs.uniform(31, 43, 10)]
+    pts = spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"p{i:03d}" for i in range(len(lon))],
+        "lon": lon, "lat": lat,
+    })).repartition(1)
+    brute = spatial.knn_join(pts, polys, k=3).toPandas()
+    pruned = spatial.knn_join_pruned(pts, polys, k=3).toPandas()
+    _assert_same_knn(pruned, brute)
 
 
 def test_fused_large_layer_ocean_lane_equals_pruned_knn(spark):
-    """On a 2,000-polygon layer the fused operator's ocean lane runs
-    the ring-pruned kernel (no dense matrix); its kNN rows must equal
-    knn_join_pruned on the unmatched points, and its rank-0 rows must
-    equal the relational tile assignment."""
-    import pandas as pd
-
-    from ksj2gp_spark.geo import wkb as W
-
+    """On a 2,000-polygon layer the fused operator's ocean lane must
+    equal brute-force ``knn_join`` on the unmatched points, distances
+    bit for bit, and its rank-0 rows must equal the relational tile
+    assignment."""
     rs = np.random.default_rng(11)
-    NP_, NPT = 2000, 1500
-    x = rs.uniform(130, 142, NP_); y = rs.uniform(31, 43, NP_)
-    w = rs.uniform(0.005, 0.05, NP_); h = rs.uniform(0.005, 0.05, NP_)
-    polys = pd.DataFrame({
-        "polygon_id": [f"pg{i:05d}" for i in range(NP_)],
-        "行政区域コード": [f"{10000 + i}" for i in range(NP_)],
-        "geometry": [
-            W.polygon([(a, b), (a + c, b), (a + c, b + d), (a, b + d), (a, b)])
-            for a, b, c, d in zip(x, y, w, h)
-        ],
-    })
+    NPT = 1500
+    polys = _rect_layer(rs, 2000, (0.005, 0.05))
     pts = spark.createDataFrame(pd.DataFrame({
         "image_id": [f"p{i:05d}" for i in range(NPT)],
         "lon": rs.uniform(129.5, 142.5, NPT),
@@ -317,21 +372,17 @@ def test_fused_large_layer_ocean_lane_equals_pruned_knn(spark):
     fused = spatial.fused_assign_or_knn(
         pts, polys, scheme="grid", k=3
     ).toPandas()
-    assert spatial.fused_assign_or_knn.__defaults__  # knn_dense_max < 2000
     knn_rows = fused[fused["rank"] > 0]
     matched_ids = set(fused.loc[fused["rank"] == 0, "image_id"])
     ocean_pts = pts.toPandas()
     ocean_pts = spark.createDataFrame(
         ocean_pts[~ocean_pts["image_id"].isin(matched_ids)]
     )
-    pruned = spatial.knn_join_pruned(ocean_pts, polys, k=3, res=8).toPandas()
-    m = pruned.merge(
-        knn_rows, on=["image_id", "rank"], suffixes=("_p", "_f")
-    )
-    assert len(m) == len(pruned) == len(knn_rows)
-    assert np.allclose(m["distance_p"], m["distance_f"])
-    assert (m["polygon_id_p"] == m["polygon_id_f"]).all()
-    assert (m["admin_code_p"] == m["admin_code_f"]).all()
+    _assert_same_knn(knn_rows, spatial.knn_join(ocean_pts, polys, k=3).toPandas())
+    tiles = spatial.spatial_join_tiles(pts, polys, scheme="grid").toPandas()
+    key = ["image_id", "cell", "polygon_id", "admin_code"]
+    assert set(map(tuple, fused.loc[fused["rank"] == 0, key].itertuples(
+        index=False))) == set(map(tuple, tiles[key].itertuples(index=False)))
 
 
 def test_fused_assign_or_knn_tokyo_datum_images(spark, images, expected):
