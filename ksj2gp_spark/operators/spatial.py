@@ -15,9 +15,10 @@ vectorized distance top-k. Two physical strategies:
   build side replicates hot-cell rows S times, flattening partition
   sizes. AQE skew-join remains on as a backstop.
 
-Refinement receives polygon geometry via a Spark broadcast variable
-(dict polygon_id → WKB) so candidate rows never carry geometry bytes
-through the join.
+Refinement receives the polygon layer via a Spark broadcast variable
+(its polygon ids and flat edge index, ``geo/edges.py``) so candidate
+rows never carry geometry bytes through the join. Every broadcast-layer
+join tests PIP and distance with that one index.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..geo import geom, wkb
+from ..geo.cover import _ragged_index
 from ..geo.edges import EdgeIndex
 from .cells import (
     normalize_polygons,
@@ -161,109 +163,36 @@ def refine_pip(
 ) -> DataFrame:
     """Exact point-in-polygon refinement over candidate pairs.
 
-    Vectorized per (batch × polygon): groups each Arrow batch by
-    polygon_id and evaluates covers() for all its points at once.
-    Geometry travels as a broadcast dict, not through the join.
+    The layer travels as one broadcast of its polygon ids and its edge
+    index, not through the join. Per Arrow batch, the candidates'
+    ``polygon_id`` map to polygon numbers in one lookup and every pair
+    is tested in one :meth:`~ksj2gp_spark.geo.edges.EdgeIndex.contains`
+    call. A ``polygon_id`` that repeats in the layer would name two
+    geometries, so it raises ``ValueError``.
     """
-    spark = candidates.sparkSession
-    geo_b = spark.sparkContext.broadcast(
-        {
-            row["polygon_id"]: bytes(row["geometry"])
-            for _, row in polygons_pdf.iterrows()
-        }
+    ids = pd.Index(polygons_pdf["polygon_id"])
+    if not ids.is_unique:
+        repeated = ids[ids.duplicated()].unique().tolist()
+        raise ValueError(f"polygon_id repeats in the layer: {repeated}")
+    index = EdgeIndex.build(
+        [wkb.loads(bytes(buf)) for buf in polygons_pdf["geometry"]]
     )
+    shipped = candidates.sparkSession.sparkContext.broadcast((ids, index))
     schema = candidates.select(*out_cols).schema
 
     def refine(batches):
-        geos: dict[str, wkb.Geometry] = {}
+        ids, index = shipped.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            lons = pdf[lon_col].to_numpy(dtype=np.float64)
-            lats = pdf[lat_col].to_numpy(dtype=np.float64)
-            for pid, idx in pdf.groupby("polygon_id").indices.items():
-                g = geos.get(pid)
-                if g is None:
-                    g = geos[pid] = wkb.loads(geo_b.value[pid])
-                keep[idx] = geom.geometry_contains(lons[idx], lats[idx], g)
+            keep = index.contains(
+                pdf[lon_col].to_numpy(dtype=np.float64),
+                pdf[lat_col].to_numpy(dtype=np.float64),
+                ids.get_indexer(pdf["polygon_id"]),
+            )
             yield pdf.loc[keep, out_cols]
 
     return candidates.mapInPandas(refine, schema=schema)
-
-
-def fused_join_tiles(
-    images: DataFrame,
-    polygons_pdf: pd.DataFrame,
-    scheme: str,
-    res: int,
-    crs: str | None = None,
-    admin_col: str = "行政区域コード",
-    simplify_tol: float | None = None,
-) -> DataFrame:
-    """Single-pass map-side spatial join for broadcast-sized polygon
-    layers: ONE ``mapInPandas`` computes cells, probes the broadcast
-    cover (vectorized pandas hash-merge), and refines with exact PIP —
-    the probe table crosses the JVM↔Python Arrow boundary exactly once
-    and nothing shuffles. This is the 10^12-row path; the ``broadcast``
-    strategy keeps the same work visible to Catalyst as a
-    BroadcastHashJoin at the cost of a second Arrow pass."""
-    from .cells import _cell_fn
-
-    spark = images.sparkSession
-    polys = normalize_polygons(polygons_pdf)
-    if simplify_tol:
-        polys = simplify_polygons(polys, simplify_tol)
-    cover_pdf = polygon_cover_pdf(polys, scheme, res, extra_cols=(admin_col,))
-    cover_b = spark.sparkContext.broadcast(cover_pdf)
-    geos_b = spark.sparkContext.broadcast(
-        {row["polygon_id"]: bytes(row["geometry"]) for _, row in polys.iterrows()}
-    )
-    cell_fn = _cell_fn(scheme, res)
-    crs_name = crs
-
-    def run(batches):
-        from ..geo import transform as _tf
-
-        cover = cover_b.value
-        parsed: dict[str, wkb.Geometry] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            lons = pdf["lon"].to_numpy(dtype=np.float64)
-            lats = pdf["lat"].to_numpy(dtype=np.float64)
-            if crs_name:
-                lons, lats = _tf.to_wgs84(lons, lats, crs_name)
-            cells_v = cell_fn(lons, lats)
-            cand = pd.DataFrame(
-                {"i": np.arange(len(pdf)), "cell": cells_v}
-            ).merge(cover, on="cell", sort=False)
-            if cand.empty:
-                continue
-            keep = np.zeros(len(cand), dtype=bool)
-            ci = cand["i"].to_numpy()
-            for pid, idx in cand.groupby("polygon_id").indices.items():
-                g = parsed.get(pid)
-                if g is None:
-                    g = parsed[pid] = wkb.loads(geos_b.value[pid])
-                rows = ci[idx]
-                keep[idx] = geom.geometry_contains(lons[rows], lats[rows], g)
-            hit = cand.loc[keep]
-            sel = hit["i"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].to_numpy()[sel],
-                    "cell": hit["cell"].to_numpy(),
-                    "polygon_id": hit["polygon_id"].to_numpy(),
-                    "admin_code": hit[admin_col].to_numpy(),
-                }
-            )
-
-    probe = images.select("image_id", "lon", "lat")
-    return probe.mapInPandas(
-        run,
-        schema="image_id string, cell long, polygon_id string, admin_code string",
-    )
 
 
 def spatial_join_tiles(
@@ -282,10 +211,13 @@ def spatial_join_tiles(
     """images(lon, lat, image_id, …) × polygon layer → tile assignments
     ``(image_id, cell, admin_code, polygon_id)``.
 
-    Strategies: ``fused`` (single Arrow pass, broadcast dict cover —
-    fastest for broadcast-sized layers), ``broadcast`` (Catalyst-visible
-    BroadcastHashJoin + refine pass), ``shuffle`` (+ optional hot-cell
-    salting) for polygon layers too large to broadcast.
+    Strategies: ``fused`` (:func:`fused_assign_or_knn` without its
+    ocean lane: one Arrow pass, zero shuffles — fastest for
+    broadcast-sized layers), ``broadcast`` (Catalyst-visible
+    BroadcastHashJoin of the cover + :func:`refine_pip` pass),
+    ``shuffle`` (+ optional hot-cell salting) for polygon layers too
+    large to broadcast. Every strategy tests PIP with the layer's edge
+    index.
 
     ``simplify_tol`` (opt-in) Douglas-Peucker-simplifies the polygon
     layer before the cover/refine broadcast — an approximation with
@@ -294,15 +226,14 @@ def spatial_join_tiles(
     size to shrink survey-resolution coastline rings.
     """
     res = res if res is not None else DEFAULT_RES[scheme]
-    if strategy == "fused":
-        return fused_join_tiles(
-            images, polygons_pdf, scheme, res, crs=crs, admin_col=admin_col,
-            simplify_tol=simplify_tol,
-        )
-    spark = images.sparkSession
     polys = normalize_polygons(polygons_pdf)
     if simplify_tol:
         polys = simplify_polygons(polys, simplify_tol)
+    if strategy == "fused":
+        return fused_assign_or_knn(
+            images, polys, scheme, res, k=0, admin_col=admin_col, crs=crs
+        ).select("image_id", "cell", "polygon_id", "admin_code")
+    spark = images.sparkSession
     cover_pdf = polygon_cover_pdf(polys, scheme, res, extra_cols=extra_cols)
     if strategy == "auto":
         # Broadcast while the exploded cover fits comfortably under the
@@ -817,65 +748,49 @@ def dwithin_join(
     are near which admin areas".
 
     One mapInPandas over the distributed point side; the polygon side
-    broadcasts with PRECOMPUTED d-expanded bboxes, so the per-batch
-    work is a vectorized bbox mask per polygon and the exact
-    segment-distance kernel runs only on the points that survive it —
-    never a dense points x polygons distance matrix. The mask loop
-    is one Python iteration per polygon and batch.
+    broadcasts as the layer's edge index. Per Arrow batch, the
+    candidate pairs are the points inside each polygon's bbox expanded
+    by ``d``, found with one ``np.searchsorted`` over the x-sorted
+    points; one :meth:`~ksj2gp_spark.geo.edges.EdgeIndex.distance`
+    call over all of them gives the exact distances — never a dense
+    points x polygons distance matrix. An empty polygon has no bbox
+    and joins nothing.
     """
     if d < 0:
         raise ValueError("d must be non-negative")
-    spark = images.sparkSession
-    polys = normalize_polygons(polygons_pdf)
-    payload = []
-    for _, row in polys.iterrows():
-        g = wkb.loads(bytes(row["geometry"]))
-        payload.append(
-            (row["polygon_id"], row[admin_col], bytes(row["geometry"]),
-             g.bounds())
-        )
-    b = spark.sparkContext.broadcast(payload)
+    shipped = images.sparkSession.sparkContext.broadcast(
+        _polygon_side(normalize_polygons(polygons_pdf), admin_col)
+    )
     images = images.select("image_id", lon_col, lat_col)
 
     def within(batches):
-        geos = None
+        pids, admins, index = shipped.value
+        xmin, ymin, xmax, ymax = index.bbox.T
         for pdf in batches:
             if pdf.empty:
                 continue
-            if geos is None:
-                geos = [
-                    (pid, code, wkb.loads(buf), bb)
-                    for pid, code, buf, bb in b.value
-                ]
             lons = pdf[lon_col].to_numpy(dtype=np.float64)
             lats = pdf[lat_col].to_numpy(dtype=np.float64)
-            ids = pdf["image_id"].to_numpy()
-            out_id, out_pid, out_code, out_d = [], [], [], []
-            for pid, code, g, (xmin, ymin, xmax, ymax) in geos:
-                mask = (
-                    (lons >= xmin - d) & (lons <= xmax + d)
-                    & (lats >= ymin - d) & (lats <= ymax + d)
-                )
-                if not mask.any():
-                    continue
-                dist = geom.distance_to_geometry(lons[mask], lats[mask], g)
-                sel = dist <= d
-                if not sel.any():
-                    continue
-                n = int(sel.sum())
-                out_id.append(ids[mask][sel])
-                out_pid.extend([pid] * n)
-                out_code.extend([code] * n)
-                out_d.append(dist[sel])
-            if out_id:
-                yield pd.DataFrame(
-                    {
-                        "image_id": np.concatenate(out_id),
-                        "polygon_id": out_pid,
-                        "admin_code": out_code,
-                        "dist": np.concatenate(out_d),
-                    }
-                )
+            # each polygon's run of x-sorted points with
+            # xmin - d <= lon <= xmax + d, then the same test on lat
+            by_x = np.argsort(lons, kind="stable")
+            lo = np.searchsorted(lons[by_x], xmin - d, "left")
+            hi = np.searchsorted(lons[by_x], xmax + d, "right")
+            poly, k = _ragged_index(np.maximum(hi - lo, 0))
+            row = by_x[lo[poly] + k]
+            box = (lats[row] >= ymin[poly] - d) & (lats[row] <= ymax[poly] + d)
+            row, poly = row[box], poly[box]
+            dist = index.distance(lons[row], lats[row], poly)
+            near = dist <= d
+            row, poly = row[near], poly[near]
+            yield pd.DataFrame(
+                {
+                    "image_id": pdf["image_id"].to_numpy()[row],
+                    "polygon_id": pids[poly],
+                    "admin_code": admins[poly],
+                    "dist": dist[near],
+                }
+            )
 
     return images.mapInPandas(
         within,

@@ -247,13 +247,41 @@ def test_join_concave_polygon_with_hole(spark, scheme, res):
         if slow_contains(tri, lon[i], lat[i]):
             expected.add((f"p{i:05d}", "T"))
 
-    for strategy in ("broadcast", "fused"):
+    for strategy in ("broadcast", "fused", "shuffle"):
         got = spatial.spatial_join_tiles(
             pts, polys, scheme=scheme, res=res, strategy=strategy
         ).toPandas()
         assert (
             set(zip(got["image_id"], got["polygon_id"])) == expected
         ), f"{scheme}/{strategy}"
+
+
+def test_broadcast_join_rejects_repeated_polygon_id(spark):
+    """Two different squares under one polygon_id: the refine cannot
+    tell which geometry a candidate came from, so the join refuses the
+    layer instead of testing one square's candidates against the
+    other."""
+    from ksj2gp_spark.geo import wkb as W
+
+    polys = pd.DataFrame({
+        "polygon_id": ["A", "dup", "dup"],
+        "行政区域コード": ["90001", "90002", "90003"],
+        "geometry": [
+            W.polygon([(139.0, 35.0), (139.5, 35.0), (139.5, 35.5),
+                       (139.0, 35.5), (139.0, 35.0)]),
+            W.polygon([(140.0, 35.0), (140.5, 35.0), (140.5, 35.5),
+                       (140.0, 35.5), (140.0, 35.0)]),
+            W.polygon([(141.0, 35.0), (141.5, 35.0), (141.5, 35.5),
+                       (141.0, 35.5), (141.0, 35.0)]),
+        ],
+    })
+    pts = spark.createDataFrame(pd.DataFrame({
+        "image_id": ["a", "b"], "lon": [140.2, 141.2], "lat": [35.2, 35.2],
+    }))
+    with pytest.raises(ValueError, match="dup"):
+        spatial.spatial_join_tiles(
+            pts, polys, scheme="grid", res=10, strategy="broadcast"
+        ).collect()
 
 
 def _rect_layer(rs, n, size, box=(130, 31, 142, 43)):
@@ -707,7 +735,8 @@ def test_dwithin_join_matches_brute_force(spark):
     """dwithin_join's bbox prefilter + assembly must reproduce the
     exact kernel evaluated on ALL pairs (no prefilter): no pair lost
     at the expanded-bbox boundary, inclusive threshold, dist=0 for
-    covered points — checked on concave + holed geometry."""
+    covered points — checked on concave + holed geometry. An empty
+    polygon in the layer joins nothing and raises nothing."""
     import pandas as pd
 
     from ksj2gp_spark.geo import geom as G, wkb as W
@@ -724,9 +753,9 @@ def test_dwithin_join_matches_brute_force(spark):
     tri = [(140.3, 36.0), (140.9, 36.0), (140.6, 36.5), (140.3, 36.0)]
     polys = pd.DataFrame(
         {
-            "polygon_id": ["L", "T"],
-            "行政区域コード": ["90001", "90002"],
-            "geometry": [W.polygon(ell, hole), W.polygon(tri)],
+            "polygon_id": ["L", "T", "E"],
+            "行政区域コード": ["90001", "90002", "90003"],
+            "geometry": [W.polygon(ell, hole), W.polygon(tri), W.polygon()],
         }
     )
     rs = np.random.default_rng(11)
@@ -745,12 +774,13 @@ def test_dwithin_join_matches_brute_force(spark):
         for r in sp.dwithin_join(pts, polys, d).collect()
     }
     want = {}
-    for pid, buf in (("L", polys["geometry"][0]), ("T", polys["geometry"][1])):
+    for pid, buf in zip(polys["polygon_id"], polys["geometry"]):
         g = W.loads(buf)
         dist = G.distance_to_geometry(lon, lat, g)
         for i in np.nonzero(dist <= d)[0]:
             want[(f"p{i:05d}", pid)] = dist[i]
     assert set(got) == set(want)
+    assert not any(pid == "E" for _, pid in got)
     for k, v in want.items():
         assert got[k] == v  # bit-identical: same kernel, same inputs
     assert any(v == 0.0 for v in want.values())  # covered points present
