@@ -377,23 +377,21 @@ def rasterize_layer(
     refine as the tile lane, so concave/holed layers rasterize
     exactly."""
     from ..geo import wkb as _wkb
+    from ..geo.cover import _flatten
     from . import spatial as sp
     from .cells import normalize_polygons, polygon_cover_pdf, with_cell
 
     polys = normalize_polygons(polygons_pdf)
     size = 360.0 / (1 << res)
-    if len(polys) == 0:  # degenerate but legal: empty result, not inf//size
+    # the layer extent over every ring vertex; empty polygons add none
+    geoms = [_wkb.loads(bytes(b)) for b in polys["geometry"]]
+    x, y = _flatten(geoms)[:2]
+    if not len(x):  # no polygon has area: empty result, not inf//size
         return spark.createDataFrame(
             [], "cell long, polygon_id string, admin_code string"
         )
-    xmin = ymin = float("inf")
-    xmax = ymax = float("-inf")
-    for _, row in polys.iterrows():
-        x0, y0, x1, y1 = _wkb.loads(bytes(row["geometry"])).bounds()
-        xmin, ymin = min(xmin, x0), min(ymin, y0)
-        xmax, ymax = max(xmax, x1), max(ymax, y1)
-    i0, i1 = int((xmin + 180.0) // size), int((xmax + 180.0) // size)
-    j0, j1 = int((ymin + 90.0) // size), int((ymax + 90.0) // size)
+    i0, i1 = int((x.min() + 180.0) // size), int((x.max() + 180.0) // size)
+    j0, j1 = int((y.min() + 90.0) // size), int((y.max() + 90.0) // size)
     cells = (
         spark.range(i0, i1 + 1)
         .select(F.col("id").alias("_i"))
@@ -406,7 +404,9 @@ def rasterize_layer(
     )
     join_res = sp.DEFAULT_RES["grid"]
     cover = spark.createDataFrame(
-        polygon_cover_pdf(polys, "grid", join_res, extra_cols=(admin_col,))
+        polygon_cover_pdf(
+            polys, "grid", join_res, extra_cols=(admin_col,), geoms=geoms
+        )
     )
     cand = sp.candidate_join(with_cell(cells, "grid", join_res), cover)
     refined = sp.refine_pip(

@@ -853,6 +853,8 @@ def dwithin_join_shuffle(
             cells_out: list[np.ndarray] = []
             for pid, buf in zip(pdf["polygon_id"], pdf["geometry"]):
                 g = wkb.loads(bytes(buf))
+                if not len(g.all_coords()):
+                    continue  # an empty polygon has no bbox: no cells
                 xmin, ymin, xmax, ymax = g.bounds()
                 cells = grid.cover_bbox(
                     xmin - dd, ymin - dd, xmax + dd, ymax + dd, res

@@ -259,7 +259,12 @@ def _tile_chunks(
 ) -> dict:
     """Tile each uncommitted chunk of ``file_map`` ({chunk id: image
     files}) into ``out_path``. The polygon index is built and broadcast
-    once, on the first chunk that needs it, and released on return."""
+    once, on the first chunk that needs it, and released on return.
+    ``process`` runs on this thread (``write.run_resumable`` calls it in
+    chunk order), so the lazy build is never raced; the chunk writes run
+    concurrently, and ``run_resumable`` returns only after every write
+    it started has finished, so the release never pulls the broadcast
+    from a running chunk job."""
     built: list[spatial.PolygonIndex] = []
 
     def process(chunk_id: str) -> DataFrame:

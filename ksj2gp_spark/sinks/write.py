@@ -13,19 +13,28 @@ chunk's lineage manifest committed via atomic rename. On restart,
 chunks with a committed manifest are skipped without touching data.
 
 Manifest contents per chunk: row count, approx distinct cells,
-per-admin-code histogram, wall time, engine version — the "per-partition
-lineage manifests and row-count + cell-assignment metrics" of the
-north_star.
+per-admin-code histogram, an HLL sketch of ``image_id``, wall time,
+engine version — the "per-partition lineage manifests and row-count +
+cell-assignment metrics" of the north_star. A chunk commit is ONE
+Spark job: the two sketches are observed on the frame as it is written
+(``DataFrame.observe``), and the row count and histogram come from the
+chunk's own parquet files on the driver, so nothing re-reads the chunk
+through Spark. :func:`run_resumable` keeps up to
+``defaultParallelism`` chunk writes in flight at once.
 """
 
 from __future__ import annotations
 
+import base64
 import json
 import os
 import time
+from collections import Counter
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from .. import __version__
 
@@ -52,39 +61,51 @@ def _write_manifest(base: str, chunk: str, payload: dict) -> None:
     os.replace(tmp, _manifest_path(base, chunk))  # atomic commit
 
 
-def tile_metrics(df: DataFrame, cell_col: str = "cell") -> dict:
-    """One aggregation pass: rows, approx distinct cells, admin
-    histogram, plus a MERGEABLE DataSketches HLL sketch of image_id
-    (base64 in the manifest). Mergeability is the point: per-chunk
-    sketches union into exact-algebra global distinct estimates
-    without re-reading any data — see :func:`global_distinct_images`.
-    """
-    import base64
+def tile_metrics(out: str, observed: dict) -> dict:
+    """The manifest metrics of the chunk written under ``out``.
 
-    aggs = [
-        F.count(F.lit(1)).alias("rows"),
-        F.approx_count_distinct(cell_col).alias("approx_cells"),
-    ]
-    has_img = "image_id" in df.columns
-    if has_img:
-        aggs.append(F.hll_sketch_agg("image_id").alias("img_sketch"))
-    agg = df.agg(*aggs).collect()[0]
+    * ``rows``: the sum of the row counts in the footers of the chunk's
+      parquet files.
+    * ``admin_histogram``: one Arrow ``value_counts`` over the
+      ``admin_code`` column of those files (``{}`` when the chunk has no
+      such column; null codes count under ``None``).
+    * ``approx_cells`` and ``image_hll_b64``: taken from ``observed``,
+      the ``approx_count_distinct(cell)`` and ``hll_sketch_agg(image_id)``
+      results :func:`write_chunk` observes during the write. Both are
+      sketches that ignore duplicates, so a retried task cannot inflate
+      them. The HLL sketch is MERGEABLE: per-chunk sketches union into
+      a global distinct estimate without re-reading any data — see
+      :func:`global_distinct_images`.
+
+    All of it is driver-side: footers and one column, no Spark job.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = 0
+    codes = []
+    for d, _, names in os.walk(out):
+        for n in sorted(names):
+            if not n.endswith(".parquet") or n.startswith((".", "_")):
+                continue
+            pf = pq.ParquetFile(os.path.join(d, n))
+            rows += pf.metadata.num_rows
+            if "admin_code" in pf.schema_arrow.names:
+                codes += pf.read(columns=["admin_code"]).column(0).chunks
     hist = {
-        r["admin_code"]: r["n"]
-        for r in df.groupBy("admin_code")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    } if "admin_code" in df.columns else {}
-    out = {
-        "rows": agg["rows"],
-        "approx_cells": agg["approx_cells"],
+        c["values"]: c["counts"]
+        for c in pa.chunked_array(codes).value_counts().to_pylist()
+    } if codes else {}
+    metrics = {
+        "rows": rows,
+        "approx_cells": observed["approx_cells"],
         "admin_histogram": hist,
     }
-    if has_img and agg["img_sketch"] is not None:
-        out["image_hll_b64"] = base64.b64encode(
-            bytes(agg["img_sketch"])
+    if observed.get("image_hll") is not None:
+        metrics["image_hll_b64"] = base64.b64encode(
+            bytes(observed["image_hll"])
         ).decode("ascii")
-    return out
+    return metrics
 
 
 def global_distinct_images(spark, base: str) -> int:
@@ -93,13 +114,10 @@ def global_distinct_images(spark, base: str) -> int:
     manifest JSONs (bytes, not data) — the incremental-metrics path for
     a 100 TB output: each new chunk contributes its sketch once, and
     the global estimate is a driver-side merge."""
-    import base64
-    import json as _json
-
     sketches = []
     for c in sorted(committed_chunks(base)):
         with open(_manifest_path(base, c)) as f:
-            m = _json.load(f)
+            m = json.load(f)
         if "image_hll_b64" in m:
             sketches.append(base64.b64decode(m["image_hll_b64"]))
     if not sketches:
@@ -125,27 +143,35 @@ def write_chunk(
     subdirectories inside the chunk so downstream per-admin reads
     prune at the directory level. Partitioning happens on derived
     ``_p_<col>`` copies, so the data columns keep their exact types
-    and every file still carries the full row schema."""
+    and every file still carries the full row schema.
+
+    The write is the chunk's only Spark job. ``approx_count_distinct``
+    of ``cell_col`` and ``hll_sketch_agg`` of ``image_id`` (when the
+    frame has one) are observed on the written rows; the row count and
+    the admin histogram are read from the written files on the driver
+    (see :func:`tile_metrics`). The manifest is renamed into place
+    only after the write has succeeded, so a failed write leaves no
+    manifest and the chunk is rewritten on the next run."""
     t0 = time.time()
     out = os.path.join(base, f"chunk={chunk}")
-    writer_df = df
-    if partition_cols:
-        from pyspark.sql import functions as _F
-
-        for c in partition_cols:
-            writer_df = writer_df.withColumn(f"_p_{c}", _F.col(c))
+    sketches = [F.approx_count_distinct(cell_col).alias("approx_cells")]
+    if "image_id" in df.columns:
+        sketches.append(F.hll_sketch_agg("image_id").alias("image_hll"))
+    observation = Observation()
+    writer_df = df.observe(observation, *sketches)
+    for c in partition_cols:
+        writer_df = writer_df.withColumn(f"_p_{c}", F.col(c))
     writer = writer_df.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*[f"_p_{c}" for c in partition_cols])
     writer.parquet(out)
-    written = df.sparkSession.read.parquet(out)
     payload = {
         "chunk": chunk,
         "engine_version": __version__,
         "path": out,
         "partition_cols": list(partition_cols),
         "elapsed_sec": round(time.time() - t0, 3),
-        **tile_metrics(written, cell_col),
+        **tile_metrics(out, observation.get),
     }
     _write_manifest(base, chunk, payload)
     return payload
@@ -159,24 +185,63 @@ def run_resumable(
     partition_cols: tuple[str, ...] = (),
 ) -> dict:
     """Process chunks, skipping committed ones. Returns a run summary
-    {chunk: manifest}, with skipped chunks loaded from their manifests."""
+    {chunk: manifest} in chunk order, with skipped chunks loaded from
+    their manifests.
+
+    ``process(chunk)`` runs on the caller's thread, in chunk order, so
+    whatever it builds lazily is built once and by one thread. Each
+    chunk's :func:`write_chunk` then runs on a thread pool, with at most
+    ``defaultParallelism`` chunk writes in flight; the caller waits for
+    a free slot before processing the next chunk. Pool threads inherit
+    the caller's Spark local properties (job group, description) and
+    job tags as they were at submission, so every chunk job belongs to
+    the caller's job group. A single chunk goes through the same pool.
+
+    On the first failure, from ``process`` or from a chunk write, no
+    further chunk is processed; the writes already in flight run to
+    their commit, and then the failure is raised (a ``process`` failure
+    first, else the failed write that comes first in chunk order). A
+    failed chunk leaves no manifest, so the next run redoes exactly the
+    chunks without one. Chunk ids must be distinct: two writes of one
+    id would race on one directory."""
+    chunks = list(chunks)
+    repeated = sorted(c for c, n in Counter(chunks).items() if n > 1)
+    if repeated:
+        raise ValueError(f"chunk ids repeat: {repeated}")
     done = committed_chunks(base)
-    summary: dict[str, dict] = {}
-    for chunk in chunks:
-        if chunk in done:
-            with open(_manifest_path(base, chunk)) as f:
-                summary[chunk] = json.load(f)
-            summary[chunk]["skipped"] = True
-            continue
-        summary[chunk] = write_chunk(
-            process(chunk), base, chunk, cell_col, partition_cols
-        )
-    return summary
-
-
-def _read_chunk(spark, path: str) -> DataFrame:
-    df = spark.read.option("basePath", path).parquet(path)
-    return df.drop(*[c for c in df.columns if c.startswith("_p_")])
+    summary: dict[str, dict | Future] = {}
+    in_flight: set[Future] = set()
+    pool: ThreadPoolExecutor | None = None
+    width = 0
+    try:
+        for chunk in chunks:
+            if chunk in done:
+                with open(_manifest_path(base, chunk)) as f:
+                    summary[chunk] = json.load(f)
+                summary[chunk]["skipped"] = True
+                continue
+            if len(in_flight) >= width > 0:
+                wait(in_flight, return_when=FIRST_COMPLETED)
+            finished = {f for f in in_flight if f.done()}
+            in_flight -= finished
+            if any(f.exception() is not None for f in finished):
+                break
+            df = process(chunk)
+            if pool is None:
+                width = max(1, df.sparkSession.sparkContext.defaultParallelism)
+                pool = ThreadPoolExecutor(width, thread_name_prefix="write_chunk")
+            target = inheritable_thread_target(df.sparkSession)(write_chunk)
+            summary[chunk] = pool.submit(
+                target, df, base, chunk, cell_col, partition_cols
+            )
+            in_flight.add(summary[chunk])
+    finally:
+        if pool is not None:
+            pool.shutdown(wait=True)
+    return {
+        c: m.result() if isinstance(m, Future) else m
+        for c, m in summary.items()
+    }
 
 
 def _chunk_layout(base: str, chunk: str) -> tuple[str, ...]:

@@ -178,6 +178,120 @@ class TestResumableSink:
         assert m["rows"] > 0 and m["approx_cells"] > 0
         assert sum(m["admin_histogram"].values()) == m["rows"]
 
+    def test_failed_chunk_job_leaves_no_manifest(self, spark, tmp_path):
+        """A task failure inside one chunk's write job while earlier
+        chunks are still writing: the failed chunk commits no manifest,
+        the chunks in flight commit whole, the failure is raised, and
+        the rerun tiles every row exactly once."""
+        import time
+
+        base = str(tmp_path / "tiles_fail")
+        calls = []
+
+        def expected(chunk):
+            imgs = fixtures.images_df(spark, 200, with_bytes=False).filter(
+                f"pmod(xxhash64(image_id), 4) = {int(chunk)}"
+            )
+            return spatial.spatial_join_tiles(
+                imgs, fixtures.polygon_layer(), scheme="grid", res=10
+            )
+
+        def make_process(fail_on):
+            def process(chunk):
+                calls.append(chunk)
+                tiles = expected(chunk)
+
+                def udf(batches):
+                    for b in batches:
+                        if chunk == fail_on:
+                            raise RuntimeError("injected task failure")
+                        if fail_on and chunk < fail_on:
+                            time.sleep(2)  # still writing when it fails
+                        yield b
+
+                return tiles.mapInPandas(udf, tiles.schema)
+
+            return process
+
+        with pytest.raises(Exception, match="injected task failure"):
+            sink.run_resumable(base, self._chunks(), make_process("02"))
+        committed = sink.committed_chunks(base)
+        assert {"00", "01"} <= committed and "02" not in committed
+        assert calls[:3] == ["00", "01", "02"]
+        key = lambda d: sorted(map(tuple, d.to_numpy()))
+        for c in committed:  # each committed chunk is whole
+            got = spark.read.parquet(f"{base}/chunk={c}")
+            assert key(got.select("image_id", "admin_code").toPandas()) == key(
+                expected(c).select("image_id", "admin_code").toPandas()
+            )
+
+        calls.clear()
+        summary = sink.run_resumable(base, self._chunks(), make_process(None))
+        assert calls == [c for c in self._chunks() if c not in committed]
+        assert list(summary) == self._chunks()
+        got = sink.read_tiles(spark, base).select("image_id", "admin_code")
+        direct = expected(0).unionByName(expected(1)).unionByName(
+            expected(2)).unionByName(expected(3))
+        assert key(got.toPandas()) == key(
+            direct.select("image_id", "admin_code").toPandas()
+        )
+
+    def test_repeated_chunk_id_is_refused(self, tmp_path):
+        # two in-flight writes of one id would share one directory
+        def process(chunk):
+            raise AssertionError("process must not run")
+
+        with pytest.raises(ValueError, match="repeat"):
+            sink.run_resumable(str(tmp_path), ["a", "b", "a"], process)
+
+    def test_manifest_metrics_equal_readback(self, spark, tmp_path):
+        """The metrics observed during the write equal a recount over
+        the read-back chunk, for an unpartitioned chunk, a chunk
+        partitioned by admin_code and a chunk without admin_code."""
+        from pyspark.sql import functions as F
+
+        base = str(tmp_path / "tiles_metrics")
+        n = 3000
+        pdf = pd.DataFrame(
+            {
+                "image_id": [f"img{i:06d}" for i in range(n)],
+                "cell": np.arange(n, dtype=np.int64) % 613,
+                "admin_code": [
+                    None if i % 97 == 0 else f"{13100 + i % 23}"
+                    for i in range(n)
+                ],
+            }
+        )
+        df = spark.createDataFrame(pdf)
+        kinds = {
+            "flat": (df.filter("cell % 3 = 0"), ()),
+            "byadmin": (df.filter("cell % 3 = 1"), ("admin_code",)),
+            "noadmin": (df.filter("cell % 3 = 2").drop("admin_code"), ()),
+        }
+        for chunk, (chunk_df, cols) in kinds.items():
+            m = sink.write_chunk(chunk_df, base, chunk, partition_cols=cols)
+            back = spark.read.parquet(m["path"])
+            back = back.drop(*[c for c in back.columns if c.startswith("_p_")])
+            recount = back.agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.approx_count_distinct("cell").alias("cells"),
+            ).collect()[0]
+            hist = (
+                {
+                    r["admin_code"]: r["n"]
+                    for r in back.groupBy("admin_code").count()
+                    .withColumnRenamed("count", "n").collect()
+                }
+                if "admin_code" in back.columns
+                else {}
+            )
+            assert m["rows"] == recount["rows"] > 0
+            assert m["approx_cells"] == recount["cells"]
+            assert m["admin_histogram"] == hist
+            assert (None in hist) == (chunk != "noadmin")
+        est = sink.global_distinct_images(spark, base)
+        assert abs(est - n) / n < 0.05
+
     def test_rerun_is_idempotent(self, spark, tmp_path):
         base = str(tmp_path / "tiles2")
 

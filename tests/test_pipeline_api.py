@@ -78,6 +78,25 @@ def test_pipeline_builds_cover_once(spark, images_table, tmp_path, monkeypatch):
     assert released == [1]
 
 
+def test_chunk_jobs_run_in_caller_job_group(spark, images_table, tmp_path):
+    """The chunk writes run on pool threads, yet every Spark job of the
+    pipeline carries the caller's job group: none is left ungrouped."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "tile pipeline")
+    try:
+        summary = pipeline.run_tile_pipeline(
+            spark, images_table, fixtures.polygon_layer(),
+            str(tmp_path / "t"), scheme="grid", res=10, n_chunks=3,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(summary) == 3
+    assert len(tracker.getJobIdsForGroup("g")) >= len(summary)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
 def test_pipeline_resume_skips_committed(spark, images_table, tmp_path):
     out = str(tmp_path / "tiles_resume")
     calls = []

@@ -307,3 +307,29 @@ def test_rasterize_layer_empty_input(spark):
     got = rasterize_layer(spark, empty, res=12)
     assert got.count() == 0
     assert got.columns == ["cell", "polygon_id", "admin_code"]
+
+
+def test_rasterize_layer_skips_empty_polygon(spark):
+    """An empty polygon in the layer adds no cells and no extent: the
+    raster equals the same layer without that row."""
+    import pandas as pd
+
+    from ksj2gp_spark.geo import wkb as W
+    from ksj2gp_spark.operators.raster import rasterize_layer
+
+    tri = [(139.0, 35.0), (139.1, 35.0), (139.05, 35.08), (139.0, 35.0)]
+    square = [(139.2, 35.1), (139.3, 35.1), (139.3, 35.2), (139.2, 35.2),
+              (139.2, 35.1)]
+    layer = pd.DataFrame(
+        {
+            "polygon_id": ["T", "E", "S"],
+            "行政区域コード": ["13101", "13102", "13103"],
+            "geometry": [W.polygon(tri), W.polygon(), W.polygon(square)],
+        }
+    )
+    rows = lambda df: sorted(map(tuple, df.toPandas().to_numpy()))
+    got = rows(rasterize_layer(spark, layer, res=12))
+    want = rows(rasterize_layer(spark, layer[layer.polygon_id != "E"], res=12))
+    assert got == want and got
+    only_empty = layer[layer.polygon_id == "E"]
+    assert rasterize_layer(spark, only_empty, res=12).count() == 0

@@ -736,7 +736,8 @@ def test_dwithin_join_matches_brute_force(spark):
     exact kernel evaluated on ALL pairs (no prefilter): no pair lost
     at the expanded-bbox boundary, inclusive threshold, dist=0 for
     covered points — checked on concave + holed geometry. An empty
-    polygon in the layer joins nothing and raises nothing."""
+    polygon in the layer joins nothing and raises nothing, on the
+    broadcast and the shuffle path alike."""
     import pandas as pd
 
     from ksj2gp_spark.geo import geom as G, wkb as W
@@ -785,6 +786,13 @@ def test_dwithin_join_matches_brute_force(spark):
         assert got[k] == v  # bit-identical: same kernel, same inputs
     assert any(v == 0.0 for v in want.values())  # covered points present
     assert any(0 < v <= d for v in want.values())  # near-miss band present
+    shuf = {
+        (r["image_id"], r["polygon_id"]): r["dist"]
+        for r in sp.dwithin_join_shuffle(
+            pts, spark.createDataFrame(polys), d
+        ).collect()
+    }
+    assert shuf == got
 
 
 class TestDwithinShuffle:
