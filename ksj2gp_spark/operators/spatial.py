@@ -23,10 +23,12 @@ join tests PIP and distance with that one index.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..geo import geom, wkb
@@ -570,60 +572,67 @@ def knn_join_pruned(
 @dataclass(frozen=True)
 class PolygonIndex:
     """The polygon side of the tile join, built once per pipeline call
-    and shipped to the executors in one broadcast of numpy arrays.
+    and shipped to the executors as two broadcasts of numpy arrays.
 
-    Polygons are numbered in layer order. ``cells`` holds the scheme
-    cover's cells, sorted, and ``cell_poly`` the polygon number of each
-    (int32); ``polygon_id`` and ``admin_code`` hold one string per
-    polygon; ``edges`` is the layer's flat edge index for the exact
-    PIP and the kNN ocean lane."""
+    Polygons are numbered in layer order. ``cover`` holds
+    ``(cells, cell_poly)``: the scheme cover's cells, sorted, and the
+    polygon number of each (int32). ``polygons`` holds
+    ``(polygon_id, admin_code, edges)``: one string of each per polygon
+    and the layer's flat edge index for the exact PIP and the kNN ocean
+    lane. ``release`` destroys both broadcasts."""
 
-    cells: np.ndarray
-    cell_poly: np.ndarray
-    polygon_id: np.ndarray
-    admin_code: np.ndarray
-    edges: EdgeIndex
+    cover: Broadcast
+    polygons: Broadcast
+    n_polygons: int
     scheme: str
     res: int
-    # the broadcast, made on first use
-    _shipped: list = field(default_factory=list, repr=False, compare=False)
 
     @classmethod
     def build(
         cls,
+        spark: SparkSession,
         polygons_pdf: pd.DataFrame,
         scheme: str = "grid",
         res: int | None = None,
         admin_col: str = "行政区域コード",
     ) -> "PolygonIndex":
+        """Build and broadcast both halves at once: the edge index on a
+        pool thread, shipped there as soon as it is ready, and the
+        cover on this thread (through the module's
+        ``polygon_cover_pdf``). The two share the decoded layer and
+        read it only."""
         res = res if res is not None else DEFAULT_RES[scheme]
         polys = normalize_polygons(polygons_pdf)
         geoms = [wkb.loads(bytes(buf)) for buf in polys["geometry"]]
-        cover = polygon_cover_pdf(
-            polys.assign(_poly=np.arange(len(polys))), scheme, res,
-            id_col="_poly", geoms=geoms,
-        )
-        cells = cover["cell"].to_numpy()
-        order = np.argsort(cells, kind="stable")
-        cell_poly = cover["_poly"].to_numpy()[order].astype(np.int32)
-        return cls(
-            cells[order], cell_poly, *_polygon_side(polys, admin_col, geoms),
-            scheme, res,
-        )
-
-    def broadcast(self, spark: SparkSession):
-        """The index's one broadcast, made on the first call."""
-        if not self._shipped:
-            self._shipped.append(spark.sparkContext.broadcast(
-                (self.cells, self.cell_poly, self.polygon_id, self.admin_code,
-                 self.edges)
-            ))
-        return self._shipped[0]
+        sc = spark.sparkContext
+        with ThreadPoolExecutor(1, thread_name_prefix="polygon_side") as pool:
+            side = pool.submit(
+                lambda: sc.broadcast(_polygon_side(polys, admin_col, geoms))
+            )
+            try:
+                cover = polygon_cover_pdf(
+                    polys.assign(_poly=np.arange(len(polys))), scheme, res,
+                    id_col="_poly", geoms=geoms,
+                )
+                cells = cover["cell"].to_numpy()
+                order = np.argsort(cells, kind="stable")
+                cell_poly = cover["_poly"].to_numpy()[order].astype(np.int32)
+                shipped = sc.broadcast((cells[order], cell_poly))
+            except BaseException:
+                if side.exception() is None:
+                    side.result().destroy()
+                raise
+        try:
+            polygons = side.result()
+        except BaseException:
+            shipped.destroy()
+            raise
+        return cls(shipped, polygons, len(polys), scheme, res)
 
     def release(self) -> None:
-        """Destroy the broadcast; a later ``broadcast`` makes a new one."""
-        while self._shipped:
-            self._shipped.pop().destroy()
+        """Destroy both broadcasts."""
+        self.cover.destroy()
+        self.polygons.destroy()
 
 
 def fused_assign_or_knn(
@@ -657,7 +666,8 @@ def fused_assign_or_knn(
     built for the same ``scheme`` and ``res``: the pipelines build one
     per call and pass it to every chunk, so the cover and the edge
     index are built and broadcast once (``admin_col`` then comes from
-    the index). A pandas layer gets its own index here.
+    the index). A pandas layer gets its own index here, which is never
+    released.
 
     Row-set contract: equal to
     ``spatial_join_tiles(...)  UNION  knn_join(unmatched, ...)``, with
@@ -675,16 +685,19 @@ def fused_assign_or_knn(
                 f"join asks for {scheme} res {res}"
             )
     else:
-        index = PolygonIndex.build(polygons_pdf, scheme, res, admin_col)
-    shipped = index.broadcast(images.sparkSession)
-    knn_k = min(k, len(index.polygon_id))
+        index = PolygonIndex.build(
+            images.sparkSession, polygons_pdf, scheme, res, admin_col
+        )
+    cover, polygons = index.cover, index.polygons
+    knn_k = min(k, index.n_polygons)
     cell_fn = _cell_fn(scheme, res)
     crs_name = crs
 
     def run(batches):
         from ..geo import transform as _tf
 
-        cells, cell_poly, pids, admins, poly_edges = shipped.value
+        cells, cell_poly = cover.value
+        pids, admins, poly_edges = polygons.value
         for pdf in batches:
             if pdf.empty:
                 continue

@@ -19,7 +19,10 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .operators import cells, ingest, spatial
 from .sinks import iceberg, write
@@ -119,7 +122,9 @@ def _polygons_for_fused(
     distributed assignment path is pipeline.spatial_join /
     spatial.spatial_join_tiles_dist."""
     if isinstance(polygons, DataFrame):
-        if _layer_over_threshold(polygons, max_broadcast_polygons):
+        # one bounded pass: a lazy layer (an ingest) is read once
+        polygons = polygons.limit(max_broadcast_polygons + 1).toPandas()
+        if len(polygons) > max_broadcast_polygons:
             raise ValueError(
                 "polygon layer exceeds max_broadcast_polygons="
                 f"{max_broadcast_polygons}: the fused assignment + "
@@ -129,7 +134,6 @@ def _polygons_for_fused(
                 "join) and handle the ocean lane separately, or raise "
                 "max_broadcast_polygons if the layer fits driver memory."
             )
-        return polygons.toPandas()
     return polygons
 
 
@@ -246,6 +250,27 @@ def write_images_table(
     return iceberg.append(sorted_df, path)
 
 
+# the image columns the fused join reads
+_PROBE_COLS = ("image_id", "lon", "lat")
+
+
+def _read_chunk(spark: SparkSession, files: list[str]) -> DataFrame:
+    """The probe columns of a chunk's image files, with their Spark
+    schema taken from the first file's parquet footer on the driver, so
+    the read starts no schema-inference Spark job."""
+    footer = pq.read_schema(files[0])
+    missing = [c for c in _PROBE_COLS if footer.get_field_index(c) < 0]
+    if missing:
+        raise ValueError(
+            f"image file {files[0]} has no column(s) {missing}; the tile "
+            f"join reads {list(_PROBE_COLS)}"
+        )
+    schema = from_arrow_schema(
+        pa.schema([footer.field(c) for c in _PROBE_COLS])
+    )
+    return spark.read.schema(schema).parquet(*files)
+
+
 def _tile_chunks(
     spark: SparkSession,
     file_map: dict[str, list[str]],
@@ -258,8 +283,9 @@ def _tile_chunks(
     partition_cols: tuple[str, ...],
 ) -> dict:
     """Tile each uncommitted chunk of ``file_map`` ({chunk id: image
-    files}) into ``out_path``. The polygon index is built and broadcast
-    once, on the first chunk that needs it, and released on return.
+    files}) into ``out_path``, one Spark job per chunk. The polygon index
+    is built and broadcast once, on the first chunk that needs it, and
+    released on return.
     ``process`` runs on this thread (``write.run_resumable`` calls it in
     chunk order), so the lazy build is never raced; the chunk writes run
     concurrently, and ``run_resumable`` returns only after every write
@@ -269,10 +295,12 @@ def _tile_chunks(
 
     def process(chunk_id: str) -> DataFrame:
         if not built:
-            built.append(spatial.PolygonIndex.build(polys_pdf, scheme, res))
-        imgs = spark.read.parquet(*file_map[chunk_id])
+            built.append(
+                spatial.PolygonIndex.build(spark, polys_pdf, scheme, res)
+            )
         return spatial.fused_assign_or_knn(
-            imgs, built[0], scheme=scheme, res=res, k=k_ocean, crs=crs
+            _read_chunk(spark, file_map[chunk_id]), built[0],
+            scheme=scheme, res=res, k=k_ocean, crs=crs,
         )
 
     try:
@@ -451,13 +479,13 @@ def run_tile_pipeline_iceberg(
         return done
     n = max(1, min(n_chunks, len(pending)))
     groups = [pending[i::n] for i in range(n)]
-    index = spatial.PolygonIndex.build(polys_pdf, scheme, res)
+    index = spatial.PolygonIndex.build(spark, polys_pdf, scheme, res)
     try:
         for i, group in enumerate(groups):
             cid = f"{i:05d}"
-            imgs = spark.read.parquet(*group)
             tiles = spatial.fused_assign_or_knn(
-                imgs, index, scheme=scheme, res=res, k=k_ocean, crs=crs
+                _read_chunk(spark, group), index,
+                scheme=scheme, res=res, k=k_ocean, crs=crs,
             )
             done[cid] = iceberg.append(
                 tiles,

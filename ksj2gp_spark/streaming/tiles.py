@@ -45,7 +45,9 @@ def stream_tile_assign(
     polygon index is built and broadcast once; every micro-batch
     reuses it for the life of the query."""
     res = res if res is not None else spatial.DEFAULT_RES[scheme]
-    index = spatial.PolygonIndex.build(polygons_pdf, scheme, res)
+    index = spatial.PolygonIndex.build(
+        images_stream.sparkSession, polygons_pdf, scheme, res
+    )
     tiles = spatial.fused_assign_or_knn(
         images_stream, index, scheme=scheme, res=res, k=k_ocean
     )

@@ -51,36 +51,41 @@ def test_run_tile_pipeline_end_to_end(spark, images_table, tmp_path):
 
 
 def test_pipeline_builds_cover_once(spark, images_table, tmp_path, monkeypatch):
-    """A two-chunk job builds the polygon cover once, ships it in one
-    broadcast for both chunks, and releases that broadcast on return."""
+    """A two-chunk job builds the polygon cover once, ships the index in
+    two broadcasts (the cover and the polygon side) for both chunks, and
+    destroys both on return."""
+    from pyspark.broadcast import Broadcast
+
     from ksj2gp_spark.operators import spatial
 
-    covers, released = [], []
+    covers, destroyed = [], []
     build_cover = spatial.polygon_cover_pdf
-    release = spatial.PolygonIndex.release
+    destroy = Broadcast.destroy
 
     def counting_cover(polys, scheme, res, *a, **kw):
         covers.append(scheme)
         return build_cover(polys, scheme, res, *a, **kw)
 
-    def counting_release(index):
-        released.append(len(index._shipped))
-        release(index)
+    def counting_destroy(b, *a, **kw):
+        destroyed.append(b)
+        destroy(b, *a, **kw)
 
     monkeypatch.setattr(spatial, "polygon_cover_pdf", counting_cover)
-    monkeypatch.setattr(spatial.PolygonIndex, "release", counting_release)
+    monkeypatch.setattr(Broadcast, "destroy", counting_destroy)
     summary = pipeline.run_tile_pipeline(
         spark, images_table, fixtures.polygon_layer(), str(tmp_path / "t"),
         scheme="hex", res=7, n_chunks=2,
     )
     assert len(summary) == 2
     assert covers == ["hex"]
-    assert released == [1]
+    assert len(destroyed) == len(set(map(id, destroyed))) == 2
 
 
 def test_chunk_jobs_run_in_caller_job_group(spark, images_table, tmp_path):
     """The chunk writes run on pool threads, yet every Spark job of the
-    pipeline carries the caller's job group: none is left ungrouped."""
+    pipeline carries the caller's job group: none is left ungrouped.
+    Each chunk commit is exactly one Spark job (the chunk's schema comes
+    from a parquet footer, not from a schema-inference job)."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     ungrouped = set(tracker.getJobIdsForGroup(None))
@@ -93,8 +98,58 @@ def test_chunk_jobs_run_in_caller_job_group(spark, images_table, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(summary) == 3
-    assert len(tracker.getJobIdsForGroup("g")) >= len(summary)
+    assert len(tracker.getJobIdsForGroup("g")) == len(summary)
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def _pyarrow_image_dir(path, pdf, n_files, drop=()):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    for i in range(n_files):
+        part = pdf.iloc[i::n_files].drop(columns=list(drop))
+        pq.write_table(
+            pa.Table.from_pandas(part, preserve_index=False),
+            os.path.join(path, f"part-{i}.parquet"),
+        )
+    return path
+
+
+def test_pyarrow_written_images_tile_like_spark_written(spark, tmp_path):
+    """An image directory written by pyarrow (footers without Spark's
+    row metadata) gives the same tile rows as the same images written
+    by Spark."""
+    import numpy as np
+
+    pdf = fixtures.images_pdf(np.arange(3000), with_bytes=False)
+    by_spark = str(tmp_path / "spark_imgs")
+    spark.createDataFrame(pdf).repartition(3).write.parquet(by_spark)
+    by_arrow = _pyarrow_image_dir(str(tmp_path / "arrow_imgs"), pdf, 3)
+    cols = ["image_id", "cell", "polygon_id", "admin_code", "rank", "distance"]
+    rows = []
+    for images in (by_spark, by_arrow):
+        out = str(tmp_path / f"tiles_{os.path.basename(images)}")
+        pipeline.run_tile_pipeline(
+            spark, images, fixtures.polygon_layer(), out,
+            scheme="grid", res=10, n_chunks=2,
+        )
+        got = write.read_tiles(spark, out).select(*cols).toPandas()
+        rows.append(got.sort_values(cols).reset_index(drop=True))
+    assert len(rows[0]) >= 3000
+    assert rows[0].equals(rows[1])
+
+
+def test_chunk_without_probe_column_names_the_file(spark, tmp_path):
+    import numpy as np
+
+    pdf = fixtures.images_pdf(np.arange(100), with_bytes=False)
+    images = _pyarrow_image_dir(str(tmp_path / "imgs"), pdf, 1, drop=("lat",))
+    with pytest.raises(ValueError, match=r"part-0\.parquet.*'lat'"):
+        pipeline.run_tile_pipeline(
+            spark, images, fixtures.polygon_layer(), str(tmp_path / "t"),
+            scheme="grid", res=10,
+        )
 
 
 def test_pipeline_resume_skips_committed(spark, images_table, tmp_path):
@@ -478,6 +533,28 @@ def test_pipeline_runner_refuses_oversized_layer(spark, images_table):
             spark, images_table, polys_df, "/tmp/unused_out",
             scheme="grid", res=10, max_broadcast_polygons=5,
         )
+
+
+def test_fused_runner_reads_spark_layer_once(spark):
+    """A lazy Spark layer is collected for the fused runners in one
+    bounded pass: every polygon row is computed once, not once for a
+    size probe and again for the collect."""
+    from ksj2gp_spark import fixtures
+
+    layer = fixtures.polygon_layer()
+    computed = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            computed.add(len(pdf))
+            yield pdf
+
+    base = spark.createDataFrame(layer)
+    got = pipeline._polygons_for_fused(
+        base.mapInPandas(tap, schema=base.schema), len(layer)
+    )
+    assert computed.value == len(layer)
+    assert sorted(got["polygon_id"]) == sorted(layer["polygon_id"])
 
 
 def test_spark_submit_py_files_runs_pipeline(tmp_path):

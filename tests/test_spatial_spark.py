@@ -180,6 +180,66 @@ def test_fused_assign_or_knn_equals_two_pass(spark, images):
     assert (m["distance_f"].to_numpy() == m["distance_r"].to_numpy()).all()
 
 
+@pytest.mark.parametrize("scheme,res", [("hex", 7), ("grid", 10)])
+def test_polygon_index_equals_sequential_build(spark, scheme, res):
+    """``PolygonIndex.build`` makes the cover and the polygon side on two
+    threads; its broadcasts hold exactly what a sequential
+    ``polygon_cover_pdf`` + ``_polygon_side`` build gives, bit for bit."""
+    from dataclasses import fields
+
+    layer = fixtures.polygon_layer()
+    index = spatial.PolygonIndex.build(spark, layer, scheme, res)
+    try:
+        got_cells, got_cell_poly = index.cover.value
+        got_pids, got_admins, got_edges = index.polygons.value
+    finally:
+        index.release()
+
+    polys = cells.normalize_polygons(layer)
+    cover = cells.polygon_cover_pdf(
+        polys.assign(_poly=np.arange(len(polys))), scheme, res, id_col="_poly"
+    )
+    order = np.argsort(cover["cell"].to_numpy(), kind="stable")
+    pids, admins, edges = spatial._polygon_side(polys, "行政区域コード")
+
+    def same(a, b):
+        a, b = np.asarray(a), np.asarray(b)
+        return a.dtype == b.dtype and a.shape == b.shape and (
+            a.tobytes() == b.tobytes() if a.dtype != object
+            else a.tolist() == b.tolist()
+        )
+
+    assert index.n_polygons == len(polys)
+    assert same(got_cells, cover["cell"].to_numpy()[order])
+    assert same(got_cell_poly, cover["_poly"].to_numpy()[order].astype(np.int32))
+    assert same(got_pids, pids) and same(got_admins, admins)
+    for f in fields(edges):
+        if not f.name.startswith("_"):
+            assert same(getattr(got_edges, f.name), getattr(edges, f.name)), f.name
+
+
+def test_polygon_index_failed_cover_leaves_no_broadcast(spark, monkeypatch):
+    """A cover build that fails destroys the polygon side's broadcast,
+    which the other thread shipped meanwhile."""
+    from pyspark.broadcast import Broadcast
+
+    destroyed = []
+    destroy = Broadcast.destroy
+
+    def counting_destroy(b, *a, **kw):
+        destroyed.append(b)
+        destroy(b, *a, **kw)
+
+    def failing_cover(*a, **kw):
+        raise RuntimeError("cover failed")
+
+    monkeypatch.setattr(Broadcast, "destroy", counting_destroy)
+    monkeypatch.setattr(spatial, "polygon_cover_pdf", failing_cover)
+    with pytest.raises(RuntimeError, match="cover failed"):
+        spatial.PolygonIndex.build(spark, fixtures.polygon_layer(), "grid", 10)
+    assert len(destroyed) == 1
+
+
 def test_auto_strategy_picks_broadcast_small_cover(spark, images, expected):
     got = spatial.spatial_join_tiles(
         images, fixtures.polygon_layer(), scheme="grid", strategy="auto"
