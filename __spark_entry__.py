@@ -4322,392 +4322,6 @@ GROUP BY iv.interval_id
 """
 
 
-def q_snap_roads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map matching (operators/spatial.py::snap_points): snap customer
-    points to the nearest segment of a deterministic 2-segment-per-
-    nation road network, within 0.35. Candidates come from a pure-
-    Catalyst cell equi-join (segment bboxes expanded by max_dist and
-    exploded to grid cells); the point-to-segment projection + clamp
-    + distance refine is scalar codegen — ZERO Python end to end. The
-    oracle replays the same snap over the naive cross join."""
-    from ksj2gp_spark.operators.spatial import snap_points
-
-    nat = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
-    x0 = F.lit(130.0) + (F.col("n_nationkey") % 5).cast("double")
-    y0 = F.lit(33.0) + F.floor(F.col("n_nationkey") / 5).cast("double")
-    segs = nat.select(
-        F.col("n_nationkey").alias("line_id"),
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("seg_idx"),
-                    x0.alias("x1"),
-                    y0.alias("y1"),
-                    (x0 + F.lit(0.8)).alias("x2"),
-                    (y0 + F.lit(0.4)).alias("y2"),
-                ),
-                F.struct(
-                    F.lit(1).alias("seg_idx"),
-                    (x0 + F.lit(0.8)).alias("x1"),
-                    (y0 + F.lit(0.4)).alias("y1"),
-                    (x0 + F.lit(1.3)).alias("x2"),
-                    (y0 + F.lit(1.2)).alias("y2"),
-                ),
-            )
-        ).alias("s"),
-    ).select("line_id", "s.*")
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    pts = cust.select(
-        F.col("c_custkey").alias("point_id"),
-        (
-            F.lit(130.0)
-            + ((F.col("c_custkey") * 7919) % 50000).cast("double")
-            / F.lit(10000.0)
-        ).alias("x"),
-        (
-            F.lit(33.0)
-            + ((F.col("c_custkey") * 104729) % 50000).cast("double")
-            / F.lit(10000.0)
-        ).alias("y"),
-    )
-    return snap_points(pts, segs, max_dist=0.35)
-
-
-_SNAP_ROADS_SQL = """
-WITH segs AS (
-  SELECT n_nationkey AS line_id, CAST(0 AS INTEGER) AS seg_idx,
-         130.0 + (n_nationkey % 5) AS x1,
-         33.0 + floor(n_nationkey / 5) AS y1,
-         (130.0 + (n_nationkey % 5)) + 0.8 AS x2,
-         (33.0 + floor(n_nationkey / 5)) + 0.4 AS y2
-  FROM nation
-  UNION ALL
-  SELECT n_nationkey, CAST(1 AS INTEGER),
-         (130.0 + (n_nationkey % 5)) + 0.8,
-         (33.0 + floor(n_nationkey / 5)) + 0.4,
-         (130.0 + (n_nationkey % 5)) + 1.3,
-         (33.0 + floor(n_nationkey / 5)) + 1.2
-  FROM nation
-),
-pts AS (
-  SELECT c_custkey AS point_id,
-         130.0 + ((c_custkey * 7919) % 50000) / 10000.0 AS x,
-         33.0 + ((c_custkey * 104729) % 50000) / 10000.0 AS y
-  FROM customer
-),
-proj AS (
-  SELECT p.point_id, s.line_id, s.seg_idx, p.x, p.y, s.x1, s.y1,
-         s.x2 - s.x1 AS dx, s.y2 - s.y1 AS dy,
-         CASE WHEN (s.x2-s.x1)*(s.x2-s.x1) + (s.y2-s.y1)*(s.y2-s.y1) = 0
-              THEN 0.0
-              ELSE greatest(0.0, least(1.0,
-                ((p.x - s.x1)*(s.x2-s.x1) + (p.y - s.y1)*(s.y2-s.y1))
-                / ((s.x2-s.x1)*(s.x2-s.x1) + (s.y2-s.y1)*(s.y2-s.y1))))
-         END AS t
-  FROM pts p CROSS JOIN segs s
-),
-dists AS (
-  SELECT point_id, line_id, seg_idx,
-         x1 + t*dx AS sx, y1 + t*dy AS sy,
-         sqrt((x - (x1 + t*dx))*(x - (x1 + t*dx))
-              + (y - (y1 + t*dy))*(y - (y1 + t*dy))) AS dist
-  FROM proj
-)
-SELECT point_id, line_id, seg_idx,
-       round(sx, 6) AS snap_x, round(sy, 6) AS snap_y,
-       round(dist, 6) AS snap_dist
-FROM dists
-WHERE dist <= 0.35
-QUALIFY row_number() OVER (
-  PARTITION BY point_id ORDER BY dist, line_id, seg_idx) = 1
-"""
-
-
-_HMM_T = 6  # steps per trajectory in the contract data
-
-
-def q_hmm_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HMM map matching (operators/spatial.py::hmm_map_match): Viterbi
-    decode of 150 six-ping trajectories over a deterministic grid of
-    13 horizontal + 14 vertical roads (162 segments). Candidates come
-    from the same pure-Catalyst segment-cell join as snap_roads; the
-    per-trajectory DP (emission d²/σ², transition |route−gap|/β, ties
-    by (cost, line_id, seg_idx)) runs vectorized in ONE applyInPandas
-    over candidate rows only. The oracle replays the identical DP in
-    SQL: forward pass unrolled over the 6 steps, backtrack as argmin
-    re-computation per step — every arithmetic expression is written
-    in the same shape so both engines see bit-identical doubles."""
-    from ksj2gp_spark.operators.spatial import hmm_map_match
-
-    ids = spark.range(150 * _HMM_T)
-    traj = F.floor(F.col("id") / _HMM_T).cast("long")
-    step = F.col("id") % _HMM_T
-    x = (
-        F.lit(130.0)
-        + ((traj * 7919) % 4000).cast("double") / F.lit(1000.0)
-        + step.cast("double") * F.lit(0.08)
-        + (((F.col("id") * 2654435761) % 2001) - 1000).cast("double")
-        / F.lit(100000.0)
-    )
-    y = (
-        F.lit(33.0)
-        + ((traj * 104729) % 4000).cast("double") / F.lit(1000.0)
-        + step.cast("double") * F.lit(0.05)
-        + (((F.col("id") * 40503) % 2001) - 1000).cast("double")
-        / F.lit(100000.0)
-    )
-    pts = ids.select(
-        traj.alias("traj_id"),
-        step.alias("step"),
-        x.alias("x"),
-        y.alias("y"),
-    )
-    k = F.explode(F.sequence(F.lit(0), F.lit(_HMM_T - 1))).alias(
-        "seg_idx"
-    )
-    horiz = (
-        spark.range(13)
-        .select(F.col("id").alias("line_id"), k)
-        .select(
-            "line_id",
-            "seg_idx",
-            (F.lit(129.6) + F.col("seg_idx")).alias("x1"),
-            (F.lit(33.0) + F.lit(0.4) * F.col("line_id")).alias("y1"),
-            (F.lit(130.6) + F.col("seg_idx")).alias("x2"),
-            (F.lit(33.0) + F.lit(0.4) * F.col("line_id")).alias("y2"),
-        )
-    )
-    vert = (
-        spark.range(14)
-        .select((F.col("id") + 100).alias("line_id"), k)
-        .select(
-            "line_id",
-            "seg_idx",
-            (
-                F.lit(129.8) + F.lit(0.4) * (F.col("line_id") - 100)
-            ).alias("x1"),
-            (F.lit(32.8) + F.col("seg_idx")).alias("y1"),
-            (
-                F.lit(129.8) + F.lit(0.4) * (F.col("line_id") - 100)
-            ).alias("x2"),
-            (F.lit(33.8) + F.col("seg_idx")).alias("y2"),
-        )
-    )
-    return hmm_map_match(
-        pts,
-        horiz.unionByName(vert),
-        max_dist=0.25,
-        sigma=0.125,
-        beta=0.05,
-    )
-
-
-def _hmm_match_sql() -> str:
-    """Unrolled Viterbi DP in DuckDB SQL mirroring q_hmm_match: the
-    forward pass is one CTE per step (cost = MIN over predecessors of
-    prev.cost + |route − gap|/β, plus the candidate's emission), the
-    backtrack re-computes each argmin with the identical expression
-    and tie-order (cost, line_id, seg_idx) — provably the same path
-    the kernel's stored backpointers select."""
-
-    def trans(p: str, n: str) -> str:
-        return (
-            f"abs(sqrt(({n}.sx - {p}.sx)*({n}.sx - {p}.sx)"
-            f" + ({n}.sy - {p}.sy)*({n}.sy - {p}.sy)) - g.gap) / 0.05"
-        )
-
-    parts = [
-        f"""
-WITH pts AS (
-  SELECT CAST(floor(i / {_HMM_T}) AS BIGINT) AS traj, i % {_HMM_T} AS step,
-         130.0 + ((CAST(floor(i / {_HMM_T}) AS BIGINT) * 7919) % 4000) / 1000.0
-               + (i % {_HMM_T}) * 0.08
-               + (((i * 2654435761) % 2001) - 1000) / 100000.0 AS x,
-         33.0 + ((CAST(floor(i / {_HMM_T}) AS BIGINT) * 104729) % 4000) / 1000.0
-              + (i % {_HMM_T}) * 0.05
-              + (((i * 40503) % 2001) - 1000) / 100000.0 AS y
-  FROM range(0, {150 * _HMM_T}) t(i)
-),
-segs AS (
-  SELECT i AS line_id, CAST(k AS INTEGER) AS seg_idx,
-         129.6 + k AS x1, 33.0 + 0.4 * i AS y1,
-         130.6 + k AS x2, 33.0 + 0.4 * i AS y2
-  FROM range(0, 13) a(i) CROSS JOIN range(0, {_HMM_T}) b(k)
-  UNION ALL
-  SELECT 100 + j, CAST(k AS INTEGER),
-         129.8 + 0.4 * ((100 + j) - 100), 32.8 + k,
-         129.8 + 0.4 * ((100 + j) - 100), 33.8 + k
-  FROM range(0, 14) a(j) CROSS JOIN range(0, {_HMM_T}) b(k)
-),
-proj AS (
-  SELECT p.traj, p.step, p.x, p.y, s.line_id, s.seg_idx, s.x1, s.y1,
-         s.x2 - s.x1 AS dx, s.y2 - s.y1 AS dy,
-         CASE WHEN (s.x2-s.x1)*(s.x2-s.x1) + (s.y2-s.y1)*(s.y2-s.y1) = 0
-              THEN 0.0
-              ELSE greatest(0.0, least(1.0,
-                ((p.x - s.x1)*(s.x2-s.x1) + (p.y - s.y1)*(s.y2-s.y1))
-                / ((s.x2-s.x1)*(s.x2-s.x1) + (s.y2-s.y1)*(s.y2-s.y1))))
-         END AS t
-  FROM pts p CROSS JOIN segs s
-),
-cand0 AS (
-  SELECT traj, step, line_id, seg_idx,
-         x1 + t*dx AS sx, y1 + t*dy AS sy,
-         (x - (x1 + t*dx))*(x - (x1 + t*dx))
-           + (y - (y1 + t*dy))*(y - (y1 + t*dy)) AS d2
-  FROM proj
-),
-cand AS (
-  SELECT traj, step, line_id, seg_idx, sx, sy,
-         sqrt(d2) AS dist, d2 / 0.015625 AS emis
-  FROM cand0 WHERE sqrt(d2) <= 0.25
-),
-gaps AS (
-  SELECT b.traj, b.step,
-         sqrt((b.x-a.x)*(b.x-a.x) + (b.y-a.y)*(b.y-a.y)) AS gap
-  FROM pts a JOIN pts b ON b.traj = a.traj AND b.step = a.step + 1
-),
-v0 AS (
-  SELECT traj, line_id, seg_idx, sx, sy, dist, emis AS cost
-  FROM cand WHERE step = 0
-)"""
-    ]
-    for s in range(1, _HMM_T):
-        parts.append(
-            f""",
-v{s} AS (
-  SELECT c.traj, c.line_id, c.seg_idx, c.sx, c.sy, c.dist,
-         MIN(p.cost + {trans('p', 'c')}) + c.emis AS cost
-  FROM cand c
-  JOIN v{s - 1} p ON p.traj = c.traj
-  JOIN gaps g ON g.traj = c.traj AND g.step = {s}
-  WHERE c.step = {s}
-  GROUP BY c.traj, c.line_id, c.seg_idx, c.sx, c.sy, c.dist, c.emis
-)"""
-        )
-    last = _HMM_T - 1
-    parts.append(
-        f""",
-b{last} AS (
-  SELECT traj, line_id, seg_idx, sx, sy, dist
-  FROM v{last}
-  QUALIFY row_number() OVER (
-    PARTITION BY traj ORDER BY cost, line_id, seg_idx) = 1
-)"""
-    )
-    for s in range(last - 1, -1, -1):
-        parts.append(
-            f""",
-b{s} AS (
-  SELECT p.traj, p.line_id, p.seg_idx, p.sx, p.sy, p.dist
-  FROM v{s} p
-  JOIN b{s + 1} n ON n.traj = p.traj
-  JOIN gaps g ON g.traj = p.traj AND g.step = {s + 1}
-  QUALIFY row_number() OVER (
-    PARTITION BY p.traj
-    ORDER BY p.cost + {trans('p', 'n')}, p.line_id, p.seg_idx) = 1
-)"""
-        )
-    sel = "\nUNION ALL\n".join(
-        f"SELECT traj AS traj_id, CAST({s} AS BIGINT) AS step, line_id,"
-        f" seg_idx,\n       round(sx, 6) AS snap_x,"
-        f" round(sy, 6) AS snap_y, round(dist, 6) AS snap_dist"
-        f"\nFROM b{s}"
-        for s in range(_HMM_T)
-    )
-    parts.append("\n" + sel)
-    return "".join(parts)
-
-
-def q_hausdorff_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trajectory-similarity join (operators/spatial.py::
-    trajectory_hausdorff_join): exact discrete Hausdorff distance
-    over 60 six-point trajectories — 40 scattered tracks plus 20
-    jittered near-copies of the first 20 (jitter <= 0.008 degrees),
-    threshold 0.05. Candidate point pairs come from a grid-cell
-    equi-join (neighbor-ring expansion on one side), per-point minima
-    and per-direction maxima are plain aggregations, and an exact
-    coverage test (captured distinct points vs the trajectory's
-    count) drops any pair a single far point disqualifies — all
-    Catalyst, zero Python. The oracle computes the same Hausdorff
-    naively over the full point cross-product in DuckDB."""
-    from ksj2gp_spark.operators.spatial import trajectory_hausdorff_join
-
-    base = spark.range(40 * 6)
-    t = F.floor(F.col("id") / 6).cast("long")
-    k = F.col("id") % 6
-    bx = ((t * 7919) % 1000).cast("double") / F.lit(100.0)
-    by = ((t * 104729) % 1000).cast("double") / F.lit(100.0)
-    x = bx + k.cast("double") * F.lit(0.1) + (
-        ((t * 31 + k * 17) % 7).cast("double") / F.lit(1000.0)
-    )
-    y = by + k.cast("double") * F.lit(0.07) + (
-        ((t * 13 + k * 29) % 7).cast("double") / F.lit(1000.0)
-    )
-    pts = base.select(t.alias("traj_id"), x.alias("x"), y.alias("y"))
-    copies = spark.range(20 * 6)
-    tc = F.floor(F.col("id") / 6).cast("long")
-    kc = F.col("id") % 6
-    bxc = ((tc * 7919) % 1000).cast("double") / F.lit(100.0)
-    byc = ((tc * 104729) % 1000).cast("double") / F.lit(100.0)
-    xc = (
-        bxc
-        + kc.cast("double") * F.lit(0.1)
-        + (((tc * 31 + kc * 17) % 7).cast("double") / F.lit(1000.0))
-        + (((tc + kc) % 5).cast("double") / F.lit(625.0))
-    )
-    yc = (
-        byc
-        + kc.cast("double") * F.lit(0.07)
-        + (((tc * 13 + kc * 29) % 7).cast("double") / F.lit(1000.0))
-        + (((tc * 3 + kc) % 5).cast("double") / F.lit(625.0))
-    )
-    cpts = copies.select(
-        (tc + 100).alias("traj_id"), xc.alias("x"), yc.alias("y")
-    )
-    return trajectory_hausdorff_join(
-        pts.unionByName(cpts), max_dist=0.05, cell_size=0.05
-    )
-
-
-_HAUSDORFF_SQL = """
-WITH pts AS (
-  SELECT CAST(floor(i / 6) AS BIGINT) AS traj,
-         ((CAST(floor(i / 6) AS BIGINT) * 7919) % 1000) / 100.0
-           + (i % 6) * 0.1
-           + ((CAST(floor(i / 6) AS BIGINT) * 31 + (i % 6) * 17) % 7) / 1000.0 AS x,
-         ((CAST(floor(i / 6) AS BIGINT) * 104729) % 1000) / 100.0
-           + (i % 6) * 0.07
-           + ((CAST(floor(i / 6) AS BIGINT) * 13 + (i % 6) * 29) % 7) / 1000.0 AS y
-  FROM range(0, 240) s(i)
-  UNION ALL
-  SELECT CAST(floor(i / 6) AS BIGINT) + 100,
-         ((CAST(floor(i / 6) AS BIGINT) * 7919) % 1000) / 100.0
-           + (i % 6) * 0.1
-           + ((CAST(floor(i / 6) AS BIGINT) * 31 + (i % 6) * 17) % 7) / 1000.0
-           + ((CAST(floor(i / 6) AS BIGINT) + (i % 6)) % 5) / 625.0,
-         ((CAST(floor(i / 6) AS BIGINT) * 104729) % 1000) / 100.0
-           + (i % 6) * 0.07
-           + ((CAST(floor(i / 6) AS BIGINT) * 13 + (i % 6) * 29) % 7) / 1000.0
-           + ((CAST(floor(i / 6) AS BIGINT) * 3 + (i % 6)) % 5) / 625.0
-  FROM range(0, 120) s(i)
-),
-dmin AS (
-  SELECT a.traj AS ta, b.traj AS tb, a.x AS ax, a.y AS ay,
-         MIN(sqrt((a.x - b.x)*(a.x - b.x) + (a.y - b.y)*(a.y - b.y))) AS dm
-  FROM pts a JOIN pts b ON a.traj <> b.traj
-  GROUP BY a.traj, b.traj, a.x, a.y
-),
-h AS (
-  SELECT ta, tb, MAX(dm) AS h FROM dmin GROUP BY ta, tb
-)
-SELECT h1.ta AS traj_a, h1.tb AS traj_b,
-       greatest(h1.h, h2.h) AS hausdorff
-FROM h h1 JOIN h h2 ON h1.ta = h2.tb AND h1.tb = h2.ta
-WHERE h1.ta < h1.tb AND greatest(h1.h, h2.h) <= 0.05
-"""
-
-
 # ---------------------------------------------------------------------------
 # driver contract
 # ---------------------------------------------------------------------------
@@ -5119,99 +4733,6 @@ SELECT (ci + 0.5) * 0.05 - 180.0 AS cell_x,
        round(sum(1.0 - d2 / (0.1 * 0.1)), 6) AS kde
 FROM refined WHERE d2 < 0.1 * 0.1
 GROUP BY ci, cj
-"""
-
-
-def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trajectory stay-point detection (operators/spatial.py::
-    stay_points — the spatial gaps-and-islands): deterministic
-    synthetic trajectories derived from events (each user camps in a
-    15-ping block with 0.02-deg jitter then jumps 0.5 deg), step
-    threshold 0.05 deg, stays < 5 pings dropped. One shuffle on the
-    user key; the oracle replays the identical windows in DuckDB —
-    exact integer microsecond durations, round-6 centroids."""
-    from ksj2gp_spark.operators.spatial import stay_points
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    seq = F.row_number().over(
-        Window.partitionBy("user_id").orderBy("ts")
-    )
-    blk = F.floor((seq - F.lit(1)) / F.lit(15.0))
-    jx = (
-        ((F.col("event_id") * F.lit(97) + F.lit(13)) * F.lit(_MIX))
-        % F.lit(_MOD)
-    ) / F.lit(float(_MOD)) * F.lit(0.02)
-    jy = (
-        ((F.col("event_id") * F.lit(31) + F.lit(7)) * F.lit(_MIX))
-        % F.lit(_MOD)
-    ) / F.lit(float(_MOD)) * F.lit(0.02)
-    pings = ev.select(
-        "user_id",
-        "ts",
-        (
-            F.lit(135.0)
-            + (F.col("user_id") % F.lit(10)).cast("double")
-            + blk * F.lit(0.5)
-            + jx
-        ).alias("lon"),
-        (
-            F.lit(34.0)
-            + (F.col("user_id") % F.lit(7)).cast("double") * F.lit(0.5)
-            + blk * F.lit(0.25)
-            + jy
-        ).alias("lat"),
-    )
-    return stay_points(pings, max_step=0.05, min_pings=5)
-
-
-_STAY_SQL = f"""
-WITH seqd AS (
-  SELECT user_id, ts, event_id,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS seq
-  FROM events
-),
-pings AS (
-  SELECT user_id, ts,
-         135.0 + CAST(user_id % 10 AS DOUBLE)
-           + floor((seq - 1) / 15.0) * 0.5
-           + ((event_id * 97 + 13) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.02
-           AS lon,
-         34.0 + CAST(user_id % 7 AS DOUBLE) * 0.5
-           + floor((seq - 1) / 15.0) * 0.25
-           + ((event_id * 31 + 7) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.02
-           AS lat
-  FROM seqd
-),
-lagged AS (
-  SELECT user_id, ts, lon, lat,
-         lag(lon) OVER (PARTITION BY user_id ORDER BY ts) AS px,
-         lag(lat) OVER (PARTITION BY user_id ORDER BY ts) AS py
-  FROM pings
-),
-flagged AS (
-  SELECT user_id, ts, lon, lat,
-         CASE WHEN px IS NULL
-                OR (lon - px) * (lon - px) + (lat - py) * (lat - py)
-                   > 0.05 * 0.05
-              THEN 1 ELSE 0 END AS new_seg
-  FROM lagged
-),
-segd AS (
-  SELECT user_id, ts, lon, lat,
-         SUM(new_seg) OVER (
-           PARTITION BY user_id ORDER BY ts
-           ROWS UNBOUNDED PRECEDING
-         ) AS seg
-  FROM flagged
-)
-SELECT user_id, CAST(seg AS BIGINT) AS stay_seq, count(*) AS n_pings,
-       min(ts) AS start_ts, max(ts) AS end_ts,
-       epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us,
-       round(avg(lon), 6) AS cx, round(avg(lat), 6) AS cy
-FROM segd
-GROUP BY user_id, seg
-HAVING count(*) >= 5
 """
 
 
@@ -5848,81 +5369,6 @@ FROM nb LEFT JOIN mk ON mk.cell = nb.cell
 """
 
 
-def q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Origin-destination flow matrix (operators/spatial.py::
-    od_matrix): the stay_points trajectories aggregated into 0.5-deg
-    cell-pair trip flows. Pure composition — stay segmentation, one
-    more lag window on the same user partitioning, and a four-int
-    map-side-combinable groupBy. The oracle replays stays + trips +
-    flows in one DuckDB query."""
-    from ksj2gp_spark.operators.spatial import od_matrix
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    seq = F.row_number().over(
-        Window.partitionBy("user_id").orderBy("ts")
-    )
-    blk = F.floor((seq - F.lit(1)) / F.lit(15.0))
-    jx = (
-        ((F.col("event_id") * F.lit(97) + F.lit(13)) * F.lit(_MIX))
-        % F.lit(_MOD)
-    ) / F.lit(float(_MOD)) * F.lit(0.02)
-    jy = (
-        ((F.col("event_id") * F.lit(31) + F.lit(7)) * F.lit(_MIX))
-        % F.lit(_MOD)
-    ) / F.lit(float(_MOD)) * F.lit(0.02)
-    pings = ev.select(
-        "user_id",
-        "ts",
-        (
-            F.lit(135.0)
-            + (F.col("user_id") % F.lit(10)).cast("double")
-            + blk * F.lit(0.5)
-            + jx
-        ).alias("lon"),
-        (
-            F.lit(34.0)
-            + (F.col("user_id") % F.lit(7)).cast("double") * F.lit(0.5)
-            + blk * F.lit(0.25)
-            + jy
-        ).alias("lat"),
-    )
-    return od_matrix(pings, max_step=0.05, cell_size=0.5, min_pings=5)
-
-
-def _od_matrix_sql() -> str:
-    stays_core = _STAY_SQL.strip().rsplit("SELECT user_id,", 1)[0].rstrip()
-    return f"""{stays_core},
-stays AS (
-  SELECT user_id, min(ts) AS start_ts,
-         round(avg(lon), 6) AS cx, round(avg(lat), 6) AS cy
-  FROM segd
-  GROUP BY user_id, seg
-  HAVING count(*) >= 5
-),
-celled AS (
-  SELECT user_id, start_ts,
-         CAST(floor((cx + 180.0) / 0.5) AS BIGINT) AS ci,
-         CAST(floor((cy + 90.0) / 0.5) AS BIGINT) AS cj
-  FROM stays
-),
-trips AS (
-  SELECT user_id,
-         lag(ci) OVER (PARTITION BY user_id ORDER BY start_ts) AS pi,
-         lag(cj) OVER (PARTITION BY user_id ORDER BY start_ts) AS pj,
-         ci, cj
-  FROM celled
-)
-SELECT (pi + 0.5) * 0.5 - 180.0 AS from_x,
-       (pj + 0.5) * 0.5 - 90.0 AS from_y,
-       (ci + 0.5) * 0.5 - 180.0 AS to_x,
-       (cj + 0.5) * 0.5 - 90.0 AS to_y,
-       count(*) AS n_trips
-FROM trips WHERE pi IS NOT NULL
-GROUP BY pi, pj, ci, cj
-"""
-
-
 _TEXTRANK_ITERS = 6
 _TEXTRANK_DAMPING = 0.85
 _TEXTRANK_MIN_CO = 60
@@ -5996,214 +5442,6 @@ LIMIT {top_n}"""
     )
 
 
-def q_trajectory_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geodesic per-user trajectory metrics (operators/spatial.py::
-    trajectory_stats): the stay_points synthetic trajectories summed
-    into total great-circle km, longest step, duration and average
-    speed per user. ONE user-key shuffle (window + agg share the
-    partitioning); distances are codegen haversine — the oracle
-    replays the identical lag window and spherical formula in
-    DuckDB."""
-    from ksj2gp_spark.operators.spatial import trajectory_stats
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    seq = F.row_number().over(
-        Window.partitionBy("user_id").orderBy("ts")
-    )
-    blk = F.floor((seq - F.lit(1)) / F.lit(15.0))
-    jx = (
-        ((F.col("event_id") * F.lit(97) + F.lit(13)) * F.lit(_MIX))
-        % F.lit(_MOD)
-    ) / F.lit(float(_MOD)) * F.lit(0.02)
-    jy = (
-        ((F.col("event_id") * F.lit(31) + F.lit(7)) * F.lit(_MIX))
-        % F.lit(_MOD)
-    ) / F.lit(float(_MOD)) * F.lit(0.02)
-    pings = ev.select(
-        "user_id",
-        "ts",
-        (
-            F.lit(135.0)
-            + (F.col("user_id") % F.lit(10)).cast("double")
-            + blk * F.lit(0.5)
-            + jx
-        ).alias("lon"),
-        (
-            F.lit(34.0)
-            + (F.col("user_id") % F.lit(7)).cast("double") * F.lit(0.5)
-            + blk * F.lit(0.25)
-            + jy
-        ).alias("lat"),
-    )
-    out = trajectory_stats(pings, min_pings=5)
-    return out.select(
-        "user_id",
-        "n_pings",
-        F.round("total_km", 6).alias("total_km"),
-        F.round("max_step_km", 6).alias("max_step_km"),
-        F.round("duration_s", 6).alias("duration_s"),
-        F.round("avg_kmh", 6).alias("avg_kmh"),
-    )
-
-
-_TRAJ_SQL = f"""
-WITH seqd AS (
-  SELECT user_id, ts, event_id,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS seq
-  FROM events
-),
-pings AS (
-  SELECT user_id, ts,
-         135.0 + CAST(user_id % 10 AS DOUBLE)
-           + floor((seq - 1) / 15.0) * 0.5
-           + ((event_id * 97 + 13) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.02
-           AS lon,
-         34.0 + CAST(user_id % 7 AS DOUBLE) * 0.5
-           + floor((seq - 1) / 15.0) * 0.25
-           + ((event_id * 31 + 7) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.02
-           AS lat
-  FROM seqd
-),
-lagged AS (
-  SELECT user_id, ts, lon, lat,
-         lag(lon) OVER (PARTITION BY user_id ORDER BY ts, lon, lat) AS px,
-         lag(lat) OVER (PARTITION BY user_id ORDER BY ts, lon, lat) AS py
-  FROM pings
-),
-stepped AS (
-  SELECT user_id, epoch_us(ts) AS us,
-         CASE WHEN px IS NULL THEN NULL ELSE
-           2 * 6371.0088 * asin(least(sqrt(
-             sin((radians(lat) - radians(py)) / 2)
-               * sin((radians(lat) - radians(py)) / 2)
-             + cos(radians(py)) * cos(radians(lat))
-               * sin((radians(lon) - radians(px)) / 2)
-               * sin((radians(lon) - radians(px)) / 2)
-           ), 1.0)) END AS step
-  FROM lagged
-),
-agg AS (
-  SELECT user_id, count(*) AS n_pings,
-         coalesce(sum(step), 0.0) AS total_km,
-         max(step) AS max_step_km,
-         (max(us) - min(us)) / 1e6 AS duration_s
-  FROM stepped
-  GROUP BY user_id
-)
-SELECT user_id, n_pings,
-       round(total_km, 6) AS total_km,
-       round(max_step_km, 6) AS max_step_km,
-       round(duration_s, 6) AS duration_s,
-       round(CASE WHEN duration_s > 0
-                  THEN total_km / (duration_s / 3600.0) END, 6) AS avg_kmh
-FROM agg
-WHERE n_pings >= 5
-"""
-
-
-def q_dwithin_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metric-radius big x big point join (operators/spatial.py::
-    dwithin_join_geo): image points derived from events vs POI
-    points derived from supplier, all pairs within 8 great-circle
-    km. Latitude-aware cell prefilter + ONE shuffle equi-join +
-    codegen haversine refine, zero Python; the oracle brute-forces
-    the cross join with the same spherical formula."""
-    from ksj2gp_spark.operators.spatial import dwithin_join_geo
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-
-    def jit(a: int, b: int, scale: float):
-        return (
-            ((F.col("event_id") * F.lit(a) + F.lit(b)) * F.lit(_MIX))
-            % F.lit(_MOD)
-        ) / F.lit(float(_MOD)) * F.lit(scale)
-
-    left = ev.filter((F.col("event_id") % F.lit(4)) == F.lit(0)).select(
-        F.col("event_id").alias("image_id"),
-        (
-            F.lit(139.0)
-            + (F.col("user_id") % F.lit(13)).cast("double") * F.lit(0.15)
-            + jit(97, 13, 0.1)
-        ).alias("lon"),
-        (
-            F.lit(34.5)
-            + (F.col("user_id") % F.lit(11)).cast("double") * F.lit(0.12)
-            + jit(31, 7, 0.1)
-        ).alias("lat"),
-    )
-    sup = spark.read.parquet(os.path.join(sf_dir, "supplier.parquet"))
-
-    def sjit(a: int, b: int, scale: float):
-        return (
-            ((F.col("s_suppkey") * F.lit(a) + F.lit(b)) * F.lit(_MIX))
-            % F.lit(_MOD)
-        ) / F.lit(float(_MOD)) * F.lit(scale)
-
-    pois = sup.select(
-        F.col("s_suppkey").alias("poi_id"),
-        (
-            F.lit(139.0)
-            + (F.col("s_suppkey") % F.lit(17)).cast("double") * F.lit(0.11)
-            + sjit(57, 5, 0.05)
-        ).alias("lon"),
-        (
-            F.lit(34.5)
-            + (F.col("s_suppkey") % F.lit(19)).cast("double") * F.lit(0.07)
-            + sjit(41, 3, 0.05)
-        ).alias("lat"),
-    )
-    out = dwithin_join_geo(
-        left, pois, radius_km=8.0,
-        left_id_col="image_id", right_id_col="poi_id",
-    )
-    return out.select(
-        "image_id", "poi_id", F.round("dist_km", 6).alias("dist_km")
-    )
-
-
-_DWITHIN_GEO_SQL = f"""
-WITH left_pts AS (
-  SELECT event_id AS image_id,
-         139.0 + CAST(user_id % 13 AS DOUBLE) * 0.15
-           + ((event_id * 97 + 13) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.1
-           AS lon,
-         34.5 + CAST(user_id % 11 AS DOUBLE) * 0.12
-           + ((event_id * 31 + 7) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.1
-           AS lat
-  FROM events
-  WHERE event_id % 4 = 0
-),
-pois AS (
-  SELECT s_suppkey AS poi_id,
-         139.0 + CAST(s_suppkey % 17 AS DOUBLE) * 0.11
-           + ((s_suppkey * 57 + 5) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.05
-           AS lon,
-         34.5 + CAST(s_suppkey % 19 AS DOUBLE) * 0.07
-           + ((s_suppkey * 41 + 3) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.05
-           AS lat
-  FROM supplier
-),
-pairs AS (
-  SELECT l.image_id, p.poi_id,
-         2 * 6371.0088 * asin(least(sqrt(
-           sin((radians(p.lat) - radians(l.lat)) / 2)
-             * sin((radians(p.lat) - radians(l.lat)) / 2)
-           + cos(radians(l.lat)) * cos(radians(p.lat))
-             * sin((radians(p.lon) - radians(l.lon)) / 2)
-             * sin((radians(p.lon) - radians(l.lon)) / 2)
-         ), 1.0)) AS dist_km
-  FROM left_pts l, pois p
-)
-SELECT image_id, poi_id, round(dist_km, 6) AS dist_km
-FROM pairs
-WHERE dist_km <= 8.0
-"""
-
-
-
-
-
 def _g_px_sql(y: str, x: str) -> str:
     """Green-channel value at (y, x) as exact integer SQL — the twin of
     make_test_image (base formula) + channel g = (base*3 + i) % 256."""
@@ -6275,89 +5513,6 @@ SELECT 'img' || lpad(CAST(d.i AS VARCHAR), 8, '0') AS image_id,
 FROM dims d
 LEFT JOIN maskc ON maskc.i = d.i
 LEFT JOIN stats ON stats.i = d.i
-"""
-
-
-def q_gwr_admin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geographically weighted regression (operators/spatial.py::gwr,
-    Brunsdon et al. 1996): 2,000 deterministic targets each fit a
-    gaussian-weighted local OLS of y = custkey%97 on x = custkey%23
-    over the station surface (bandwidth 0.02, truncation 3b). The
-    Spark side is the lossless cell prune + closed-form sufficient
-    statistics in pure Catalyst; the oracle is the brute-force cross
-    join with the identical algebra (including the RELATIVE zero-
-    variance rules), so the hash match proves both the prune and the
-    closed form."""
-    from ksj2gp_spark.operators.spatial import gwr
-
-    stations = _images_from_customer(spark, sf_dir).select(
-        "lon",
-        "lat",
-        (F.substring("image_id", 4, 8).cast("long") % 23)
-        .cast("double")
-        .alias("x"),
-        (F.substring("image_id", 4, 8).cast("long") % 97)
-        .cast("double")
-        .alias("y"),
-    )
-    k = F.col("id")
-    t_lon = F.lit(139.0) + (
-        ((k * F.lit(53) + F.lit(11)) * F.lit(_MIX) % F.lit(_MOD))
-        / F.lit(float(_MOD))
-    ) * F.lit(2.0)
-    t_lat = F.lit(35.0) + (
-        ((k * F.lit(29) + F.lit(3)) * F.lit(_MIX) % F.lit(_MOD))
-        / F.lit(float(_MOD))
-    ) * F.lit(2.0)
-    targets = spark.range(2000).select(
-        k.alias("target_id"), t_lon.alias("lon"), t_lat.alias("lat")
-    )
-    return gwr(targets, stations, bandwidth=0.02)
-
-
-_GWR_SQL = f"""
-WITH {_IMAGES_CTE.strip().rstrip()},
-stations AS (
-  SELECT lon, lat,
-         CAST(CAST(substring(image_id, 4, 8) AS BIGINT) % 23 AS DOUBLE) AS x,
-         CAST(CAST(substring(image_id, 4, 8) AS BIGINT) % 97 AS DOUBLE) AS y
-  FROM images
-),
-targets AS (
-  SELECT i AS target_id,
-         139.0 + ((i * 53 + 11) * {_MIX} % {_MOD}) / {float(_MOD)} * 2.0 AS lon,
-         35.0 + ((i * 29 + 3) * {_MIX} % {_MOD}) / {float(_MOD)} * 2.0 AS lat
-  FROM range(0, 2000) t(i)
-),
-cand AS (
-  SELECT t.target_id, s.x, s.y,
-         exp(-((t.lon - s.lon) * (t.lon - s.lon)
-               + (t.lat - s.lat) * (t.lat - s.lat)) / (2 * 0.02 * 0.02)) AS w
-  FROM targets t CROSS JOIN stations s
-  WHERE (t.lon - s.lon) * (t.lon - s.lon)
-        + (t.lat - s.lat) * (t.lat - s.lat) <= 0.06 * 0.06
-),
-agg AS (
-  SELECT target_id, count(*) AS n_used,
-         sum(w) AS sw, sum(w * x) AS swx, sum(w * y) AS swy,
-         sum(w * x * x) AS swxx, sum(w * x * y) AS swxy,
-         sum(w * y * y) AS swyy
-  FROM cand GROUP BY target_id HAVING count(*) >= 3
-),
-cent AS (
-  SELECT target_id, n_used, sw, swx, swy, swxx, swyy,
-         swxx - swx * swx / sw AS sxx,
-         swyy - swy * swy / sw AS syy,
-         swxy - swx * swy / sw AS sxy
-  FROM agg
-)
-SELECT target_id, n_used,
-       round((swy - (sxy / sxx) * swx) / sw, 6) AS intercept,
-       round(sxy / sxx, 6) AS slope,
-       round(CASE WHEN syy <= 1e-12 * abs(swyy) THEN 1.0
-                  ELSE sxy * sxy / (sxx * syy) END, 6) AS local_r2
-FROM cent
-WHERE NOT (sxx <= 1e-12 * abs(swxx))
 """
 
 
@@ -6471,221 +5626,6 @@ SELECT admin_code, count(*) AS n_cells FROM closed GROUP BY admin_code
 """
 
 
-def q_variogram_admin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical semivariogram (operators/spatial.py::
-    empirical_variogram, Matheron 1962) of the station surface
-    (customer-derived image anchors, value = c_custkey % 97): all
-    unordered pairs within 0.05 deg binned into 6 lags, gamma =
-    avg(dv^2)/2 per bin. The Spark side is the 3x3 cell-neighborhood
-    self-join (exactly-once pair emission, no dedup shuffle); the
-    oracle is the brute-force cross join — the hash match PROVES the
-    prune emits every in-range pair exactly once."""
-    from ksj2gp_spark.operators.spatial import empirical_variogram
-
-    stations = _images_from_customer(spark, sf_dir).select(
-        F.col("image_id").alias("point_id"),
-        "lon",
-        "lat",
-        (F.substring("image_id", 4, 8).cast("long") % 97)
-        .cast("double")
-        .alias("value"),
-    )
-    return empirical_variogram(stations, max_lag=0.05, n_bins=6)
-
-
-_VARIOGRAM_SQL = f"""
-WITH {_IMAGES_CTE.strip().rstrip()},
-stations AS (
-  SELECT image_id AS pid, lon, lat,
-         CAST(CAST(substring(image_id, 4, 8) AS BIGINT) % 97 AS DOUBLE) AS v
-  FROM images
-),
-pairs AS (
-  SELECT a.lon - b.lon AS dx, a.lat - b.lat AS dy, a.v - b.v AS dv
-  FROM stations a JOIN stations b ON a.pid < b.pid
-  WHERE (a.lon - b.lon) * (a.lon - b.lon)
-        + (a.lat - b.lat) * (a.lat - b.lat) <= 0.05 * 0.05
-)
-SELECT LEAST(CAST(floor(sqrt(dx * dx + dy * dy) / {0.05 / 6!r}) AS INT),
-             5) AS bin,
-       count(*) AS n_pairs,
-       round(avg(sqrt(dx * dx + dy * dy)), 6) AS avg_dist,
-       round(avg(dv * dv) / 2.0, 6) AS gamma
-FROM pairs GROUP BY bin
-"""
-
-
-def q_krige_stations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local ordinary kriging (operators/spatial.py::ordinary_krige,
-    Cressie 1993) with k=2 neighbors: 2,000 deterministic targets
-    predicted from their two nearest stations within 0.05 deg under an
-    exponential variogram (nugget 0.5, psill 40, range 0.02). The
-    Spark side runs the GENERAL batched np.linalg.solve kernel; the
-    oracle replays the k<=2 system in CLOSED FORM (w2-w1 =
-    (g1t-g2t)/g12 from the 3x3 lagrange system; the n=1 degenerate
-    collapses to w=1, var=2*g1t) — so the hash match proves the
-    linear-algebra kernel against an independent derivation, not
-    against itself."""
-    from ksj2gp_spark.operators.spatial import ordinary_krige
-
-    stations = _images_from_customer(spark, sf_dir).select(
-        F.col("image_id").alias("station_id"),
-        "lon",
-        "lat",
-        (F.substring("image_id", 4, 8).cast("long") % 97)
-        .cast("double")
-        .alias("value"),
-    )
-    k = F.col("id")
-    t_lon = F.lit(139.0) + (
-        ((k * F.lit(53) + F.lit(11)) * F.lit(_MIX) % F.lit(_MOD))
-        / F.lit(float(_MOD))
-    ) * F.lit(2.0)
-    t_lat = F.lit(35.0) + (
-        ((k * F.lit(29) + F.lit(3)) * F.lit(_MIX) % F.lit(_MOD))
-        / F.lit(float(_MOD))
-    ) * F.lit(2.0)
-    targets = spark.range(2000).select(
-        k.alias("target_id"), t_lon.alias("lon"), t_lat.alias("lat")
-    )
-    return ordinary_krige(
-        targets,
-        stations,
-        radius=0.05,
-        k=2,
-        model="exponential",
-        nugget=0.5,
-        psill=40.0,
-        vrange=0.02,
-    )
-
-
-def _gamma_sql(dexpr: str) -> str:
-    """Exponential variogram gamma as SQL (nugget 0.5, psill 40,
-    range 0.02), 0 at d=0 — the twin of _variogram_gamma_np."""
-    return (
-        f"CASE WHEN {dexpr} > 0 "
-        f"THEN 0.5 + 40.0 * (1.0 - exp(-({dexpr}) / 0.02)) "
-        f"ELSE 0.0 END"
-    )
-
-
-_KRIGE_SQL = f"""
-WITH {_IMAGES_CTE.strip().rstrip()},
-stations AS (
-  SELECT image_id AS sid, lon, lat,
-         CAST(CAST(substring(image_id, 4, 8) AS BIGINT) % 97 AS DOUBLE) AS v
-  FROM images
-),
-targets AS (
-  SELECT i AS target_id,
-         139.0 + ((i * 53 + 11) * {_MIX} % {_MOD}) / {float(_MOD)} * 2.0 AS lon,
-         35.0 + ((i * 29 + 3) * {_MIX} % {_MOD}) / {float(_MOD)} * 2.0 AS lat
-  FROM range(0, 2000) t(i)
-),
-cand AS (
-  SELECT t.target_id, s.sid, s.lon AS sx, s.lat AS sy, s.v,
-         (t.lon - s.lon) * (t.lon - s.lon)
-         + (t.lat - s.lat) * (t.lat - s.lat) AS d2
-  FROM targets t CROSS JOIN stations s
-  WHERE (t.lon - s.lon) * (t.lon - s.lon)
-        + (t.lat - s.lat) * (t.lat - s.lat) <= 0.05 * 0.05
-),
-rk AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY target_id ORDER BY d2, sid) AS rn
-  FROM cand
-),
-top2 AS (
-  SELECT target_id,
-         count(*) AS n_used,
-         max(CASE WHEN rn = 1 THEN sx END) AS x1,
-         max(CASE WHEN rn = 1 THEN sy END) AS y1,
-         max(CASE WHEN rn = 1 THEN v END) AS v1,
-         max(CASE WHEN rn = 1 THEN sqrt(d2) END) AS d1,
-         max(CASE WHEN rn = 2 THEN sx END) AS x2,
-         max(CASE WHEN rn = 2 THEN sy END) AS y2,
-         max(CASE WHEN rn = 2 THEN v END) AS v2,
-         max(CASE WHEN rn = 2 THEN sqrt(d2) END) AS d2d
-  FROM rk WHERE rn <= 2 GROUP BY target_id
-),
-solved AS (
-  SELECT target_id, n_used, v1,
-         {_gamma_sql("d1")} AS g1,
-         {_gamma_sql("d2d")} AS g2,
-         {_gamma_sql("sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))")}
-           AS g12,
-         v2
-  FROM top2
-),
-weights AS (
-  SELECT target_id, n_used, v1, v2, g1, g2, g12,
-         (1.0 + (g1 - g2) / g12) / 2.0 AS w2
-  FROM solved WHERE n_used = 2
-)
-SELECT target_id, n_used,
-       round((1.0 - w2) * v1 + w2 * v2, 6) AS krige_value,
-       round((1.0 - w2) * g1 + w2 * g2 + (g1 - g12 * w2), 6) AS krige_var
-FROM weights
-UNION ALL
-SELECT target_id, n_used, round(v1, 6) AS krige_value,
-       round(2.0 * g1, 6) AS krige_var
-FROM solved WHERE n_used = 1
-"""
-
-
-def q_admin_median_center(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group geometric median (operators/spatial.py::
-    geometric_median, Weiszfeld 1937): the image anchors bucketed into
-    12 groups, 3 fixed Weiszfeld iterations from the centroid. The
-    oracle replays the SAME finite iteration schedule as three chained
-    SQL aggregations — iteration-for-iteration parity, the kmeans
-    replay pattern."""
-    from ksj2gp_spark.operators.spatial import geometric_median
-
-    pts = _images_from_customer(spark, sf_dir).select(
-        (F.substring("image_id", 4, 8).cast("long") % 12).alias("grp"),
-        "lon",
-        "lat",
-    )
-    return geometric_median(pts, group_col="grp", iters=3)
-
-
-def _weiszfeld_step_sql(prev: str, nxt: str) -> str:
-    """One Weiszfeld iteration as SQL, the twin of the Catalyst step in
-    geometric_median (same greatest(sqrt, 1e-12) floor)."""
-    return f"""
-{nxt} AS (
-  SELECT j.g,
-         sum(j.x * j.w) / sum(j.w) AS mx,
-         sum(j.y * j.w) / sum(j.w) AS my,
-         count(*) AS n
-  FROM (
-    SELECT p.g, p.x, p.y,
-           1.0 / greatest(sqrt((p.x - e.mx) * (p.x - e.mx)
-                               + (p.y - e.my) * (p.y - e.my)), 1e-12) AS w
-    FROM pts p JOIN {prev} e ON p.g = e.g
-  ) j GROUP BY j.g
-)"""
-
-
-_MEDIAN_SQL = f"""
-WITH {_IMAGES_CTE.strip().rstrip()},
-pts AS (
-  SELECT CAST(substring(image_id, 4, 8) AS BIGINT) % 12 AS g,
-         lon AS x, lat AS y
-  FROM images
-),
-it0 AS (
-  SELECT g, avg(x) AS mx, avg(y) AS my, count(*) AS n
-  FROM pts GROUP BY g
-),{_weiszfeld_step_sql("it0", "it1")},{_weiszfeld_step_sql("it1", "it2")},{_weiszfeld_step_sql("it2", "it3")}
-SELECT g AS grp, n AS n_points,
-       round(mx, 6) AS med_lon, round(my, 6) AS med_lat
-FROM it3
-"""
-
-
 def q_geohash_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geohash tiling (operators/cells.py::geohash_col, Niemeyer 2008):
     precision-6 geohash of every image anchor, counted per cell — the
@@ -6764,84 +5704,6 @@ SELECT 'img' || lpad(CAST(i AS VARCHAR), 8, '0') AS image_id,
        CAST(sum(CASE WHEN lap IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_interior
 FROM px GROUP BY i
-"""
-
-
-
-def q_gravity_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distance-decay gravity-model fit (Zipf 1946 inverse-distance
-    form; the standard mobility-analytics summary) — a pure COMPOSITION
-    capstone: the od_matrix flows (stay segmentation -> trips -> cell-
-    pair counts) feed a closed-form log-log OLS, ln(flow) = b0 +
-    b1*ln(dist), over the positive-distance cell pairs. b1 is the
-    distance-decay exponent. One extra scalar aggregation on top of the
-    od lane; the oracle replays the whole chain (stays + trips + flows
-    + the same sufficient-statistics algebra) in one DuckDB query."""
-    flows = q_od_matrix(spark, sf_dir)
-    dx = F.col("to_x") - F.col("from_x")
-    dy = F.col("to_y") - F.col("from_y")
-    d = F.sqrt(dx * dx + dy * dy)
-    obs = flows.select(
-        F.log(d).alias("lx"),
-        F.log(F.col("n_trips").cast("double")).alias("ly"),
-    ).filter(d > F.lit(0.0))
-    agg = obs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum("lx").alias("_sx"),
-        F.sum("ly").alias("_sy"),
-        F.sum(F.col("lx") * F.col("lx")).alias("_sxx"),
-        F.sum(F.col("lx") * F.col("ly")).alias("_sxy"),
-        F.sum(F.col("ly") * F.col("ly")).alias("_syy"),
-    )
-    n = F.col("n_pairs").cast("double")
-    vx = F.col("_sxx") - F.col("_sx") * F.col("_sx") / n
-    vy = F.col("_syy") - F.col("_sy") * F.col("_sy") / n
-    cov = F.col("_sxy") - F.col("_sx") * F.col("_sy") / n
-    slope = cov / vx
-    intercept = (F.col("_sy") - slope * F.col("_sx")) / n
-    r2 = F.when(vy <= F.lit(0.0), F.lit(1.0)).otherwise(
-        cov * cov / (vx * vy)
-    )
-    return (
-        agg.filter((F.col("n_pairs") >= 2) & (vx > F.lit(0.0)))
-        .select(
-            "n_pairs",
-            F.round(slope, 6).alias("decay_exponent"),
-            F.round(intercept, 6).alias("intercept"),
-            F.round(r2, 6).alias("r2"),
-        )
-    )
-
-
-def _gravity_sql() -> str:
-    return f"""
-WITH flows AS ({_od_matrix_sql()}),
-obs AS (
-  SELECT ln(sqrt((to_x - from_x) * (to_x - from_x)
-               + (to_y - from_y) * (to_y - from_y))) AS lx,
-         ln(CAST(n_trips AS DOUBLE)) AS ly
-  FROM flows
-  WHERE sqrt((to_x - from_x) * (to_x - from_x)
-           + (to_y - from_y) * (to_y - from_y)) > 0.0
-),
-agg AS (
-  SELECT count(*) AS n_pairs,
-         sum(lx) AS sx, sum(ly) AS sy, sum(lx * lx) AS sxx,
-         sum(lx * ly) AS sxy, sum(ly * ly) AS syy
-  FROM obs
-)
-SELECT n_pairs,
-       round((sxy - sx * sy / n_pairs) / (sxx - sx * sx / n_pairs), 6)
-         AS decay_exponent,
-       round((sy - ((sxy - sx * sy / n_pairs)
-                    / (sxx - sx * sx / n_pairs)) * sx) / n_pairs, 6)
-         AS intercept,
-       round(CASE WHEN syy - sy * sy / n_pairs <= 0.0 THEN 1.0
-                  ELSE (sxy - sx * sy / n_pairs) * (sxy - sx * sy / n_pairs)
-                       / ((sxx - sx * sx / n_pairs)
-                          * (syy - sy * sy / n_pairs)) END, 6) AS r2
-FROM agg
-WHERE n_pairs >= 2 AND sxx - sx * sx / n_pairs > 0.0
 """
 
 
@@ -7335,16 +6197,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_keep": q_dedup_keep,
         "bm25_rank": q_bm25_rank,
         "events_range_join": q_events_range_join,
-        "snap_roads": q_snap_roads,
-        "hmm_match": q_hmm_match,
-        "hausdorff_pairs": q_hausdorff_pairs,
         "image_blobs": q_image_blobs,
-        "gwr_admin": q_gwr_admin,
         "slope_tiles": q_slope_tiles,
         "morph_close_tiles": q_morph_close_tiles,
-        "variogram_admin": q_variogram_admin,
-        "krige_stations": q_krige_stations,
-        "admin_median_center": q_admin_median_center,
         "geohash_tiles": q_geohash_tiles,
         "image_sharpness": q_image_sharpness,
         "image_patches": q_image_patches,
@@ -7376,10 +6231,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dbscan_clusters": q_dbscan,
         "kde_heatmap": q_kde_heatmap,
         "sssp_dists": q_sssp,
-        "stay_points": q_stay_points,
         "textrank_keywords": q_textrank,
-        "od_matrix": q_od_matrix,
-        "gravity_model": q_gravity_model,
         "isochrone_bands": q_isochrone_bands,
         "zonal_median": q_zonal_median,
         "admin_image_quality": q_admin_image_quality,
@@ -7396,8 +6248,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "std_ellipse": q_std_ellipse,
         "general_g": q_general_g,
         "join_counts": q_join_counts,
-        "trajectory_stats": q_trajectory_stats,
-        "dwithin_geo": q_dwithin_geo,
     }
 
 
@@ -7499,16 +6349,9 @@ GROUP BY p.admin_code
         "dedup_keep": _dedup_keep_sql(),
         "bm25_rank": _bm25_sql(),
         "events_range_join": _RANGE_JOIN_SQL,
-        "snap_roads": _SNAP_ROADS_SQL,
-        "hmm_match": _hmm_match_sql(),
-        "hausdorff_pairs": _HAUSDORFF_SQL,
         "image_blobs": _BLOBS_SQL,
-        "gwr_admin": _GWR_SQL,
         "slope_tiles": _SLOPE_SQL.format(tiles=_TILES_SQL.strip()),
         "morph_close_tiles": _MORPH_SQL.format(tiles=_TILES_SQL.strip()),
-        "variogram_admin": _VARIOGRAM_SQL,
-        "krige_stations": _KRIGE_SQL,
-        "admin_median_center": _MEDIAN_SQL,
         "geohash_tiles": _geohash_tiles_sql(),
         "image_sharpness": _SHARPNESS_SQL,
         "image_patches": _IMAGE_PATCHES_SQL,
@@ -7540,10 +6383,7 @@ GROUP BY p.admin_code
         "dbscan_clusters": _DBSCAN_SQL,
         "kde_heatmap": _KDE_SQL,
         "sssp_dists": _SSSP_SQL,
-        "stay_points": _STAY_SQL,
         "textrank_keywords": _textrank_sql(),
-        "od_matrix": _od_matrix_sql(),
-        "gravity_model": _gravity_sql(),
         "isochrone_bands": _ISOCHRONE_SQL,
         "zonal_median": _zonal_median_sql(),
         "admin_image_quality": _ADMIN_QUALITY_SQL.format(tiles=_TILES_SQL.strip()),
@@ -7560,6 +6400,4 @@ GROUP BY p.admin_code
         "std_ellipse": _ELLIPSE_SQL,
         "general_g": _GENERAL_G_SQL.format(tiles=_TILES_SQL.strip()),
         "join_counts": _JOIN_COUNTS_SQL.format(tiles=_TILES_SQL.strip()),
-        "trajectory_stats": _TRAJ_SQL,
-        "dwithin_geo": _DWITHIN_GEO_SQL,
     }

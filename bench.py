@@ -430,59 +430,6 @@ def main() -> None:
         ).count(),
     )
 
-    # Geostatistics lanes (round-5 additions): the variogram pair join
-    # and the kriging solve pipeline at bench scale. Station/target
-    # tables are deterministic range-derived points (no bytes — these
-    # lanes measure the joins and the solve, not fixture generation).
-    def _geo_pts(n: int, sa: int, sb: int, idc: str):
-        k = F.col("id")
-        MIX, MOD = 2654435761, 1 << 20
-        return spark.range(0, n, 1, cpus * 2).select(
-            k.alias(idc),
-            (F.lit(139.0) + ((k * sa + 11) * MIX % MOD) / float(MOD) * 2.0)
-            .alias("lon"),
-            (F.lit(35.0) + ((k * sb + 3) * MIX % MOD) / float(MOD) * 2.0)
-            .alias("lat"),
-        )
-
-    from ksj2gp_spark.operators.spatial import (
-        empirical_variogram as _vario,
-        ordinary_krige as _krige,
-    )
-
-    _vpts = _geo_pts(1_000_000, 97, 31, "point_id").withColumn(
-        "value", (F.col("point_id") % 97).cast("double")
-    )
-    timed(
-        "variogram_1m_pts",
-        lambda: _vario(
-            _vpts, max_lag=0.02, n_bins=8, sample_fraction=0.3
-        ).count(),
-        warm=True,
-    )
-    _kstations = _geo_pts(100_000, 97, 31, "station_id").withColumn(
-        "value", (F.col("station_id") % 97).cast("double")
-    )
-    _ktargets = _geo_pts(1_000_000, 53, 29, "target_id")
-    timed(
-        "krige_1m_targets",
-        lambda: _krige(
-            _ktargets,
-            _kstations,
-            radius=0.01,
-            k=8,
-            model="exponential",
-            nugget=0.5,
-            psill=40.0,
-            vrange=0.02,
-        ).count(),
-        warm=True,
-        # first full-suite run: raws 8.9/21.0/7.8 (quiet standalone
-        # 3.0s) — the mid-suite Python-worker + GC weather the other
-        # Pandas-UDF lanes see; 5 repeats make the median robust
-        repeats=5,
-    )
-
     # Conversion lane — the reference's own role (ZIP shapefile →
     # GeoParquet with translation): 8 ZIPs × 20k features ingested
     # distributed and written with bbox covering. Fixture ZIPs are
@@ -723,103 +670,6 @@ def main() -> None:
         ).count()
 
     timed("fused_20k_polygons_300k_pts", fused_large_layer)
-
-    # Map matching at road-network cardinality: 300k image points
-    # snapped to 50k deterministic road segments over the same bbox.
-    # Entirely JVM-side (cell cover + equi-join + codegen refine +
-    # top-1 window — plan-asserted zero Python), so the lane measures
-    # the operator, not Arrow transfer.
-    def map_match_lane():
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        r = spark.range(0, 50_000, 1, cpus * 2)
-        u1 = ((F.col("id") * 2246822519) % 1048576) / 1048576.0
-        u2 = ((F.col("id") * 2654435761 + 104729) % 1048576) / 1048576.0
-        ang = ((F.col("id") * 1103515245 + 12345) % 1048576) / 1048576.0
-        x1 = fixtures.LON0 + u1 * (fixtures.LON1 - fixtures.LON0)
-        y1 = fixtures.LAT0 + u2 * (fixtures.LAT1 - fixtures.LAT0)
-        segs = r.select(
-            (F.col("id") % 5000).alias("line_id"),
-            (F.col("id") / 5000).cast("int").alias("seg_idx"),
-            x1.alias("x1"),
-            y1.alias("y1"),
-            (x1 + 0.005 * F.cos(ang * 6.283185)).alias("x2"),
-            (y1 + 0.005 * F.sin(ang * 6.283185)).alias("y2"),
-        )
-        probe = fixtures.images_df(
-            spark, 300_000, with_bytes=False, partitions=cpus * 2
-        ).select(
-            F.col("image_id").alias("point_id"), "lon", "lat"
-        )
-        return snap_points(
-            probe,
-            segs,
-            max_dist=0.004,
-            cell_size=0.008,
-            x_col="lon",
-            y_col="lat",
-        ).count()
-
-    timed("map_match_300k_pts_50k_segs", map_match_lane, warm=True)
-
-    # HMM map matching at GPS-feed cardinality: 2M pings in 100k
-    # 20-step trajectories over a 0.1-degree road grid. Unlike the
-    # snap lane (pure JVM) this one crosses the Arrow boundary: the
-    # bucketed Viterbi DP (tensor kernel, ~6 ms per bucket) decodes
-    # every ping; the lane measures candidate join + the one
-    # bucket-keyed exchange + transfer + DP end to end.
-    def hmm_lane():
-        from ksj2gp_spark.operators.spatial import hmm_map_match
-
-        T = 20
-        n = 2_000_000
-        r = spark.range(0, n, 1, cpus * 4)
-        traj = F.floor(F.col("id") / T).cast("long")
-        step = F.col("id") % T
-        u1 = ((traj * 69069 + 1) % 1048576) / 1048576.0
-        u2 = ((traj * 48271 + 7) % 1048576) / 1048576.0
-        n1 = (((F.col("id") * 2654435761) % 2001) - 1000) / 100000.0
-        n2 = (((F.col("id") * 40503) % 2001) - 1000) / 100000.0
-        pings = r.select(
-            traj.alias("traj_id"),
-            step.alias("step"),
-            (128.0 + u1 * 17.0 + step * 0.03 + n1).alias("x"),
-            (30.0 + u2 * 15.0 + step * 0.02 + n2).alias("y"),
-        )
-        h = spark.range(0, 161 * 18, 1, cpus).select(
-            (F.col("id") % 161).alias("line_id"),
-            (F.col("id") / 161).cast("int").alias("seg_idx"),
-        )
-        h = h.select(
-            "line_id",
-            "seg_idx",
-            (128.0 + F.col("seg_idx")).alias("x1"),
-            (30.0 + 0.1 * F.col("line_id")).alias("y1"),
-            (129.0 + F.col("seg_idx")).alias("x2"),
-            (30.0 + 0.1 * F.col("line_id")).alias("y2"),
-        )
-        v = spark.range(0, 181 * 16, 1, cpus).select(
-            (100000 + F.col("id") % 181).alias("line_id"),
-            (F.col("id") / 181).cast("int").alias("seg_idx"),
-        )
-        v = v.select(
-            "line_id",
-            "seg_idx",
-            (128.0 + 0.1 * (F.col("line_id") - 100000)).alias("x1"),
-            (30.0 + F.col("seg_idx")).alias("y1"),
-            (128.0 + 0.1 * (F.col("line_id") - 100000)).alias("x2"),
-            (31.0 + F.col("seg_idx")).alias("y2"),
-        )
-        return hmm_map_match(
-            pings,
-            h.unionByName(v),
-            max_dist=0.05,
-            sigma=0.025,
-            beta=0.01,
-            cell_size=0.05,
-        ).count()
-
-    timed("hmm_match_2m_pings", hmm_lane, warm=True)
 
     # Cache hygiene between lane groups: the image fixture is done —
     # drop it before the relational lanes so no lane competes with

@@ -19,6 +19,17 @@ Refinement receives the polygon layer via a Spark broadcast variable
 (its polygon ids and flat edge index, ``geo/edges.py``) so candidate
 rows never carry geometry bytes through the join. Every broadcast-layer
 join tests PIP and distance with that one index.
+
+The module holds the tile job's joins and the joins built on the same
+index: point-in-polygon tiles (broadcast and distributed), nearest-
+polygon kNN for unmatched points (brute-force reference and pruned),
+the fused assign-or-kNN pass over one ``PolygonIndex``, distance-within
+joins, the temporal (validity-interval) tile join and polygon-polygon
+overlap/overlay joins. After them come the point-pattern and areal
+statistics (IDW, focal mean, Moran's I / LISA / Gi* / Geary's C /
+General G / join counts, Ripley's K and cross-K, DBSCAN, KDE, emerging
+hotspots, areal interpolation, Knox, quadrat test, standard deviational
+ellipse, convex hulls), which the tile job does not use.
 """
 
 from __future__ import annotations
@@ -2142,160 +2153,6 @@ def kde_heatmap(
     )
 
 
-def stay_points(
-    pings: DataFrame,
-    max_step: float,
-    min_pings: int = 2,
-    min_duration_us: int = 0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    x_col: str = "lon",
-    y_col: str = "lat",
-) -> DataFrame:
-    """Trajectory stay-point (stop) detection — the spatial
-    gaps-and-islands: a stay is a MAXIMAL run of a user's
-    time-consecutive pings where each step to the previous ping is
-    <= ``max_step`` (planar distance); runs shorter than
-    ``min_pings`` pings or ``min_duration_us`` microseconds are
-    dropped. Emits one row per stay — (user, stay_seq, n_pings,
-    start_ts, end_ts, duration_us, cx, cy) with the centroid rounded
-    to 6 decimals (summation-order canon) and duration in exact
-    integer microseconds. The step rule (distance to the PREVIOUS
-    ping, not to the stay anchor) makes the segmentation a pure
-    window computation — order-deterministic given unique (user, ts)
-    pairs, which the caller must guarantee.
-
-    The temporal complement of sessionization (events' time-gap
-    islands): here the island boundary is a SPATIAL jump. Scale
-    shape: ONE shuffle on the user key; both window passes (lag +
-    running segment count) and the final groupBy ride the same
-    partitioning; per-task memory is bounded by a single user's ping
-    count. All codegen'd expressions — no UDF, no driver collect.
-    """
-    from pyspark.sql import Window
-
-    if max_step <= 0:
-        raise ValueError("max_step must be positive")
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    px = F.lag(x_col).over(w)
-    py = F.lag(y_col).over(w)
-    step2 = (F.col(x_col) - px) * (F.col(x_col) - px) + (
-        F.col(y_col) - py
-    ) * (F.col(y_col) - py)
-    new_seg = F.when(
-        px.isNull() | (step2 > F.lit(float(max_step) ** 2)), 1
-    ).otherwise(0)
-    seg = pings.withColumn("_seg", F.sum(new_seg).over(w))
-    return (
-        seg.groupBy(user_col, "_seg")
-        .agg(
-            F.count(F.lit(1)).alias("n_pings"),
-            F.min(ts_col).alias("start_ts"),
-            F.max(ts_col).alias("end_ts"),
-            (
-                # cast handles TIMESTAMP_NTZ; the session-tz shift is
-                # identical at both endpoints so the difference is exact
-                F.unix_micros(F.max(ts_col).cast("timestamp"))
-                - F.unix_micros(F.min(ts_col).cast("timestamp"))
-            ).alias("duration_us"),
-            F.round(F.avg(x_col), 6).alias("cx"),
-            F.round(F.avg(y_col), 6).alias("cy"),
-        )
-        .filter(
-            (F.col("n_pings") >= F.lit(int(min_pings)))
-            & (F.col("duration_us") >= F.lit(int(min_duration_us)))
-        )
-        .select(
-            user_col,
-            F.col("_seg").alias("stay_seq"),
-            "n_pings",
-            "start_ts",
-            "end_ts",
-            "duration_us",
-            "cx",
-            "cy",
-        )
-    )
-
-
-def od_matrix(
-    pings: DataFrame,
-    max_step: float,
-    cell_size: float,
-    min_pings: int = 2,
-    min_duration_us: int = 0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    x_col: str = "lon",
-    y_col: str = "lat",
-) -> DataFrame:
-    """Origin-destination flow matrix from raw trajectories — the
-    classic mobility-analytics product: :func:`stay_points` segments
-    each user's pings into stays, consecutive stays (by start time)
-    form a trip, and trips aggregate into per-cell-pair flows.
-    Emits (from_x, from_y, to_x, to_y, n_trips) where from/to are
-    the ``cell_size`` grid-cell CENTERS containing the stay
-    centroids (same-cell trips kept — an auditable "local move"
-    flow, not silently dropped).
-
-    Pure composition: the stay segmentation is stay_points verbatim
-    (ONE user-key shuffle); the trip pairing is one more lag window
-    over the SAME user partitioning (stays are user-bounded rows, so
-    no new exchange of ping-sized data); the flow aggregation is a
-    map-side-combinable groupBy on four small integers. Stay
-    centroids are rounded to 6 decimals BEFORE cell assignment (the
-    stay_points output contract), so the cell id is computed from
-    engine-portable doubles.
-    """
-    from pyspark.sql import Window
-
-    if cell_size <= 0:
-        raise ValueError("cell_size must be positive")
-    s = float(cell_size)
-    stays = stay_points(
-        pings,
-        max_step=max_step,
-        min_pings=min_pings,
-        min_duration_us=min_duration_us,
-        user_col=user_col,
-        ts_col=ts_col,
-        x_col=x_col,
-        y_col=y_col,
-    )
-    ci = F.floor((F.col("cx") + F.lit(180.0)) / F.lit(s)).cast("long")
-    cj = F.floor((F.col("cy") + F.lit(90.0)) / F.lit(s)).cast("long")
-    w = Window.partitionBy(user_col).orderBy("start_ts")
-    celled = stays.select(
-        user_col, "start_ts", ci.alias("_ci"), cj.alias("_cj")
-    ).select(
-        user_col,
-        F.lag("_ci").over(w).alias("_pi"),
-        F.lag("_cj").over(w).alias("_pj"),
-        "_ci",
-        "_cj",
-    )
-    return (
-        celled.filter(F.col("_pi").isNotNull())
-        .groupBy("_pi", "_pj", "_ci", "_cj")
-        .agg(F.count(F.lit(1)).alias("n_trips"))
-        .select(
-            ((F.col("_pi") + F.lit(0.5)) * F.lit(s) - F.lit(180.0)).alias(
-                "from_x"
-            ),
-            ((F.col("_pj") + F.lit(0.5)) * F.lit(s) - F.lit(90.0)).alias(
-                "from_y"
-            ),
-            ((F.col("_ci") + F.lit(0.5)) * F.lit(s) - F.lit(180.0)).alias(
-                "to_x"
-            ),
-            ((F.col("_cj") + F.lit(0.5)) * F.lit(s) - F.lit(90.0)).alias(
-                "to_y"
-            ),
-            "n_trips",
-        )
-    )
-
-
 def emerging_hotspots(
     cells_df: DataFrame,
     res: int,
@@ -3080,1554 +2937,4 @@ def convex_hull_per_group(
             f"{group_col} {gtype}, n_vertices int, area double, "
             "hull_wkt string"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Map matching: snap points to the nearest polyline segment
-# ---------------------------------------------------------------------------
-
-
-def line_segments(
-    lines: DataFrame,
-    id_col: str = "line_id",
-    geometry_col: str = "geometry",
-) -> DataFrame:
-    """Explode WKB polylines into one row per segment —
-    ``(line_id, seg_idx, x1, y1, x2, y2)``.
-
-    The segment form is what :func:`snap_points` consumes: a road
-    network becomes a flat, evenly-sized relation that partitions by
-    row count instead of by (wildly skewed) per-line vertex count.
-    ``seg_idx`` numbers segments consecutively across the parts of a
-    MultiLineString, so (line_id, seg_idx) is a stable segment key.
-
-    One ``mapInPandas`` pass (Arrow-batched WKB parse, the slow path
-    only where a binary codec forces it); geometry bytes never leave
-    this operator.
-    """
-    spark_cols = [id_col, geometry_col]
-    src = lines.select(*spark_cols)
-    id_type = dict(lines.dtypes)[id_col]
-
-    def explode_segs(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_id, out_seg = [], []
-            out_x1, out_y1, out_x2, out_y2 = [], [], [], []
-            for lid, buf in zip(pdf[id_col], pdf[geometry_col]):
-                g = wkb.loads(bytes(buf))
-                if g.kind == wkb.LINESTRING:
-                    parts = [np.asarray(g.coords)]
-                elif g.kind == wkb.MULTILINESTRING:
-                    parts = [np.asarray(p) for p in g.coords]
-                else:
-                    raise ValueError(
-                        f"line_segments expects LineString/"
-                        f"MultiLineString, got {g.name}"
-                    )
-                seg = 0
-                for arr in parts:
-                    n = len(arr) - 1
-                    if n <= 0:
-                        continue
-                    out_id.extend([lid] * n)
-                    out_seg.extend(range(seg, seg + n))
-                    out_x1.extend(arr[:-1, 0])
-                    out_y1.extend(arr[:-1, 1])
-                    out_x2.extend(arr[1:, 0])
-                    out_y2.extend(arr[1:, 1])
-                    seg += n
-            yield pd.DataFrame(
-                {
-                    id_col: out_id,
-                    "seg_idx": out_seg,
-                    "x1": out_x1,
-                    "y1": out_y1,
-                    "x2": out_x2,
-                    "y2": out_y2,
-                }
-            )
-
-    return src.mapInPandas(
-        explode_segs,
-        schema=(
-            f"{id_col} {id_type}, seg_idx int, x1 double, y1 double, "
-            "x2 double, y2 double"
-        ),
-    )
-
-
-def _segment_cell_cover(
-    segments: DataFrame,
-    seg_cols: list,
-    max_dist: float,
-    cs: float,
-) -> DataFrame:
-    """Grid cells within ``max_dist`` of each segment, pure Catalyst,
-    LINEAR in segment length: the segment is sub-split along its
-    dominant axis into runs of at most one ``cell_size`` (lerp on
-    k/n), and each run contributes the cells of its bbox expanded by
-    ``max_dist``. A whole-bbox cover is quadratic on long diagonals —
-    a 100-cell ferry segment would explode into 10,000 cells where
-    the split emits ~100 × O(1). Coverage is exact for every
-    cell_size: a point within max_dist of the segment is within
-    max_dist of some sub-run, so it shares a cell with that run's
-    padded bbox. The pad carries a +1e-9 guard absorbing the 1-ULP
-    lerp rounding at sub-run ends (x1 + 1.0*(x2-x1) is not always
-    exactly x2); over-covered candidates refine away on the exact
-    distance filter.
-
-    Emits one row per (segment row, covered cell) with the packed
-    ``_cell`` key, DISTINCT per segment row: adjacent runs share
-    ~2/3 of their padded cells, and the naive emit carries a ~4.5×
-    duplicate factor straight into the candidate join (profiled on
-    the map-matching lane — 7.7M candidate rows for 1.7M distinct,
-    plus the dropDuplicates shuffle the consumer then needs). The
-    dedup here is MAP-SIDE — the run→cell expansion happens inside
-    nested ``transform`` higher-order functions so ``array_distinct``
-    sees the whole segment's cells in one row, then a single explode
-    streams the distinct set. No shuffle, and downstream (point,
-    segment) candidate pairs are unique by construction because a
-    point joins on exactly one cell. The transient per-row array is
-    O(length / cell_size) entries — bounded by the same cell_size
-    tuning the join fan-out already requires.
-    """
-    pad = F.lit(float(max_dist) + 1e-9)
-    csl = F.lit(float(cs))
-    dxs = F.col("x2") - F.col("x1")
-    dys = F.col("y2") - F.col("y1")
-    nsub = F.greatest(
-        F.lit(1).cast("long"),
-        F.ceil(F.greatest(F.abs(dxs), F.abs(dys)) / csl),
-    )
-
-    def run_cells(k):
-        t0 = k / F.col("_n")
-        t1 = (k + F.lit(1)) / F.col("_n")
-        ax = F.col("x1") + t0 * F.col("_dx")
-        bx = F.col("x1") + t1 * F.col("_dx")
-        ay = F.col("y1") + t0 * F.col("_dy")
-        by = F.col("y1") + t1 * F.col("_dy")
-        ci_lo = F.floor((F.least(ax, bx) - pad) / csl).cast("long")
-        ci_hi = F.floor((F.greatest(ax, bx) + pad) / csl).cast("long")
-        cj_lo = F.floor((F.least(ay, by) - pad) / csl).cast("long")
-        cj_hi = F.floor((F.greatest(ay, by) + pad) / csl).cast("long")
-        return F.flatten(
-            F.transform(
-                F.sequence(ci_lo, ci_hi),
-                lambda ci: F.transform(
-                    F.sequence(cj_lo, cj_hi),
-                    lambda cj: ci * F.lit(1 << 26) + cj,
-                ),
-            )
-        )
-
-    cells = F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0).cast("long"), F.col("_n") - 1),
-                run_cells,
-            )
-        )
-    )
-    return segments.select(
-        *seg_cols,
-        dxs.alias("_dx"),
-        dys.alias("_dy"),
-        nsub.alias("_n"),
-    ).select(*seg_cols, F.explode(cells).alias("_cell"))
-
-
-def snap_points(
-    points: DataFrame,
-    segments: DataFrame,
-    max_dist: float,
-    cell_size: float | None = None,
-    point_id_col: str = "point_id",
-    x_col: str = "x",
-    y_col: str = "y",
-    line_id_col: str = "line_id",
-) -> DataFrame:
-    """Map matching: snap every point to its nearest polyline segment
-    within ``max_dist`` (planar), emitting one row per matched point —
-    ``(point_id, line_id, seg_idx, snap_x, snap_y, snap_dist)`` with
-    the snapped coordinate (closest point ON the segment) and distance
-    rounded to 6 decimals. Unmatched points are simply absent (the
-    caller left-antis if it wants the off-network lane). Ties break
-    deterministically by (distance, line_id, seg_idx).
-
-    Scale shape — ZERO Python in the hot path:
-
-    * candidates: segment cell covers come from
-      :func:`_segment_cell_cover` — LINEAR in segment length (a
-      dominant-axis sub-split, not a whole-bbox cross product that
-      goes quadratic on long diagonals, deduped map-side so each
-      (segment, cell) is emitted once); points map to their own
-      cell; candidate pairs are one shuffle hash equi-join on the
-      packed cell key, unique per (point, segment) by construction.
-      Both sides are arithmetic projections — whole-stage codegen
-      end to end (the cover's array HOFs are JVM expressions).
-    * refine: point-to-segment distance is scalar math
-      (t = clamp(dot/len², 0, 1) then the hypotenuse), again codegen —
-      no UDF, no geometry bytes through the join.
-    * select: one ``row_number`` window per point over
-      (dist, line_id, seg_idx) — the same point-keyed shuffle any
-      per-point top-1 needs.
-
-    Hot cells (a dense urban network) concentrate candidates exactly
-    like the PIP join's Tokyo skew; the same data-driven salting
-    applies if a profile shows it, and AQE skew-join is the backstop.
-    ``cell_size`` defaults to ``max_dist`` — at 100 TB tune it to the
-    network's segment length so the explode factor stays O(1) per
-    segment.
-    """
-    from pyspark.sql import Window
-
-    if max_dist <= 0:
-        raise ValueError("max_dist must be positive")
-    cs = float(cell_size if cell_size is not None else max_dist)
-    if cs <= 0:
-        raise ValueError("cell_size must be positive")
-
-    px, py = F.col(x_col), F.col(y_col)
-    pts = points.select(
-        F.col(point_id_col),
-        px.alias("_px"),
-        py.alias("_py"),
-        (
-            F.floor(px / cs).cast("long") * F.lit(1 << 26)
-            + F.floor(py / cs).cast("long")
-        ).alias("_cell"),
-    )
-
-    d = F.lit(float(max_dist))
-    segs = _segment_cell_cover(
-        segments,
-        [line_id_col, "seg_idx", "x1", "y1", "x2", "y2"],
-        max_dist,
-        cs,
-    )
-
-    cand = pts.join(segs, "_cell")
-    dx = F.col("x2") - F.col("x1")
-    dy = F.col("y2") - F.col("y1")
-    len2 = dx * dx + dy * dy
-    t_raw = (
-        (F.col("_px") - F.col("x1")) * dx
-        + (F.col("_py") - F.col("y1")) * dy
-    )
-    t = F.when(len2 == 0, F.lit(0.0)).otherwise(
-        F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw / len2))
-    )
-    sx = F.col("x1") + t * dx
-    sy = F.col("y1") + t * dy
-    ddx = F.col("_px") - sx
-    ddy = F.col("_py") - sy
-    refined = (
-        cand.withColumn("_sx", sx)
-        .withColumn("_sy", sy)
-        .withColumn("_dist", F.sqrt(ddx * ddx + ddy * ddy))
-        .filter(F.col("_dist") <= d)
-    )
-    w = Window.partitionBy(point_id_col).orderBy(
-        "_dist", line_id_col, "seg_idx"
-    )
-    return (
-        refined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            point_id_col,
-            line_id_col,
-            "seg_idx",
-            F.round("_sx", 6).alias("snap_x"),
-            F.round("_sy", 6).alias("snap_y"),
-            F.round("_dist", 6).alias("snap_dist"),
-        )
-    )
-
-
-_EARTH_RADIUS_KM = 6371.0088  # IUGG mean Earth radius
-_KM_PER_DEG = 111.19492664455873  # pi/180 * _EARTH_RADIUS_KM
-
-
-def haversine_km(lon1, lat1, lon2, lat2):
-    """Great-circle distance in km between two WGS84 (lon, lat)
-    pairs, as a pure Catalyst column expression — sin/cos/asin inside
-    whole-stage codegen, no UDF.
-
-    Every other distance in the engine is planar degrees (the right
-    parity contract for the reference's tile/refine outputs, which
-    are degree-space); this is the geodesic lane for metric-radius
-    questions ("images within 5 km of a station"), where degrees
-    lie: at 35°N one longitude degree is ~91 km vs ~111 km per
-    latitude degree. sqrt(a) is clamped to 1 against float drift on
-    near-antipodal pairs (asin(>1) would be NaN).
-    """
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    dlat = (rlat2 - rlat1) / F.lit(2.0)
-    dlon = (F.radians(lon2) - F.radians(lon1)) / F.lit(2.0)
-    a = (
-        F.sin(dlat) * F.sin(dlat)
-        + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon) * F.sin(dlon)
-    )
-    # NULL/NaN-preserving clamp: least(NULL, 1.0) would be 1.0
-    # (Spark's least ignores NULLs) and NaN > 1.0 is TRUE under
-    # Spark's NaN ordering — either would silently turn a missing
-    # input (e.g. the first lag row of a trajectory) into a
-    # 20015-km step instead of propagating.
-    s = F.sqrt(a)
-    return F.lit(2.0 * _EARTH_RADIUS_KM) * F.asin(
-        F.when((s > F.lit(1.0)) & ~F.isnan(s), F.lit(1.0)).otherwise(s)
-    )
-
-
-def trajectory_stats(
-    pings: DataFrame,
-    min_pings: int = 2,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    x_col: str = "lon",
-    y_col: str = "lat",
-) -> DataFrame:
-    """Per-user trajectory metrics over raw pings — the geodesic
-    companion to :func:`stay_points` / :func:`od_matrix`: total
-    great-circle distance travelled, longest single step, wall
-    duration, and average speed. Emits ``(user, n_pings, total_km,
-    max_step_km, duration_s, avg_kmh)``; users with fewer than
-    ``min_pings`` rows drop; ``avg_kmh`` is NULL on zero duration
-    (all pings in the same microsecond), ``max_step_km`` NULL for a
-    single-ping user (only reachable with ``min_pings=1``).
-
-    ONE user-key shuffle: the lag window and the per-user aggregate
-    share the hash partitioning, so Catalyst plans a single Exchange
-    (plan-pinned in tests). Step distances are :func:`haversine_km`
-    — codegen trig, zero Python. Ties on ``ts`` within a user are
-    broken by (x, y) so the step sequence is engine-portable.
-    """
-    from pyspark.sql import Window
-
-    if min_pings < 1:
-        raise ValueError("min_pings must be >= 1")
-    w = Window.partitionBy(user_col).orderBy(ts_col, x_col, y_col)
-    step = haversine_km(
-        F.lag(x_col).over(w),
-        F.lag(y_col).over(w),
-        F.col(x_col),
-        F.col(y_col),
-    )
-    stepped = pings.select(
-        user_col,
-        # cast NTZ -> timestamp first (session TZ UTC in tests/driver);
-        # only the max-min DIFFERENCE is used, so the zone shift cancels
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_us"),
-        step.alias("_step"),
-    )
-    agg = stepped.groupBy(user_col).agg(
-        F.count(F.lit(1)).alias("n_pings"),
-        F.coalesce(F.sum("_step"), F.lit(0.0)).alias("total_km"),
-        F.max("_step").alias("max_step_km"),
-        ((F.max("_us") - F.min("_us")) / F.lit(1e6)).alias("duration_s"),
-    )
-    return agg.filter(F.col("n_pings") >= min_pings).select(
-        user_col,
-        "n_pings",
-        "total_km",
-        "max_step_km",
-        "duration_s",
-        F.when(
-            F.col("duration_s") > 0,
-            F.col("total_km") / (F.col("duration_s") / F.lit(3600.0)),
-        ).alias("avg_kmh"),
-    )
-
-
-def dwithin_join_geo(
-    left: DataFrame,
-    right: DataFrame,
-    radius_km: float,
-    left_id_col: str = "image_id",
-    right_id_col: str = "poi_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    cell_deg: float | None = None,
-) -> DataFrame:
-    """Metric-radius point × point join for TWO DISTRIBUTED sides:
-    every (left, right) pair within ``radius_km`` GREAT-CIRCLE km,
-    emitting ``(left_id, right_id, dist_km)``. The planar
-    :func:`dwithin_join` family answers degree-space questions; this
-    is the "images within 5 km of any station" shape where a degree
-    radius over-matches N-S and under-matches E-W (cos-latitude
-    anisotropy) — at 100 TB that asymmetry is billions of wrong
-    candidate pairs, so the prefilter itself must be
-    latitude-aware.
-
-    Plan shape — ZERO Python anywhere (plan-pinned in tests):
-
-    1. right side maps to ONE grid cell: ``c = cell_deg or
-       radius_km/111.195`` degrees, snapped to ``360/n`` so the
-       longitude ring wraps exactly; the (ci, cj) pair packs into
-       one long key (a codegen projection).
-    2. left side explodes to its candidate cell window: latitude
-       rows are the fixed ``±radius/111.195`` degree band, but the
-       longitude span is PER-ROW — ``Δλ = 2·asin(sin(r/2R)/cos(φm))``
-       with ``φm = |lat| + Δφ``, the tight spherical bound — so a
-       Tokyo row probes ~3 cells while an equator row probes fewer,
-       and polar rows degrade to a correct (wide) full ring instead
-       of a wrong narrow one. ``array_distinct`` caps the ring at n
-       cells. All of it is ``sequence``/``transform``/``explode``
-       codegen arithmetic.
-    3. candidates: ONE shuffle hash equi-join on the packed key (a
-       right point lives in exactly one cell and the probe window is
-       distinct, so each pair appears at most once — no dedup
-       shuffle; AQE skew-join backstops hot metro cells).
-    4. exact refine: ``haversine_km <= radius_km`` — codegen trig.
-
-    Longitude wrap at ±180° is handled (pmod n on both sides, cell
-    width snapped so a 360° shift is exactly n cells); latitudes
-    must be in [-90, 90]. Explode factor at the default cell size is
-    ~3×3 per left row at mid-latitudes — tune ``cell_deg`` upward if
-    the right side is sparse relative to the radius.
-    """
-    import math
-
-    if radius_km <= 0:
-        raise ValueError("radius_km must be positive")
-    if cell_deg is not None and cell_deg <= 0:
-        raise ValueError("cell_deg must be positive")
-    c_req = float(cell_deg if cell_deg is not None else
-                  radius_km / _KM_PER_DEG)
-    n = max(4, int(math.ceil(360.0 / c_req)))
-    c = 360.0 / n  # snapped: a 360° lon shift is exactly n cells
-    dlat_deg = radius_km / _KM_PER_DEG
-    sin_half = math.sin(min(radius_km / (2.0 * _EARTH_RADIUS_KM),
-                            math.pi / 2.0))
-
-    def ci_raw(lon):
-        return F.floor((lon + F.lit(180.0)) / F.lit(c)).cast("long")
-
-    def cj_raw(lat):
-        return F.floor((lat + F.lit(90.0)) / F.lit(c)).cast("long")
-
-    def key(ci, cj):
-        return (cj * F.lit(n) + ci).cast("long")
-
-    r = right.select(
-        F.col(right_id_col).alias("_rid"),
-        F.col(lon_col).alias("_rlon"),
-        F.col(lat_col).alias("_rlat"),
-        key(
-            F.pmod(ci_raw(F.col(lon_col)), F.lit(n)),
-            cj_raw(F.col(lat_col)),
-        ).alias("_cell"),
-    )
-
-    lat = F.col(lat_col)
-    lon = F.col(lon_col)
-    phim = F.radians(
-        F.least(F.abs(lat) + F.lit(dlat_deg), F.lit(90.0))
-    )
-    # cos(phim) -> 0 near the pole gives ratio >= 1 (double inf is
-    # fine) -> full 180° ring, which array_distinct caps at n cells.
-    ratio = F.lit(sin_half) / F.cos(phim)
-    dlon_deg = F.when(ratio >= 1.0, F.lit(180.0)).otherwise(
-        F.degrees(F.lit(2.0) * F.asin(ratio))
-    )
-    ci_lo = ci_raw(lon - dlon_deg)
-    ci_hi = ci_raw(lon + dlon_deg)
-    cj_lo = F.greatest(cj_raw(lat - F.lit(dlat_deg)), F.lit(0).cast("long"))
-    cj_hi = F.least(
-        cj_raw(lat + F.lit(dlat_deg)),
-        F.lit(int(math.floor(180.0 / c))).cast("long"),
-    )
-    cells = F.flatten(
-        F.transform(
-            F.sequence(cj_lo, cj_hi),
-            lambda cj: F.array_distinct(
-                F.transform(
-                    F.sequence(ci_lo, ci_hi),
-                    lambda ci: key(F.pmod(ci, F.lit(n)), cj),
-                )
-            ),
-        )
-    )
-    lf = left.select(
-        F.col(left_id_col).alias("_lid"),
-        F.col(lon_col).alias("_llon"),
-        F.col(lat_col).alias("_llat"),
-        F.explode(cells).alias("_cell"),
-    )
-    dist = haversine_km(
-        F.col("_llon"), F.col("_llat"), F.col("_rlon"), F.col("_rlat")
-    )
-    return (
-        lf.join(r, "_cell")
-        .withColumn("_d", dist)
-        .filter(F.col("_d") <= F.lit(float(radius_km)))
-        .select(
-            F.col("_lid").alias(left_id_col),
-            F.col("_rid").alias(right_id_col),
-            F.col("_d").alias("dist_km"),
-        )
-    )
-
-
-def _viterbi_kernel(
-    sigma2: float,
-    beta: float,
-    max_step_gap,
-    traj_col: str,
-    out_cols: list,
-):
-    """Viterbi DP for :func:`hmm_map_match` over a BUCKET of
-    trajectories (each kernel call decodes every trajectory whose
-    hash landed in its bucket — one sort + boundary scan instead of
-    one applyInPandas invocation per trajectory, which at 10^12 pings
-    would pay the per-group Arrow/pandas setup ~5×10^10 times).
-
-    Candidates arrive pre-sorted by (traj, step, line_id, seg_idx);
-    numpy ``argmin`` takes the FIRST minimum, so tie-breaks are
-    exactly ``ORDER BY cost, line_id, seg_idx`` — the same
-    deterministic order the SQL oracle uses. All arithmetic is
-    written in the same shape as the oracle (explicit sqrt of a sum
-    of squares, left-to-right additions) so both engines see
-    bit-identical doubles.
-
-    The DP is TENSOR-shaped, vectorized ACROSS trajectories: a
-    per-trajectory step loop would pay Python/numpy dispatch once per
-    (trajectory, step) — millions of tiny |prev|×|cur| blocks per
-    bucket, which profiling showed dominating the whole operator.
-    Instead candidates pad to the bucket's max span width K (+inf
-    emission on padding, so argmin semantics are untouched) and ONE
-    step loop of length max-track-length advances every chain in the
-    bucket simultaneously on (runs, K, K) blocks. Elementwise
-    arithmetic is unchanged (same sqrt/abs/add shapes), so results
-    stay bit-identical to the scalar form the oracle replays; np
-    ``argmin`` still takes the first minimum, so tie-breaks remain
-    ``ORDER BY cost, line_id, seg_idx``. Runs are processed in
-    ceil-log2 (length, width) COHORTS so padding waste is bounded at
-    2× per axis — one long track in a bucket of short ones can't
-    inflate everyone's (runs, maxT, K) tensor — and absolute memory
-    is bounded by the cell prefilter (K) and caller sessionization
-    (maxT).
-    """
-
-    def match_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                {
-                    traj_col: pdf[traj_col],
-                    "step": pdf["step"],
-                    "line_id": pdf["line_id"],
-                    "seg_idx": pdf["seg_idx"],
-                    "snap_x": pd.Series(dtype="float64"),
-                    "snap_y": pd.Series(dtype="float64"),
-                    "snap_dist": pd.Series(dtype="float64"),
-                }
-            )[out_cols]
-        pdf = pdf.sort_values(
-            [traj_col, "step", "line_id", "seg_idx"], kind="mergesort"
-        ).reset_index(drop=True)
-        tvals = pdf[traj_col].to_numpy()
-        steps_all = pdf["step"].to_numpy()
-        sx = pdf["_sx"].to_numpy()
-        sy = pdf["_sy"].to_numpy()
-        px = pdf["_px"].to_numpy()
-        py = pdf["_py"].to_numpy()
-        emis = pdf["_d2"].to_numpy() / sigma2
-        # one span per (traj, step): candidate rows for that ping
-        new_span = np.r_[
-            True,
-            (tvals[1:] != tvals[:-1]) | (steps_all[1:] != steps_all[:-1]),
-        ]
-        span_lo = np.flatnonzero(new_span)
-        span_hi = np.append(span_lo[1:], len(tvals))
-        span_traj = tvals[span_lo]
-        span_step = steps_all[span_lo]
-        # a run = one Viterbi chain: break at trajectory changes and
-        # (when max_step_gap is set) at step-numbering holes larger
-        # than the gap — off-network excursions shouldn't anchor
-        # route continuity across the hole
-        brk = span_traj[1:] != span_traj[:-1]
-        if max_step_gap is not None:
-            brk = brk | (span_step[1:] - span_step[:-1] > max_step_gap)
-        run_lo = np.flatnonzero(np.r_[True, brk])
-        run_hi = np.append(run_lo[1:], len(span_lo))
-
-        lens = run_hi - run_lo  # chain length (spans) per run
-        widths = span_hi - span_lo  # candidates per span
-        # per-run max candidate width (runs are contiguous span
-        # ranges, so reduceat gives it in one pass)
-        run_kmax = np.maximum.reduceat(widths, run_lo)
-        # COHORTS by length power-of-two: padding a (runs, maxT, K)
-        # tensor to the bucket-global maxima would let one 10k-step
-        # track inflate every 20-step track's padding ~500×; within a
-        # ceil-log2 cohort the waste is bounded at 2× on each axis
-        cohort_key = (
-            np.ceil(np.log2(np.maximum(lens, 2))).astype(np.int64) * 64
-            + np.ceil(np.log2(np.maximum(run_kmax, 2))).astype(np.int64)
-        )
-        picked_parts = []
-        for key in np.unique(cohort_key):
-            rs = np.flatnonzero(cohort_key == key)
-            lens_c = lens[rs]
-            max_t = int(lens_c.max())
-            kmax = int(run_kmax[rs].max())
-            # span id per (run, t) within the cohort
-            t_idx = np.arange(max_t)
-            live = t_idx[None, :] < lens_c[:, None]  # (R, T)
-            sid = np.where(live, run_lo[rs][:, None] + t_idx[None, :], 0)
-            lo_rt = span_lo[sid]  # (R, T) first candidate row per span
-            c_rt = np.where(live, widths[sid], 0)  # candidates per span
-            # padded candidate row per (run, t, k); padding -> row 0
-            k_idx = np.arange(kmax)
-            kvalid = k_idx[None, None, :] < c_rt[:, :, None]  # (R, T, K)
-            ridx = np.where(
-                kvalid, lo_rt[:, :, None] + k_idx[None, None, :], 0
-            )
-            E = np.where(kvalid, emis[ridx], np.inf)  # padded emission
-            SX = sx[ridx]
-            SY = sy[ridx]
-            # ping coords are span-level (same across a span's rows)
-            PX = px[lo_rt]
-            PY = py[lo_rt]
-
-            best = E[:, 0, :].copy()  # (R, K); padded slots +inf
-            n_c = len(rs)
-            backptr = np.zeros((n_c, max_t, kmax), dtype=np.int64)
-            for t in range(1, max_t):
-                act = np.flatnonzero(live[:, t])
-                if len(act) == 0:
-                    break
-                gx = PX[act, t] - PX[act, t - 1]
-                gy = PY[act, t] - PY[act, t - 1]
-                gap = np.sqrt(gx * gx + gy * gy)  # (A,)
-                dxm = SX[act, t, None, :] - SX[act, t - 1, :, None]
-                dym = SY[act, t, None, :] - SY[act, t - 1, :, None]
-                route = np.sqrt(dxm * dxm + dym * dym)  # (A, Kp, Kc)
-                tot = best[act, :, None] + np.abs(
-                    route - gap[:, None, None]
-                ) / beta
-                bp = np.argmin(tot, axis=1)  # (A, Kc) first-min tie order
-                backptr[act, t] = bp
-                best[act] = (
-                    np.take_along_axis(tot, bp[:, None, :], axis=1)[:, 0, :]
-                    + E[act, t]
-                )
-            # backtrack, vectorized across runs: j tracks the winning
-            # candidate slot per run from its LAST step down to 0
-            # (best stopped updating when each run's chain ended, so
-            # argmin on the final `best` is each run's own terminal
-            # argmin; padded slots are +inf and never win)
-            j = np.argmin(best, axis=1)  # (R,)
-            picked_rows = np.empty((n_c, max_t), dtype=np.int64)
-            for t in range(max_t - 1, 0, -1):
-                act = live[:, t]
-                picked_rows[act, t] = lo_rt[act, t] + j[act]
-                j = np.where(act, backptr[np.arange(n_c), t, j], j)
-            picked_rows[:, 0] = lo_rt[:, 0] + j
-            picked_parts.append(picked_rows[live])
-        picked = np.concatenate(picked_parts)
-        sel = pdf.iloc[np.sort(picked)]
-        return pd.DataFrame(
-            {
-                traj_col: sel[traj_col].to_numpy(),
-                "step": sel["step"].to_numpy(),
-                "line_id": sel["line_id"].to_numpy(),
-                "seg_idx": sel["seg_idx"].to_numpy(),
-                "snap_x": np.round(sel["_sx"].to_numpy(), 6),
-                "snap_y": np.round(sel["_sy"].to_numpy(), 6),
-                "snap_dist": np.round(
-                    np.sqrt(sel["_d2"].to_numpy()), 6
-                ),
-            }
-        )[out_cols]
-
-    return match_bucket
-
-
-def hmm_map_match(
-    points: DataFrame,
-    segments: DataFrame,
-    max_dist: float,
-    sigma: float | None = None,
-    beta: float | None = None,
-    cell_size: float | None = None,
-    max_step_gap: int | None = None,
-    bucket_count: int | None = None,
-    traj_id_col: str = "traj_id",
-    step_col: str = "step",
-    x_col: str = "x",
-    y_col: str = "y",
-    line_id_col: str = "line_id",
-) -> DataFrame:
-    """HMM map matching (Newson & Krumm 2009 shape): assign every GPS
-    ping of a trajectory to the road segment a Viterbi decode picks —
-    the segment sequence that maximizes emission (closeness to the
-    segment) AND transition (route continuity) likelihood jointly —
-    instead of :func:`snap_points`'s independent nearest-segment
-    choice, which zig-zags between a main road and its parallel side
-    street on noisy pings. Emission cost is ``d²/σ²`` (snap distance
-    to the candidate), transition cost ``|route − gap|/β`` where
-    ``route`` is the straight-line distance between consecutive snap
-    positions and ``gap`` the distance between the raw pings (a
-    routing-graph route distance slots into the same cost without
-    changing the plan). Emits one row per matched ping —
-    ``(traj_id, step, line_id, seg_idx, snap_x, snap_y, snap_dist)``
-    — pings with no segment within ``max_dist`` are absent, and a
-    step-numbering gap larger than ``max_step_gap`` (when set)
-    breaks the chain so an off-network excursion can't anchor
-    continuity across the hole. (traj, step) pairs must be unique.
-
-    Scale shape — candidates never leave Catalyst, DP touches only
-    candidate rows:
-
-    * candidate pairs reuse :func:`snap_points`'s machinery — the
-      LINEAR dominant-axis segment cell cover joined to ping cells on
-      a packed int64 key, then the codegen projection/clamp/distance
-      refine — ONE shuffle, zero Python, the 10^12-ping side is one
-      map pass before its shuffle.
-    * the Viterbi DP runs via ``applyInPandas`` over trajectory-HASH
-      BUCKETS (``bucket_count``, default 32 × shuffle width) — ONE
-      bucket-keyed shuffle of candidate rows only (7 numeric columns,
-      no geometry bytes), with an explicit ``repartition`` on the
-      bucket key so AQE's size-based coalescing can't fold the small-
-      byte DP exchange into a handful of tasks and serialize the
-      Python stage. Each kernel call decodes every whole trajectory
-      in its bucket with one sort + vectorized span scan, so the
-      per-group Arrow/pandas setup amortizes over thousands of
-      trajectories instead of being paid once per GPS track. Per-step
-      work is a vectorized |prev|×|cur| numpy block over contiguous
-      slices; candidate counts per ping are bounded by the cell
-      prefilter, and trajectory length is bounded by the caller's
-      sessionization (split by day/vehicle-shift at ingest — the same
-      contract every per-key stateful op in this engine documents).
-      Hot cells (dense urban networks) salt exactly like the PIP
-      join's Tokyo skew if a profile shows it.
-
-    Default ``sigma = max_dist / 2``, ``beta = max_dist / 5``.
-    Tie-breaks are deterministic by (cost, line_id, seg_idx) at every
-    argmin — the oracle replays the identical DP in SQL.
-    """
-    if max_dist <= 0:
-        raise ValueError("max_dist must be positive")
-    sg = float(sigma if sigma is not None else max_dist / 2.0)
-    bt = float(beta if beta is not None else max_dist / 5.0)
-    if sg <= 0 or bt <= 0:
-        raise ValueError("sigma and beta must be positive")
-    cs = float(cell_size if cell_size is not None else max_dist)
-    if cs <= 0:
-        raise ValueError("cell_size must be positive")
-
-    ptypes = dict(points.dtypes)
-    px, py = F.col(x_col), F.col(y_col)
-    pts = points.select(
-        F.col(traj_id_col),
-        F.col(step_col).alias("step"),
-        px.alias("_px"),
-        py.alias("_py"),
-        (
-            F.floor(px / cs).cast("long") * F.lit(1 << 26)
-            + F.floor(py / cs).cast("long")
-        ).alias("_cell"),
-    )
-    segs = _segment_cell_cover(
-        segments,
-        [line_id_col, "seg_idx", "x1", "y1", "x2", "y2"],
-        max_dist,
-        cs,
-    )
-
-    cand = pts.join(segs, "_cell")
-    dx = F.col("x2") - F.col("x1")
-    dy = F.col("y2") - F.col("y1")
-    len2 = dx * dx + dy * dy
-    t_raw = (
-        (F.col("_px") - F.col("x1")) * dx
-        + (F.col("_py") - F.col("y1")) * dy
-    )
-    t = F.when(len2 == 0, F.lit(0.0)).otherwise(
-        F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw / len2))
-    )
-    sx = F.col("x1") + t * dx
-    sy = F.col("y1") + t * dy
-    ddx = F.col("_px") - sx
-    ddy = F.col("_py") - sy
-    d2 = ddx * ddx + ddy * ddy
-    refined = (
-        cand.withColumn("_sx", sx)
-        .withColumn("_sy", sy)
-        .withColumn("_d2", d2)
-        .filter(F.sqrt(F.col("_d2")) <= F.lit(float(max_dist)))
-        # (ping, segment) candidate pairs are unique by construction:
-        # the ping joins on its single cell and the cover emits each
-        # (segment, cell) once (array_distinct inside
-        # _segment_cell_cover) — no dedup shuffle needed before the DP
-        .select(
-            F.col(traj_id_col),
-            "step",
-            F.col(line_id_col).alias("line_id"),
-            "seg_idx",
-            "_px",
-            "_py",
-            "_sx",
-            "_sy",
-            "_d2",
-        )
-    )
-    out_cols = [
-        traj_id_col,
-        "step",
-        "line_id",
-        "seg_idx",
-        "snap_x",
-        "snap_y",
-        "snap_dist",
-    ]
-    kernel = _viterbi_kernel(sg * sg, bt, max_step_gap, traj_id_col, out_cols)
-    ltype = dict(segments.dtypes)[line_id_col]
-    schema = (
-        f"{traj_id_col} {ptypes[traj_id_col]}, "
-        f"step {ptypes[step_col]}, line_id {ltype}, seg_idx int, "
-        "snap_x double, snap_y double, snap_dist double"
-    )
-    # group by a trajectory-hash BUCKET, not the trajectory: one
-    # kernel call decodes ~(n_traj / n_buckets) whole trajectories
-    # (each lands entirely in its bucket), amortizing the per-group
-    # Arrow/pandas setup that a per-trajectory groupBy would pay once
-    # per GPS track. Bucket count scales with the session's shuffle
-    # width so a bucket's candidate rows stay a fraction of one
-    # shuffle partition.
-    sess = points.sparkSession
-    shuffle_parts = int(
-        sess.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    if bucket_count is None:
-        bucket_count = 32 * shuffle_parts
-    if bucket_count < 1:
-        raise ValueError("bucket_count must be positive")
-    bucketed = refined.withColumn(
-        "_b", F.pmod(F.xxhash64(F.col(traj_id_col)), F.lit(bucket_count))
-    )
-    # pin the DP stage's width with an EXPLICIT repartition on the
-    # bucket key: the candidate rows are 7 numeric columns, small
-    # enough in bytes that AQE's size-based coalescing would fold the
-    # groupBy exchange into a handful of tasks and serialize the
-    # Python DP (the member-ingest lane measured exactly this trap).
-    # HashPartitioning(_b, N) satisfies applyInPandas's clustered-
-    # distribution requirement, so no second exchange is added, and
-    # user-specified repartition counts are AQE-immune.
-    n_parts = max(
-        sess.sparkContext.defaultParallelism * 2, shuffle_parts
-    )
-    bucketed = bucketed.repartition(n_parts, "_b")
-    return bucketed.groupBy("_b").applyInPandas(kernel, schema=schema)
-
-
-def trajectory_hausdorff_join(
-    points: DataFrame,
-    max_dist: float,
-    cell_size: float | None = None,
-    traj_id_col: str = "traj_id",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """Trajectory-similarity self-join: all unordered trajectory
-    pairs whose discrete Hausdorff distance is at most ``max_dist``,
-    with the exact distance. ``H(A,B) = max(h(A,B), h(B,A))`` where
-    ``h(A,B) = max over a in A of min over b in B of euclid(a, b)``
-    — the classic "every point of each track is near the other
-    track" similarity used for route dedup and co-travel detection.
-    Emits ``(traj_a, traj_b, hausdorff)`` with ``traj_a < traj_b``.
-
-    Entirely Catalyst — joins and aggregations, zero Python:
-
-    * candidate point pairs come from a grid-cell equi-join: one side
-      keyed by its own cell, the other expanded to the
-      ``ceil(max_dist / cell_size)``-ring neighborhood, so every
-      cross-trajectory point pair within ``max_dist`` appears (in
-      both directions) and nothing like an all-pairs product is ever
-      formed. The exact distance filter runs inside the join's
-      whole-stage codegen.
-    * PRUNING IS EXACT: if ``H(A,B) <= max_dist`` then every point of
-      A has its true nearest B-point within ``max_dist`` — inside
-      the cell neighborhood — so per-point minima over captured
-      pairs ARE the true minima for every surviving pair. A
-      trajectory point with NO captured partner proves
-      ``h > max_dist``, so the pair is dropped by the coverage test
-      (per-direction captured-point count vs the trajectory's point
-      count) before any value comparison.
-    * aggregation ladder: per (ordered pair, source point) min →
-      per unordered pair, per-direction conditional max + coverage
-      count → filter. Three shuffles total on 8-byte-ish keys; the
-      per-trajectory point-count side joins in by trajectory id
-      (broadcast when small, shuffle otherwise).
-
-    Dense-area skew concentrates candidate pairs in hot cells — the
-    same data-driven hot-cell salting as the PIP join applies, and
-    bounded track length (caller sessionization, same contract as
-    :func:`hmm_map_match`) bounds per-pair work.
-    """
-    if max_dist <= 0:
-        raise ValueError("max_dist must be positive")
-    cs = float(cell_size if cell_size is not None else max_dist)
-    if cs <= 0:
-        raise ValueError("cell_size must be positive")
-    reach = int(np.ceil(float(max_dist) / cs))
-
-    pts = points.select(
-        F.col(traj_id_col).alias("_t"),
-        F.col(x_col).cast("double").alias("_x"),
-        F.col(y_col).cast("double").alias("_y"),
-        F.floor(F.col(x_col) / cs).cast("long").alias("_ci"),
-        F.floor(F.col(y_col) / cs).cast("long").alias("_cj"),
-    )
-    # distinct coordinates per trajectory (exact-coverage
-    # denominator — duplicate pings at the same spot collapse in the
-    # per-point min below, and min/max over a multiset equals the
-    # set's, so coverage counts distinct positions on both sides)
-    counts = pts.groupBy("_t").agg(
-        F.count_distinct(F.col("_x"), F.col("_y")).alias("_n")
-    )
-
-    plain = pts.select(
-        F.col("_t").alias("_tb"),
-        F.col("_x").alias("_bx"),
-        F.col("_y").alias("_by"),
-        (F.col("_ci") * F.lit(1 << 26) + F.col("_cj")).alias("_cell"),
-    )
-    off = F.explode(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(-reach), F.lit(reach)),
-                lambda di: F.transform(
-                    F.sequence(F.lit(-reach), F.lit(reach)),
-                    lambda dj: di * F.lit(1 << 26) + dj,
-                ),
-            )
-        )
-    ).alias("_off")
-    expanded = pts.select(
-        F.col("_t").alias("_ta"),
-        F.col("_x").alias("_ax"),
-        F.col("_y").alias("_ay"),
-        (F.col("_ci") * F.lit(1 << 26) + F.col("_cj")).alias("_c0"),
-        off,
-    ).select(
-        "_ta",
-        "_ax",
-        "_ay",
-        (F.col("_c0") + F.col("_off")).alias("_cell"),
-    )
-    dx = F.col("_ax") - F.col("_bx")
-    dy = F.col("_ay") - F.col("_by")
-    dist = F.sqrt(dx * dx + dy * dy)
-    pairs = (
-        expanded.join(plain, "_cell")
-        .filter(F.col("_ta") != F.col("_tb"))
-        .select("_ta", "_tb", "_ax", "_ay", dist.alias("_d"))
-        .filter(F.col("_d") <= F.lit(float(max_dist)))
-    )
-    # per (ordered pair, source point): true nearest-partner distance
-    dmin = pairs.groupBy("_ta", "_tb", "_ax", "_ay").agg(
-        F.min("_d").alias("_dmin")
-    )
-    lk = F.least(F.col("_ta"), F.col("_tb"))
-    gk = F.greatest(F.col("_ta"), F.col("_tb"))
-    fwd = F.col("_ta") < F.col("_tb")
-    agg = (
-        dmin.select(
-            lk.alias("_lo"),
-            gk.alias("_hi"),
-            fwd.alias("_fwd"),
-            "_ta",
-            "_dmin",
-        )
-        .groupBy("_lo", "_hi")
-        .agg(
-            F.max(F.when(F.col("_fwd"), F.col("_dmin"))).alias("_h_ab"),
-            F.max(F.when(~F.col("_fwd"), F.col("_dmin"))).alias("_h_ba"),
-            F.count(F.when(F.col("_fwd"), F.lit(1))).alias("_cov_a"),
-            F.count(F.when(~F.col("_fwd"), F.lit(1))).alias("_cov_b"),
-        )
-    )
-    out = (
-        agg.join(counts.withColumnRenamed("_t", "_lo"), "_lo")
-        .withColumnRenamed("_n", "_na")
-        .join(counts.withColumnRenamed("_t", "_hi"), "_hi")
-        .withColumnRenamed("_n", "_nb")
-        .filter(
-            (F.col("_cov_a") == F.col("_na"))
-            & (F.col("_cov_b") == F.col("_nb"))
-        )
-        .select(
-            F.col("_lo").alias("traj_a"),
-            F.col("_hi").alias("traj_b"),
-            F.greatest(F.col("_h_ab"), F.col("_h_ba")).alias(
-                "hausdorff"
-            ),
-        )
-        .filter(F.col("hausdorff") <= F.lit(float(max_dist)))
-    )
-    return out
-
-
-def empirical_variogram(
-    points: DataFrame,
-    max_lag: float,
-    n_bins: int = 8,
-    id_col: str = "point_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    value_col: str = "value",
-    res: int | None = None,
-    sample_fraction: float | None = None,
-    seed: int = 0,
-) -> DataFrame:
-    """Empirical (semi)variogram — the Matheron 1962 estimator, the
-    standard first step of geostatistical interpolation (Cressie 1993,
-    public): over all unordered point pairs with distance <= ``max_lag``
-    (planar degrees), bin by distance into ``n_bins`` equal lags and
-    emit per bin
-
-        gamma(h) = avg((v_i - v_j)^2) / 2
-
-    plus the pair count and mean pair distance. Output:
-    (bin, n_pairs, avg_dist, gamma), rounded to 6 decimals (summation
-    order noise ~1e-15; same convention as ``idw_interpolate``).
-
-    Fully relational self-join, zero Python in the plan, same exactness
-    argument as ``idw_interpolate``: pick the finest grid whose cell
-    edge >= max_lag, explode ONE copy of the points into the 9-cell
-    Moore neighborhood, equi-join on the packed cell key against the
-    un-exploded copy, keep ``id_left < id_right``. A pair within
-    ``max_lag`` appears for EXACTLY ONE neighbor offset (the one that
-    shifts the right point's cell onto the left's), so no dedup shuffle
-    is needed; the d2 <= max_lag^2 refine runs in codegen.
-
-    Scale: pair counts grow with local density^2 — the classical
-    variogram answer is pair sampling. ``sample_fraction`` thins the
-    POINT table map-side (deterministic xxhash64 on the id, rerun
-    stable) before the join, which thins pairs by ~fraction^2 without
-    any extra pass; the estimator stays unbiased per bin. A dense-city
-    cell is an ordinary AQE skew-join case (the join key is the cell).
-    """
-    import math
-
-    if max_lag <= 0:
-        raise ValueError("max_lag must be positive")
-    if n_bins <= 0:
-        raise ValueError("n_bins must be positive")
-    if res is None:
-        res = int(math.floor(math.log2(360.0 / max_lag)))
-    res = max(0, min(res, 28))
-    size = 360.0 / (1 << res)
-    if size < max_lag:
-        raise ValueError(
-            f"grid res {res} has cell edge {size} < max_lag {max_lag}: "
-            "the 3x3 prune would miss in-range pairs"
-        )
-    if sample_fraction is not None:
-        if not (0.0 < sample_fraction <= 1.0):
-            raise ValueError("sample_fraction must be in (0, 1]")
-        keep = (
-            F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(1 << 20))
-            < F.lit(int(sample_fraction * (1 << 20)))
-        )
-        points = points.filter(keep)
-
-    def ij(lon, lat):
-        i = F.floor((lon + F.lit(180.0)) / F.lit(size)).cast("long")
-        j = F.floor((lat + F.lit(90.0)) / F.lit(size)).cast("long")
-        return i, j
-
-    li, lj = ij(F.col(lon_col), F.col(lat_col))
-    left = points.select(
-        F.col(id_col).alias("_lid"),
-        F.col(lon_col).alias("_llon"),
-        F.col(lat_col).alias("_llat"),
-        F.col(value_col).alias("_lv"),
-        (li * F.lit(1 << 31) + lj).alias("_cell"),
-    )
-    offsets = F.array(
-        *[F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-          for di in (-1, 0, 1) for dj in (-1, 0, 1)]
-    )
-    ri, rj = ij(F.col(lon_col), F.col(lat_col))
-    right = points.select(
-        F.col(id_col).alias("_rid"),
-        F.col(lon_col).alias("_rlon"),
-        F.col(lat_col).alias("_rlat"),
-        F.col(value_col).alias("_rv"),
-        ri.alias("_ri"),
-        rj.alias("_rj"),
-        F.explode(offsets).alias("_o"),
-    ).select(
-        "_rid",
-        "_rlon",
-        "_rlat",
-        "_rv",
-        (
-            (F.col("_ri") + F.col("_o.di")) * F.lit(1 << 31)
-            + (F.col("_rj") + F.col("_o.dj"))
-        ).alias("_cell"),
-    )
-    dx = F.col("_llon") - F.col("_rlon")
-    dy = F.col("_llat") - F.col("_rlat")
-    d2 = dx * dx + dy * dy
-    d = F.sqrt(d2)
-    width = float(max_lag) / int(n_bins)
-    dv = F.col("_lv") - F.col("_rv")
-    return (
-        left.join(right, "_cell")
-        .filter(
-            (F.col("_lid") < F.col("_rid"))
-            & (d2 <= F.lit(float(max_lag) * float(max_lag)))
-        )
-        .select(
-            F.least(
-                F.floor(d / F.lit(width)).cast("int"),
-                F.lit(int(n_bins) - 1),
-            ).alias("bin"),
-            d.alias("_d"),
-            (dv * dv).alias("_dv2"),
-        )
-        .groupBy("bin")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.round(F.avg("_d"), 6).alias("avg_dist"),
-            F.round(F.avg("_dv2") / F.lit(2.0), 6).alias("gamma"),
-        )
-    )
-
-
-def _variogram_gamma_np(
-    d: np.ndarray, model: str, nugget: float, psill: float, vrange: float
-) -> np.ndarray:
-    """Variogram model gamma(d) (Cressie 1993): 0 at d=0 exactly, the
-    nugget discontinuity appears for any d > 0."""
-    d = np.asarray(d, dtype=np.float64)
-    if model == "exponential":
-        g = nugget + psill * (1.0 - np.exp(-d / vrange))
-    elif model == "spherical":
-        h = np.minimum(d / vrange, 1.0)
-        g = nugget + psill * (1.5 * h - 0.5 * h * h * h)
-    elif model == "gaussian":
-        g = nugget + psill * (1.0 - np.exp(-(d * d) / (vrange * vrange)))
-    else:
-        raise ValueError(f"unknown variogram model {model!r}")
-    return np.where(d > 0.0, g, 0.0)
-
-
-def ordinary_krige(
-    targets: DataFrame,
-    stations: DataFrame,
-    radius: float,
-    k: int = 8,
-    model: str = "exponential",
-    nugget: float = 0.0,
-    psill: float = 1.0,
-    vrange: float = 1.0,
-    res: int | None = None,
-    target_id: str = "target_id",
-    station_id: str = "station_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    value_col: str = "value",
-) -> DataFrame:
-    """Ordinary kriging with a local moving neighborhood (Cressie 1993;
-    the textbook local-OK estimator every geostat package exposes):
-    each target is predicted from its ``k`` nearest stations within
-    ``radius`` by solving the (n+1)x(n+1) ordinary-kriging system
-
-        [Gamma 1; 1' 0] [w; mu] = [gamma_t; 1]
-
-    with the fitted variogram model (nugget/psill/vrange — fit them
-    from ``empirical_variogram`` upstream). Emits
-    (target_id, n_used, krige_value, krige_var), rounded to 6 decimals.
-
-    Physical plan, scale-first:
-
-    1. candidate pairs from the SAME exact 3x3 cell prune as
-       ``idw_interpolate`` (cell edge >= radius, so no in-range station
-       is missed) — the target side (the 10^12-row one) never explodes;
-    2. top-k nearest per target via one window keyed on the target id
-       (tie-broken on station id, so the neighbor SET is deterministic);
-    3. neighbors collapse to ONE row per target (``sort_array`` over a
-       struct keeps kernel input deterministic), so the Python boundary
-       moves k*(dim+1) doubles per target, never the station table;
-    4. an Arrow-batched kernel solves ALL same-size systems in one
-       stacked ``np.linalg.solve`` call — per-target Python never runs.
-       Singular stacks (duplicate station coordinates) fall back to
-       per-item least squares rather than failing the batch.
-
-    The n=1 degenerate system reduces to w=1, mu=gamma_1t (prediction =
-    the lone station's value, variance 2*gamma_1t) — kept, it's the
-    sparse-coverage audit lane; targets with NO station in radius drop
-    out, same contract as ``idw_interpolate``'s min_stations.
-    """
-    import math
-
-    if radius <= 0:
-        raise ValueError("radius must be positive")
-    if k <= 0:
-        raise ValueError("k must be positive")
-    if vrange <= 0:
-        raise ValueError("vrange must be positive")
-    if nugget < 0 or psill < 0 or nugget + psill <= 0:
-        raise ValueError("need nugget >= 0, psill >= 0, nugget+psill > 0")
-    _variogram_gamma_np(np.array([1.0]), model, nugget, psill, vrange)
-    if res is None:
-        res = int(math.floor(math.log2(360.0 / radius)))
-    res = max(0, min(res, 28))
-    size = 360.0 / (1 << res)
-    if size < radius:
-        raise ValueError(
-            f"grid res {res} has cell edge {size} < radius {radius}: "
-            "the 3x3 prune would miss in-range stations"
-        )
-
-    def ij(lon, lat):
-        i = F.floor((lon + F.lit(180.0)) / F.lit(size)).cast("long")
-        j = F.floor((lat + F.lit(90.0)) / F.lit(size)).cast("long")
-        return i, j
-
-    ti, tj = ij(F.col(lon_col), F.col(lat_col))
-    t = targets.select(
-        F.col(target_id),
-        F.col(lon_col).alias("_tlon"),
-        F.col(lat_col).alias("_tlat"),
-        (ti * F.lit(1 << 31) + tj).alias("_cell"),
-    )
-    offsets = F.array(
-        *[F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-          for di in (-1, 0, 1) for dj in (-1, 0, 1)]
-    )
-    si, sj = ij(F.col(lon_col), F.col(lat_col))
-    s = stations.select(
-        F.col(station_id).alias("_sid"),
-        F.col(lon_col).alias("_slon"),
-        F.col(lat_col).alias("_slat"),
-        F.col(value_col).cast("double").alias("_v"),
-        si.alias("_si"),
-        sj.alias("_sj"),
-        F.explode(offsets).alias("_o"),
-    ).select(
-        "_sid",
-        "_slon",
-        "_slat",
-        "_v",
-        (
-            (F.col("_si") + F.col("_o.di")) * F.lit(1 << 31)
-            + (F.col("_sj") + F.col("_o.dj"))
-        ).alias("_cell"),
-    )
-    dx = F.col("_tlon") - F.col("_slon")
-    dy = F.col("_tlat") - F.col("_slat")
-    d2 = dx * dx + dy * dy
-    from pyspark.sql.window import Window
-
-    cand = (
-        t.join(s, "_cell")
-        .filter(d2 <= F.lit(float(radius) * float(radius)))
-        .select(
-            target_id,
-            "_sid",
-            "_slon",
-            "_slat",
-            "_v",
-            d2.alias("_d2"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(target_id).orderBy("_d2", "_sid")
-            ),
-        )
-        .filter(F.col("_rn") <= F.lit(int(k)))
-    )
-    grouped = cand.groupBy(target_id).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("_d2").alias("d2"),
-                    F.col("_sid").cast("string").alias("sid"),
-                    F.col("_slon").alias("slon"),
-                    F.col("_slat").alias("slat"),
-                    F.col("_v").alias("v"),
-                )
-            )
-        ).alias("_nb")
-    )
-
-    mdl, ngt, psl, vrg = model, float(nugget), float(psill), float(vrange)
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            tids = pdf[target_id].to_numpy()
-            nbs = pdf["_nb"].tolist()
-            sizes = np.array([len(nb) for nb in nbs], dtype=np.int64)
-            out_id: list = []
-            out_n: list = []
-            out_val: list = []
-            out_var: list = []
-            for n in np.unique(sizes):
-                idx = np.nonzero(sizes == n)[0]
-                m = len(idx)
-                lon = np.empty((m, n))
-                lat = np.empty((m, n))
-                val = np.empty((m, n))
-                dt = np.empty((m, n))
-                for row, gi in enumerate(idx):
-                    nb = nbs[gi]
-                    get = (
-                        (lambda e, f: e[f])
-                        if isinstance(nb[0], dict)
-                        else (lambda e, f: getattr(e, f))
-                    )
-                    lon[row] = [get(e, "slon") for e in nb]
-                    lat[row] = [get(e, "slat") for e in nb]
-                    val[row] = [get(e, "v") for e in nb]
-                    dt[row] = np.sqrt([get(e, "d2") for e in nb])
-                dss = np.sqrt(
-                    (lon[:, :, None] - lon[:, None, :]) ** 2
-                    + (lat[:, :, None] - lat[:, None, :]) ** 2
-                )
-                A = np.zeros((m, n + 1, n + 1))
-                A[:, :n, :n] = _variogram_gamma_np(dss, mdl, ngt, psl, vrg)
-                A[:, n, :n] = 1.0
-                A[:, :n, n] = 1.0
-                b = np.empty((m, n + 1))
-                b[:, :n] = _variogram_gamma_np(dt, mdl, ngt, psl, vrg)
-                b[:, n] = 1.0
-                try:
-                    x = np.linalg.solve(A, b[:, :, None])[:, :, 0]
-                except np.linalg.LinAlgError:
-                    x = np.stack(
-                        [
-                            np.linalg.lstsq(A[i], b[i], rcond=None)[0]
-                            for i in range(m)
-                        ]
-                    )
-                w, mu = x[:, :n], x[:, n]
-                pred = (w * val).sum(axis=1)
-                var = (w * b[:, :n]).sum(axis=1) + mu
-                out_id.append(tids[idx])
-                out_n.append(np.full(m, n, dtype=np.int32))
-                out_val.append(np.round(pred, 6))
-                out_var.append(np.round(var, 6))
-            if out_id:
-                yield pd.DataFrame(
-                    {
-                        target_id: np.concatenate(out_id),
-                        "n_used": np.concatenate(out_n),
-                        "krige_value": np.concatenate(out_val),
-                        "krige_var": np.concatenate(out_var),
-                    }
-                )
-
-    id_type = dict(grouped.dtypes)[target_id]
-    return grouped.mapInPandas(
-        kernel,
-        schema=(
-            f"{target_id} {id_type}, n_used int, "
-            "krige_value double, krige_var double"
-        ),
-    )
-
-
-def geometric_median(
-    points: DataFrame,
-    group_col: str = "group",
-    iters: int = 3,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    eps: float = 1e-12,
-) -> DataFrame:
-    """Per-group geometric median (spatial central feature) via the
-    Weiszfeld algorithm (Weiszfeld 1937, public) with a FIXED iteration
-    count, so the whole computation is a finite Catalyst plan that an
-    external SQL engine can replay iteration-for-iteration:
-
-        m_0 = centroid;  m_{j+1} = sum(p_i/d_i) / sum(1/d_i),
-        d_i = max(|p_i - m_j|, eps)
-
-    Emits (group, n_points, med_lon, med_lat), rounded to 6 decimals.
-    The median minimizes summed Euclidean distance — the right "central
-    point" for dispatch/placement questions where the MEAN is skew-
-    dragged (same motivation as std_ellipse's centrography lane).
-
-    Scale shape: the points table is aggregated ``iters + 1`` times,
-    each a map-side-combinable groupBy on the group key (partial
-    aggregation does the heavy lifting; no pair blowup, no window). The
-    per-group estimate frame (one row per group) re-enters each
-    iteration through an explicit ``F.broadcast`` join, so the point
-    table NEVER shuffles on anything but its group key. eps floors
-    coincident points (the documented Weiszfeld singularity).
-    """
-    if iters < 0:
-        raise ValueError("iters must be >= 0")
-    pts = points.select(
-        F.col(group_col).alias("_g"),
-        F.col(lon_col).cast("double").alias("_x"),
-        F.col(lat_col).cast("double").alias("_y"),
-    )
-    est = pts.groupBy("_g").agg(
-        F.avg("_x").alias("_mx"),
-        F.avg("_y").alias("_my"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    for _ in range(int(iters)):
-        j = pts.join(F.broadcast(est.select("_g", "_mx", "_my")), "_g")
-        dx = F.col("_x") - F.col("_mx")
-        dy = F.col("_y") - F.col("_my")
-        d = F.greatest(F.sqrt(dx * dx + dy * dy), F.lit(float(eps)))
-        w = F.lit(1.0) / d
-        est = j.groupBy("_g").agg(
-            (F.sum(w * F.col("_x")) / F.sum(w)).alias("_mx"),
-            (F.sum(w * F.col("_y")) / F.sum(w)).alias("_my"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-    return est.select(
-        F.col("_g").alias(group_col),
-        F.col("_n").alias("n_points"),
-        F.round("_mx", 6).alias("med_lon"),
-        F.round("_my", 6).alias("med_lat"),
-    )
-
-
-def gwr(
-    targets: DataFrame,
-    stations: DataFrame,
-    bandwidth: float,
-    radius: float | None = None,
-    min_stations: int = 3,
-    res: int | None = None,
-    target_id: str = "target_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """Geographically weighted regression (Brunsdon, Fotheringham &
-    Charlton 1996; the classic local-coefficient-surface tool): at each
-    target, a gaussian-distance-weighted simple OLS of station ``y`` on
-    station ``x``:
-
-        w_i = exp(-d_i^2 / (2 b^2)),  truncated at ``radius``
-        (default 3b, where w < 0.012 — the documented approximation)
-
-    solved in CLOSED FORM from six weighted sufficient statistics —
-    slope = (Sw*Swxy - Swx*Swy) / (Sw*Swxx - Swx^2) etc. — so the whole
-    operator is pure Catalyst: the idw cell prune (cell edge >= radius,
-    provably lossless) + ONE target-keyed aggregation, zero Python,
-    zero matrix solves. Emits (target_id, n_used, intercept, slope,
-    local_r2), rounded to 6.
-
-    Explicit degeneracy rules (mirroring stats.group_trend): targets
-    with fewer than ``min_stations`` neighbors or zero weighted
-    x-variance DROP (never NaN); constant-y targets emit local_r2 = 1.
-    """
-    import math
-
-    if bandwidth <= 0:
-        raise ValueError("bandwidth must be positive")
-    if radius is None:
-        radius = 3.0 * bandwidth
-    if radius <= 0:
-        raise ValueError("radius must be positive")
-    if min_stations < 2:
-        raise ValueError("min_stations must be >= 2")
-    if res is None:
-        res = int(math.floor(math.log2(360.0 / radius)))
-    res = max(0, min(res, 28))
-    size = 360.0 / (1 << res)
-    if size < radius:
-        raise ValueError(
-            f"grid res {res} has cell edge {size} < radius {radius}: "
-            "the 3x3 prune would miss in-range stations"
-        )
-
-    def ij(lon, lat):
-        i = F.floor((lon + F.lit(180.0)) / F.lit(size)).cast("long")
-        j = F.floor((lat + F.lit(90.0)) / F.lit(size)).cast("long")
-        return i, j
-
-    ti, tj = ij(F.col(lon_col), F.col(lat_col))
-    t = targets.select(
-        F.col(target_id),
-        F.col(lon_col).alias("_tlon"),
-        F.col(lat_col).alias("_tlat"),
-        (ti * F.lit(1 << 31) + tj).alias("_cell"),
-    )
-    offsets = F.array(
-        *[F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-          for di in (-1, 0, 1) for dj in (-1, 0, 1)]
-    )
-    si, sj = ij(F.col(lon_col), F.col(lat_col))
-    s = stations.select(
-        F.col(lon_col).alias("_slon"),
-        F.col(lat_col).alias("_slat"),
-        F.col(x_col).cast("double").alias("_x"),
-        F.col(y_col).cast("double").alias("_y"),
-        si.alias("_si"),
-        sj.alias("_sj"),
-        F.explode(offsets).alias("_o"),
-    ).select(
-        "_slon",
-        "_slat",
-        "_x",
-        "_y",
-        (
-            (F.col("_si") + F.col("_o.di")) * F.lit(1 << 31)
-            + (F.col("_sj") + F.col("_o.dj"))
-        ).alias("_cell"),
-    )
-    dx = F.col("_tlon") - F.col("_slon")
-    dy = F.col("_tlat") - F.col("_slat")
-    d2 = dx * dx + dy * dy
-    w = F.exp(-d2 / F.lit(2.0 * float(bandwidth) * float(bandwidth)))
-    x, y = F.col("_x"), F.col("_y")
-    agg = (
-        t.join(s, "_cell")
-        .filter(d2 <= F.lit(float(radius) * float(radius)))
-        .groupBy(target_id)
-        .agg(
-            F.count(F.lit(1)).alias("n_used"),
-            F.sum(w).alias("_sw"),
-            F.sum(w * x).alias("_swx"),
-            F.sum(w * y).alias("_swy"),
-            F.sum(w * x * x).alias("_swxx"),
-            F.sum(w * x * y).alias("_swxy"),
-            F.sum(w * y * y).alias("_swyy"),
-        )
-        .filter(F.col("n_used") >= F.lit(int(min_stations)))
-    )
-    sw = F.col("_sw")
-    sxx_c = F.col("_swxx") - F.col("_swx") * F.col("_swx") / sw
-    syy_c = F.col("_swyy") - F.col("_swy") * F.col("_swy") / sw
-    sxy_c = F.col("_swxy") - F.col("_swx") * F.col("_swy") / sw
-    slope = sxy_c / sxx_c
-    intercept = (F.col("_swy") - slope * F.col("_swx")) / sw
-    # the centered sums carry ~1e-16-relative rounding from the
-    # irrational gaussian weights, so "zero variance" is a RELATIVE
-    # test against the uncentered magnitude, never an exact == 0
-    rel = F.lit(1e-12)
-    y_const = syy_c <= rel * F.abs(F.col("_swyy"))
-    x_const = sxx_c <= rel * F.abs(F.col("_swxx"))
-    r2 = F.when(y_const, F.lit(1.0)).otherwise(
-        sxy_c * sxy_c / (sxx_c * syy_c)
-    )
-    return (
-        agg.filter(~x_const)
-        .select(
-            target_id,
-            "n_used",
-            F.round(intercept, 6).alias("intercept"),
-            F.round(slope, 6).alias("slope"),
-            F.round(r2, 6).alias("local_r2"),
-        )
     )

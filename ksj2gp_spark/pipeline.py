@@ -71,12 +71,6 @@ def index_images(
 MAX_BROADCAST_POLYGONS = 250_000
 
 
-def _layer_over_threshold(polygons: DataFrame, limit: int) -> bool:
-    """Bounded count probe: limit(n+1).count() short-circuits the scan
-    as soon as n+1 rows exist — never a full pass over a huge layer."""
-    return polygons.limit(limit + 1).count() > limit
-
-
 def spatial_join(
     images: DataFrame,
     polygons: DataFrame | pd.DataFrame,
@@ -91,26 +85,29 @@ def spatial_join(
     distributed end-to-end (cover via mapInPandas, shuffle candidate
     join, cogroup PIP refine) — a parcel-scale layer never lands on
     the driver."""
-    if isinstance(polygons, DataFrame) and _layer_over_threshold(
-        polygons, max_broadcast_polygons
-    ):
-        dist_opts = dict(opts)
-        dist_opts.pop("strategy", None)  # always shuffle when distributed
-        for k in ("extra_cols", "simplify_tol"):
-            if k in dist_opts:
-                raise ValueError(
-                    f"{k!r} is not supported on the distributed "
-                    f"large-layer path (layer exceeds "
-                    f"max_broadcast_polygons={max_broadcast_polygons}); "
-                    "raise the threshold if the layer fits the driver"
-                )
-        return spatial.spatial_join_tiles_dist(
-            images, polygons, **dist_opts
-        )
-    polys_pdf = (
-        polygons.toPandas() if isinstance(polygons, DataFrame) else polygons
-    )
-    return spatial.spatial_join_tiles(images, polys_pdf, **opts)
+    if not isinstance(polygons, DataFrame):
+        return spatial.spatial_join_tiles(images, polygons, **opts)
+    # Bounded size probe: limit(n+1) short-circuits the scan once n+1
+    # rows exist. It is persisted so that, below the threshold, the
+    # collect reads the probed rows instead of computing a lazy layer
+    # (an ingest) a second time.
+    head = polygons.limit(max_broadcast_polygons + 1).persist()
+    try:
+        if head.count() <= max_broadcast_polygons:
+            return spatial.spatial_join_tiles(images, head.toPandas(), **opts)
+    finally:
+        head.unpersist()
+    dist_opts = dict(opts)
+    dist_opts.pop("strategy", None)  # always shuffle when distributed
+    for k in ("extra_cols", "simplify_tol"):
+        if k in dist_opts:
+            raise ValueError(
+                f"{k!r} is not supported on the distributed "
+                f"large-layer path (layer exceeds "
+                f"max_broadcast_polygons={max_broadcast_polygons}); "
+                "raise the threshold if the layer fits the driver"
+            )
+    return spatial.spatial_join_tiles_dist(images, polygons, **dist_opts)
 
 
 def _polygons_for_fused(

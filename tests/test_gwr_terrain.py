@@ -1,10 +1,9 @@
-"""GWR + terrain map algebra + cell morphology, each pinned against an
-independent numpy / set-arithmetic reference."""
+"""Terrain map algebra (slope/aspect, contours) + cell morphology, each
+pinned against an independent numpy / set-arithmetic reference."""
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from ksj2gp_spark.operators.raster import (
     _RES_SHIFT,
@@ -13,148 +12,6 @@ from ksj2gp_spark.operators.raster import (
     erode_cells,
     slope_aspect,
 )
-from ksj2gp_spark.operators.spatial import gwr
-
-
-def _stations_pdf(n: int, seed: int = 42) -> pd.DataFrame:
-    rng = np.random.RandomState(seed)
-    lon = 139.0 + rng.rand(n) * 0.5
-    lat = 35.0 + rng.rand(n) * 0.5
-    x = rng.rand(n) * 10
-    # spatially varying true relationship + noise: slope drifts east
-    y = (1.0 + 3.0 * (lon - 139.0)) * x + 2.0 + rng.randn(n)
-    return pd.DataFrame({"lon": lon, "lat": lat, "x": x, "y": y})
-
-
-def _ref_gwr(tx, ty, st: pd.DataFrame, b: float, radius: float):
-    d2 = (st.lon.values - tx) ** 2 + (st.lat.values - ty) ** 2
-    m = d2 <= radius * radius
-    n = int(m.sum())
-    if n < 3:
-        return None
-    w = np.exp(-d2[m] / (2 * b * b))
-    x, y = st.x.values[m], st.y.values[m]
-    sw, swx, swy = w.sum(), (w * x).sum(), (w * y).sum()
-    swxx, swxy, swyy = (w * x * x).sum(), (w * x * y).sum(), (w * y * y).sum()
-    sxx = swxx - swx * swx / sw
-    syy = swyy - swy * swy / sw
-    sxy = swxy - swx * swy / sw
-    if sxx <= 0:
-        return None
-    slope = sxy / sxx
-    intercept = (swy - slope * swx) / sw
-    r2 = 1.0 if syy <= 0 else sxy * sxy / (sxx * syy)
-    return n, intercept, slope, r2
-
-
-class TestGwr:
-    def test_matches_bruteforce(self, spark):
-        st = _stations_pdf(400)
-        tg = pd.DataFrame(
-            {
-                "target_id": range(30),
-                "lon": 139.05 + np.arange(30) * 0.013,
-                "lat": 35.25 + (np.arange(30) % 7) * 0.02,
-            }
-        )
-        out = (
-            gwr(
-                spark.createDataFrame(tg),
-                spark.createDataFrame(st),
-                bandwidth=0.05,
-            )
-            .toPandas()
-            .set_index("target_id")
-            .sort_index()
-        )
-        found = 0
-        for ti in range(30):
-            ref = _ref_gwr(tg.lon[ti], tg.lat[ti], st, 0.05, 0.15)
-            if ref is None:
-                assert ti not in out.index
-                continue
-            found += 1
-            n, b0, b1, r2 = ref
-            r = out.loc[ti]
-            assert r.n_used == n
-            assert abs(r.intercept - round(b0, 6)) < 2e-6
-            assert abs(r.slope - round(b1, 6)) < 2e-6
-            assert abs(r.local_r2 - round(r2, 6)) < 2e-6
-        assert found == len(out) > 0
-
-    def test_recovers_spatially_varying_slope(self, spark):
-        # the POINT of GWR: the local slope surface tracks the drift
-        st = _stations_pdf(800, seed=7)
-        tg = pd.DataFrame(
-            {"target_id": [0, 1], "lon": [139.05, 139.45], "lat": [35.25] * 2}
-        )
-        out = (
-            gwr(
-                spark.createDataFrame(tg),
-                spark.createDataFrame(st),
-                bandwidth=0.04,
-            )
-            .toPandas()
-            .set_index("target_id")
-        )
-        west, east = out.loc[0].slope, out.loc[1].slope
-        # true slopes ~1.15 (west) and ~2.35 (east)
-        assert east - west > 0.6
-
-    def test_constant_y_r2_one_and_constant_x_drops(self, spark):
-        tg = spark.createDataFrame(
-            pd.DataFrame({"target_id": [0], "lon": [139.0], "lat": [35.0]})
-        )
-        st_y_const = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "lon": [139.001, 139.002, 138.999],
-                    "lat": [35.0] * 3,
-                    "x": [1.0, 2.0, 3.0],
-                    "y": [5.0, 5.0, 5.0],
-                }
-            )
-        )
-        out = gwr(tg, st_y_const, bandwidth=0.01).toPandas()
-        assert len(out) == 1 and out.local_r2[0] == 1.0
-        st_x_const = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "lon": [139.001, 139.002, 138.999],
-                    "lat": [35.0] * 3,
-                    "x": [2.0, 2.0, 2.0],
-                    "y": [1.0, 5.0, 9.0],
-                }
-            )
-        )
-        assert gwr(tg, st_x_const, bandwidth=0.01).count() == 0
-
-    def test_validates_inputs(self, spark):
-        df = spark.createDataFrame(
-            pd.DataFrame(
-                {"target_id": [0], "lon": [0.0], "lat": [0.0], "x": [0.0],
-                 "y": [0.0]}
-            )
-        )
-        with pytest.raises(ValueError, match="bandwidth"):
-            gwr(df, df, bandwidth=0.0)
-        with pytest.raises(ValueError, match="min_stations"):
-            gwr(df, df, bandwidth=0.1, min_stations=1)
-
-    def test_pure_catalyst(self, spark):
-        st = spark.createDataFrame(_stations_pdf(20))
-        tg = spark.createDataFrame(
-            pd.DataFrame({"target_id": [0], "lon": [139.1], "lat": [35.1]})
-        )
-        plan = (
-            gwr(tg, st, bandwidth=0.05)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" not in plan
-        assert "CartesianProduct" not in plan
 
 
 def _cell(res: int, i: int, j: int) -> int:

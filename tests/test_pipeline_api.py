@@ -557,6 +557,35 @@ def test_fused_runner_reads_spark_layer_once(spark):
     assert sorted(got["polygon_id"]) == sorted(layer["polygon_id"])
 
 
+def test_spatial_join_reads_spark_layer_once(spark):
+    """Below max_broadcast_polygons, spatial_join's size probe and its
+    collect share one computation of a lazy Spark layer: every polygon
+    row is computed once, not once for the probe and again for the
+    collect."""
+    from ksj2gp_spark import fixtures
+
+    layer = fixtures.polygon_layer()
+    computed = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            computed.add(len(pdf))
+            yield pdf
+
+    base = spark.createDataFrame(layer)
+    imgs = fixtures.images_df(spark, 500, with_bytes=False, partitions=2)
+    tiles = pipeline.spatial_join(
+        imgs, base.mapInPandas(tap, schema=base.schema),
+        scheme="grid", res=10,
+    )
+    assert computed.value == len(layer)
+    ref = pipeline.spatial_join(imgs, layer, scheme="grid", res=10)
+    cols = ["image_id", "polygon_id"]
+    assert {tuple(r) for r in tiles.select(*cols).collect()} == {
+        tuple(r) for r in ref.select(*cols).collect()
+    }
+
+
 def test_spark_submit_py_files_runs_pipeline(tmp_path):
     """The north-star ship mechanism, executed for real: spark-submit
     --py-files dist/ksj2gp_spark.zip runs a driver script that has NO

@@ -1640,180 +1640,6 @@ class TestKdeHeatmap:
             kde_heatmap(df, bandwidth=1.0, cell_size=0.05)
 
 
-class TestStayPoints:
-    """Trajectory stop detection (operators/spatial.py::stay_points)."""
-
-    @staticmethod
-    def _run(spark, rows, max_step, min_pings=2, min_dur=0):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import stay_points
-
-        pdf = pd.DataFrame(
-            rows, columns=["user_id", "ts", "lon", "lat"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        df = spark.createDataFrame(pdf)
-        out = stay_points(
-            df,
-            max_step=max_step,
-            min_pings=min_pings,
-            min_duration_us=min_dur,
-        ).toPandas()
-        return sorted(
-            (r.user_id, int(r.stay_seq), int(r.n_pings),
-             int(r.duration_us), round(r.cx, 6), round(r.cy, 6))
-            for r in out.itertuples()
-        )
-
-    def test_two_stays_split_by_jump(self, spark):
-        rows = [
-            (1, "2024-01-01 00:00:00", 10.00, 5.00),
-            (1, "2024-01-01 00:10:00", 10.01, 5.00),
-            (1, "2024-01-01 00:20:00", 10.02, 5.01),
-            (1, "2024-01-01 01:00:00", 20.00, 5.00),  # jump
-            (1, "2024-01-01 01:10:00", 20.01, 5.00),
-        ]
-        got = self._run(spark, rows, max_step=0.1)
-        assert got == [
-            (1, 1, 3, 1200_000000, 10.01, round((5.00 + 5.00 + 5.01) / 3, 6)),
-            (1, 2, 2, 600_000000, 20.005, 5.0),
-        ]
-
-    def test_min_pings_and_duration_filters(self, spark):
-        rows = [
-            (1, "2024-01-01 00:00:00", 0.0, 0.0),
-            (1, "2024-01-01 00:00:01", 0.0, 0.0),
-            (1, "2024-01-01 02:00:00", 9.0, 9.0),
-            (1, "2024-01-01 02:30:00", 9.0, 9.0),
-            (1, "2024-01-01 03:00:00", 9.0, 9.0),
-        ]
-        # min_pings=3 drops the first 2-ping stay
-        got = self._run(spark, rows, max_step=0.5, min_pings=3)
-        assert [g[2] for g in got] == [3]
-        # min duration 1h (in us) drops the 1-second stay too
-        got = self._run(
-            spark, rows, max_step=0.5, min_pings=2,
-            min_dur=3600 * 1_000_000,
-        )
-        assert [g[3] for g in got] == [3600 * 1_000_000]
-
-    def test_step_rule_is_to_previous_not_anchor(self, spark):
-        # drifting chain: each step 0.04 <= max_step, total drift 0.16
-        # -> ONE stay under the step rule (anchor rule would split)
-        rows = [
-            (7, f"2024-01-01 00:0{i}:00", 0.04 * i, 0.0)
-            for i in range(5)
-        ]
-        got = self._run(spark, rows, max_step=0.05)
-        assert len(got) == 1 and got[0][2] == 5
-
-    def test_exact_boundary_step_stays(self, spark):
-        rows = [
-            (1, "2024-01-01 00:00:00", 0.0, 0.0),
-            (1, "2024-01-01 00:01:00", 0.05, 0.0),  # exactly max_step
-        ]
-        got = self._run(spark, rows, max_step=0.05)
-        assert len(got) == 1 and got[0][2] == 2
-
-    def test_multi_user_isolation(self, spark):
-        rows = [
-            (1, "2024-01-01 00:00:00", 0.0, 0.0),
-            (2, "2024-01-01 00:00:30", 0.0, 0.0),
-            (1, "2024-01-01 00:01:00", 0.01, 0.0),
-            (2, "2024-01-01 00:01:30", 0.01, 0.0),
-        ]
-        got = self._run(spark, rows, max_step=0.1)
-        assert [(g[0], g[2]) for g in got] == [(1, 2), (2, 2)]
-
-    def test_validates_inputs(self, spark):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import stay_points
-
-        pdf = pd.DataFrame(
-            {"user_id": [1], "ts": pd.to_datetime(["2024-01-01"]),
-             "lon": [0.0], "lat": [0.0]}
-        )
-        df = spark.createDataFrame(pdf)
-        with pytest.raises(ValueError):
-            stay_points(df, max_step=0.0)
-
-
-class TestOdMatrix:
-    """OD flow matrix (operators/spatial.py::od_matrix)."""
-
-    @staticmethod
-    def _run(spark, rows, max_step, cell_size, **kw):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import od_matrix
-
-        pdf = pd.DataFrame(rows, columns=["user_id", "ts", "lon", "lat"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        df = spark.createDataFrame(pdf)
-        out = od_matrix(
-            df, max_step=max_step, cell_size=cell_size, **kw
-        ).toPandas()
-        return sorted(
-            (round(r.from_x, 6), round(r.from_y, 6),
-             round(r.to_x, 6), round(r.to_y, 6), int(r.n_trips))
-            for r in out.itertuples()
-        )
-
-    def test_two_users_same_flow_aggregates(self, spark):
-        # both users: stay near (10.0n) then jump to stay near (20.0n)
-        rows = []
-        for u in (1, 2):
-            rows += [
-                (u, f"2024-01-0{u} 00:00:00", 10.01, 5.01),
-                (u, f"2024-01-0{u} 00:10:00", 10.02, 5.01),
-                (u, f"2024-01-0{u} 01:00:00", 20.01, 5.01),
-                (u, f"2024-01-0{u} 01:10:00", 20.02, 5.01),
-            ]
-        got = self._run(spark, rows, max_step=0.1, cell_size=1.0)
-        assert got == [(10.5, 5.5, 20.5, 5.5, 2)]
-
-    def test_three_stays_two_trips(self, spark):
-        rows = [
-            (1, "2024-01-01 00:00:00", 0.1, 0.1),
-            (1, "2024-01-01 00:10:00", 0.1, 0.1),
-            (1, "2024-01-01 01:00:00", 5.1, 0.1),
-            (1, "2024-01-01 01:10:00", 5.1, 0.1),
-            (1, "2024-01-01 02:00:00", 0.1, 0.1),
-            (1, "2024-01-01 02:10:00", 0.1, 0.1),
-        ]
-        got = self._run(spark, rows, max_step=0.5, cell_size=1.0)
-        assert got == [(0.5, 0.5, 5.5, 0.5, 1), (5.5, 0.5, 0.5, 0.5, 1)]
-
-    def test_single_stay_no_trips(self, spark):
-        rows = [
-            (1, "2024-01-01 00:00:00", 0.0, 0.0),
-            (1, "2024-01-01 00:10:00", 0.01, 0.0),
-        ]
-        assert self._run(spark, rows, max_step=0.1, cell_size=1.0) == []
-
-    def test_same_cell_trip_kept(self, spark):
-        # two distinct stays whose centroids share a cell
-        rows = [
-            (1, "2024-01-01 00:00:00", 0.10, 0.10),
-            (1, "2024-01-01 00:10:00", 0.10, 0.10),
-            (1, "2024-01-01 01:00:00", 0.90, 0.10),  # jump > max_step
-            (1, "2024-01-01 01:10:00", 0.90, 0.10),
-        ]
-        got = self._run(spark, rows, max_step=0.5, cell_size=1.0)
-        assert got == [(0.5, 0.5, 0.5, 0.5, 1)]
-
-    def test_validates_cell_size(self, spark):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import od_matrix
-
-        pdf = pd.DataFrame(
-            {"user_id": [1], "ts": pd.to_datetime(["2024-01-01"]),
-             "lon": [0.0], "lat": [0.0]}
-        )
-        df = spark.createDataFrame(pdf)
-        with pytest.raises(ValueError):
-            od_matrix(df, max_step=0.1, cell_size=0.0)
-
-
 class TestEmergingHotspots:
     """Space-time Gi* + Mann-Kendall (operators/spatial.py::
     emerging_hotspots)."""
@@ -2834,341 +2660,6 @@ class TestCellPyramid:
             cells_mod.cell_pyramid(pts, [11], scheme="grid", base_res=10)
         with pytest.raises(ValueError, match="grid|s2"):
             cells_mod.cell_pyramid(pts, [8], scheme="hex", base_res=10)
-
-
-class TestSnapPoints:
-    """Map matching (operators/spatial.py::snap_points /
-    line_segments): cell-keyed candidate join + pure-Catalyst
-    point-to-segment distance refinement."""
-
-    @staticmethod
-    def _segs(spark, rows):
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(
-                rows,
-                columns=["line_id", "seg_idx", "x1", "y1", "x2", "y2"],
-            )
-        )
-
-    @staticmethod
-    def _pts(spark, rows):
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=["point_id", "x", "y"])
-        )
-
-    def test_matches_brute_force(self, spark):
-        import numpy as np
-        import pandas as pd
-
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        rng = np.random.default_rng(7)
-        nseg, npts, maxd = 120, 400, 0.3
-        x1 = rng.uniform(130, 134, nseg)
-        y1 = rng.uniform(33, 36, nseg)
-        x2 = x1 + rng.uniform(-0.5, 0.5, nseg)
-        y2 = y1 + rng.uniform(-0.5, 0.5, nseg)
-        lid = np.arange(nseg) % 30
-        sid = np.arange(nseg) // 30
-        segs = spark.createDataFrame(
-            pd.DataFrame(
-                {"line_id": lid, "seg_idx": sid,
-                 "x1": x1, "y1": y1, "x2": x2, "y2": y2}
-            )
-        )
-        px = rng.uniform(130, 134, npts)
-        py = rng.uniform(33, 36, npts)
-        pts = self._pts(
-            spark, list(zip(range(npts), px, py))
-        )
-        got = (
-            snap_points(pts, segs, maxd)
-            .toPandas()
-            .sort_values("point_id")
-            .reset_index(drop=True)
-        )
-        dx, dy = x2 - x1, y2 - y1
-        len2 = dx * dx + dy * dy
-        exp = []
-        for i in range(npts):
-            t = np.clip(
-                ((px[i] - x1) * dx + (py[i] - y1) * dy)
-                / np.where(len2 == 0, 1, len2),
-                0,
-                1,
-            )
-            t = np.where(len2 == 0, 0.0, t)
-            sx, sy = x1 + t * dx, y1 + t * dy
-            dist = np.hypot(px[i] - sx, py[i] - sy)
-            j = np.lexsort((sid, lid, dist))[0]
-            if dist[j] <= maxd:
-                exp.append(
-                    (i, int(lid[j]), int(sid[j]), round(sx[j], 6),
-                     round(sy[j], 6), round(dist[j], 6))
-                )
-        exp_df = pd.DataFrame(
-            exp,
-            columns=["point_id", "line_id", "seg_idx",
-                     "snap_x", "snap_y", "snap_dist"],
-        )
-        assert len(got) == len(exp_df)
-        m = got.merge(exp_df, on="point_id", suffixes=("", "_e"))
-        for c in ["line_id", "seg_idx", "snap_x", "snap_y", "snap_dist"]:
-            assert (m[c] == m[f"{c}_e"]).all(), c
-
-    def test_interior_projection_and_endpoint_clamp(self, spark):
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        segs = self._segs(spark, [("r", 0, 0.0, 0.0, 10.0, 0.0)])
-        pts = self._pts(
-            spark,
-            [("mid", 5.0, 1.0), ("before", -2.0, 1.0), ("after", 13.0, 0.5)],
-        )
-        out = {
-            r.point_id: (r.snap_x, r.snap_y, r.snap_dist)
-            for r in snap_points(pts, segs, 5.0, cell_size=2.0).collect()
-        }
-        assert out["mid"] == (5.0, 0.0, 1.0)  # interior projection
-        assert out["before"] == (0.0, 0.0, round(5**0.5, 6))  # clamp t=0
-        assert out["after"] == (10.0, 0.0, round(9.25**0.5, 6))  # clamp t=1
-
-    def test_unmatched_absent_and_tie_break(self, spark):
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        segs = self._segs(
-            spark,
-            [  # two segments symmetric around y=0 -> exact tie at dist 1
-                ("a", 3, 0.0, 1.0, 10.0, 1.0),
-                ("a", 1, 0.0, -1.0, 10.0, -1.0),
-                ("b", 0, 0.0, 1.0, 10.0, 1.0),
-            ],
-        )
-        pts = self._pts(spark, [("p", 5.0, 0.0), ("far", 500.0, 500.0)])
-        rows = snap_points(pts, segs, 2.0).collect()
-        assert len(rows) == 1  # "far" has no segment in range
-        r = rows[0]
-        # tie at dist=1 among (a,3), (a,1), (b,0) -> (a,1) wins
-        assert (r.point_id, r.line_id, r.seg_idx) == ("p", "a", 1)
-
-    def test_zero_length_segment(self, spark):
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        segs = self._segs(spark, [("dot", 0, 2.0, 2.0, 2.0, 2.0)])
-        pts = self._pts(spark, [("p", 2.0, 3.0)])
-        r = snap_points(pts, segs, 1.5).collect()[0]
-        assert (r.snap_x, r.snap_y, r.snap_dist) == (2.0, 2.0, 1.0)
-
-    def test_cell_size_invariance(self, spark):
-        """Candidate coverage must hold for ANY positive cell_size —
-        the segment bbox is expanded by max_dist before cell
-        assignment, so no (point, segment) pair within max_dist can
-        be pruned."""
-        import numpy as np
-
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        rng = np.random.default_rng(3)
-        segs = self._segs(
-            spark,
-            [
-                (int(i), 0, a, b, a + c, b + d)
-                for i, (a, b, c, d) in enumerate(
-                    zip(
-                        rng.uniform(0, 4, 40),
-                        rng.uniform(0, 4, 40),
-                        rng.uniform(-1, 1, 40),
-                        rng.uniform(-1, 1, 40),
-                    )
-                )
-            ],
-        )
-        pts = self._pts(
-            spark,
-            [
-                (int(i), float(x), float(y))
-                for i, (x, y) in enumerate(
-                    zip(rng.uniform(0, 4, 100), rng.uniform(0, 4, 100))
-                )
-            ],
-        )
-        ref = None
-        for cs in (0.1, 0.37, 1.0, 5.0):
-            got = sorted(
-                (r.point_id, r.line_id, r.seg_idx, r.snap_dist)
-                for r in snap_points(
-                    pts, segs, 0.4, cell_size=cs
-                ).collect()
-            )
-            if ref is None:
-                ref = got
-            assert got == ref, f"cell_size={cs} changed the result"
-
-    def test_validates_inputs(self, spark):
-        import pytest
-
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        segs = self._segs(spark, [("a", 0, 0.0, 0.0, 1.0, 1.0)])
-        pts = self._pts(spark, [("p", 0.0, 0.0)])
-        with pytest.raises(ValueError, match="max_dist"):
-            snap_points(pts, segs, 0.0)
-        with pytest.raises(ValueError, match="cell_size"):
-            snap_points(pts, segs, 1.0, cell_size=-1.0)
-
-    def test_line_segments_explode(self, spark):
-        import numpy as np
-        import pandas as pd
-
-        from ksj2gp_spark.geo import wkb
-        from ksj2gp_spark.operators.spatial import line_segments
-
-        mls = wkb.dumps(
-            wkb.Geometry(
-                wkb.MULTILINESTRING,
-                [
-                    np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 1.0]]),
-                    np.array([[5.0, 5.0], [6.0, 5.0]]),
-                ],
-            )
-        )
-        ls = wkb.dumps(
-            wkb.Geometry(
-                wkb.LINESTRING, np.array([[2.0, 2.0], [3.0, 3.0]])
-            )
-        )
-        ldf = spark.createDataFrame(
-            pd.DataFrame({"line_id": ["a", "b"], "geometry": [mls, ls]})
-        )
-        got = [
-            (r.line_id, r.seg_idx, r.x1, r.y1, r.x2, r.y2)
-            for r in line_segments(ldf)
-            .orderBy("line_id", "seg_idx")
-            .collect()
-        ]
-        assert got == [
-            ("a", 0, 0.0, 0.0, 1.0, 0.0),
-            ("a", 1, 1.0, 0.0, 1.0, 1.0),
-            ("a", 2, 5.0, 5.0, 6.0, 5.0),  # parts number consecutively
-            ("b", 0, 2.0, 2.0, 3.0, 3.0),
-        ]
-
-    def test_line_segments_rejects_non_lines(self, spark):
-        import pandas as pd
-        import pytest
-
-        from ksj2gp_spark.geo import wkb
-        from ksj2gp_spark.operators.spatial import line_segments
-
-        ldf = spark.createDataFrame(
-            pd.DataFrame(
-                {"line_id": ["a"], "geometry": [wkb.point(1.0, 2.0)]}
-            )
-        )
-        with pytest.raises(Exception, match="got Point"):
-            line_segments(ldf).collect()
-
-    def test_snap_via_wkb_layer(self, spark):
-        """line_segments -> snap_points composition over a WKB road
-        layer equals snapping the hand-built segment relation."""
-        import numpy as np
-        import pandas as pd
-
-        from ksj2gp_spark.geo import wkb
-        from ksj2gp_spark.operators.spatial import (
-            line_segments,
-            snap_points,
-        )
-
-        road = wkb.dumps(
-            wkb.Geometry(
-                wkb.LINESTRING,
-                np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 3.0]]),
-            )
-        )
-        ldf = spark.createDataFrame(
-            pd.DataFrame({"line_id": ["r1"], "geometry": [road]})
-        )
-        pts = self._pts(
-            spark, [("p1", 2.0, 0.5), ("p2", 4.5, 1.0), ("p3", 3.9, 2.9)]
-        )
-        got = {
-            r.point_id: (r.line_id, r.seg_idx, r.snap_x, r.snap_y)
-            for r in snap_points(
-                pts, line_segments(ldf), 1.0
-            ).collect()
-        }
-        assert got == {
-            "p1": ("r1", 0, 2.0, 0.0),
-            "p2": ("r1", 1, 4.0, 1.0),
-            "p3": ("r1", 1, 4.0, 2.9),
-        }
-
-    def test_snap_plan_zero_python(self, spark):
-        """The whole snap — candidate cells, equi-join, projection
-        clamp, distance, top-1 window — must stay JVM-side: no
-        Python eval node anywhere in the executed plan."""
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        segs = self._segs(spark, [("a", 0, 0.0, 0.0, 1.0, 1.0)])
-        pts = self._pts(spark, [("p", 0.5, 0.5)])
-        plan = (
-            snap_points(pts, segs, 0.5)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
-            assert node not in plan, node
-
-    def test_long_segment_cover_is_linear_not_quadratic(self, spark):
-        """A segment spanning ~100 cells diagonally must cover O(100)
-        cells (dominant-axis sub-split), not the ~100×100 whole-bbox
-        cross product — the difference between a ferry route costing
-        300 candidate cells and 10,000."""
-        from ksj2gp_spark.operators.spatial import (
-            _segment_cell_cover,
-            snap_points,
-        )
-
-        cs, d = 0.01, 0.004
-        segs = self._segs(
-            spark, [("ferry", 0, 0.0, 0.0, 1.0, 1.0)]  # 100 cells/axis
-        )
-        n_cover = _segment_cell_cover(
-            segs, ["line_id", "seg_idx", "x1", "y1", "x2", "y2"], d, cs
-        ).count()
-        assert n_cover < 100 * 12, n_cover  # linear with O(1) factor
-        assert n_cover > 100  # still covers the full diagonal
-        # and the snap stays exact along the whole length
-        pts = self._pts(
-            spark,
-            [("on", 0.5, 0.5), ("near", 0.25, 0.252), ("end", 1.003, 1.0)],
-        )
-        got = {
-            r.point_id: r.snap_dist
-            for r in snap_points(
-                pts, segs, d, cell_size=cs
-            ).collect()
-        }
-        assert got["on"] == 0.0
-        assert got["end"] == 0.003
-        assert abs(got["near"] - 0.002 / 2**0.5) < 1e-6
-
-    def test_cover_pad_catches_lerp_ulp_at_far_end(self, spark):
-        """A point exactly max_dist past the far endpoint of a long
-        sub-split segment must still be a candidate — the +1e-9 cover
-        pad absorbs the k/n lerp's 1-ULP shortfall at t=1."""
-        from ksj2gp_spark.operators.spatial import snap_points
-
-        x2 = 139.123456789  # non-representable → lerp rounds at t=1
-        segs = self._segs(spark, [("r", 0, 130.0, 35.0, x2, 35.9)])
-        pts = self._pts(spark, [("p", x2 + 0.0499999, 35.9)])
-        rows = snap_points(pts, segs, 0.05, cell_size=0.01).collect()
-        assert len(rows) == 1 and rows[0].line_id == "r"
 
 
 class TestHotDetectionSampled:
