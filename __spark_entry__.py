@@ -2685,111 +2685,6 @@ FROM a2 LEFT JOIN dropped ON a2.vec_id = dropped.vec_id
 """
 
 
-def q_idw_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverse-distance-weighted interpolation (operators/spatial.py::
-    idw_interpolate, Shepard 1968): 3,000 deterministic target points
-    get the p=2 IDW of station values (stations = the customer-derived
-    image anchors, value = c_custkey % 97) within a 0.05-degree radius.
-    The Spark side prunes via the 3x3 cell-neighborhood equi-join (cell
-    edge >= radius guarantees exactness); the oracle is the brute-force
-    cross join — so the hash match also PROVES the prune loses no
-    station."""
-    from ksj2gp_spark.operators.spatial import idw_interpolate
-
-    stations = _images_from_customer(spark, sf_dir).select(
-        F.col("image_id").alias("station_id"),
-        "lon",
-        "lat",
-        (F.substring("image_id", 4, 8).cast("long") % 97)
-        .cast("double")
-        .alias("value"),
-    )
-    k = F.col("id")
-    t_lon = F.lit(139.0) + (
-        ((k * F.lit(53) + F.lit(11)) * F.lit(_MIX) % F.lit(_MOD))
-        / F.lit(float(_MOD))
-    ) * F.lit(2.0)
-    t_lat = F.lit(35.0) + (
-        ((k * F.lit(29) + F.lit(3)) * F.lit(_MIX) % F.lit(_MOD))
-        / F.lit(float(_MOD))
-    ) * F.lit(2.0)
-    targets = spark.range(3000).select(
-        k.alias("target_id"), t_lon.alias("lon"), t_lat.alias("lat")
-    )
-    return idw_interpolate(targets, stations, radius=0.05)
-
-
-_IDW_SQL = f"""
-WITH {_IMAGES_CTE.strip().rstrip()},
-stations AS (
-  SELECT lon, lat,
-         CAST(CAST(substring(image_id, 4, 8) AS BIGINT) % 97 AS DOUBLE) AS v
-  FROM images
-),
-targets AS (
-  SELECT i AS target_id,
-         139.0 + ((i * 53 + 11) * {_MIX} % {_MOD}) / {float(_MOD)} * 2.0 AS lon,
-         35.0 + ((i * 29 + 3) * {_MIX} % {_MOD}) / {float(_MOD)} * 2.0 AS lat
-  FROM range(0, 3000) t(i)
-),
-cand AS (
-  SELECT t.target_id, s.v,
-         (t.lon - s.lon) * (t.lon - s.lon)
-         + (t.lat - s.lat) * (t.lat - s.lat) AS d2
-  FROM targets t CROSS JOIN stations s
-  WHERE (t.lon - s.lon) * (t.lon - s.lon)
-        + (t.lat - s.lat) * (t.lat - s.lat) <= 0.05 * 0.05
-)
-SELECT target_id, count(*) AS n_stations,
-       round(sum(v / greatest(d2, 1e-18)) / sum(1.0 / greatest(d2, 1e-18)), 6)
-         AS idw_value
-FROM cand GROUP BY target_id HAVING count(*) >= 1
-"""
-
-
-def q_focal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Focal (3x3 Moore neighborhood) mean over the sparse tile raster
-    (operators/spatial.py::focal_mean, map-algebra smoothing): per-cell
-    image counts from the tile-assignment lane, smoothed over existing
-    neighbor cells. The oracle decodes the packed res/i/j cell id with
-    the same integer arithmetic and replays the scatter-gather."""
-    from ksj2gp_spark.operators.spatial import focal_mean
-
-    cells = (
-        _tiles(spark, sf_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
-    )
-    return focal_mean(cells, res=GRID_RES)
-
-
-_FOCAL_SQL = f"""
-WITH tiles AS ({_TILES_SQL.strip()}),
-cells AS (
-  SELECT cell, CAST(count(*) AS DOUBLE) AS v FROM tiles GROUP BY cell
-),
-decoded AS (
-  SELECT cell, v,
-         (cell - {GRID_RES} * {1 << 58}) // {1 << 29} AS i,
-         cell % {1 << 29} AS j
-  FROM cells
-),
-scattered AS (
-  SELECT {GRID_RES} * {1 << 58} + (i + di.x) * {1 << 29} + (j + dj.x) AS cell,
-         v
-  FROM decoded
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) di
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) dj
-),
-agg AS (
-  SELECT cell, count(*) AS n_neighbors, round(avg(v), 6) AS focal_mean
-  FROM scattered GROUP BY cell
-)
-SELECT agg.cell, agg.n_neighbors, agg.focal_mean
-FROM agg JOIN (SELECT DISTINCT cell FROM cells) c ON agg.cell = c.cell
-"""
-
-
 def q_dihedral_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rotation/mirror-invariant image near-dup (operators/images.py::
     dihedral_phash): 600 real codec images plus one dihedral variant
@@ -2837,111 +2732,6 @@ SELECT CAST(i % 8 AS INT) AS orientation,
        count(*) AS n_match
 FROM range(0, 600) t(i)
 GROUP BY i % 8
-"""
-
-
-def q_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global Moran's I spatial autocorrelation (operators/spatial.py::
-    morans_i) of per-cell image counts over the tile raster, binary
-    8-neighbor adjacency. One-row output; the hot/cold prefecture
-    banding plants real positive autocorrelation, so the statistic is
-    discriminative, not degenerate."""
-    from ksj2gp_spark.operators.spatial import morans_i
-
-    cells = (
-        _tiles(spark, sf_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
-    )
-    return morans_i(cells, res=GRID_RES)
-
-
-_MORANS_SQL = f"""
-WITH tiles AS ({_TILES_SQL.strip()}),
-cells AS (
-  SELECT cell, CAST(count(*) AS DOUBLE) AS v FROM tiles GROUP BY cell
-),
-stats AS (SELECT count(*) AS n, avg(v) AS xbar FROM cells),
-decoded AS (
-  SELECT cell, v,
-         (cell - {GRID_RES} * {1 << 58}) // {1 << 29} AS i,
-         cell % {1 << 29} AS j
-  FROM cells
-),
-scattered AS (
-  SELECT {GRID_RES} * {1 << 58} + (i + di.x) * {1 << 29} + (j + dj.x) AS cell,
-         v AS xi
-  FROM decoded
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) di
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) dj
-  WHERE NOT (di.x = 0 AND dj.x = 0)
-),
-pairs AS (
-  SELECT s.xi, c.v AS xj FROM scattered s JOIN cells c ON s.cell = c.cell
-)
-SELECT st.n,
-       count(*) AS s0,
-       round(
-         (CAST(st.n AS DOUBLE) / count(*))
-         * sum((p.xi - st.xbar) * (p.xj - st.xbar))
-         / (SELECT sum((v - st.xbar) * (v - st.xbar)) FROM cells),
-         6
-       ) AS morans_i
-FROM pairs p CROSS JOIN stats st
-GROUP BY st.n, st.xbar
-"""
-
-
-def q_gi_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Getis-Ord Gi* hotspot z-scores (operators/spatial.py::
-    getis_ord_gi_star) per tile cell — the desktop-GIS "hot spot
-    analysis" statistic; the hot prefecture bands surface as
-    |Gi*| > 1.96 cells."""
-    from ksj2gp_spark.operators.spatial import getis_ord_gi_star
-
-    cells = (
-        _tiles(spark, sf_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
-    )
-    return getis_ord_gi_star(cells, res=GRID_RES)
-
-
-_GI_STAR_SQL = f"""
-WITH tiles AS ({_TILES_SQL.strip()}),
-cells AS (
-  SELECT cell, CAST(count(*) AS DOUBLE) AS v FROM tiles GROUP BY cell
-),
-stats AS (
-  SELECT count(*) AS n, avg(v) AS xbar, stddev_pop(v) AS s FROM cells
-),
-decoded AS (
-  SELECT cell, v,
-         (cell - {GRID_RES} * {1 << 58}) // {1 << 29} AS i,
-         cell % {1 << 29} AS j
-  FROM cells
-),
-scattered AS (
-  SELECT {GRID_RES} * {1 << 58} + (i + di.x) * {1 << 29} + (j + dj.x) AS cell,
-         v
-  FROM decoded
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) di
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) dj
-),
-nbr AS (
-  SELECT s.cell, count(*) AS w_i, sum(s.v) AS si
-  FROM scattered s
-  JOIN (SELECT DISTINCT cell FROM cells) p ON s.cell = p.cell
-  GROUP BY s.cell
-)
-SELECT nbr.cell, nbr.w_i,
-       round(
-         (nbr.si - st.xbar * nbr.w_i)
-         / (st.s * sqrt((CAST(st.n AS DOUBLE) * nbr.w_i - nbr.w_i * nbr.w_i)
-                        / CAST(st.n - 1 AS DOUBLE))),
-         6
-       ) AS gi_star
-FROM nbr CROSS JOIN stats st
 """
 
 
@@ -2993,57 +2783,6 @@ SELECT user_id, n AS n_points,
              END, 6) AS r2
 FROM agg
 WHERE n >= 2 AND n * sxx - sx * sx <> 0
-"""
-
-
-def q_local_morans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local Moran's I / LISA hotspots (operators/spatial.py::
-    local_morans_i) per tile cell — the per-cell companion of the
-    global morans_i lane; the hot prefecture bands surface as positive
-    local_i clusters."""
-    from ksj2gp_spark.operators.spatial import local_morans_i
-
-    cells = (
-        _tiles(spark, sf_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
-    )
-    return local_morans_i(cells, res=GRID_RES)
-
-
-_LOCAL_MORANS_SQL = f"""
-WITH tiles AS ({_TILES_SQL.strip()}),
-cells AS (
-  SELECT cell, CAST(count(*) AS DOUBLE) AS v FROM tiles GROUP BY cell
-),
-stats AS (
-  SELECT count(*) AS n, avg(v) AS xbar, var_pop(v) AS m2 FROM cells
-),
-decoded AS (
-  SELECT cell, v,
-         (cell - {GRID_RES} * {1 << 58}) // {1 << 29} AS i,
-         cell % {1 << 29} AS j
-  FROM cells
-),
-scattered AS (
-  SELECT {GRID_RES} * {1 << 58} + (i + di.x) * {1 << 29} + (j + dj.x) AS cell,
-         v
-  FROM decoded
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) di
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) dj
-  WHERE NOT (di.x = 0 AND dj.x = 0)
-),
-nbr AS (
-  SELECT s.cell, count(*) AS n_neighbors,
-         sum(s.v - st.xbar) AS zsum
-  FROM scattered s
-  JOIN (SELECT DISTINCT cell FROM cells) p ON s.cell = p.cell
-  CROSS JOIN stats st
-  GROUP BY s.cell
-)
-SELECT c.cell, nbr.n_neighbors,
-       round((c.v - st.xbar) / st.m2 * nbr.zsum, 6) AS local_i
-FROM cells c JOIN nbr ON c.cell = nbr.cell CROSS JOIN stats st
 """
 
 
@@ -4328,8 +4067,8 @@ GROUP BY iv.interval_id
 
 
 # ---------------------------------------------------------------------------
-# graph analytics over the co-purchase graph + spatial point statistics
-# (round 4: triangle counting, PageRank, BFS, Geary's C, Ripley's K)
+# graph analytics over the co-purchase graph
+# (triangle counting, PageRank, BFS, SSSP)
 # ---------------------------------------------------------------------------
 
 _COPURCHASE_SQL = """
@@ -4551,191 +4290,6 @@ SELECT node, CAST(d AS BIGINT) AS dist FROM walk
 """
 
 
-def q_geary_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global Geary's C (operators/spatial.py::geary_c) of per-cell
-    image counts over the tile raster — the local-contrast complement
-    to morans_i over the identical cells."""
-    from ksj2gp_spark.operators.spatial import geary_c
-
-    cells = (
-        _tiles(spark, sf_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
-    )
-    return geary_c(cells, res=GRID_RES)
-
-
-_GEARY_SQL = f"""
-WITH tiles AS ({_TILES_SQL.strip()}),
-cells AS (
-  SELECT cell, CAST(count(*) AS DOUBLE) AS v FROM tiles GROUP BY cell
-),
-stats AS (SELECT count(*) AS n, avg(v) AS xbar FROM cells),
-decoded AS (
-  SELECT cell, v,
-         (cell - {GRID_RES} * {1 << 58}) // {1 << 29} AS i,
-         cell % {1 << 29} AS j
-  FROM cells
-),
-scattered AS (
-  SELECT {GRID_RES} * {1 << 58} + (i + di.x) * {1 << 29} + (j + dj.x) AS cell,
-         v AS xi
-  FROM decoded
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) di
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) dj
-  WHERE NOT (di.x = 0 AND dj.x = 0)
-),
-pairs AS (
-  SELECT s.xi, c.v AS xj FROM scattered s JOIN cells c ON s.cell = c.cell
-)
-SELECT st.n,
-       count(*) AS s0,
-       round(
-         (CAST(st.n AS DOUBLE) - 1.0)
-         * sum((p.xi - p.xj) * (p.xi - p.xj))
-         / (2.0 * count(*)
-            * (SELECT sum((v - st.xbar) * (v - st.xbar)) FROM cells)),
-         6
-       ) AS geary_c
-FROM pairs p CROSS JOIN stats st
-GROUP BY st.n, st.xbar
-"""
-
-_RIPLEY_RADII = [0.05, 0.1, 0.2]
-_RIPLEY_AREA = 8.0
-
-
-def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ripley's K point-pattern statistic (operators/spatial.py::
-    ripley_k) of the synthetic image points at three ranges — the
-    prefecture banding makes K(r) >> pi r^2 (clustered). The Spark
-    side is the 3x3 cell-bucketed pair join; the oracle is the
-    brute-force cross join, so a single dropped boundary pair
-    hash-mismatches."""
-    from ksj2gp_spark.operators.spatial import ripley_k
-
-    imgs = _images_from_customer(spark, sf_dir)
-    return ripley_k(imgs, radii=_RIPLEY_RADII, area=_RIPLEY_AREA)
-
-
-def _ripley_sql() -> str:
-    sels = []
-    for r in _RIPLEY_RADII:
-        r2 = float(r) * float(r)
-        sels.append(f"""
-SELECT CAST({float(r)!r} AS DOUBLE) AS r,
-       (SELECT count(*) FROM pairs WHERE d2 <= {r2!r}) AS n_pairs,
-       round(
-         {float(_RIPLEY_AREA)!r} * 2.0
-         * (SELECT count(*) FROM pairs WHERE d2 <= {r2!r})
-         / (SELECT d FROM nn), 6) AS k_hat""")
-    return (
-        f"WITH {_IMAGES_CTE.strip()},\n"
-        "pairs AS (\n"
-        "  SELECT (a.lon - b.lon) * (a.lon - b.lon)\n"
-        "         + (a.lat - b.lat) * (a.lat - b.lat) AS d2\n"
-        "  FROM images a JOIN images b ON a.image_id < b.image_id\n"
-        "),\n"
-        "nn AS (SELECT CAST(count(*) AS DOUBLE)\n"
-        "              * CAST(count(*) - 1 AS DOUBLE) AS d FROM images)\n"
-        + " UNION ALL ".join(sels)
-    )
-
-
-def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distributed DBSCAN (operators/spatial.py::dbscan, Ester
-    et al. 1996) over the synthetic image points: eps=0.06 deg,
-    min_pts=4 — the prefecture bands yield 44 clusters with a
-    core/border/noise mix at sf0.01. Spark prunes via the 3x3 cell-bucketed pair join +
-    connected components over core-core edges; the oracle is the
-    brute-force cross join + recursive-CTE min-label components, so
-    one dropped boundary pair or a wrong border/noise assignment
-    hash-mismatches."""
-    from ksj2gp_spark.operators.spatial import dbscan
-
-    imgs = _images_from_customer(spark, sf_dir)
-    return dbscan(imgs, eps=0.06, min_pts=4)
-
-
-_DBSCAN_SQL = f"""
-WITH RECURSIVE {_IMAGES_CTE.strip()},
-pairs AS (
-  SELECT a.image_id AS ida, b.image_id AS idb
-  FROM images a JOIN images b
-    ON (a.lon - b.lon) * (a.lon - b.lon)
-       + (a.lat - b.lat) * (a.lat - b.lat) <= 0.06 * 0.06
-),
-cnt AS (SELECT ida AS id, count(*) AS n_nbrs FROM pairs GROUP BY ida),
-cores AS (SELECT id FROM cnt WHERE n_nbrs >= 4),
-core_edges AS (
-  SELECT p.ida AS s, p.idb AS d
-  FROM pairs p
-  JOIN cores ca ON ca.id = p.ida
-  JOIN cores cb ON cb.id = p.idb
-),
-walk(node, label) AS (
-  SELECT s, s FROM core_edges
-  UNION
-  SELECT e.d, w.label FROM walk w JOIN core_edges e ON e.s = w.node
-),
-comp AS (SELECT node, MIN(label) AS component FROM walk GROUP BY node),
-nbr AS (
-  SELECT p.ida AS id, MIN(c.component) AS bl
-  FROM pairs p JOIN comp c ON c.node = p.idb
-  GROUP BY p.ida
-)
-SELECT n.id AS image_id,
-       COALESCE(c.component, b.bl, '') AS cluster,
-       (n.n_nbrs >= 4) AS is_core,
-       n.n_nbrs
-FROM cnt n
-LEFT JOIN comp c ON c.node = n.id
-LEFT JOIN nbr b ON b.id = n.id
-"""
-
-
-def q_kde_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epanechnikov splat heatmap (operators/spatial.py::kde_heatmap)
-    of the synthetic image points: bandwidth 0.1 deg on a 0.05-deg
-    grid (splat radius R=2, a 25-offset plan-time explode). One
-    map-side-combinable groupBy on the cell id; no driver collect.
-    The oracle replays the identical splat/refine arithmetic in
-    DuckDB; round-6 absorbs summation-order noise."""
-    from ksj2gp_spark.operators.spatial import kde_heatmap
-
-    imgs = _images_from_customer(spark, sf_dir)
-    return kde_heatmap(imgs, bandwidth=0.1, cell_size=0.05)
-
-
-_KDE_SQL = f"""
-WITH {_IMAGES_CTE.strip()},
-offs AS (
-  SELECT di.x AS di, dj.x AS dj
-  FROM range(-2, 3) di(x) CROSS JOIN range(-2, 3) dj(x)
-),
-splat AS (
-  SELECT i.lon AS x, i.lat AS y,
-         CAST(floor((i.lon + 180.0) / 0.05) AS BIGINT) + o.di AS ci,
-         CAST(floor((i.lat + 90.0) / 0.05) AS BIGINT) + o.dj AS cj
-  FROM images i CROSS JOIN offs o
-),
-refined AS (
-  SELECT ci, cj,
-         (x - ((ci + 0.5) * 0.05 - 180.0))
-           * (x - ((ci + 0.5) * 0.05 - 180.0))
-         + (y - ((cj + 0.5) * 0.05 - 90.0))
-           * (y - ((cj + 0.5) * 0.05 - 90.0)) AS d2
-  FROM splat
-)
-SELECT (ci + 0.5) * 0.05 - 180.0 AS cell_x,
-       (cj + 0.5) * 0.05 - 90.0 AS cell_y,
-       count(*) AS n_pts,
-       round(sum(1.0 - d2 / (0.1 * 0.1)), 6) AS kde
-FROM refined WHERE d2 < 0.1 * 0.1
-GROUP BY ci, cj
-"""
-
-
 def q_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GeoJSON writer→reader loop (sinks/geoparquet.py::
     to_geojson_features → formats/geojson.py::features_frame): the
@@ -4798,56 +4352,6 @@ FROM polys
 """
 
 
-def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level distributed convex hull (operators/spatial.py::
-    convex_hull_per_group): image points split into 3 deterministic
-    groups, each augmented with 4 planted corner points that strictly
-    bound the data — the hull must come back as EXACTLY those corners
-    in canonical CCW/lex-min order. Any point leaking the partial-
-    hull merge, a wrong orientation, or a dropped shard changes
-    n_vertices/area/WKT and hash-mismatches."""
-    import pandas as pd
-
-    imgs = _images_from_customer(spark, sf_dir)
-    key = F.substring("image_id", 4, 8).cast("long")
-    pts = imgs.select(
-        F.concat(F.lit("g"), (key % 3).cast("string")).alias("grp"),
-        "lon",
-        "lat",
-    )
-    corners = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                (f"g{g}", x, y)
-                for g in range(3)
-                for x, y in [
-                    (138.0, 34.0),
-                    (143.0, 34.0),
-                    (143.0, 38.0),
-                    (138.0, 38.0),
-                ]
-            ],
-            columns=["grp", "lon", "lat"],
-        )
-    )
-    from ksj2gp_spark.operators.spatial import convex_hull_per_group
-
-    return convex_hull_per_group(pts.unionAll(corners), group_col="grp")
-
-
-_HULL_WKT = (
-    "POLYGON ((138.0 34.0, 143.0 34.0, 143.0 38.0, 138.0 38.0, "
-    "138.0 34.0))"
-)
-_HULL_SQL = f"""
-SELECT 'g' || CAST(g AS VARCHAR) AS grp,
-       4 AS n_vertices,
-       20.0 AS area,
-       '{_HULL_WKT}' AS hull_wkt
-FROM range(0, 3) t(g)
-"""
-
-
 def q_wkt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WKT serialize→parse loop (geo/wkt.py) over the fixture layer:
     WKB → WKT text → parse → bbox from the re-decoded geometry, in
@@ -4893,480 +4397,6 @@ def q_wkt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("x1", 9).alias("xmax"),
         F.round("y1", 9).alias("ymax"),
     )
-
-
-def q_quadrat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quadrat-count CSR test (operators/spatial.py::quadrat_test)
-    over the image points at 0.1-deg quadrats — the banded
-    distribution rejects CSR with chi2 >> k-1. Empty quadrats enter
-    in closed form; the oracle replays the bbox-anchored tiling and
-    the analytic correction."""
-    from ksj2gp_spark.operators.spatial import quadrat_test
-
-    return quadrat_test(
-        _images_from_customer(spark, sf_dir), cell_size=0.1
-    )
-
-
-_QUADRAT_SQL = f"""
-WITH {_IMAGES_CTE.strip()},
-bbox AS (
-  SELECT count(*) AS n, min(lon) AS x0, max(lon) AS x1,
-         min(lat) AS y0, max(lat) AS y1
-  FROM images
-),
-dims AS (
-  SELECT n, x0, y0,
-         greatest(1, CAST(floor((x1 - x0) / 0.1) AS BIGINT) + 1) AS kx,
-         greatest(1, CAST(floor((y1 - y0) / 0.1) AS BIGINT) + 1) AS ky
-  FROM bbox
-),
-occ AS (
-  SELECT least(CAST(floor((i.lon - d.x0) / 0.1) AS BIGINT), d.kx - 1)
-           * d.ky
-         + least(CAST(floor((i.lat - d.y0) / 0.1) AS BIGINT), d.ky - 1)
-           AS q,
-         count(*) AS o
-  FROM images i CROSS JOIN dims d
-  GROUP BY 1
-),
-agg AS (
-  SELECT count(*) AS m,
-         sum((o - (SELECT CAST(n AS DOUBLE) / (kx * ky) FROM dims))
-             * (o - (SELECT CAST(n AS DOUBLE) / (kx * ky) FROM dims))
-             / (SELECT CAST(n AS DOUBLE) / (kx * ky) FROM dims)) AS chi_occ
-  FROM occ
-)
-SELECT (SELECT n FROM dims) AS n,
-       (SELECT kx * ky FROM dims) AS k,
-       m AS occupied,
-       round(chi_occ
-             + ((SELECT kx * ky FROM dims) - m)
-               * (SELECT CAST(n AS DOUBLE) / (kx * ky) FROM dims),
-             6) AS chi2
-FROM agg
-"""
-
-
-def q_std_ellipse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standard deviational ellipse (operators/spatial.py::
-    std_ellipse) of the image points — mean center, rotation, and
-    axis standard deviations from one six-double aggregation; the
-    oracle computes the identical closed form in DuckDB."""
-    from ksj2gp_spark.operators.spatial import std_ellipse
-
-    return std_ellipse(_images_from_customer(spark, sf_dir))
-
-
-_ELLIPSE_SQL = f"""
-WITH {_IMAGES_CTE.strip()},
-mom AS (
-  SELECT count(*) AS n,
-         sum(lon) AS sx, sum(lat) AS sy,
-         sum(lon * lon) AS sxx, sum(lat * lat) AS syy,
-         sum(lon * lat) AS sxy
-  FROM images
-),
-ctr AS (
-  SELECT n, sx / n AS cx, sy / n AS cy,
-         sxx / n - (sx / n) * (sx / n) AS mxx,
-         syy / n - (sy / n) * (sy / n) AS myy,
-         sxy / n - (sx / n) * (sy / n) AS mxy
-  FROM mom
-),
-ang AS (
-  SELECT n, cx, cy, mxx, myy, mxy,
-         0.5 * atan2(2.0 * mxy, mxx - myy) AS theta
-  FROM ctr
-)
-SELECT CAST(n AS BIGINT) AS n,
-       round(cx, 6) AS cx, round(cy, 6) AS cy,
-       round(theta, 6) AS theta,
-       round(sqrt(greatest(
-         mxx * cos(theta) * cos(theta)
-         + 2.0 * mxy * sin(theta) * cos(theta)
-         + myy * sin(theta) * sin(theta), 0.0)), 6) AS sx,
-       round(sqrt(greatest(
-         mxx * sin(theta) * sin(theta)
-         - 2.0 * mxy * sin(theta) * cos(theta)
-         + myy * cos(theta) * cos(theta), 0.0)), 6) AS sy
-FROM ang
-"""
-
-
-def q_general_g(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Getis-Ord General G (operators/spatial.py::general_g) over the
-    tile raster — the global high/low clustering complement to the
-    local gi_star lane over the identical cells."""
-    from ksj2gp_spark.operators.spatial import general_g
-
-    cells = (
-        _tiles(spark, sf_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
-    )
-    return general_g(cells, res=GRID_RES)
-
-
-_GENERAL_G_SQL = f"""
-WITH tiles AS ({{tiles}}),
-cells AS (
-  SELECT cell, CAST(count(*) AS DOUBLE) AS v FROM tiles GROUP BY cell
-),
-scal AS (
-  SELECT count(*) AS n, sum(v) AS sx, sum(v * v) AS sxx FROM cells
-),
-decoded AS (
-  SELECT cell, v,
-         (cell - {GRID_RES} * {1 << 58}) // {1 << 29} AS i,
-         cell % {1 << 29} AS j
-  FROM cells
-),
-scattered AS (
-  SELECT v AS xi,
-         {GRID_RES} * {1 << 58} + (i + di.x) * {1 << 29} + (j + dj.x)
-           AS cell
-  FROM decoded
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) di
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) dj
-  WHERE NOT (di.x = 0 AND dj.x = 0)
-),
-num AS (
-  SELECT count(*) AS s0, sum(s.xi * c.v) AS nm
-  FROM scattered s JOIN cells c ON c.cell = s.cell
-)
-SELECT CAST(sc.n AS BIGINT) AS n, num.s0,
-       round(num.nm / (sc.sx * sc.sx - sc.sxx), 6) AS general_g
-FROM num CROSS JOIN scal sc
-"""
-
-
-def q_knox(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Knox space-time interaction (operators/spatial.py::knox_test)
-    over the user<30 event subset with deterministic positions
-    (per-user 1-deg base + 0.08-deg event jitter): same-user events
-    cluster in space, bursts cluster in time — knox_ratio measures
-    the joint excess. delta=0.05 deg, tau=6 h. The oracle is the
-    brute-force pair enumeration with identical integer-microsecond
-    and double arithmetic."""
-    from ksj2gp_spark.operators.spatial import knox_test
-
-    ev = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).filter(F.col("user_id") < 30)
-    jx = (
-        ((F.col("event_id") * F.lit(97) + F.lit(13)) * F.lit(_MIX))
-        % F.lit(_MOD)
-    ) / F.lit(float(_MOD)) * F.lit(0.08)
-    jy = (
-        ((F.col("event_id") * F.lit(31) + F.lit(7)) * F.lit(_MIX))
-        % F.lit(_MOD)
-    ) / F.lit(float(_MOD)) * F.lit(0.08)
-    pts = ev.select(
-        "event_id",
-        "ts",
-        (
-            F.lit(135.0)
-            + (F.col("user_id") % F.lit(10)).cast("double")
-            + jx
-        ).alias("lon"),
-        (
-            F.lit(34.0)
-            + (F.col("user_id") % F.lit(7)).cast("double") * F.lit(0.5)
-            + jy
-        ).alias("lat"),
-    )
-    return knox_test(pts, delta=0.05, tau_us=6 * 3600 * 10**6)
-
-
-_KNOX_SQL = f"""
-WITH pts AS (
-  SELECT event_id,
-         epoch_us(ts) AS t,
-         135.0 + CAST(user_id % 10 AS DOUBLE)
-           + ((event_id * 97 + 13) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.08
-           AS lon,
-         34.0 + CAST(user_id % 7 AS DOUBLE) * 0.5
-           + ((event_id * 31 + 7) * {_MIX} % {_MOD}) / {float(_MOD)} * 0.08
-           AS lat
-  FROM events WHERE user_id < 30
-),
-pairs AS (
-  SELECT
-    ((a.lon - b.lon) * (a.lon - b.lon)
-     + (a.lat - b.lat) * (a.lat - b.lat) <= 0.05 * 0.05) AS sp,
-    (abs(a.t - b.t) <= {6 * 3600 * 10**6}) AS tm
-  FROM pts a JOIN pts b ON a.event_id < b.event_id
-),
-agg AS (
-  SELECT count(*) AS n_pairs,
-         sum(CASE WHEN sp THEN 1 ELSE 0 END) AS n_space,
-         sum(CASE WHEN tm THEN 1 ELSE 0 END) AS n_time,
-         sum(CASE WHEN sp AND tm THEN 1 ELSE 0 END) AS n_spacetime
-  FROM pairs
-)
-SELECT CAST(n_pairs AS BIGINT) AS n_pairs,
-       CAST(n_space AS BIGINT) AS n_space,
-       CAST(n_time AS BIGINT) AS n_time,
-       CAST(n_spacetime AS BIGINT) AS n_spacetime,
-       round(
-         CAST(n_spacetime AS DOUBLE)
-         / (CAST(n_space AS DOUBLE) * CAST(n_time AS DOUBLE)
-            / CAST(n_pairs AS DOUBLE)),
-         6
-       ) AS knox_ratio
-FROM agg
-"""
-
-
-def q_cross_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bivariate cross-K (operators/spatial.py::cross_k): attraction
-    between even- and odd-custkey image points (interleaved in the
-    same prefecture bands, so K_ab >> pi r^2). Spark runs the 3x3
-    cell-bucket pair join; the oracle is the brute-force cross join
-    between the two sets."""
-    from ksj2gp_spark.operators.spatial import cross_k
-
-    imgs = _images_from_customer(spark, sf_dir)
-    key = F.substring("image_id", 4, 8).cast("long")
-    a = imgs.filter(key % 2 == 0)
-    b = imgs.filter(key % 2 == 1)
-    return cross_k(a, b, radii=_RIPLEY_RADII, area=_RIPLEY_AREA)
-
-
-def _cross_k_sql() -> str:
-    sels = []
-    for r in _RIPLEY_RADII:
-        r2 = float(r) * float(r)
-        sels.append(f"""
-SELECT CAST({float(r)!r} AS DOUBLE) AS r,
-       (SELECT count(*) FROM pairs WHERE d2 <= {r2!r}) AS n_pairs,
-       round(
-         {float(_RIPLEY_AREA)!r}
-         * (SELECT count(*) FROM pairs WHERE d2 <= {r2!r})
-         / (SELECT d FROM nn), 6) AS k_ab""")
-    return (
-        f"WITH {_IMAGES_CTE.strip()},\n"
-        "ia AS (SELECT * FROM images\n"
-        "       WHERE CAST(substring(image_id, 4, 8) AS BIGINT) % 2 = 0),\n"
-        "ib AS (SELECT * FROM images\n"
-        "       WHERE CAST(substring(image_id, 4, 8) AS BIGINT) % 2 = 1),\n"
-        "pairs AS (\n"
-        "  SELECT (a.lon - b.lon) * (a.lon - b.lon)\n"
-        "         + (a.lat - b.lat) * (a.lat - b.lat) AS d2\n"
-        "  FROM ia a CROSS JOIN ib b\n"
-        "),\n"
-        "nn AS (SELECT (SELECT CAST(count(*) AS DOUBLE) FROM ia)\n"
-        "            * (SELECT CAST(count(*) AS DOUBLE) FROM ib) AS d)\n"
-        + " UNION ALL ".join(sels)
-    )
-
-
-def q_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-count statistics (operators/spatial.py::join_counts) over
-    the tile raster labeled hot/cold by per-cell image count >= 10:
-    exact integer BB/WW/BW neighbor-pair counts — the categorical
-    complement to Moran's I over the identical cells."""
-    from ksj2gp_spark.operators.spatial import join_counts
-
-    cells = (
-        _tiles(spark, sf_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            "cell",
-            F.when(F.col("_n") >= 10, F.lit("hot"))
-            .otherwise(F.lit("cold"))
-            .alias("label"),
-        )
-    )
-    return join_counts(cells, res=GRID_RES)
-
-
-_JOIN_COUNTS_SQL = f"""
-WITH tiles AS ({{tiles}}),
-cells AS (
-  SELECT cell,
-         CASE WHEN count(*) >= 10 THEN 'hot' ELSE 'cold' END AS label
-  FROM tiles GROUP BY cell
-),
-decoded AS (
-  SELECT cell, label,
-         (cell - {GRID_RES} * {1 << 58}) // {1 << 29} AS i,
-         cell % {1 << 29} AS j
-  FROM cells
-),
-scattered AS (
-  SELECT label AS la,
-         {GRID_RES} * {1 << 58} + (i + di.x) * {1 << 29} + (j + dj.x)
-           AS cell
-  FROM decoded
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) di
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) dj
-  WHERE NOT (di.x = 0 AND dj.x = 0)
-),
-pairs AS (
-  SELECT s.la, c.label AS lb
-  FROM scattered s JOIN cells c ON c.cell = s.cell
-)
-SELECT least(la, lb) AS label_lo, greatest(la, lb) AS label_hi,
-       CAST(count(*) / 2 AS BIGINT) AS n_joins
-FROM pairs GROUP BY least(la, lb), greatest(la, lb)
-"""
-
-
-def q_areal_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Area-weighted areal interpolation (operators/spatial.py::
-    areal_interpolate): the admin rectangle layer's planted value
-    (admin_code % 97) reaggregated onto the convex overlay windows —
-    est(t) = sum v_src * A(src∩t)/A(src) through the exact clip
-    kernel; the oracle computes the same shares in closed form on the
-    rectangle bounds."""
-    import pandas as pd
-
-    from ksj2gp_spark.geo import wkb as _wkb_mod
-    from ksj2gp_spark.operators.spatial import areal_interpolate
-
-    layer = fixtures.polygon_layer()
-    left = spark.createDataFrame(
-        layer[["polygon_id", "geometry", "行政区域コード"]]
-    ).select(
-        "polygon_id",
-        "geometry",
-        (F.col("行政区域コード").cast("long") % F.lit(97))
-        .cast("double")
-        .alias("pop"),
-    )
-    wins = pd.DataFrame(
-        {
-            "polygon_id": [w[0] for w in _OVERLAY_WINDOWS],
-            "geometry": [
-                _wkb_mod.polygon(
-                    [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
-                )
-                for _, x0, y0, x1, y1 in _OVERLAY_WINDOWS
-            ],
-        }
-    )
-    return areal_interpolate(
-        left, wins, value_col="pop", scheme="grid", res=10
-    )
-
-
-def _areal_sql() -> str:
-    rows = ", ".join(
-        f"('{w}', {x0!r}, {y0!r}, {x1!r}, {y1!r})"
-        for w, x0, y0, x1, y1 in _OVERLAY_WINDOWS
-    )
-    return f"""
-WITH {_polys_values_sql()},
-wins(win_id, wx0, wy0, wx1, wy1) AS (VALUES {rows}),
-pairs AS (
-  SELECT p.polygon_id, w.win_id,
-         (least(p.xmax, w.wx1) - greatest(p.xmin, w.wx0))
-         * (least(p.ymax, w.wy1) - greatest(p.ymin, w.wy0)) AS ia,
-         (p.xmax - p.xmin) * (p.ymax - p.ymin) AS sa,
-         CAST(CAST(p.admin_code AS BIGINT) % 97 AS DOUBLE) AS v
-  FROM polys p JOIN wins w
-    ON least(p.xmax, w.wx1) > greatest(p.xmin, w.wx0)
-   AND least(p.ymax, w.wy1) > greatest(p.ymin, w.wy0)
-)
-SELECT win_id AS target_id, count(*) AS n_sources,
-       round(sum(v * ia / sa), 6) AS est_value
-FROM pairs GROUP BY win_id
-"""
-
-
-def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Emerging hot-spot analysis (operators/spatial.py::
-    emerging_hotspots): the tile raster split into 4 deterministic
-    time bins (custkey % 4) with a planted per-bin growth term
-    t * (cell % 5), per-bin Gi* z-scores (round-6) and the exact-
-    integer Mann-Kendall S per cell. The oracle replays bins, Gi*,
-    and the sign sum in one DuckDB query."""
-    from ksj2gp_spark.operators.spatial import emerging_hotspots
-
-    tiles = _tiles(spark, sf_dir)
-    binned = tiles.select(
-        "cell",
-        (F.substring("image_id", 4, 8).cast("long") % F.lit(4)).alias(
-            "t_bin"
-        ),
-    )
-    cells = binned.groupBy("cell", "t_bin").agg(
-        (
-            F.count(F.lit(1)).cast("double")
-            + (F.col("t_bin") * (F.col("cell") % F.lit(5))).cast("double")
-        ).alias("value")
-    )
-    return emerging_hotspots(cells, res=GRID_RES)
-
-
-_EMERGING_SQL = f"""
-WITH tiles AS ({{tiles}}),
-binned AS (
-  SELECT cell, CAST(substring(image_id, 4, 8) AS BIGINT) % 4 AS t
-  FROM tiles
-),
-cells AS (
-  SELECT cell, t,
-         CAST(count(*) AS DOUBLE) + CAST(t * (cell % 5) AS DOUBLE) AS v
-  FROM binned GROUP BY cell, t
-),
-stats AS (
-  SELECT t, count(*) AS n, avg(v) AS xbar, stddev_pop(v) AS s
-  FROM cells GROUP BY t
-  HAVING count(*) >= 2 AND stddev_pop(v) > 0
-),
-decoded AS (
-  SELECT cell, t, v,
-         (cell - {GRID_RES} * {1 << 58}) // {1 << 29} AS i,
-         cell % {1 << 29} AS j
-  FROM cells
-),
-scattered AS (
-  SELECT t,
-         {GRID_RES} * {1 << 58} + (i + di.x) * {1 << 29} + (j + dj.x)
-           AS cell,
-         v
-  FROM decoded
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) di
-  CROSS JOIN (SELECT unnest(generate_series(-1, 1)) AS x) dj
-),
-nbr AS (
-  SELECT s.t, s.cell, count(*) AS w_i, sum(s.v) AS si
-  FROM scattered s
-  JOIN (SELECT DISTINCT cell, t FROM cells) p
-    ON s.cell = p.cell AND s.t = p.t
-  GROUP BY s.t, s.cell
-),
-z AS (
-  SELECT nbr.t, nbr.cell,
-         round(
-           (nbr.si - st.xbar * nbr.w_i)
-           / (st.s * sqrt((CAST(st.n AS DOUBLE) * nbr.w_i
-                           - nbr.w_i * nbr.w_i)
-                          / CAST(st.n - 1 AS DOUBLE))),
-           6
-         ) AS z
-  FROM nbr JOIN stats st ON st.t = nbr.t
-  WHERE nbr.w_i < st.n
-),
-mk AS (
-  SELECT a.cell,
-         SUM(CASE WHEN b.z > a.z THEN 1
-                  WHEN b.z < a.z THEN -1 ELSE 0 END) AS s_mk
-  FROM z a JOIN z b ON a.cell = b.cell AND a.t < b.t
-  GROUP BY a.cell
-),
-nb AS (SELECT cell, count(*) AS n_bins FROM z GROUP BY cell)
-SELECT nb.cell, nb.n_bins,
-       CAST(COALESCE(mk.s_mk, 0) AS BIGINT) AS s_mk,
-       CASE WHEN mk.s_mk > 0 THEN 'intensifying'
-            WHEN mk.s_mk < 0 THEN 'diminishing'
-            ELSE 'flat' END AS trend
-FROM nb LEFT JOIN mk ON mk.cell = nb.cell
-"""
 
 
 _TEXTRANK_ITERS = 6
@@ -5460,8 +4490,8 @@ def q_image_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     side labels every blob in an Arrow batch simultaneously with a
     batch-tensor min-label flood; the oracle re-derives the mask from
     the pixel formula and closes components with a recursive min-label
-    CTE (the dbscan-oracle pattern applied to pixels) — all-integer, so
-    a single mislabeled pixel hash-mismatches."""
+    CTE over 4-neighbor pixel pairs — all-integer, so a single
+    mislabeled pixel hash-mismatches."""
     from ksj2gp_spark import fixtures
     from ksj2gp_spark.operators.images import blob_stats
 
@@ -6214,22 +5244,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semdedup": q_semdedup,
         "line_dedup": q_line_dedup,
         "classifier_score": q_classifier_score,
-        "idw_interpolate": q_idw_interpolate,
-        "focal_mean": q_focal_mean,
         "dihedral_dedup": q_dihedral_dedup,
-        "morans_i": q_morans_i,
-        "local_morans": q_local_morans,
         "bigram_pmi": q_bigram_pmi,
-        "gi_star": q_gi_star,
         "group_trend": q_group_trend,
         "scrub_pii": q_scrub_pii,
         "triangle_counts": q_triangle_counts,
         "pagerank_parts": q_pagerank,
         "bfs_hops": q_bfs_hops,
-        "geary_c": q_geary_c,
-        "ripley_k": q_ripley_k,
-        "dbscan_clusters": q_dbscan,
-        "kde_heatmap": q_kde_heatmap,
         "sssp_dists": q_sssp,
         "textrank_keywords": q_textrank,
         "isochrone_bands": q_isochrone_bands,
@@ -6237,17 +5258,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "admin_image_quality": q_admin_image_quality,
         "contour_tiles": q_contour_tiles,
         "contour_lines": q_contour_lines,
-        "emerging_hotspots": q_emerging_hotspots,
-        "areal_interpolate": q_areal_interpolate,
-        "cross_k": q_cross_k,
-        "knox_spacetime": q_knox,
-        "quadrat_csr": q_quadrat,
         "geojson_roundtrip": q_geojson_roundtrip,
         "wkt_roundtrip": q_wkt_roundtrip,
-        "convex_hull": q_convex_hull,
-        "std_ellipse": q_std_ellipse,
-        "general_g": q_general_g,
-        "join_counts": q_join_counts,
     }
 
 
@@ -6366,22 +5378,13 @@ GROUP BY p.admin_code
         "semdedup": _semdedup_sql(),
         "line_dedup": _LINE_DEDUP_SQL,
         "classifier_score": _CLASSIFIER_SQL,
-        "idw_interpolate": _IDW_SQL,
-        "focal_mean": _FOCAL_SQL,
         "dihedral_dedup": _DIHEDRAL_SQL,
-        "morans_i": _MORANS_SQL,
-        "local_morans": _LOCAL_MORANS_SQL,
         "bigram_pmi": _BIGRAM_PMI_SQL,
-        "gi_star": _GI_STAR_SQL,
         "group_trend": _GROUP_TREND_SQL,
         "scrub_pii": _scrub_sql(),
         "triangle_counts": _TRIANGLE_SQL,
         "pagerank_parts": _pagerank_sql(),
         "bfs_hops": _BFS_SQL,
-        "geary_c": _GEARY_SQL,
-        "ripley_k": _ripley_sql(),
-        "dbscan_clusters": _DBSCAN_SQL,
-        "kde_heatmap": _KDE_SQL,
         "sssp_dists": _SSSP_SQL,
         "textrank_keywords": _textrank_sql(),
         "isochrone_bands": _ISOCHRONE_SQL,
@@ -6389,15 +5392,6 @@ GROUP BY p.admin_code
         "admin_image_quality": _ADMIN_QUALITY_SQL.format(tiles=_TILES_SQL.strip()),
         "contour_tiles": _contour_sql().format(tiles=_TILES_SQL.strip()),
         "contour_lines": _contour_lines_sql(),
-        "emerging_hotspots": _EMERGING_SQL.format(tiles=_TILES_SQL.strip()),
-        "areal_interpolate": _areal_sql(),
-        "cross_k": _cross_k_sql(),
-        "knox_spacetime": _KNOX_SQL,
-        "quadrat_csr": _QUADRAT_SQL,
         "geojson_roundtrip": _geojson_sql(),
         "wkt_roundtrip": _geojson_sql(),
-        "convex_hull": _HULL_SQL,
-        "std_ellipse": _ELLIPSE_SQL,
-        "general_g": _GENERAL_G_SQL.format(tiles=_TILES_SQL.strip()),
-        "join_counts": _JOIN_COUNTS_SQL.format(tiles=_TILES_SQL.strip()),
     }

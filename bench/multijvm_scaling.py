@@ -1,6 +1,5 @@
-"""Multi-JVM scaling probe for the iterative-shuffle operators
-(connected components + DBSCAN full pipeline) — the round-4 verdict's
-open question #1.
+"""Multi-JVM scaling probe for the iterative-shuffle connected-components
+operator — the round-4 verdict's open question #1.
 
 BENCH_SCALING.md documents that on ONE local-mode JVM the cc lane's
 4→16-core efficiency lands at 0.18–0.47 for EVERY algorithmic variant,
@@ -23,20 +22,18 @@ north_rule-shaped number; ``local16`` vs ``lc4x4`` at equal cores
 isolates the single-JVM transport term directly (multi-JVM faster ⇒
 ceiling confirmed as a local-mode artifact, not an algorithmic limit).
 
-Jobs are byte-identical across levels: the cc job pins
+The job is byte-identical across levels: it pins
 ``num_partitions=64`` and the planted-census assertion from
-bench/cc_scaling.py; the DBSCAN job is bench/dbscan_scaling.py's
-sub-percolation field with shuffle.partitions pinned to 64. The
-package reaches executor Python workers via PYTHONPATH (the probe also
-works with the dist/ksj2gp_spark.zip --py-files artifact;
-bench/package.py builds it).
+bench/cc_scaling.py. The package reaches executor Python workers via
+PYTHONPATH (the probe also works with the dist/ksj2gp_spark.zip
+--py-files artifact; bench/package.py builds it).
 
 Usage::
 
-    python bench/multijvm_scaling.py            # cc 8M + dbscan 1M
-    CC_N=32000000 python bench/multijvm_scaling.py --cc-only
+    python bench/multijvm_scaling.py            # cc 8M edges
+    CC_N=32000000 python bench/multijvm_scaling.py
 
-→ one JSON line per job + a combined summary line.
+→ a ``# done:`` line per run + one JSON summary line.
 """
 
 from __future__ import annotations
@@ -111,38 +108,6 @@ print(json.dumps({
 spark.stop()
 """
 
-DBSCAN_RUNNER = _SESSION + """
-from ksj2gp_spark.operators.spatial import dbscan
-
-n = int(sys.argv[2])
-width = float(sys.argv[3]); eps = float(sys.argv[4])
-MOD = 1 << 31
-k = F.col("id")
-pts = spark.range(0, n, 1, 64).select(
-    k.alias("image_id"),
-    (F.pmod(F.xxhash64(k), F.lit(MOD)) / float(MOD) * width).alias("lon"),
-    (F.pmod(F.xxhash64(k, F.lit(1)), F.lit(MOD)) / float(MOD) * width)
-        .alias("lat"),
-)
-
-def job():
-    out = dbscan(pts, eps=eps, min_pts=4)
-    return out.filter(F.col("cluster").isNotNull()).count()
-
-job()  # warm (JIT + shuffle shape)
-best = None; clustered = None
-for _ in range(2):
-    t0 = time.time()
-    clustered = job()
-    dt = time.time() - t0
-    best = dt if best is None else min(best, dt)
-print(json.dumps({
-    "master": master, "n": n, "clustered": clustered,
-    "wall_sec": round(best, 3), "points_per_sec": round(n / best),
-}))
-spark.stop()
-"""
-
 _ALL_LEVELS = {
     "lc1x4": "local-cluster[1,4,10240]",
     "lc4x4": "local-cluster[4,4,10240]",
@@ -182,10 +147,7 @@ def probe(name: str, runner: str, args: list[str], repeats: int) -> dict:
             runs[key].append(run(runner, master, args))
             time.sleep(8)  # let worker JVMs die fully
     best = {k: min(v, key=lambda r: r["wall_sec"]) for k, v in runs.items()}
-    answer_key = "census" if "census" in next(iter(best.values())) else (
-        "clustered"
-    )
-    answers = {json.dumps(v[answer_key], sort_keys=True) for v in
+    answers = {json.dumps(v["census"], sort_keys=True) for v in
                best.values()}
     assert len(answers) == 1, "executor topology changed the answer"
     res = {
@@ -210,31 +172,8 @@ def probe(name: str, runner: str, args: list[str], repeats: int) -> dict:
 
 def main() -> None:
     cc_n = int(os.environ.get("CC_N", "8000000"))
-    db_n = int(os.environ.get("DBSCAN_N", "1000000"))
     repeats = int(os.environ.get("SCALE_REPEATS", "2"))
-    jobs = sys.argv[1:] or ["cc", "dbscan"]
-    out = {}
-    if "cc" in jobs or "--cc-only" in jobs:
-        out["cc"] = probe("connected_components", CC_RUNNER,
-                          [str(cc_n)], repeats)
-    if ("dbscan" in jobs or "--dbscan-only" in jobs) and (
-        "--cc-only" not in jobs
-    ):
-        import math
-
-        width = 100.0 * math.sqrt(db_n / 1_000_000)
-        out["dbscan"] = probe(
-            "dbscan_full", DBSCAN_RUNNER,
-            [str(db_n), str(width), "0.045"], repeats,
-        )
-    print(json.dumps({"summary": {
-        k: {
-            "eff_1x4_to_4x4":
-                v.get("executor_scaling_efficiency_1x4_to_4x4"),
-            "multi_vs_single_16c":
-                v.get("multi_jvm_speedup_vs_single_jvm_16c"),
-        } for k, v in out.items()
-    }}))
+    probe("connected_components", CC_RUNNER, [str(cc_n)], repeats)
 
 
 if __name__ == "__main__":

@@ -536,8 +536,8 @@ def blob_stats(
       (image_id, mask_pixels, n_blobs, largest_blob)
 
     all exact integers, so an external engine can replay them from the
-    pixel formula with a recursive min-label closure — the oracle
-    contract (the dbscan-oracle pattern applied to pixels).
+    pixel formula with a recursive min-label closure (connected
+    components as a recursive CTE over 4-neighbor pixel pairs).
 
     One mapInPandas pass; the labeling is a BATCH-TENSOR min-label
     flood: every image in the Arrow batch is padded into one

@@ -450,9 +450,9 @@ def slope_aspect(
 ) -> DataFrame:
     """Slope / aspect map algebra over a sparse grid raster — Horn's
     1981 third-order finite difference (the standard desktop-GIS
-    terrain operator), distributed with the focal_mean scatter-gather
-    shape: every cell scatters its value to its 9-cell Moore
-    neighborhood tagged with the receiver-relative offset, ONE
+    terrain operator), distributed as a scatter-gather: every cell
+    scatters its value to its 9-cell Moore neighborhood tagged with
+    the receiver-relative offset, ONE
     map-side-combinable groupBy reassembles each center's 3x3 window
     via conditional sums, and ONLY cells with the full 9-cell window
     emit (the explicit exact-lane rule — edge cells drop rather than

@@ -47,6 +47,37 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
 
 QUERY_NAMES = sorted(entry_mod.queries().keys())
 
+# The contract check samples the first 50 registry keys, so deleting
+# or reordering queries must leave this head untouched.
+REGISTRY_HEAD = [
+    "tile_assign", "tile_assign_dist", "tile_counts", "knn_ocean",
+    "hex_tile_counts", "s2_tile_counts", "codelist_translate",
+    "codelist_families", "temporal_tiles", "temporal_asof",
+    "lineitem_pricing", "top_orders", "regional_revenue",
+    "events_tumbling", "events_sliding", "events_attribution",
+    "dedup_exact", "doc_token_stats", "doc_repetition", "decontaminate",
+    "lm_quality", "dsir_score", "mixture_sample", "ppl_buckets",
+    "similarity_topk", "hard_negatives", "ngram_jaccard", "doc_quality",
+    "sessionize_batch", "corpus_curation", "curate_images", "seq_pack",
+    "select_budget", "duplicate_spans", "batch_pack",
+    "image_training_batches", "phash_incremental",
+    "embedding_incremental", "ivf_search", "corpus_split",
+    "minhash_relational", "minhash_incremental", "minhash_pairs",
+    "simhash_pairs", "lang_id", "embedding_near_dups",
+    "image_decode_verify", "phash_near_dups", "media_features",
+    "video_frames",
+]
+
+
+def test_registry_head_is_pinned():
+    assert list(entry_mod.queries())[:50] == REGISTRY_HEAD
+
+
+def test_query_and_oracle_keys_match():
+    queries, oracles = set(entry_mod.queries()), set(entry_mod.oracle_sql())
+    assert queries - oracles == set(), "queries without an oracle"
+    assert oracles - queries == set(), "oracles without a query"
+
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, ddb, name):
@@ -54,8 +85,6 @@ def test_query_matches_oracle(spark, ddb, name):
     oracles = entry_mod.oracle_sql()
     sdf = q(spark, SF_DIR).toPandas()
     assert len(sdf) > 0, f"{name}: empty Spark result"
-    if name not in oracles:
-        pytest.skip(f"{name}: rows-only check (no SQL oracle)")
     odf = ddb.sql(oracles[name]).df()
     assert len(sdf) == len(odf), f"{name}: row count {len(sdf)} vs {len(odf)}"
     a, b = _canon(sdf), _canon(odf)

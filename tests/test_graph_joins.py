@@ -709,7 +709,6 @@ class TestReliableCheckpoint:
             pagerank,
             sssp_distances,
         )
-        from ksj2gp_spark.operators.spatial import dbscan
 
         ck = str(tmp_path / "ck")
         edges = [(i, i + 1) for i in range(50)] + [(10, 40), (60, 61)]
@@ -748,28 +747,6 @@ class TestReliableCheckpoint:
             for r in sssp_distances(wdf, checkpoint_dir=ck).collect()
         }
         assert ss_b == ss_r
-        import pandas as pd
-
-        pts = pd.DataFrame(
-            {
-                "image_id": [f"p{i:02d}" for i in range(20)],
-                "lon": [i * 0.01 for i in range(10)] + [5 + i for i in range(10)],
-                "lat": [0.0] * 10 + [50.0 + i for i in range(10)],
-            }
-        )
-        pdf = spark.createDataFrame(pts)
-        db_b = sorted(
-            map(tuple, dbscan(pdf, eps=0.015, min_pts=3).collect())
-        )
-        db_r = sorted(
-            map(
-                tuple,
-                dbscan(
-                    pdf, eps=0.015, min_pts=3, checkpoint_dir=ck
-                ).collect(),
-            )
-        )
-        assert db_b == db_r
 
     def test_survives_executor_kill(self, tmp_path):
         """Crash injection: run cc under local-cluster[2,2], SIGKILL

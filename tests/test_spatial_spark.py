@@ -955,1458 +955,6 @@ class TestDwithinShuffle:
             sp.dwithin_join_shuffle(pts, spark.createDataFrame(polys), -1.0)
 
 
-class TestIdwInterpolate:
-    def test_hand_computed_and_radius(self, spark):
-        """One target with two in-range stations (d2 = 0.01^2 and
-        0.02^2) and one out-of-range: IDW = weighted toward the closer
-        station; a coverage-less target is dropped."""
-        import pandas as pd
-
-        targets = spark.createDataFrame(
-            pd.DataFrame(
-                {"target_id": [1, 2], "lon": [140.0, 180.0], "lat": [36.0, 0.0]}
-            )
-        )
-        stations = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "station_id": ["a", "b", "c"],
-                    "lon": [140.01, 140.0, 141.0],
-                    "lat": [36.0, 36.02, 36.0],
-                    "value": [10.0, 40.0, 1000.0],
-                }
-            )
-        )
-        from ksj2gp_spark.operators.spatial import idw_interpolate
-
-        rows = idw_interpolate(targets, stations, radius=0.05).collect()
-        assert len(rows) == 1 and rows[0]["target_id"] == 1
-        assert rows[0]["n_stations"] == 2
-        w1, w2 = 1.0 / 0.01**2, 1.0 / 0.02**2
-        expect = round((10.0 * w1 + 40.0 * w2) / (w1 + w2), 6)
-        assert abs(rows[0]["idw_value"] - expect) < 1e-9
-
-    def test_prune_equals_brute_force(self, spark):
-        """The 3x3 cell prune must lose no in-range station: compare
-        against an explicit cross-join evaluation on a random-ish but
-        deterministic layout."""
-        from pyspark.sql import functions as F
-
-        stations = spark.range(400).select(
-            F.col("id").alias("station_id"),
-            (F.lit(139.0) + (F.col("id") * 7919 % 1000) / 250.0).alias("lon"),
-            (F.lit(35.0) + (F.col("id") * 104729 % 1000) / 250.0).alias("lat"),
-            (F.col("id") % 13).cast("double").alias("value"),
-        )
-        targets = spark.range(300).select(
-            F.col("id").alias("target_id"),
-            (F.lit(139.0) + (F.col("id") * 31 % 997) / 249.0).alias("lon"),
-            (F.lit(35.0) + (F.col("id") * 57 % 991) / 247.0).alias("lat"),
-        )
-        from ksj2gp_spark.operators.spatial import idw_interpolate
-
-        got = {
-            r["target_id"]: (r["n_stations"], r["idw_value"])
-            for r in idw_interpolate(targets, stations, radius=0.1).collect()
-        }
-        t = targets.select("target_id", F.col("lon").alias("t_lon"), F.col("lat").alias("t_lat"))
-        d2 = (F.col("t_lon") - F.col("lon")) ** 2 + (F.col("t_lat") - F.col("lat")) ** 2
-        w = F.lit(1.0) / F.greatest(d2, F.lit(1e-18))
-        brute = {
-            r["target_id"]: (r["n"], r["v"])
-            for r in t.crossJoin(stations)
-            .filter(d2 <= 0.1 * 0.1)
-            .groupBy("target_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum(w * F.col("value")) / F.sum(w), 6).alias("v"),
-            )
-            .collect()
-        }
-        assert got == brute and len(got) > 50
-
-    def test_no_python_in_plan(self, spark):
-        import pandas as pd
-
-        targets = spark.createDataFrame(
-            pd.DataFrame({"target_id": [1], "lon": [140.0], "lat": [36.0]})
-        )
-        stations = spark.createDataFrame(
-            pd.DataFrame(
-                {"station_id": ["a"], "lon": [140.0], "lat": [36.0], "value": [1.0]}
-            )
-        )
-        from ksj2gp_spark.operators.spatial import idw_interpolate
-
-        plan = (
-            idw_interpolate(targets, stations, radius=0.05)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "EvalPython" not in plan
-
-
-class TestFocalMean:
-    def test_hand_computed_neighborhood(self, spark):
-        """Three cells in a row at res 10: the middle cell averages all
-        three, the ends average two; absent neighbors contribute
-        nothing (sparse semantics)."""
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import focal_mean
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        cells = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell": [mk(5, 5), mk(6, 5), mk(7, 5)],
-                    "value": [3.0, 6.0, 12.0],
-                }
-            )
-        )
-        rows = {r["cell"]: r for r in focal_mean(cells, res=res).collect()}
-        assert rows[mk(5, 5)]["n_neighbors"] == 2
-        assert rows[mk(5, 5)]["focal_mean"] == 4.5
-        assert rows[mk(6, 5)]["n_neighbors"] == 3
-        assert rows[mk(6, 5)]["focal_mean"] == 7.0
-        assert rows[mk(7, 5)]["focal_mean"] == 9.0
-
-    def test_exclude_center(self, spark):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import focal_mean
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        cells = spark.createDataFrame(
-            pd.DataFrame(
-                {"cell": [mk(5, 5), mk(6, 6)], "value": [2.0, 10.0]}
-            )
-        )
-        rows = {
-            r["cell"]: r
-            for r in focal_mean(cells, res=res, include_center=False).collect()
-        }
-        # diagonal neighbors of each other; center excluded
-        assert rows[mk(5, 5)]["focal_mean"] == 10.0
-        assert rows[mk(6, 6)]["focal_mean"] == 2.0
-
-
-class TestMoransI:
-    def test_hand_computed_row(self, spark):
-        """Three cells in a row, values [1,5,3]: xbar=3, directed
-        adjacent pairs (1,5),(5,1),(5,3),(3,5) -> S0=4,
-        num=(-2)(2)+(2)(-2)+0+0=-8, den=8, I=(3/4)(-8/8)=-0.75."""
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import morans_i
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        cells = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell": [mk(4, 5), mk(5, 5), mk(6, 5)],
-                    "value": [1.0, 5.0, 3.0],
-                }
-            )
-        )
-        row = morans_i(cells, res=res).collect()[0]
-        assert (row["n"], row["s0"]) == (3, 4)
-        assert row["morans_i"] == -0.75
-
-    def test_clustered_positive_dispersed_negative(self, spark):
-        """A 4x4 half/half split scores positive; a checkerboard
-        scores negative."""
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import morans_i
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        half = pd.DataFrame(
-            {
-                "cell": [mk(i, j) for i in range(4) for j in range(4)],
-                "value": [10.0 if i < 2 else 0.0 for i in range(4) for j in range(4)],
-            }
-        )
-        board = pd.DataFrame(
-            {
-                "cell": [mk(i, j) for i in range(4) for j in range(4)],
-                "value": [float((i + j) % 2) for i in range(4) for j in range(4)],
-            }
-        )
-        i_half = morans_i(spark.createDataFrame(half), res=res).collect()[0]
-        i_board = morans_i(spark.createDataFrame(board), res=res).collect()[0]
-        # hand-computed: 0.523810; checkerboard under MOORE adjacency is
-        # only -1/7 (diagonal neighbors share the color, so the 8-ring
-        # dampens the rook-adjacency -1)
-        assert i_half["morans_i"] == 0.52381
-        assert i_board["morans_i"] == round(-1.0 / 7.0, 6)
-
-
-class TestLocalMoransI:
-    def test_hand_computed_row(self, spark):
-        """[1,5,3] in a row: xbar=3, m2=8/3; cell1 (z=-2) has neighbor
-        zsum=+2 -> I=-1.5; cell2 (z=+2) zsum=-2 -> I=-1.5; cell3 (z=0)
-        -> I=0."""
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import local_morans_i
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        cells = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell": [mk(4, 5), mk(5, 5), mk(6, 5)],
-                    "value": [1.0, 5.0, 3.0],
-                }
-            )
-        )
-        rows = {r["cell"]: r for r in local_morans_i(cells, res=res).collect()}
-        assert rows[mk(4, 5)]["local_i"] == -1.5
-        assert rows[mk(4, 5)]["n_neighbors"] == 1
-        assert rows[mk(5, 5)]["local_i"] == -1.5
-        assert rows[mk(5, 5)]["n_neighbors"] == 2
-        assert rows[mk(6, 5)]["local_i"] == 0.0
-
-
-class TestGetisOrdGiStar:
-    def test_hand_computed_and_hotspot_sign(self, spark):
-        """A high-value pair amid zeros scores positive Gi*; a far
-        isolated zero cell scores negative (below the mean with itself
-        as the whole neighborhood)."""
-        import math
-
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import getis_ord_gi_star
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        vals = {mk(0, 0): 10.0, mk(0, 1): 10.0, mk(5, 5): 0.0, mk(9, 9): 0.0}
-        cells = spark.createDataFrame(
-            pd.DataFrame({"cell": list(vals), "value": list(vals.values())})
-        )
-        rows = {
-            r["cell"]: r
-            for r in getis_ord_gi_star(cells, res=res).collect()
-        }
-        n, xbar = 4, 5.0
-        s = math.sqrt(sum((v - xbar) ** 2 for v in vals.values()) / n)
-        # hot pair: neighborhood = both hot cells (w=2, S=20)
-        w, si = 2, 20.0
-        expect = (si - xbar * w) / (s * math.sqrt((n * w - w * w) / (n - 1)))
-        assert abs(rows[mk(0, 0)]["gi_star"] - round(expect, 6)) < 1e-9
-        assert rows[mk(0, 0)]["w_i"] == 2
-        # isolated zero: w=1, S=0
-        w, si = 1, 0.0
-        expect = (si - xbar * w) / (s * math.sqrt((n * w - w * w) / (n - 1)))
-        assert abs(rows[mk(5, 5)]["gi_star"] - round(expect, 6)) < 1e-9
-        assert rows[mk(0, 0)]["gi_star"] > 0 > rows[mk(5, 5)]["gi_star"]
-
-
-class TestGearyC:
-    def test_hand_computed_row(self, spark):
-        """Three cells in a row, values [1,5,3]: xbar=3, directed
-        adjacent pairs diffs^2: (1-5)^2 + (5-1)^2 + (5-3)^2 + (3-5)^2
-        = 40, den = sum (x-xbar)^2 = 8, S0 = 4 ->
-        C = (n-1)*40 / (2*4*8) = 2*40/64 = 1.25."""
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import geary_c
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        cells = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell": [mk(4, 5), mk(5, 5), mk(6, 5)],
-                    "value": [1.0, 5.0, 3.0],
-                }
-            )
-        )
-        row = geary_c(cells, res=res).collect()[0]
-        assert (row["n"], row["s0"]) == (3, 4)
-        assert row["geary_c"] == 1.25
-
-    def test_clustered_below_one_dispersed_above(self, spark):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import geary_c
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        half = pd.DataFrame(
-            {
-                "cell": [mk(i, j) for i in range(4) for j in range(4)],
-                "value": [
-                    10.0 if i < 2 else 0.0 for i in range(4) for j in range(4)
-                ],
-            }
-        )
-        board = pd.DataFrame(
-            {
-                "cell": [mk(i, j) for i in range(4) for j in range(4)],
-                "value": [
-                    float((i + j) % 2) for i in range(4) for j in range(4)
-                ],
-            }
-        )
-        c_half = geary_c(spark.createDataFrame(half), res=res).collect()[0]
-        c_board = geary_c(spark.createDataFrame(board), res=res).collect()[0]
-        assert c_half["geary_c"] < 1.0
-        assert c_board["geary_c"] > 1.0
-
-    def test_degenerate_inputs_raise(self, spark):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import geary_c, morans_i
-
-        res = 10
-        base = res * (1 << 58)
-        mk = lambda i, j: base + i * (1 << 29) + j  # noqa: E731
-        flat = spark.createDataFrame(
-            pd.DataFrame(
-                {"cell": [mk(0, 0), mk(0, 1), mk(1, 0)], "value": [2.0] * 3}
-            )
-        )
-        one = spark.createDataFrame(
-            pd.DataFrame({"cell": [mk(0, 0)], "value": [2.0]})
-        )
-        for fn in (geary_c, morans_i):
-            with pytest.raises(ValueError, match="constant surface"):
-                fn(flat, res=res)
-            with pytest.raises(ValueError, match="at least 2"):
-                fn(one, res=res)
-
-    def test_matches_brute_force_definition(self, spark):
-        import numpy as np
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import geary_c
-
-        rng = np.random.default_rng(5)
-        res = 10
-        base = res * (1 << 58)
-        coords = [(i, j) for i in range(6) for j in range(6) if (i * 7 + j) % 3]
-        vals = rng.uniform(0, 10, len(coords))
-        cells = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell": [base + i * (1 << 29) + j for i, j in coords],
-                    "value": vals,
-                }
-            )
-        )
-        row = geary_c(cells, res=res).collect()[0]
-        # brute force over all directed Moore-adjacent pairs
-        idx = {c: k for k, c in enumerate(coords)}
-        num = s0 = 0.0
-        for (i, j), k in idx.items():
-            for di in (-1, 0, 1):
-                for dj in (-1, 0, 1):
-                    if (di, dj) == (0, 0):
-                        continue
-                    nb = idx.get((i + di, j + dj))
-                    if nb is not None:
-                        s0 += 1
-                        num += (vals[k] - vals[nb]) ** 2
-        den = float(((vals - vals.mean()) ** 2).sum())
-        want = (len(coords) - 1) * num / (2 * s0 * den)
-        assert row["s0"] == s0
-        assert row["geary_c"] == pytest.approx(want, abs=2e-6)
-
-
-class TestRipleyK:
-    @staticmethod
-    def _brute(pts, radii, area):
-        n = len(pts)
-        out = {}
-        for r in radii:
-            c = 0
-            for a in range(n):
-                for b in range(a + 1, n):
-                    dx = pts[a][0] - pts[b][0]
-                    dy = pts[a][1] - pts[b][1]
-                    if dx * dx + dy * dy <= r * r:
-                        c += 1
-            out[r] = (c, round(area * 2.0 * c / (n * (n - 1)), 6))
-        return out
-
-    def _run(self, spark, pts, radii, area):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import ripley_k
-
-        df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "image_id": [f"p{k:04d}" for k in range(len(pts))],
-                    "lon": [p[0] for p in pts],
-                    "lat": [p[1] for p in pts],
-                }
-            )
-        )
-        return {
-            r["r"]: (r["n_pairs"], r["k_hat"])
-            for r in ripley_k(df, radii=radii, area=area).collect()
-        }
-
-    def test_matches_brute_force(self, spark):
-        import random
-
-        rng = random.Random(17)
-        pts = [(rng.uniform(0, 10), rng.uniform(0, 10)) for _ in range(120)]
-        radii = [0.5, 1.0, 2.0]
-        got = self._run(spark, pts, radii, area=100.0)
-        assert got == self._brute(pts, radii, 100.0)
-
-    def test_boundary_pair_at_exact_rmax(self, spark):
-        # two points exactly rmax apart, axis-aligned AND far from the
-        # origin (worst case for cell-boundary float rounding)
-        pts = [(1000.0, 1000.0), (1000.0 + 2.0, 1000.0), (5000.0, 5000.0)]
-        got = self._run(spark, pts, [1.0, 2.0], area=1.0)
-        assert got[1.0][0] == 0
-        assert got[2.0][0] == 1
-
-    def test_clustered_exceeds_csr(self, spark):
-        # 60 points in a tight blob inside a 100-unit square: K(r)
-        # far above pi r^2
-        import math
-        import random
-
-        rng = random.Random(9)
-        pts = [
-            (50 + rng.uniform(-1, 1), 50 + rng.uniform(-1, 1))
-            for _ in range(60)
-        ]
-        got = self._run(spark, pts, [3.0], area=100.0 * 100.0)
-        assert got[3.0][1] > math.pi * 9.0 * 10
-
-    def test_validates_inputs(self, spark):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import ripley_k
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"image_id": ["a"], "lon": [0.0], "lat": [0.0]})
-        )
-        with pytest.raises(ValueError):
-            ripley_k(df, radii=[], area=1.0)
-        with pytest.raises(ValueError):
-            ripley_k(df, radii=[-1.0], area=1.0)
-        # one negative radius hiding among valid ones must not be
-        # silently counted as |r|
-        with pytest.raises(ValueError, match="positive"):
-            ripley_k(df, radii=[1.0, -0.5], area=1.0)
-        # n < 2: the 1/(n(n-1)) normalizer is undefined
-        with pytest.raises(ValueError, match="at least 2"):
-            ripley_k(df, radii=[1.0], area=1.0)
-        empty = df.filter("lon > 1")
-        with pytest.raises(ValueError, match="at least 2"):
-            ripley_k(empty, radii=[1.0], area=1.0)
-
-
-class TestDbscan:
-    """Exact distributed DBSCAN (operators/spatial.py::dbscan)."""
-
-    @staticmethod
-    def _run(spark, pts, eps, min_pts):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import dbscan
-
-        df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "image_id": [p[0] for p in pts],
-                    "lon": [float(p[1]) for p in pts],
-                    "lat": [float(p[2]) for p in pts],
-                }
-            )
-        )
-        out = dbscan(df, eps=eps, min_pts=min_pts).toPandas()
-        return {
-            r.image_id: (r.cluster, bool(r.is_core), int(r.n_nbrs))
-            for r in out.itertuples()
-        }
-
-    @staticmethod
-    def _reference(pts, eps, min_pts):
-        """Serial textbook DBSCAN with the same deterministic label
-        rule: cluster = min core id of the component; border = min
-        label among in-range cores; noise = ''."""
-        import math
-
-        ids = [p[0] for p in pts]
-        n = len(pts)
-        nbrs = {
-            i: [
-                j
-                for j in range(n)
-                if (pts[i][1] - pts[j][1]) ** 2
-                + (pts[i][2] - pts[j][2]) ** 2
-                <= eps * eps
-            ]
-            for i in range(n)
-        }
-        core = {i for i in range(n) if len(nbrs[i]) >= min_pts}
-        # union-find over core-core pairs within eps
-        parent = {i: i for i in core}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for i in core:
-            for j in nbrs[i]:
-                if j in core:
-                    a, b = find(i), find(j)
-                    if a != b:
-                        parent[a] = b
-        comp = {}
-        for i in core:
-            comp.setdefault(find(i), []).append(i)
-        label = {}
-        for members in comp.values():
-            lab = min(ids[i] for i in members)
-            for i in members:
-                label[i] = lab
-        out = {}
-        for i in range(n):
-            if i in core:
-                out[ids[i]] = (label[i], True, len(nbrs[i]))
-            else:
-                in_range = [label[j] for j in nbrs[i] if j in core]
-                out[ids[i]] = (
-                    min(in_range) if in_range else "",
-                    False,
-                    len(nbrs[i]),
-                )
-        return out
-
-    def test_hand_computed_clusters_border_noise(self, spark):
-        # cluster A: a,b,c mutually within eps (cores at min_pts=3);
-        # border: d within eps of c only (n_nbrs=2, non-core);
-        # noise: e far away; cluster B: f,g,h colinear chain
-        pts = [
-            ("a", 0.0, 0.0),
-            ("b", 0.6, 0.0),
-            ("c", 0.3, 0.5),
-            ("d", 0.3, 1.4),
-            ("e", 50.0, 50.0),
-            ("f", 10.0, 10.0),
-            ("g", 10.9, 10.0),
-            ("h", 10.45, 10.6),
-        ]
-        got = self._run(spark, pts, eps=1.0, min_pts=3)
-        assert got == self._reference(pts, 1.0, 3)
-        assert got["a"] == ("a", True, 3)
-        assert got["d"] == ("a", False, 2)   # border via c
-        assert got["e"] == ("", False, 1)    # noise
-        assert got["f"][0] == "f" and got["f"][1]
-
-    def test_random_equals_serial_reference(self, spark):
-        import random
-
-        rng = random.Random(41)
-        pts = [
-            (f"p{i:03d}", rng.uniform(0, 10), rng.uniform(0, 10))
-            for i in range(180)
-        ]
-        eps, min_pts = 0.8, 4
-        assert self._run(spark, pts, eps, min_pts) == self._reference(
-            pts, eps, min_pts
-        )
-
-    def test_exact_eps_boundary_pair_counts(self, spark):
-        # two points exactly eps apart, far from the origin (cell
-        # division rounding stress): each must see the other
-        pts = [("a", 4000.0, 7000.0), ("b", 4000.0 + 2.5, 7000.0)]
-        got = self._run(spark, pts, eps=2.5, min_pts=2)
-        assert got["a"] == ("a", True, 2)
-        assert got["b"] == ("a", True, 2)
-
-    def test_chain_is_one_cluster_min_label(self, spark):
-        # a long chain of cores: min id propagates end to end
-        pts = [(f"n{i:02d}", float(i), 0.0) for i in range(40)]
-        got = self._run(spark, pts, eps=1.0, min_pts=2)
-        assert all(v[0] == "n00" and v[1] for v in got.values())
-
-    def test_validates_inputs(self, spark):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import dbscan
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"image_id": ["a"], "lon": [0.0], "lat": [0.0]})
-        )
-        with pytest.raises(ValueError):
-            dbscan(df, eps=0.0, min_pts=2)
-        with pytest.raises(ValueError):
-            dbscan(df, eps=1.0, min_pts=0)
-
-
-class TestKdeHeatmap:
-    """Epanechnikov splat heatmap (operators/spatial.py::kde_heatmap)."""
-
-    @staticmethod
-    def _run(spark, pts, h, s, weights=None):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import kde_heatmap
-
-        pdf = pd.DataFrame(
-            {"lon": [p[0] for p in pts], "lat": [p[1] for p in pts]}
-        )
-        if weights is not None:
-            pdf["wt"] = weights
-        df = spark.createDataFrame(pdf)
-        out = kde_heatmap(
-            df,
-            bandwidth=h,
-            cell_size=s,
-            weight_col="wt" if weights is not None else None,
-        ).toPandas()
-        return {
-            (round(r.cell_x, 9), round(r.cell_y, 9)): (int(r.n_pts), r.kde)
-            for r in out.itertuples()
-        }
-
-    @staticmethod
-    def _reference(pts, h, s, weights=None):
-        import math
-
-        weights = weights or [1.0] * len(pts)
-        out = {}
-        R = int(math.ceil(h / s))
-        for (x, y), w in zip(pts, weights):
-            pi = math.floor((x + 180.0) / s)
-            pj = math.floor((y + 90.0) / s)
-            for di in range(-R, R + 1):
-                for dj in range(-R, R + 1):
-                    cx = (pi + di + 0.5) * s - 180.0
-                    cy = (pj + dj + 0.5) * s - 90.0
-                    d2 = (x - cx) ** 2 + (y - cy) ** 2
-                    if d2 < h * h:
-                        n, k = out.get((round(cx, 9), round(cy, 9)), (0, 0.0))
-                        out[(round(cx, 9), round(cy, 9))] = (
-                            n + 1,
-                            k + w * (1.0 - d2 / (h * h)),
-                        )
-        return {k: (n, round(v, 6)) for k, (n, v) in out.items()}
-
-    def test_single_point_center_of_cell(self, spark):
-        # point dead-center of a cell: kernel max (weight 1.0) at its
-        # own cell center, symmetric decay on the 4-neighborhood
-        got = self._run(spark, [(0.025, 0.025)], h=0.1, s=0.05)
-        assert got[(0.025, 0.025)] == (1, 1.0)
-        for nb in [(0.075, 0.025), (-0.025, 0.025),
-                   (0.025, 0.075), (0.025, -0.025)]:
-            assert got[nb] == (1, 0.75)
-
-    def test_random_equals_serial_reference(self, spark):
-        import random
-
-        rng = random.Random(7)
-        pts = [
-            (rng.uniform(-2, 2), rng.uniform(-2, 2)) for _ in range(300)
-        ]
-        got = self._run(spark, pts, h=0.3, s=0.1)
-        assert got == self._reference(pts, 0.3, 0.1)
-
-    def test_weighted_points(self, spark):
-        pts = [(10.02, 10.02), (10.03, 10.03)]
-        wts = [2.0, 0.5]
-        got = self._run(spark, pts, h=0.2, s=0.1, weights=wts)
-        assert got == self._reference(pts, 0.2, 0.1, wts)
-
-    def test_sparse_cells_never_materialize(self, spark):
-        # one point, h=1 cell: touched cells bounded by (2R+1)^2
-        got = self._run(spark, [(100.0, 50.0)], h=0.05, s=0.05)
-        assert 0 < len(got) <= 9
-
-    def test_validates_inputs(self, spark):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import kde_heatmap
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"lon": [0.0], "lat": [0.0]})
-        )
-        with pytest.raises(ValueError):
-            kde_heatmap(df, bandwidth=0.0, cell_size=0.1)
-        with pytest.raises(ValueError):
-            kde_heatmap(df, bandwidth=1.0, cell_size=0.0)
-        with pytest.raises(ValueError):
-            kde_heatmap(df, bandwidth=1.0, cell_size=0.05)
-
-
-class TestEmergingHotspots:
-    """Space-time Gi* + Mann-Kendall (operators/spatial.py::
-    emerging_hotspots)."""
-
-    RES = 10
-
-    def _cell(self, i, j):
-        return self.RES * (1 << 58) + i * (1 << 29) + j
-
-    def _run(self, spark, rows):
-        import pandas as pd
-        from ksj2gp_spark.operators.spatial import emerging_hotspots
-
-        df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["cell", "t_bin", "value"])
-        )
-        out = emerging_hotspots(df, res=self.RES).toPandas()
-        return {
-            r.cell: (int(r.n_bins), int(r.s_mk), r.trend)
-            for r in out.itertuples()
-        }
-
-    @staticmethod
-    def _reference(rows):
-        """Serial replay: per-bin Gi* (Moore incl. self, present
-        cells only, round-6) + Mann-Kendall sign sum."""
-        import math
-        from collections import defaultdict
-
-        bybin = defaultdict(dict)
-        for cell, t, v in rows:
-            bybin[t][cell] = float(v)
-        RES = TestEmergingHotspots.RES
-        base = RES * (1 << 58)
-        z = defaultdict(dict)
-        for t, cells in bybin.items():
-            vals = list(cells.values())
-            n = len(vals)
-            if n < 2:
-                continue
-            xbar = sum(vals) / n
-            s = math.sqrt(sum(v * v for v in vals) / n - xbar * xbar)
-            if s <= 0:
-                continue
-            for cell in cells:
-                i, j = (cell - base) >> 29, cell % (1 << 29)
-                nb = [
-                    bybin[t].get(base + (i + di) * (1 << 29) + (j + dj))
-                    for di in (-1, 0, 1)
-                    for dj in (-1, 0, 1)
-                ]
-                nb = [v for v in nb if v is not None]
-                w = len(nb)
-                if w >= n:
-                    continue
-                den = s * math.sqrt((n * w - w * w) / (n - 1))
-                z[cell][t] = round((sum(nb) - xbar * w) / den, 6)
-        out = {}
-        for cell, zs in z.items():
-            ts = sorted(zs)
-            smk = sum(
-                (zs[b] > zs[a]) - (zs[b] < zs[a])
-                for x, a in enumerate(ts)
-                for b in ts[x + 1:]
-            )
-            trend = (
-                "intensifying" if smk > 0
-                else "diminishing" if smk < 0 else "flat"
-            )
-            out[cell] = (len(ts), smk, trend)
-        return out
-
-    def test_planted_intensifying_cell(self, spark):
-        # 5x5 field with fixed spatial variance (Gi* is affine-
-        # invariant per bin, so a flat field + proportional growth
-        # would standardize away); cell (1,1) grows moderately so the
-        # global sd doesn't swallow the rise
-        rows = []
-        for t in range(3):
-            for i in range(5):
-                for j in range(5):
-                    v = 1.0 + ((3 * i + 5 * j) % 7) * 0.1
-                    if (i, j) == (1, 1):
-                        v += 0.3 * t
-                    rows.append((self._cell(i, j), t, v))
-        got = self._run(spark, rows)
-        ref = self._reference(rows)
-        assert got == ref
-        assert got[self._cell(1, 1)] == (3, 3, "intensifying")
-        # every cell saw all 3 bins
-        assert all(v[0] == 3 for v in got.values())
-
-    def test_random_field_equals_reference(self, spark):
-        import random
-
-        rng = random.Random(11)
-        rows = [
-            (self._cell(i, j), t, rng.uniform(0, 10))
-            for t in range(4)
-            for i in range(6)
-            for j in range(6)
-            if rng.random() < 0.8
-        ]
-        assert self._run(spark, rows) == self._reference(rows)
-
-    def test_flat_field_is_flat(self, spark):
-        import random
-
-        rng = random.Random(3)
-        vals = {(i, j): rng.uniform(1, 2) for i in range(5) for j in range(5)}
-        rows = [
-            (self._cell(i, j), t, vals[(i, j)])
-            for t in range(3)
-            for (i, j) in vals
-        ]
-        got = self._run(spark, rows)
-        # identical values every bin -> z identical -> S = 0
-        assert all(v == (3, 0, "flat") for v in got.values())
-
-    def test_degenerate_bins_dropped(self, spark):
-        # bin 0: fine (far cell keeps w_i < n); bin 1: single cell
-        # (n < 2); bin 2: zero variance; bin 3: every neighborhood
-        # covers the whole 2-cell field (w_i == n)
-        rows = [
-            (self._cell(0, 0), 0, 1.0), (self._cell(1, 0), 0, 2.0),
-            (self._cell(9, 9), 0, 5.0),
-            (self._cell(0, 0), 1, 5.0),
-            (self._cell(0, 0), 2, 3.0), (self._cell(9, 9), 2, 3.0),
-            (self._cell(0, 0), 3, 1.0), (self._cell(1, 0), 3, 2.0),
-        ]
-        got = self._run(spark, rows)
-        ref = self._reference(rows)
-        assert got == ref
-        # only bin 0 survives -> every present cell has n_bins=1, S=0
-        assert got[self._cell(0, 0)] == (1, 0, "flat")
-        assert got[self._cell(1, 0)] == (1, 0, "flat")
-        assert got[self._cell(9, 9)] == (1, 0, "flat")
-
-    def test_single_bin_no_pairs(self, spark):
-        # far-apart cells (w_i=1 < n=2) so both survive the guard
-        rows = [(self._cell(0, 0), 0, 1.0), (self._cell(9, 9), 0, 4.0)]
-        got = self._run(spark, rows)
-        assert len(got) == 2
-        assert all(v == (1, 0, "flat") for v in got.values())
-
-
-class TestArealInterpolate:
-    """Area-weighted reaggregation (operators/spatial.py::
-    areal_interpolate)."""
-
-    @staticmethod
-    def _sources(spark):
-        from ksj2gp_spark.geo import wkb as _wkb
-
-        sq = lambda x0, y0, x1, y1: [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "polygon_id": ["rect", "donut", "ushape"],
-                    "geometry": [
-                        _wkb.polygon(sq(130, 30, 132, 32)),          # A=4
-                        _wkb.polygon(
-                            sq(134, 30, 138, 34), sq(135, 31, 137, 33)
-                        ),                                            # A=12
-                        _wkb.polygon(
-                            [(140, 30), (143, 30), (143, 33), (142, 33),
-                             (142, 31), (141, 31), (141, 33), (140, 33)]
-                        ),                                            # A=7
-                    ],
-                    "pop": [8.0, 6.0, 14.0],
-                }
-            )
-        )
-
-    def test_hand_computed_estimates(self, spark):
-        from ksj2gp_spark.geo import wkb as _wkb
-        from ksj2gp_spark.operators.spatial import areal_interpolate
-
-        sq = lambda x0, y0, x1, y1: [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
-        wins = pd.DataFrame(
-            {
-                "polygon_id": ["w_rect", "w_half", "w_band"],
-                "geometry": [
-                    _wkb.polygon(sq(131, 31, 133, 33)),   # ∩rect = 1
-                    _wkb.polygon(sq(134, 30, 136, 34)),   # ∩donut = 6
-                    _wkb.polygon(sq(140, 32, 143, 33)),   # ∩ushape = 2
-                ],
-            }
-        )
-        out = areal_interpolate(
-            self._sources(spark), wins, value_col="pop",
-            scheme="grid", res=8,
-        ).toPandas()
-        got = {
-            r.target_id: (int(r.n_sources), r.est_value)
-            for r in out.itertuples()
-        }
-        assert got == {
-            "w_rect": (1, 2.0),     # 8 * 1/4
-            "w_half": (1, 3.0),     # 6 * 6/12
-            "w_band": (1, 4.0),     # 14 * 2/7
-        }
-
-    def test_tokyo_datum_source_conserves_exactly(self, spark):
-        # a Tokyo-datum source fully covered by one window must yield
-        # est == value EXACTLY: source areas are measured on the same
-        # CRS-normalized (WGS84) geometry as the intersection areas
-        # (un-normalized Tokyo areas differ by ~2e-4 relative — the
-        # buggy share would round to 7.998416, not 8.0)
-        import numpy as np
-
-        from ksj2gp_spark.geo import transform, wkb as _wkb
-        from ksj2gp_spark.operators.spatial import areal_interpolate
-
-        sq = lambda x0, y0, x1, y1: [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
-
-        def inv(pts):
-            a = np.array(pts, dtype=float)
-            lon, lat, _ = transform.wgs84_to_tokyo(a[:, 0], a[:, 1])
-            return list(zip(lon, lat))
-
-        src = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "polygon_id": ["rect"],
-                    "geometry": [_wkb.polygon(inv(sq(130, 30, 132, 32)))],
-                    "crs": ["Tokyo"],
-                    "pop": [8.0],
-                }
-            )
-        )
-        wins = pd.DataFrame(
-            {
-                "polygon_id": ["cover"],
-                "geometry": [_wkb.polygon(sq(129, 29, 133, 33))],
-            }
-        )
-        out = areal_interpolate(
-            src, wins, value_col="pop", scheme="grid", res=8
-        ).toPandas()
-        assert len(out) == 1
-        assert out.iloc[0]["est_value"] == 8.0
-
-    def test_partition_conserves_total(self, spark):
-        # four quadrant windows exactly tile the rect source: the
-        # estimates must sum to its full value
-        from ksj2gp_spark.geo import wkb as _wkb
-        from ksj2gp_spark.operators.spatial import areal_interpolate
-
-        sq = lambda x0, y0, x1, y1: [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
-        wins = pd.DataFrame(
-            {
-                "polygon_id": ["q1", "q2", "q3", "q4"],
-                "geometry": [
-                    _wkb.polygon(sq(130, 30, 131, 31)),
-                    _wkb.polygon(sq(131, 30, 132, 31)),
-                    _wkb.polygon(sq(130, 31, 131, 32)),
-                    _wkb.polygon(sq(131, 31, 132, 32)),
-                ],
-            }
-        )
-        out = areal_interpolate(
-            self._sources(spark), wins, value_col="pop",
-            scheme="grid", res=8,
-        ).toPandas()
-        assert len(out) == 4
-        assert abs(out["est_value"].sum() - 8.0) < 1e-9
-        assert (out["est_value"] == 2.0).all()
-
-
-class TestCrossK:
-    """Bivariate Ripley cross-K (operators/spatial.py::cross_k)."""
-
-    @staticmethod
-    def _run(spark, pts_a, pts_b, radii, area):
-        from ksj2gp_spark.operators.spatial import cross_k
-
-        da = spark.createDataFrame(
-            pd.DataFrame({"lon": [p[0] for p in pts_a],
-                          "lat": [p[1] for p in pts_a]})
-        )
-        db = spark.createDataFrame(
-            pd.DataFrame({"lon": [p[0] for p in pts_b],
-                          "lat": [p[1] for p in pts_b]})
-        )
-        out = cross_k(da, db, radii=radii, area=area).toPandas()
-        return {r.r: (int(r.n_pairs), r.k_ab) for r in out.itertuples()}
-
-    @staticmethod
-    def _reference(pts_a, pts_b, radii, area):
-        out = {}
-        for r in radii:
-            n = sum(
-                1
-                for xa, ya in pts_a
-                for xb, yb in pts_b
-                if (xa - xb) ** 2 + (ya - yb) ** 2 <= r * r
-            )
-            out[r] = (
-                n,
-                round(area * n / (len(pts_a) * len(pts_b)), 6),
-            )
-        return out
-
-    def test_hand_computed_pairs(self, spark):
-        a = [(0.0, 0.0), (10.0, 0.0)]
-        b = [(1.0, 0.0), (10.5, 0.0), (50.0, 50.0)]
-        got = self._run(spark, a, b, [1.0, 2.0], area=100.0)
-        assert got == self._reference(a, b, [1.0, 2.0], 100.0)
-        assert got[1.0][0] == 2  # (0,0)-(1,0) and (10,0)-(10.5,0)
-
-    def test_exact_rmax_boundary_far_from_origin(self, spark):
-        a = [(7000.0, 9000.0)]
-        b = [(7000.0 + 3.0, 9000.0)]
-        got = self._run(spark, a, b, [3.0], area=1.0)
-        assert got[3.0][0] == 1
-
-    def test_random_equals_reference(self, spark):
-        import random
-
-        rng = random.Random(23)
-        a = [(rng.uniform(0, 10), rng.uniform(0, 10)) for _ in range(80)]
-        b = [(rng.uniform(0, 10), rng.uniform(0, 10)) for _ in range(90)]
-        radii = [0.5, 1.0, 1.5]
-        assert self._run(spark, a, b, radii, 100.0) == self._reference(
-            a, b, radii, 100.0
-        )
-
-    def test_validates_inputs(self, spark):
-        from ksj2gp_spark.operators.spatial import cross_k
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"lon": [0.0], "lat": [0.0]})
-        )
-        with pytest.raises(ValueError):
-            cross_k(df, df, radii=[], area=1.0)
-        with pytest.raises(ValueError):
-            cross_k(df, df, radii=[0.0], area=1.0)
-        with pytest.raises(ValueError, match="positive"):
-            cross_k(df, df, radii=[1.0, -0.5], area=1.0)
-        empty = df.filter("lon > 1")
-        with pytest.raises(ValueError, match="non-empty"):
-            cross_k(df, empty, radii=[1.0], area=1.0)
-        with pytest.raises(ValueError, match="non-empty"):
-            cross_k(empty, df, radii=[1.0], area=1.0)
-
-
-class TestJoinCounts:
-    """Join-count statistics (operators/spatial.py::join_counts)."""
-
-    RES = 10
-
-    def _cell(self, i, j):
-        return self.RES * (1 << 58) + i * (1 << 29) + j
-
-    def _run(self, spark, cells):
-        from ksj2gp_spark.operators.spatial import join_counts
-
-        df = spark.createDataFrame(
-            pd.DataFrame(
-                {"cell": [c for c, _ in cells],
-                 "label": [l for _, l in cells]}
-            )
-        )
-        out = join_counts(df, res=self.RES).toPandas()
-        return {
-            (r.label_lo, r.label_hi): int(r.n_joins)
-            for r in out.itertuples()
-        }
-
-    @staticmethod
-    def _reference(cells):
-        from collections import Counter
-
-        lab = dict(cells)
-        out = Counter()
-        seen = set()
-        for c, la in cells:
-            i, j = (c - 10 * (1 << 58)) >> 29, c % (1 << 29)
-            for di in (-1, 0, 1):
-                for dj in (-1, 0, 1):
-                    if (di, dj) == (0, 0):
-                        continue
-                    nb = 10 * (1 << 58) + (i + di) * (1 << 29) + (j + dj)
-                    if nb in lab and (nb, c) not in seen:
-                        seen.add((c, nb))
-                        lo, hi = sorted([la, lab[nb]])
-                        out[(lo, hi)] += 1
-        return dict(out)
-
-    def test_checkerboard_is_all_cross_joins(self, spark):
-        # 4x4 checkerboard: rook joins are all BW; diagonal joins are
-        # same-label — exact counts known in closed form
-        cells = [
-            (self._cell(i, j), "B" if (i + j) % 2 == 0 else "W")
-            for i in range(4)
-            for j in range(4)
-        ]
-        got = self._run(spark, cells)
-        assert got == self._reference(cells)
-        # 4x4 grid: 24 rook joins (all BW) + 18 diagonal (all same)
-        assert got[("B", "W")] == 24
-        assert got[("B", "B")] + got[("W", "W")] == 18
-
-    def test_two_blocks_no_cross(self, spark):
-        cells = [(self._cell(i, j), "A") for i in range(2) for j in range(2)]
-        cells += [
-            (self._cell(i + 10, j), "B") for i in range(2) for j in range(2)
-        ]
-        got = self._run(spark, cells)
-        assert got == {("A", "A"): 6, ("B", "B"): 6}
-
-    def test_random_equals_reference(self, spark):
-        import random
-
-        rng = random.Random(5)
-        cells = [
-            (self._cell(i, j), rng.choice("XYZ"))
-            for i in range(6)
-            for j in range(6)
-            if rng.random() < 0.7
-        ]
-        assert self._run(spark, cells) == self._reference(cells)
-
-
-class TestKnoxTest:
-    """Knox space-time interaction (operators/spatial.py::knox_test)."""
-
-    @staticmethod
-    def _run(spark, rows, delta, tau_us):
-        from ksj2gp_spark.operators.spatial import knox_test
-
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "lon", "lat"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        df = spark.createDataFrame(pdf)
-        out = knox_test(df, delta=delta, tau_us=tau_us).toPandas()
-        r = out.iloc[0]
-        return (int(r.n_pairs), int(r.n_space), int(r.n_time),
-                int(r.n_spacetime), r.knox_ratio)
-
-    @staticmethod
-    def _reference(rows, delta, tau_us):
-        import pandas as pd_
-
-        ts = pd_.to_datetime([r[1] for r in rows])
-        t = [int(x.value // 1000) for x in ts]  # micros
-        pts = [(r[2], r[3]) for r in rows]
-        n = len(rows)
-        ns = nt = nst = 0
-        for i in range(n):
-            for j in range(i + 1, n):
-                sp = (pts[i][0] - pts[j][0]) ** 2 + (
-                    pts[i][1] - pts[j][1]
-                ) ** 2 <= delta * delta
-                tm = abs(t[i] - t[j]) <= tau_us
-                ns += sp
-                nt += tm
-                nst += sp and tm
-        npairs = n * (n - 1) // 2
-        exp = ns * nt / npairs if npairs and ns and nt else 0.0
-        ratio = round(nst / exp, 6) if exp > 0 else 0.0
-        return (npairs, ns, nt, nst, ratio)
-
-    def test_hand_computed_clustered_outbreak(self, spark):
-        # 3 events same place same hour + 2 far/late -> strong excess
-        rows = [
-            (1, "2024-01-01 00:00:00", 0.00, 0.00),
-            (2, "2024-01-01 00:10:00", 0.01, 0.00),
-            (3, "2024-01-01 00:20:00", 0.00, 0.01),
-            (4, "2024-06-01 00:00:00", 5.00, 5.00),
-            (5, "2024-01-01 00:05:00", 9.00, 9.00),  # time-close only
-        ]
-        got = self._run(spark, rows, delta=0.05, tau_us=3600 * 10**6)
-        assert got == self._reference(rows, 0.05, 3600 * 10**6)
-        assert got[3] == 3 and got[4] > 1.0
-
-    def test_random_equals_reference(self, spark):
-        import random
-
-        rng = random.Random(31)
-        rows = [
-            (
-                i,
-                f"2024-01-01 {rng.randrange(24):02d}:"
-                f"{rng.randrange(60):02d}:{rng.randrange(60):02d}",
-                rng.uniform(0, 1),
-                rng.uniform(0, 1),
-            )
-            for i in range(120)
-        ]
-        got = self._run(spark, rows, delta=0.2, tau_us=2 * 3600 * 10**6)
-        assert got == self._reference(rows, 0.2, 2 * 3600 * 10**6)
-
-    def test_exact_boundaries_count(self, spark):
-        # pair exactly delta apart AND exactly tau apart: both <= -> in
-        rows = [
-            (1, "2024-01-01 00:00:00", 1000.0, 2000.0),
-            (2, "2024-01-01 01:00:00", 1000.0 + 0.25, 2000.0),
-        ]
-        got = self._run(spark, rows, delta=0.25, tau_us=3600 * 10**6)
-        assert got[1] == 1 and got[2] == 1 and got[3] == 1
-
-    def test_validates_inputs(self, spark):
-        from ksj2gp_spark.operators.spatial import knox_test
-
-        pdf = pd.DataFrame(
-            {"event_id": [1], "ts": pd.to_datetime(["2024-01-01"]),
-             "lon": [0.0], "lat": [0.0]}
-        )
-        df = spark.createDataFrame(pdf)
-        with pytest.raises(ValueError):
-            knox_test(df, delta=0.0, tau_us=1)
-        with pytest.raises(ValueError):
-            knox_test(df, delta=1.0, tau_us=0)
-
-
-class TestQuadratTest:
-    @staticmethod
-    def _run(spark, pts, s):
-        from ksj2gp_spark.operators.spatial import quadrat_test
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"lon": [p[0] for p in pts],
-                          "lat": [p[1] for p in pts]})
-        )
-        r = quadrat_test(df, cell_size=s).toPandas().iloc[0]
-        return (int(r.n), int(r.k), int(r.occupied), r.chi2)
-
-    def test_uniform_grid_is_zero_chi2(self, spark):
-        # one point dead-center of each quadrat: O_q = E = 1, chi2 = 0
-        pts = [(i + 0.5, j + 0.5) for i in range(3) for j in range(3)]
-        assert self._run(spark, pts, 1.0) == (9, 9, 9, 0.0)
-
-    def test_all_in_one_quadrat_max_chi2(self, spark):
-        # 8 points in one corner cell + 1 at the far corner: k = 9
-        pts = [(0.1 + 0.01 * i, 0.1) for i in range(8)] + [(2.5, 2.5)]
-        n, k, m, chi2 = self._run(spark, pts, 1.0)
-        assert (n, k, m) == (9, 9, 2)
-        # closed form: E=1, occupied (8-1)^2/1 + (1-1)^2/1, empty 7*1
-        assert abs(chi2 - (49.0 + 0.0 + 7.0)) < 1e-9
-    def test_max_edge_points_clamp_into_last_quadrat(self, spark):
-        pts = [(0.0, 0.0), (2.0, 2.0)]  # max corner exactly on edge
-        n, k, m, chi2 = self._run(spark, pts, 1.0)
-        assert (n, k, m) == (2, 9, 2)
-
-    def test_validates_inputs(self, spark):
-        from ksj2gp_spark.operators.spatial import quadrat_test
-
-        df = spark.createDataFrame(pd.DataFrame({"lon": [0.0], "lat": [0.0]}))
-        with pytest.raises(ValueError):
-            quadrat_test(df, cell_size=0.0)
-
-
-class TestStdEllipse:
-    @staticmethod
-    def _run(spark, pts):
-        from ksj2gp_spark.operators.spatial import std_ellipse
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"lon": [p[0] for p in pts],
-                          "lat": [p[1] for p in pts]})
-        )
-        r = std_ellipse(df).toPandas().iloc[0]
-        return (int(r.n), r.cx, r.cy, r.theta, r.sx, r.sy)
-
-    def test_axis_aligned_spread(self, spark):
-        # variance only along x: theta=0, sy=0
-        pts = [(-2.0, 5.0), (0.0, 5.0), (2.0, 5.0)]
-        n, cx, cy, theta, sx, sy = self._run(spark, pts)
-        assert (n, cx, cy) == (3, 0.0, 5.0)
-        assert theta == 0.0 and sy == 0.0
-        assert abs(sx - (8.0 / 3.0) ** 0.5) < 1e-6
-
-    def test_diagonal_spread_rotates(self, spark):
-        import math
-
-        pts = [(-1.0, -1.0), (0.0, 0.0), (1.0, 1.0)]
-        _, _, _, theta, sx, sy = self._run(spark, pts)
-        assert abs(theta - math.pi / 4) < 1e-6
-        assert sy == 0.0 and sx > 0
-
-    def test_matches_numpy_covariance(self, spark):
-        import math
-        import random
-
-        rng = random.Random(13)
-        pts = [(rng.gauss(3, 2), rng.gauss(-1, 0.5)) for _ in range(200)]
-        n, cx, cy, theta, sx, sy = self._run(spark, pts)
-        xs = np.array([p[0] for p in pts]); ys = np.array([p[1] for p in pts])
-        mxx, myy = xs.var(), ys.var()
-        mxy = ((xs - xs.mean()) * (ys - ys.mean())).mean()
-        t = 0.5 * math.atan2(2 * mxy, mxx - myy)
-        assert abs(theta - round(t, 6)) < 1e-5
-        assert abs(cx - round(xs.mean(), 6)) < 1e-6
-
-    def test_needs_three_points(self, spark):
-        from ksj2gp_spark.operators.spatial import std_ellipse
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"lon": [0.0, 1.0], "lat": [0.0, 1.0]})
-        )
-        with pytest.raises(ValueError):
-            std_ellipse(df)
-
-
-class TestGeneralG:
-    RES = 10
-
-    def _cell(self, i, j):
-        return self.RES * (1 << 58) + i * (1 << 29) + j
-
-    def _run(self, spark, cells):
-        from ksj2gp_spark.operators.spatial import general_g
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"cell": [c for c, _ in cells],
-                          "value": [float(v) for _, v in cells]})
-        )
-        r = general_g(df, res=self.RES).toPandas().iloc[0]
-        return (int(r.n), int(r.s0), r.general_g)
-
-    def test_hand_computed_pair(self, spark):
-        # two adjacent cells (3, 5) and one far cell (2):
-        # num = 2*3*5 = 30; denom = (sum)^2 - sum^2 = 100 - 38 = 62
-        cells = [(self._cell(0, 0), 3), (self._cell(0, 1), 5),
-                 (self._cell(9, 9), 2)]
-        n, s0, g = self._run(spark, cells)
-        assert (n, s0) == (3, 2)
-        assert abs(g - round(30.0 / 62.0, 6)) < 1e-9
-
-    def test_degenerate_denominator_raises(self, spark):
-        from ksj2gp_spark.operators.spatial import general_g
-
-        # all-zero values: sum_{i!=j} x_i x_j = 0 — undefined, not NULL
-        zeros = spark.createDataFrame(
-            pd.DataFrame(
-                {"cell": [self._cell(0, 0), self._cell(0, 1)],
-                 "value": [0.0, 0.0]}
-            )
-        )
-        with pytest.raises(ValueError, match="undefined"):
-            general_g(zeros, res=self.RES)
-        # a single positive cell has no cross terms either
-        one = spark.createDataFrame(
-            pd.DataFrame({"cell": [self._cell(0, 0)], "value": [3.0]})
-        )
-        with pytest.raises(ValueError, match="undefined"):
-            general_g(one, res=self.RES)
-
-    def test_high_adjacency_raises_g(self, spark):
-        # same value multiset; high values adjacent vs separated
-        hi_together = [(self._cell(0, 0), 9), (self._cell(0, 1), 9),
-                       (self._cell(5, 5), 1), (self._cell(9, 9), 1)]
-        hi_apart = [(self._cell(0, 0), 9), (self._cell(9, 9), 9),
-                    (self._cell(0, 1), 1), (self._cell(5, 5), 1)]
-        g1 = self._run(spark, hi_together)[2]
-        g2 = self._run(spark, hi_apart)[2]
-        assert g1 > g2
-
-    def test_rejects_negative_values(self, spark):
-        from ksj2gp_spark.operators.spatial import general_g
-
-        df = spark.createDataFrame(
-            pd.DataFrame({"cell": [self._cell(0, 0)], "value": [-1.0]})
-        )
-        with pytest.raises(ValueError):
-            general_g(df, res=self.RES)
-
-
-class TestConvexHull:
-    """Two-level distributed convex hull (operators/spatial.py::
-    convex_hull_per_group)."""
-
-    @staticmethod
-    def _run(spark, rows, n_shards=64):
-        from ksj2gp_spark.operators.spatial import convex_hull_per_group
-
-        df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["grp", "lon", "lat"])
-        )
-        out = convex_hull_per_group(
-            df, group_col="grp", n_shards=n_shards
-        ).toPandas()
-        return {
-            r.grp: (int(r.n_vertices), r.area, r.hull_wkt)
-            for r in out.itertuples()
-        }
-
-    @staticmethod
-    def _jarvis(pts):
-        """Gift-wrapping reference hull (CCW vertex count + area)."""
-        pts = sorted(set(pts))
-        if len(pts) <= 2:
-            return len(pts), 0.0
-        hull = []
-        start = min(pts)
-        p = start
-        while True:
-            hull.append(p)
-            q = pts[0] if pts[0] != p else pts[1]
-            for r in pts:
-                if r == p:
-                    continue
-                cross = (q[0] - p[0]) * (r[1] - p[1]) - (
-                    q[1] - p[1]
-                ) * (r[0] - p[0])
-                d_q = (q[0] - p[0]) ** 2 + (q[1] - p[1]) ** 2
-                d_r = (r[0] - p[0]) ** 2 + (r[1] - p[1]) ** 2
-                if cross < 0 or (cross == 0 and d_r > d_q):
-                    q = r
-            p = q
-            if p == start:
-                break
-        area = 0.0
-        for i in range(len(hull)):
-            x0, y0 = hull[i]
-            x1, y1 = hull[(i + 1) % len(hull)]
-            area += x0 * y1 - x1 * y0
-        return len(hull), abs(area) / 2.0
-
-    def test_square_with_interior_points(self, spark):
-        rows = [("a", 0.0, 0.0), ("a", 4.0, 0.0), ("a", 4.0, 4.0),
-                ("a", 0.0, 4.0)]
-        rows += [("a", 1.0 + 0.1 * i, 2.0) for i in range(10)]
-        got = self._run(spark, rows)
-        n, area, txt = got["a"]
-        assert (n, area) == (4, 16.0)
-        assert txt.startswith("POLYGON ((0.0 0.0, 4.0 0.0")
-
-    def test_random_matches_jarvis_reference(self, spark):
-        import random
-
-        rng = random.Random(19)
-        rows = [
-            ("g", round(rng.uniform(0, 10), 3),
-             round(rng.uniform(0, 10), 3))
-            for _ in range(400)
-        ]
-        got = self._run(spark, rows)
-        n, area, _ = got["g"]
-        rn, rarea = self._jarvis([(r[1], r[2]) for r in rows])
-        assert n == rn and abs(area - rarea) < 1e-9
-
-    def test_shard_count_invariance(self, spark):
-        import random
-
-        rng = random.Random(29)
-        rows = [
-            ("g", rng.uniform(0, 5), rng.uniform(0, 5))
-            for _ in range(300)
-        ]
-        assert self._run(spark, rows, n_shards=1) == self._run(
-            spark, rows, n_shards=64
-        )
-
-    def test_degenerate_collinear(self, spark):
-        rows = [("l", float(i), float(2 * i)) for i in range(5)]
-        n, area, txt = self._run(spark, rows)["l"]
-        assert n == 2 and area == 0.0 and txt == ""
-
-    def test_multiple_groups_isolated(self, spark):
-        rows = [("a", 0.0, 0.0), ("a", 1.0, 0.0), ("a", 0.0, 1.0),
-                ("b", 10.0, 10.0), ("b", 12.0, 10.0), ("b", 10.0, 13.0)]
-        got = self._run(spark, rows)
-        assert got["a"][1] == 0.5 and got["b"][1] == 3.0
-
-
 class TestDistJoinHotSplit:
     """Hot-polygon auto-split on the distributed big-layer join
     (operators/spatial.py::spatial_join_tiles_dist): a planted metro
