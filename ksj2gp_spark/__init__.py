@@ -18,7 +18,13 @@ Spark-first:
   (``ksj2gp_spark.sinks``).
 
 All heavy per-row work runs through pandas/Arrow UDFs — no per-row
-Python in the hot path.
+Python in the hot path. Imported inside a Spark task, the package puts
+a guard in the Python worker that keeps later tasks from re-reading
+every zip archive on ``sys.path`` (``ksj2gp_spark._worker``).
 """
 
+from . import _worker
+
 __version__ = "0.1.0"
+
+_worker.install_in_task()

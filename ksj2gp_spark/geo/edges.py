@@ -3,7 +3,7 @@ distance and k-nearest-polygon search over arbitrary (point, polygon)
 pairs, each a few whole-batch numpy passes (no Python call per polygon
 or per cell).
 
-Layout, built once per layer from the rings ``cover._flatten`` lays end
+Layout, built once per layer from the rings ``cover.flatten`` lays end
 to end (every array is numpy; an edge is named by its first vertex):
 
 * ``x``, ``y``: the ring vertices (float64). ``ring_off``: the vertex
@@ -71,25 +71,14 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from . import wkb
-from .cover import _flatten, _group_bounds, _ragged_index
+from .cover import _BLOCK, Rings, _ragged_index, _ranges, _run_of, flatten
 
 LEAF = 16  # polygons per STR leaf
-_BLOCK = 1 << 17  # elements per numpy pass
 _PAD = 1e-15  # geom.ring_contains' in_box pad
 _BIN_EDGES = 1.5  # bin height, in mean edge heights of the polygon
 _SLACK = 1e-9  # relative slack of the kNN prune
-
-
-def _ranges(cost: np.ndarray):
-    """``[lo, hi)`` runs of consecutive items whose costs sum to at most
-    ``_BLOCK`` (one item at least)."""
-    ends = np.cumsum(cost)
-    lo = 0
-    while lo < len(cost):
-        base = ends[lo - 1] if lo else 0
-        hi = max(int(np.searchsorted(ends, base + _BLOCK, "right")), lo + 1)
-        yield lo, hi
-        lo = hi
+# vertices per block of the bin sort: its (slot, edge) keys fit 32 bits
+_SORT_BLOCK = 1 << 15
 
 
 def _box_bound(x0, y0, box, x1=None, y1=None):
@@ -177,54 +166,85 @@ class EdgeIndex:
 
     @classmethod
     def build(
-        cls, geoms: list[wkb.Geometry], tie: np.ndarray | None = None
+        cls, layer: list[wkb.Geometry] | Rings, tie: np.ndarray | None = None
     ) -> "EdgeIndex":
-        """Index Polygon/MultiPolygon ``geoms``; ``tie`` ranks the
+        """Index Polygon/MultiPolygon geometries, or their
+        :func:`~ksj2gp_spark.geo.cover.flatten`; ``tie`` ranks the
         polygons for kNN ties (default: layer order)."""
-        n = len(geoms)
-        x, y, ring_v, part_v, part_poly = _flatten(geoms)
-        poly_v = part_poly[part_v]
-        n_ring = int(ring_v[-1]) + 1 if len(ring_v) else 0
-        ring_off = np.r_[0, np.cumsum(np.bincount(ring_v, minlength=n_ring))]
+        rings = layer if isinstance(layer, Rings) else flatten(layer)
+        x, y, n = rings.x, rings.y, rings.n_poly
+        # rings up to the last one with a vertex; an empty ring takes
+        # the part of the vertex after it
+        full = np.flatnonzero(np.diff(rings.ring_off))
+        ring_off = rings.ring_off[: full[-1] + 2 if len(full) else 1]
         first = np.minimum(ring_off[:-1], max(len(x) - 1, 0))
-        ring_part = part_v[first] if len(x) else np.zeros(0, dtype=np.int64)
+        ring_part = np.searchsorted(rings.part_voff, first, "right") - 1
         # a ring is a hole unless its part's first vertex is in it
-        ring_hole = ring_off[:-1] != np.searchsorted(part_v, ring_part, "left")
-        poly_voff = np.r_[0, np.cumsum(np.bincount(poly_v, minlength=n))]
+        ring_hole = ring_off[:-1] != rings.part_voff[ring_part]
+        poly_voff = rings.poly_voff
 
-        bounds = _group_bounds(x, y, poly_v, n)
+        bounds = rings.poly_box.copy()
         empty = np.isnan(bounds[0])
         centre = (bounds[:2] + bounds[2:]) / 2.0
         centre[:, empty] = np.inf  # empty polygons sort last
         bounds[:, empty] = np.array([[np.inf], [np.inf], [-np.inf], [-np.inf]])
         bbox = np.ascontiguousarray(bounds.T)
 
-        # --- y-binned edge lists -------------------------------------------
-        e = np.flatnonzero(ring_v[:-1] == ring_v[1:])
-        q = poly_v[e]
-        lo = np.minimum(y[e], y[e + 1]) - _PAD
-        hi = np.maximum(y[e], y[e + 1]) + _PAD
-        n_edge = np.bincount(q, minlength=n)
+        # --- y-binned edge lists, in blocks of whole polygons -------------
+        edge = rings.edges()
         bin_y0, bin_h = np.zeros(n), np.ones(n)
         n_bin = np.zeros(n, dtype=np.int64)
-        if len(e):
-            st = _starts(q)
-            qs = q[st]
-            bin_y0[qs] = np.minimum.reduceat(lo, st)
-            height = np.maximum.reduceat(hi, st) - bin_y0[qs]
-            mean_dy = np.add.reduceat(np.abs(y[e + 1] - y[e]), st) / n_edge[qs]
+        # a ring of k vertices has k - 1 edges
+        n_v = np.diff(poly_voff)
+        starts = rings.ring_off[:-1][np.diff(rings.ring_off) > 0]
+        n_edges = n_v - np.bincount(_run_of(poly_voff, starts), minlength=n)
+        bin_edge, bin_count = [np.zeros(0, dtype=np.int32)], [np.zeros(0, dtype=np.int64)]
+        for a, b in _ranges(n_v, _SORT_BLOCK):
+            va, vb, n_edge = poly_voff[a], poly_voff[b], n_edges[a:b]
+            yy, ed = y[va:vb], edge[va:max(vb - 1, va)]
+            qs = np.flatnonzero(n_edge)
+            if not len(qs):
+                continue
+            st = (np.cumsum(n_edge) - n_edge)[qs]
+            lo = np.minimum(yy[:-1], yy[1:])[ed] - _PAD
+            hi = np.maximum(yy[:-1], yy[1:])[ed] + _PAD
+            y0 = np.minimum.reduceat(lo, st)
+            height = np.maximum.reduceat(hi, st) - y0
+            mean_dy = np.add.reduceat(np.abs(np.diff(yy))[ed], st) / n_edge[qs]
             # no more bins than edges, even for parts far apart
             h = np.maximum(_BIN_EDGES * mean_dy, height / n_edge[qs])
-            bin_h[qs] = np.where(h > 0, h, 1.0)
-        b_lo = np.floor((lo - bin_y0[q]) / bin_h[q]).astype(np.int64)
-        b_hi = np.floor((hi - bin_y0[q]) / bin_h[q]).astype(np.int64)
-        if len(e):
-            n_bin[qs] = np.maximum.reduceat(b_hi, st) + 1
+            h = np.where(h > 0, h, 1.0)
+            bin_y0[a + qs], bin_h[a + qs] = y0, h
+            y0, h = np.repeat(y0, n_edge[qs]), np.repeat(h, n_edge[qs])
+            b_lo = np.floor((lo - y0) / h).astype(np.int64)
+            b_hi = np.floor((hi - y0) / h).astype(np.int64)
+            nb = n_bin[a:b]
+            nb[qs] = np.maximum.reduceat(b_hi, st) + 1
+            # each edge in the bins b_lo..b_hi of its polygon: one sort of
+            # (slot, edge) keys of the block lists every bin's edges
+            # ascending (an edge in one bin gets a second key past the
+            # last slot, cut off after the sort)
+            slot = np.repeat(np.cumsum(nb) - nb, n_edge) + b_lo
+            span = b_hi - b_lo
+            more = np.flatnonzero(span > 1)  # in three bins or more: few
+            j, t = _ragged_index(span[more] - 1)
+            j = more[j]
+            e = np.flatnonzero(ed)
+            shift = max(len(ed), 1).bit_length()
+            n_slot = int(nb.sum())
+            dtype = np.uint32 if shift + (n_slot + 1).bit_length() <= 32 else np.int64
+            key = np.concatenate(
+                [slot, np.where(span > 0, slot + 1, n_slot), slot[j] + t + 2]
+            ).astype(dtype)
+            key <<= shift
+            key |= np.concatenate([e, e, e[j]]).astype(dtype)
+            key.sort()
+            key = key[: len(key) - np.count_nonzero(span == 0)]
+            bin_edge.append((key & ((1 << shift) - 1)).astype(np.int32) + np.int32(va))
+            bin_count.append(np.bincount(key >> shift, minlength=n_slot))
         bin_off = np.r_[0, np.cumsum(n_bin)]
-        j, t = _ragged_index(b_hi - b_lo + 1)
-        slot = bin_off[q[j]] + b_lo[j] + t
-        bin_edge = e[j][np.argsort(slot, kind="stable")].astype(np.int32)
-        bin_ptr = np.r_[0, np.cumsum(np.bincount(slot, minlength=bin_off[-1]))]
+        bin_edge = np.concatenate(bin_edge)
+        bin_ptr = np.r_[0, np.cumsum(np.concatenate(bin_count))]
 
         # --- STR leaves: x slices of whole leaves, each sorted by y -------
         n_leaf = -(-n // LEAF)
@@ -257,7 +277,7 @@ class EdgeIndex:
         slot = self.bin_off[poly[live]] + b[live].astype(np.int64)
         first = self.bin_ptr[slot].astype(np.int64)
         count = self.bin_ptr[slot + 1] - first
-        for lo, hi in _ranges(count):
+        for lo, hi in _ranges(count, _BLOCK):
             pair, k = _ragged_index(count[lo:hi])
             if not len(pair):
                 continue
@@ -295,7 +315,7 @@ class EdgeIndex:
         first = self.poly_voff[poly]
         count = np.maximum(self.poly_voff[poly + 1] - first - 1, 0)
         d2 = np.full(len(xs), np.inf)
-        for lo, hi in _ranges(count):
+        for lo, hi in _ranges(count, _BLOCK):
             pair, k = _ragged_index(count[lo:hi])
             if not len(pair):
                 continue

@@ -231,7 +231,7 @@ def polygon_cover_pdf(
     res: int,
     id_col: str = "polygon_id",
     extra_cols: Iterable[str] = (),
-    geoms: list[wkb.Geometry] | None = None,
+    geoms: list[wkb.Geometry] | cover_mod.Rings | None = None,
 ) -> pd.DataFrame:
     """Driver-side cover: long (cell, polygon_id, *extra) DataFrame,
     polygons in layer order, each polygon's cells ascending. Built by
@@ -239,8 +239,9 @@ def polygon_cover_pdf(
     (:func:`ksj2gp_spark.geo.cover.cover_layer`); every cell the
     per-polygon sampling rule would keep is in it. The polygons layer
     is assumed broadcast-small (KSJ scale). ``geoms``, when given, are
-    the decoded ``geometry`` column (a caller that needs them too
-    decodes the layer once)."""
+    the decoded ``geometry`` column or its
+    :func:`~ksj2gp_spark.geo.cover.flatten` (a caller that needs them
+    too decodes and flattens the layer once)."""
     if geoms is None:
         geoms = [wkb.loads(buf) for buf in polygons["geometry"]]
     poly, cells = cover_mod.cover_layer(geoms, scheme, res)

@@ -377,7 +377,7 @@ def rasterize_layer(
     refine as the tile lane, so concave/holed layers rasterize
     exactly."""
     from ..geo import wkb as _wkb
-    from ..geo.cover import _flatten
+    from ..geo.cover import flatten
     from . import spatial as sp
     from .cells import normalize_polygons, polygon_cover_pdf, with_cell
 
@@ -385,7 +385,7 @@ def rasterize_layer(
     size = 360.0 / (1 << res)
     # the layer extent over every ring vertex; empty polygons add none
     geoms = [_wkb.loads(bytes(b)) for b in polys["geometry"]]
-    x, y = _flatten(geoms)[:2]
+    x, y = flatten(geoms)[:2]
     if not len(x):  # no polygon has area: empty result, not inf//size
         return spark.createDataFrame(
             [], "cell long, polygon_id string, admin_code string"

@@ -39,7 +39,7 @@ from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..geo import geom, wkb
-from ..geo.cover import _ragged_index
+from ..geo.cover import Rings, _ragged_index, flatten
 from ..geo.edges import EdgeIndex
 from .cells import (
     normalize_polygons,
@@ -505,12 +505,12 @@ def _payload(polys: pd.DataFrame, admin_col: str) -> list[tuple]:
 
 
 def _polygon_side(
-    polys: pd.DataFrame, admin_col: str, geoms: list | None = None
+    polys: pd.DataFrame, admin_col: str, geoms: list | Rings | None = None
 ) -> tuple[np.ndarray, np.ndarray, EdgeIndex]:
     """Per polygon, in layer order: its id and admin code, and the edge
-    index of the layer (``geoms``: the decoded geometries, if at hand)
-    with kNN ties ranked in (admin_code, polygon_id) order, the tie
-    order ``knn_join`` uses."""
+    index of the layer (``geoms``: the decoded geometries or their
+    flattened rings, if at hand) with kNN ties ranked in
+    (admin_code, polygon_id) order, the tie order ``knn_join`` uses."""
     pids = polys["polygon_id"].to_numpy(dtype=object)
     admins = polys[admin_col].to_numpy(dtype=object)
     tie = np.empty(len(polys), dtype=np.int32)
@@ -603,34 +603,33 @@ class PolygonIndex:
         res: int | None = None,
         admin_col: str = "行政区域コード",
     ) -> "PolygonIndex":
-        """Build and broadcast both halves at once: the edge index on a
-        pool thread, shipped there as soon as it is ready, and the
-        cover on this thread (through the module's
-        ``polygon_cover_pdf``). The two share the decoded layer and
-        read it only."""
+        """Build and broadcast both halves from one decode and one
+        flattening of the layer. The polygon side is built first; it is
+        shipped on a pool thread (the JVM's share of a broadcast) while
+        this thread builds and ships the cover (through the module's
+        ``polygon_cover_pdf``)."""
         res = res if res is not None else DEFAULT_RES[scheme]
         polys = normalize_polygons(polygons_pdf)
-        geoms = [wkb.loads(bytes(buf)) for buf in polys["geometry"]]
+        rings = flatten([wkb.loads(bytes(buf)) for buf in polys["geometry"]])
+        side = _polygon_side(polys, admin_col, rings)
         sc = spark.sparkContext
         with ThreadPoolExecutor(1, thread_name_prefix="polygon_side") as pool:
-            side = pool.submit(
-                lambda: sc.broadcast(_polygon_side(polys, admin_col, geoms))
-            )
+            shipping = pool.submit(sc.broadcast, side)
             try:
                 cover = polygon_cover_pdf(
                     polys.assign(_poly=np.arange(len(polys))), scheme, res,
-                    id_col="_poly", geoms=geoms,
+                    id_col="_poly", geoms=rings,
                 )
                 cells = cover["cell"].to_numpy()
                 order = np.argsort(cells, kind="stable")
                 cell_poly = cover["_poly"].to_numpy()[order].astype(np.int32)
                 shipped = sc.broadcast((cells[order], cell_poly))
             except BaseException:
-                if side.exception() is None:
-                    side.result().destroy()
+                if shipping.exception() is None:
+                    shipping.result().destroy()
                 raise
         try:
-            polygons = side.result()
+            polygons = shipping.result()
         except BaseException:
             shipped.destroy()
             raise
