@@ -1,6 +1,5 @@
-"""Iceberg-layer planning-scale probe: does scan/delete_where planning
-cost stay proportional to MATCHING files as the table grows to O(10k)
-data files?
+"""Iceberg-layer planning-scale probe: does scan planning cost stay
+proportional to MATCHING files as the table grows to O(10k) data files?
 
 Table shape per size F: one snapshot, F data files (identity-partitioned
 by a bucket column, one file per partition), each file holding a
@@ -14,14 +13,12 @@ Measured per size:
 * plan_full_sec — same with no bounds (lower bound: manifest parse +
   full per-file plan).
 * files_read / files_total from the scan counters (the pruning proof).
-* delete_narrow_sec + files_rewritten/files_kept — a targeted
-  delete_where must rewrite only the overlapping files regardless of F.
 
 Honest accounting: the manifest is one JSON per snapshot listing every
 live file, so planning always pays an O(files_total) parse (~ms at
 10k); the claim under test is that everything AFTER the parse — file
-opens, per-file Spark plans, delete rewrites — is O(matching), so the
-narrow-window numbers stay flat while the table grows 10×.
+opens, per-file Spark plans — is O(matching), so the narrow-window
+numbers stay flat while the table grows 10×.
 
 Usage: python bench/iceberg_planning.py [sizes...] → one JSON line.
 """
@@ -78,24 +75,12 @@ def probe(spark, path: str, n_files: int) -> dict:
     _, info_full = iceberg.scan(spark, path)
     plan_full = time.time() - t0
 
-    t0 = time.time()
-    dl = iceberg.delete_where(
-        spark, path, f"ts between {lo} and {lo + ROWS_PER_FILE - 1}",
-        bounds={"ts": (lo, lo + ROWS_PER_FILE - 1)},
-    )
-    delete_narrow = time.time() - t0
-    assert dl["files_rewritten"] <= 2, dl
-    assert dl["rows_deleted"] == ROWS_PER_FILE, dl
-
     return {
         "files_total": info["files_total"],
         "files_read_narrow": info["files_read"],
         "files_read_full": info_full["files_read"],
         "plan_narrow_sec": round(plan_narrow, 3),
         "plan_full_sec": round(plan_full, 3),
-        "delete_narrow_sec": round(delete_narrow, 3),
-        "delete_files_rewritten": dl["files_rewritten"],
-        "delete_files_kept": dl["files_kept"],
     }
 
 

@@ -347,73 +347,6 @@ def run_tile_pipeline(
     )
 
 
-def run_tile_pipeline_incremental(
-    spark: SparkSession,
-    images_path: str,
-    polygons: DataFrame | pd.DataFrame,
-    out_path: str,
-    since_snapshot: int | None = None,
-    scheme: str = "hex",
-    res: int | None = None,
-    k_ocean: int = 3,
-    n_chunks: int = 16,
-    bbox: tuple[float, float, float, float] | None = None,
-    crs: str | None = None,
-    partition_cols: tuple[str, ...] = (),
-    max_broadcast_polygons: int = MAX_BROADCAST_POLYGONS,
-) -> tuple[dict, int]:
-    """Incremental tile maintenance over an Iceberg-style image table.
-
-    Joins ONLY the data files added after ``since_snapshot``
-    (``iceberg.added_files``) — at 100 TB an append of a day's images
-    re-joins the day, not the table. Chunk ids are namespaced by the
-    processed snapshot (``s{snapshot}-{i}``), so successive incremental
-    runs commit alongside earlier runs in the same ``out_path`` and the
-    union of all committed chunks equals a full recompute (tested in
-    tests/test_pipeline_api.py). Crash/resume semantics are inherited
-    from :func:`run_resumable` — a re-run of the same increment skips
-    its committed chunks.
-
-    Returns ``(summary, snapshot)`` where ``snapshot`` is the snapshot
-    id this run processed up to — persist it as the cursor for the next
-    increment.
-    """
-    polys_pdf = _polygons_for_fused(polygons, max_broadcast_polygons)
-    res = res if res is not None else spatial.DEFAULT_RES[scheme]
-    meta = iceberg._load_metadata(images_path)
-    to_snapshot = meta["current_snapshot_id"]
-    metas = iceberg.added_files(images_path, since_snapshot, to_snapshot)
-    metas = _prune_bbox(metas, bbox, crs)
-    files = [os.path.join(images_path, f["path"]) for f in metas]
-    if not files:
-        return {}, to_snapshot
-    n_chunks = max(1, min(n_chunks, len(files)))
-    chunks = [files[i::n_chunks] for i in range(n_chunks)]
-    chunk_ids = [f"s{to_snapshot}-{i:05d}" for i in range(len(chunks))]
-    summary = _tile_chunks(
-        spark, dict(zip(chunk_ids, chunks)), polys_pdf, out_path, scheme,
-        res, k_ocean, crs, partition_cols,
-    )
-    return summary, to_snapshot
-
-
-def committed_pipeline_chunks(table_path: str) -> set[str]:
-    """Chunk ids already committed into an Iceberg tile table (read
-    from snapshot summaries — metadata bytes only — plus the
-    table-level ledger expire_snapshots carries forward)."""
-    if not iceberg.current_version(table_path):
-        return set()
-    meta = iceberg._load_metadata(table_path)
-    out = {
-        s["summary"]["pipeline_chunk"]
-        for s in meta["snapshots"]
-        if "pipeline_chunk" in s.get("summary", {})
-    }
-    carried = iceberg._carried_summaries(meta)
-    out.update(carried.get("pipeline_chunks") or [])
-    return out
-
-
 def committed_pipeline_files(table_path: str) -> set[str]:
     """Source files (relative to the images table) whose tiles are
     already committed — the pipeline's RESUME LEDGER. Recorded per
@@ -488,7 +421,6 @@ def run_tile_pipeline_iceberg(
                 tiles,
                 table_path,
                 summary_extra={
-                    "pipeline_chunk": cid,
                     "pipeline_files": sorted(
                         os.path.relpath(f, images_path) for f in group
                     ),

@@ -11,10 +11,10 @@ engine needs:
   ``v{N}.metadata.json``, and finally swaps ``version-hint.text`` via
   atomic rename. Readers resolve the hint → metadata → manifest → file
   list, so a crashed writer can never corrupt a readable table.
-* **Time travel / rollback.** Every snapshot keeps its parent id;
-  ``read(..., snapshot_id=...)`` reads any retained snapshot and
-  ``rollback`` commits a new metadata version pointing at an old one
-  (history is preserved, exactly like Iceberg's rollback).
+* **Append-only snapshots and time travel.** A commit only adds data
+  files, so every snapshot's file list extends its parent's; each
+  snapshot keeps its parent id, and ``read(..., snapshot_id=...)``
+  reads any retained snapshot.
 * **File-level stats pruning.** Each manifest records per-file row
   counts and per-column min/max taken from the parquet footers;
   ``scan`` prunes files by those stats before Spark ever opens them —
@@ -54,17 +54,14 @@ class CommitError(RuntimeError):
     pass
 
 
-# --- field-id schema evolution -------------------------------------------
+# --- schema evolution ----------------------------------------------------
 #
-# Iceberg identifies columns by FIELD ID, not by name: a rename is a
-# metadata-only commit (old data files keep the old parquet column name
-# but the id is unchanged), an added column gets a fresh id and reads as
-# null from files that predate it, and a dropped column disappears from
-# reads while its bytes stay in old files until compaction. The table
-# metadata carries ``fields`` ([{id, name, type}]) + ``last_column_id``,
-# and every data-file manifest entry carries the id→name binding it was
-# written under, which is what ``read(..., merge_schema=True)`` uses to
-# reconcile files across schema versions.
+# An append may add columns (a fresh field id each; files that predate a
+# column read it as null) and widen a column's type (int→long,
+# float→double). Columns are never renamed or dropped, so a data file's
+# column names always match the table schema and reads are name-based.
+# The table metadata carries ``fields`` ([{id, name, type}]) +
+# ``last_column_id``.
 
 
 def _fields_from_spark_schema(schema_json: dict, start_id: int = 0):
@@ -384,209 +381,6 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def _commit(
-    path: str,
-    df: DataFrame,
-    operation: str,
-    parent_files: list[dict] | None,
-    expected_version: int | None = None,
-    summary_extra: dict | None = None,
-    partition_by=None,
-) -> int:
-    """Create one snapshot under the table's exclusive commit lock.
-
-    The WHOLE commit (parent resolution → data write → metadata claim →
-    hint swap) runs inside the lock: concurrent commits to one table
-    serialize, exactly like commits through a real Iceberg catalog, so
-    a racing writer can never drop a peer's files from the next
-    manifest (the subtle lost-update the concurrency test exposed: the
-    parent FILE LIST, not just the version number, must be current at
-    commit time).
-
-    * ``operation="append"`` (parent_files=None): the current
-      snapshot's files are resolved here, under the lock — an append
-      composes with ANY concurrent history, so it never fails, it just
-      waits its turn.
-    * rewriting operations (delete/merge) pass the ``parent_files``
-      they computed from their own read along with the
-      ``expected_version`` they read it at; if the table moved, their
-      file arithmetic is stale → CommitError, caller re-reads and
-      retries (losing-commit semantics).
-    """
-    meta_dir = _meta_dir(path)
-    os.makedirs(meta_dir, exist_ok=True)
-    lease = _acquire_commit_lock(meta_dir)
-    try:
-        return _commit_locked(
-            path, meta_dir, df, operation, parent_files, expected_version,
-            lease, summary_extra, partition_by,
-        )
-    finally:
-        lease.release()
-
-
-def _commit_locked(
-    path: str,
-    meta_dir: str,
-    df: DataFrame,
-    operation: str,
-    parent_files: list[dict] | None,
-    expected_version: int | None,
-    lease: "_LockLease",
-    summary_extra: dict | None = None,
-    partition_by=None,
-) -> int:
-    version = current_version(path)
-    if expected_version is not None and version != expected_version:
-        raise CommitError(
-            f"concurrent commit at {path}: table moved from "
-            f"v{expected_version} to v{version}; re-read and retry"
-        )
-    parent_meta = _load_metadata(path, version) if version else None
-    if parent_files is None:  # append: resolve parents under the lock
-        parent_files = (
-            _load_manifest(path, parent_meta["current_snapshot_id"])["files"]
-            if parent_meta
-            else []
-        )
-    snapshot_id = (
-        max((s["snapshot_id"] for s in parent_meta["snapshots"]), default=0) + 1
-        if parent_meta
-        else 1
-    )
-
-    schema_json = json.loads(df.schema.json())
-    fields, last_column_id = _evolve_fields(
-        *(_table_fields(parent_meta) if parent_meta else (None, 0)),
-        schema_json,
-    )
-
-    # partition spec: fixed at table creation (or first partitioned
-    # commit on an empty table); every later commit — appends AND the
-    # COW rewrites of delete/merge/compact — writes under the same spec
-    spec = _spec_of(parent_meta)
-    if partition_by is not None:
-        want = _normalize_spec(partition_by, df)
-        if spec and want != spec:
-            raise CommitError(
-                f"partition spec mismatch at {path}: table has "
-                f"{spec}, commit requested {want}"
-            )
-        if not spec and parent_files:
-            # legacy files carry no partition values — adopting a spec
-            # now would make them unreadable (and merge_schema would
-            # silently NULL the identity column for their rows)
-            raise CommitError(
-                f"cannot introduce a partition spec at {path}: the "
-                "table already holds unpartitioned data files "
-                "(rewrite via overwrite/compact first)"
-            )
-        spec = want
-    identity_cols = {
-        s["name"] for s in spec if s["transform"] == "identity"
-    }
-    id_of = {f["name"]: f["id"] for f in fields}
-    # identity partition columns live in the directory name, not in the
-    # parquet file — they must not appear in the file's column binding
-    file_binding = {
-        str(id_of[f["name"]]): f["name"]
-        for f in schema_json["fields"]
-        if f["name"] not in identity_cols
-    }
-
-    # 1. data files (immutable, snapshot-owned directory)
-    data_dir = os.path.join(path, "data", f"snap-{snapshot_id}")
-    wdf, part_dir_cols = df, []
-    for s in spec:
-        if s["transform"] == "identity":
-            part_dir_cols.append(s["name"])
-        else:  # hidden transform: derived dir column, dropped on read
-            dcol, expr = _hidden_partition_column(s)
-            if dcol in df.columns:
-                raise CommitError(
-                    f"hidden partition column name collides: {dcol}"
-                )
-            wdf = wdf.withColumn(dcol, expr)
-            part_dir_cols.append(dcol)
-    writer = wdf.write.mode("overwrite")
-    if part_dir_cols:
-        writer = writer.partitionBy(*part_dir_cols)
-    writer.parquet(data_dir)
-    new_files = []
-    for root, _dirs, fnames in sorted(os.walk(data_dir)):
-        for name in sorted(fnames):
-            if not name.endswith(".parquet"):
-                continue
-            fp = os.path.join(root, name)
-            new_files.append(
-                {
-                    "path": os.path.relpath(fp, path),
-                    "fields": file_binding,
-                    **(
-                        {"partition": _decode_partition_path(
-                            os.path.relpath(fp, data_dir), spec
-                        )}
-                        if spec
-                        else {}
-                    ),
-                    **_file_stats(fp),
-                }
-            )
-
-    all_files = parent_files + new_files
-    # 2. snapshot manifest
-    manifest = {
-        "snapshot_id": snapshot_id,
-        "parent_snapshot_id": (
-            parent_meta["current_snapshot_id"] if parent_meta else None
-        ),
-        "operation": operation,
-        "timestamp_ms": int(time.time() * 1000),
-        "files": all_files,
-        "summary": {
-            "added_files": len(new_files),
-            "total_files": len(all_files),
-            "added_rows": sum(f["rows"] for f in new_files),
-            "total_rows": sum(f["rows"] for f in all_files),
-            **(summary_extra or {}),
-        },
-    }
-    with open(os.path.join(meta_dir, f"snap-{snapshot_id}.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
-
-    # 3. new metadata version
-    snapshots = (parent_meta["snapshots"] if parent_meta else []) + [
-        {
-            "snapshot_id": snapshot_id,
-            "parent_snapshot_id": manifest["parent_snapshot_id"],
-            "operation": operation,
-            "timestamp_ms": manifest["timestamp_ms"],
-            "summary": manifest["summary"],
-        }
-    ]
-    new_meta = {
-        "format_version": FORMAT_VERSION,
-        # legacy key: the FULL table schema (a frame missing an evolved
-        # column narrows nothing — absent columns read as null)
-        "schema": _spark_schema_of(fields),
-        "fields": fields,
-        "last_column_id": last_column_id,
-        "current_snapshot_id": snapshot_id,
-        "snapshots": snapshots,
-        "partition_spec": spec,
-    }
-    # table-level exactly-once state rescued by expire_snapshots must
-    # survive every later commit, not just the expiration itself
-    if parent_meta and parent_meta.get("carried_summaries"):
-        new_meta["carried_summaries"] = parent_meta["carried_summaries"]
-    # 4. publish: metadata claim + atomic hint swap — THE commit point.
-    # The lease is re-verified first so a writer whose lock was stolen
-    # by a (mis-firing) stale takeover aborts instead of clobbering the
-    # usurper's already-published commit.
-    lease.verify()
-    _publish_metadata(path, meta_dir, new_meta, version)
-    return snapshot_id
-
 
 def _publish_metadata(
     path: str, meta_dir: str, new_meta: dict, from_version: int
@@ -684,42 +478,152 @@ def append(
     summary_extra: dict | None = None,
     partition_by=None,
 ) -> int:
-    """Append a snapshot; returns the new snapshot id. Parent files are
-    resolved inside the commit lock, so concurrent appends serialize
-    and compose — neither fails, neither loses the other's files.
-    ``summary_extra`` lands in the snapshot summary — used by the
-    streaming sink to record (stream id, epoch) ATOMICALLY with the
-    data, which is what makes replayed micro-batches detectable."""
-    return _commit(
-        path, df, "append", None,
-        summary_extra=summary_extra, partition_by=partition_by,
-    )
+    """Append a snapshot; returns the new snapshot id.
 
+    The whole commit (parent resolution → data write → manifest →
+    metadata claim → hint swap) runs under the table's exclusive commit
+    lock, so concurrent appends serialize like commits through a real
+    Iceberg catalog: each resolves its parent's file list under the
+    lock, so neither fails and neither loses the other's files.
+    ``summary_extra`` lands in the snapshot summary, atomically with the
+    data: the tile pipeline records its source-file ledger there
+    (``pipeline_files``)."""
+    meta_dir = _meta_dir(path)
+    os.makedirs(meta_dir, exist_ok=True)
+    lease = _acquire_commit_lock(meta_dir)
+    try:
+        version = current_version(path)
+        parent_meta = _load_metadata(path, version) if version else None
+        parent_files = (
+            _load_manifest(path, parent_meta["current_snapshot_id"])["files"]
+            if parent_meta
+            else []
+        )
+        snapshot_id = (
+            max((s["snapshot_id"] for s in parent_meta["snapshots"]), default=0)
+            + 1
+            if parent_meta
+            else 1
+        )
+        fields, last_column_id = _evolve_fields(
+            *(_table_fields(parent_meta) if parent_meta else (None, 0)),
+            json.loads(df.schema.json()),
+        )
 
-def last_streaming_epoch(path: str, stream_id: str) -> int | None:
-    """Highest epoch id committed for ``stream_id``, or None. Reads
-    snapshot summaries in the current metadata file PLUS the
-    table-level watermark that expire_snapshots carries forward when
-    it drops summary-bearing snapshots."""
-    if not current_version(path):
-        return None
-    meta = _load_metadata(path)
-    epochs = [
-        s["summary"]["streaming_epoch"]
-        for s in meta["snapshots"]
-        if s.get("summary", {}).get("streaming_query") == stream_id
-        and "streaming_epoch" in s.get("summary", {})
-    ]
-    carried = _carried_summaries(meta).get("streaming_epochs") or {}
-    if stream_id in carried:
-        epochs.append(carried[stream_id])
-    return max(epochs) if epochs else None
+        # partition spec: fixed by the table's first commit (or its first
+        # partitioned commit while it holds no file); later appends write
+        # under the same spec
+        spec = _spec_of(parent_meta)
+        if partition_by is not None:
+            want = _normalize_spec(partition_by, df)
+            if spec and want != spec:
+                raise CommitError(
+                    f"partition spec mismatch at {path}: table has "
+                    f"{spec}, commit requested {want}"
+                )
+            if not spec and parent_files:
+                # files written without a spec carry no partition values
+                # — adopting one now would make them unreadable
+                raise CommitError(
+                    f"cannot introduce a partition spec at {path}: the "
+                    "table already holds unpartitioned data files (a "
+                    "table's partition spec is fixed by its first commit)"
+                )
+            spec = want
 
+        # 1. data files (immutable, snapshot-owned directory)
+        data_dir = os.path.join(path, "data", f"snap-{snapshot_id}")
+        wdf, part_dir_cols = df, []
+        for s in spec:
+            if s["transform"] == "identity":
+                part_dir_cols.append(s["name"])
+            else:  # hidden transform: derived dir column, dropped on read
+                dcol, expr = _hidden_partition_column(s)
+                if dcol in df.columns:
+                    raise CommitError(
+                        f"hidden partition column name collides: {dcol}"
+                    )
+                wdf = wdf.withColumn(dcol, expr)
+                part_dir_cols.append(dcol)
+        writer = wdf.write.mode("overwrite")
+        if part_dir_cols:
+            writer = writer.partitionBy(*part_dir_cols)
+        writer.parquet(data_dir)
+        new_files = []
+        for root, _dirs, fnames in sorted(os.walk(data_dir)):
+            for name in sorted(fnames):
+                if not name.endswith(".parquet"):
+                    continue
+                fp = os.path.join(root, name)
+                new_files.append(
+                    {
+                        "path": os.path.relpath(fp, path),
+                        **(
+                            {"partition": _decode_partition_path(
+                                os.path.relpath(fp, data_dir), spec
+                            )}
+                            if spec
+                            else {}
+                        ),
+                        **_file_stats(fp),
+                    }
+                )
 
-def overwrite(df: DataFrame, path: str) -> int:
-    """Replace table contents in a new snapshot (old ones stay
-    readable until expired)."""
-    return _commit(path, df, "overwrite", [])
+        all_files = parent_files + new_files
+        # 2. snapshot manifest
+        manifest = {
+            "snapshot_id": snapshot_id,
+            "parent_snapshot_id": (
+                parent_meta["current_snapshot_id"] if parent_meta else None
+            ),
+            "operation": "append",
+            "timestamp_ms": int(time.time() * 1000),
+            "files": all_files,
+            "summary": {
+                "added_files": len(new_files),
+                "total_files": len(all_files),
+                "added_rows": sum(f["rows"] for f in new_files),
+                "total_rows": sum(f["rows"] for f in all_files),
+                **(summary_extra or {}),
+            },
+        }
+        with open(os.path.join(meta_dir, f"snap-{snapshot_id}.json"), "w") as f:
+            json.dump(manifest, f, indent=1)
+
+        # 3. new metadata version
+        snapshots = (parent_meta["snapshots"] if parent_meta else []) + [
+            {
+                "snapshot_id": snapshot_id,
+                "parent_snapshot_id": manifest["parent_snapshot_id"],
+                "operation": "append",
+                "timestamp_ms": manifest["timestamp_ms"],
+                "summary": manifest["summary"],
+            }
+        ]
+        new_meta = {
+            "format_version": FORMAT_VERSION,
+            # legacy key: the FULL table schema (a frame missing an
+            # evolved column narrows nothing — absent columns read as null)
+            "schema": _spark_schema_of(fields),
+            "fields": fields,
+            "last_column_id": last_column_id,
+            "current_snapshot_id": snapshot_id,
+            "snapshots": snapshots,
+            "partition_spec": spec,
+        }
+        # the ledger rescued by expire_snapshots must survive every later
+        # commit, not just the expiration itself
+        if parent_meta and parent_meta.get("carried_summaries"):
+            new_meta["carried_summaries"] = parent_meta["carried_summaries"]
+        # 4. publish: metadata claim + atomic hint swap — THE commit
+        # point. The lease is re-verified first so a writer whose lock
+        # was stolen by a (mis-firing) stale takeover aborts instead of
+        # clobbering the usurper's already-published commit.
+        lease.verify()
+        _publish_metadata(path, meta_dir, new_meta, version)
+        return snapshot_id
+    finally:
+        lease.release()
 
 
 def _bounds_disjoint(
@@ -761,122 +665,6 @@ def _bounds_disjoint(
     return False
 
 
-def delete_where(
-    spark: SparkSession,
-    path: str,
-    condition: str,
-    bounds: dict[str, tuple] | None = None,
-) -> dict:
-    """Copy-on-write row-level DELETE: a new snapshot in which files
-    that may contain matching rows are rewritten without them, and
-    every provably-unaffected file is carried over untouched.
-
-    ``bounds`` ({col: (lo, hi)}: the value range the predicate can
-    match, conjunctive) drives manifest-stats pruning — on a
-    spatially/temporally sorted 100 TB table a targeted delete rewrites
-    only the overlapping files and never reads the rest. Rows where
-    the predicate evaluates NULL are kept (SQL DELETE semantics).
-
-    Old snapshots still read the pre-delete data (time travel) until
-    expired. Returns {snapshot, files_rewritten, files_kept,
-    rows_deleted}.
-    """
-    from pyspark.sql import functions as F
-
-    ver0 = current_version(path)
-    meta = _load_metadata(path)
-    spec = _spec_of(meta)
-    files = _live_files(path)
-    cands, kept = [], []
-    for f in files:
-        if bounds and _bounds_disjoint(f, bounds, spec):
-            kept.append(f)
-        else:
-            cands.append(f)
-    if not cands:
-        return {
-            "snapshot": meta["current_snapshot_id"],
-            "files_rewritten": 0,
-            "files_kept": len(kept),
-            "rows_deleted": 0,
-        }
-    df = _read_files(spark, path, cands, meta)
-    # keep rows where the predicate is FALSE or NULL
-    survivors = df.filter(F.coalesce(~F.expr(condition), F.lit(True)))
-    n_before = sum(f["rows"] for f in cands)
-    # kept-file arithmetic is valid only at ver0: CommitError if moved
-    sid = _commit(path, survivors, "delete", kept, expected_version=ver0)
-    n_after = _load_manifest(path, sid)["summary"]["added_rows"]
-    return {
-        "snapshot": sid,
-        "files_rewritten": len(cands),
-        "files_kept": len(kept),
-        "rows_deleted": n_before - n_after,
-    }
-
-
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-) -> dict:
-    """MERGE (upsert by key), copy-on-write: rows in ``updates`` replace
-    same-key rows; new keys append. Files that provably contain no
-    matching key — by comparing their manifest min/max against the
-    updates' own key range (computed in one tiny aggregation) — are
-    carried over untouched, so a keyed upsert against a key-sorted
-    100 TB table rewrites only the overlapping files.
-
-    Returns {snapshot, files_rewritten, files_kept, rows_updated,
-    rows_inserted}.
-    """
-    from pyspark.sql import functions as F
-
-    ver0 = current_version(path)
-    files = _live_files(path)
-    # auto-bounds from the updates' key range (single-row aggregate)
-    aggs = []
-    for c in key_cols:
-        aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
-    r = updates.agg(*aggs).collect()[0]
-    bounds = {
-        c: (r[f"__lo_{c}"], r[f"__hi_{c}"])
-        for c in key_cols
-        if r[f"__lo_{c}"] is not None
-    }
-    meta = _load_metadata(path)
-    spec = _spec_of(meta)
-    cands, kept = [], []
-    for f in files:
-        if bounds and _bounds_disjoint(f, bounds, spec):
-            kept.append(f)
-        else:
-            cands.append(f)
-    updates = updates.dropDuplicates(key_cols)
-    if cands:
-        existing = _read_files(spark, path, cands, meta)
-        survivors = existing.join(
-            updates.select(*key_cols), key_cols, "left_anti"
-        )
-        n_before = sum(f["rows"] for f in cands)
-        new_data = survivors.unionByName(updates)
-    else:
-        n_before = 0
-        new_data = updates
-    sid = _commit(path, new_data, "merge", kept, expected_version=ver0)
-    n_written = _load_manifest(path, sid)["summary"]["added_rows"]
-    n_updates = updates.count()
-    n_survivors = n_written - n_updates
-    return {
-        "snapshot": sid,
-        "files_rewritten": len(cands),
-        "files_kept": len(kept),
-        "rows_updated": n_before - n_survivors,
-        "rows_inserted": n_updates - (n_before - n_survivors),
-    }
-
-
 def history(path: str) -> list[dict]:
     return _load_metadata(path)["snapshots"]
 
@@ -893,64 +681,14 @@ def added_files(
     path: str, since_snapshot: int | None, to_snapshot: int | None = None
 ) -> list[dict]:
     """Incremental-scan primitive: data files present in ``to_snapshot``
-    (default: current) but NOT in ``since_snapshot`` — i.e. the files an
-    append-only workload added between the two snapshots. With
-    ``since_snapshot=None`` every live file is "added" (full scan).
-
-    This is what keeps a 100 TB maintenance job incremental: the tile
-    pipeline re-joins only the NEW files after each append instead of
-    rescanning the table (real Iceberg's incremental append scan).
-    """
+    (default: current) but NOT in ``since_snapshot`` — i.e. the files
+    appended between the two snapshots. With ``since_snapshot=None``
+    every live file is "added" (full scan)."""
     new = {f["path"]: f for f in _live_files(path, to_snapshot)}
     if since_snapshot is not None:
         for f in _live_files(path, since_snapshot):
             new.pop(f["path"], None)
     return list(new.values())
-
-
-def diff_snapshots(
-    spark: SparkSession,
-    path: str,
-    since_snapshot: int | None,
-    to_snapshot: int | None = None,
-) -> DataFrame:
-    """Changelog-style incremental read: the ROWS added between two
-    snapshots, as a DataFrame (real Iceberg's incremental append
-    scan). Reads only the added data files — a day's append on a
-    100 TB table streams as a day's bytes — and re-attaches identity
-    partition values like every other read path. Rows removed by COW
-    rewrites are not surfaced (append-scan semantics: rewritten
-    survivors in a new file DO appear; use time travel + except for a
-    full diff)."""
-    files = added_files(path, since_snapshot, to_snapshot)
-    meta = _load_metadata(path)
-    if not files:
-        return read(spark, path, to_snapshot).limit(0)
-    return _read_files(spark, path, files, meta)
-
-
-
-
-def _assert_uniform_bindings(meta: dict, files: list[dict]) -> None:
-    """Refuse a name-based (non-merge) read over files whose id→name
-    bindings disagree with the current table schema — after a
-    rename/drop the raw parquet column names differ per era, so a plain
-    union would surface inconsistent column sets or silently mix a
-    dropped column's old values under a re-added name. Callers get a
-    descriptive error instead: pass merge_schema=True, which maps every
-    file through its own binding by field id."""
-    expect = {f["id"]: f["name"] for f in _table_fields(meta)[0]}
-    for f in files:
-        for i, n in (f.get("fields") or {}).items():
-            fid = int(i)
-            if fid not in expect or expect[fid] != n:
-                raise CommitError(
-                    f"data file {f['path']!r} was written under a "
-                    f"different schema binding (field {fid} = {n!r}); "
-                    "the table schema has since been renamed/dropped. "
-                    "Read with merge_schema=True to reconcile files by "
-                    "field id."
-                )
 
 
 def _read_files(
@@ -964,16 +702,14 @@ def _read_files(
     number of touched identity partitions (one constant-column branch
     each), matching how Iceberg sources surface partition values.
 
-    Name-based by design; files written under an older id→name binding
-    are rejected with a pointer at merge_schema=True (see
-    :func:`_assert_uniform_bindings`). The TABLE schema is always
+    Name-based: columns are never renamed or dropped, so every file's
+    column names match the table schema. The TABLE schema is always
     passed to the parquet reader explicitly: a schema-less read of
     mixed-era files takes whatever type/column set the first file has
     (verified on this Spark: int32+int64 files read as int, silently
     truncating), while an explicit schema reads deterministically,
     widens promoted columns (int→long, float→double) in the scan, and
     fills columns a file predates with nulls."""
-    _assert_uniform_bindings(meta, files)
     from pyspark.sql.types import StructType
 
     fields, _ = _table_fields(meta)
@@ -1053,125 +789,14 @@ def read(
     spark: SparkSession,
     path: str,
     snapshot_id: int | None = None,
-    merge_schema: bool = False,
 ) -> DataFrame:
-    """Read the current (or a time-travel) snapshot. ``merge_schema``
-    reconciles files written under evolved schemas BY FIELD ID through
-    each file's manifest binding: added columns read as null from older
-    files, renamed columns keep their values under the new name, and
-    dropped columns disappear — parquet's name-based mergeSchema can do
-    only the first of those."""
+    """Read the current (or a time-travel) snapshot under the table's
+    current schema: columns added since a file was written read as null
+    from it, and promoted columns read at their wider type."""
     files = _live_files(path, snapshot_id)
     if not files:
         raise FileNotFoundError(f"snapshot has no data files: {path}")
-    if not merge_schema:
-        return _read_files(spark, path, files, _load_metadata(path))
-
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    meta = _load_metadata(path)
-    fields, _ = _table_fields(meta)
-    table_schema = StructType.fromJson(_spark_schema_of(fields))
-
-    id_specs = [
-        s for s in _spec_of(meta) if s["transform"] == "identity"
-    ]
-    id_names = {s["name"] for s in id_specs}
-    bind_groups: dict[tuple, list[dict]] = {}
-    for f in files:
-        binding = tuple(sorted((f.get("fields") or {}).items()))
-        bind_groups.setdefault(binding, []).append(f)
-
-    from pyspark.sql.types import StructField
-
-    def identity_expr(s, raw):
-        return (
-            F.when(raw == "__HIVE_DEFAULT_PARTITION__", F.lit(None))
-            .otherwise(F.url_decode(raw))
-        )
-
-    parts = []
-    # outer grouping by field binding only (one group per schema epoch
-    # — small); partition handling nests inside so a 10k-partition
-    # table never becomes a 10k-child Union (see _read_files)
-    for binding, fs in bind_groups.items():
-        written_by_id = {int(i): n for i, n in binding}
-        # Explicit per-group read schema under the WRITTEN names with
-        # the TABLE's (current, possibly promoted) types: a schema-less
-        # read takes whatever type the first file has — mixed
-        # int32/int64 files after an int→long promotion then fail (or
-        # silently truncate); the explicit schema widens at the scan.
-        req = []
-        for fld, sf in zip(fields, table_schema.fields):
-            if fld["name"] in id_names:
-                continue
-            written = (
-                written_by_id.get(fld["id"]) if binding else fld["name"]
-            )
-            if written is not None:
-                req.append(StructField(written, sf.dataType, True))
-        req_schema = StructType(req)
-
-        def project(gdf, part_vals, fname):
-            cols = []
-            for fld, sf in zip(fields, table_schema.fields):
-                if fld["name"] in id_names:
-                    if fname is not None:
-                        import re as _re
-
-                        raw = F.regexp_extract(
-                            fname,
-                            f".*/{_re.escape(fld['name'])}=([^/]*)/.*",
-                            1,
-                        )
-                        cols.append(
-                            identity_expr(fld, raw)
-                            .cast(sf.dataType)
-                            .alias(fld["name"])
-                        )
-                    else:
-                        cols.append(
-                            F.lit(part_vals[fld["name"]])
-                            .cast(sf.dataType)
-                            .alias(fld["name"])
-                        )
-                    continue
-                # legacy files (no binding) wrote current names directly
-                written = (
-                    written_by_id.get(fld["id"]) if binding else fld["name"]
-                )
-                if written is not None and written in gdf.columns:
-                    cols.append(
-                        F.col(written).cast(sf.dataType).alias(fld["name"])
-                    )
-                else:
-                    cols.append(
-                        F.lit(None).cast(sf.dataType).alias(fld["name"])
-                    )
-            return gdf.select(cols)
-
-        part_groups: dict[tuple, list[dict]] = {}
-        for f in fs:
-            part = tuple(
-                (s["name"], (f.get("partition") or {}).get(s["name"]))
-                for s in id_specs
-            )
-            part_groups.setdefault(part, []).append(f)
-        if len(part_groups) > 32:
-            gdf = spark.read.schema(req_schema).parquet(
-                *(os.path.join(path, f["path"]) for f in fs)
-            )
-            parts.append(project(gdf, {}, F.input_file_name()))
-        else:
-            for part, pfs in part_groups.items():
-                gdf = spark.read.schema(req_schema).parquet(
-                    *(os.path.join(path, f["path"]) for f in pfs)
-                )
-                parts.append(project(gdf, dict(part), None))
-    return reduce(DataFrame.unionByName, parts)
+    return _read_files(spark, path, files, _load_metadata(path))
 
 
 def scan(
@@ -1202,200 +827,12 @@ def scan(
     return _read_files(spark, path, selected, meta), info
 
 
-def _assert_not_partition_column(meta: dict, name: str) -> None:
-    for s in _spec_of(meta):
-        if s["name"] == name:
-            raise CommitError(
-                f"column {name!r} is referenced by the partition spec "
-                f"({s['transform']}); partition-spec columns cannot be "
-                "renamed or dropped (spec evolution is not supported)"
-            )
-
-
-def rename_column(path: str, old: str, new: str) -> int:
-    """Metadata-only rename by FIELD ID (Iceberg rename semantics): no
-    data file is touched — old files keep the old parquet column name,
-    and ``read(..., merge_schema=True)`` maps them back through the
-    per-file id→name binding. Runs under the commit lock with the same
-    O_EXCL version claim as data commits."""
-    meta_dir = _meta_dir(path)
-    lease = _acquire_commit_lock(meta_dir)
-    try:
-        version = current_version(path)
-        meta = _load_metadata(path, version)
-        fields, last_id = _table_fields(meta)
-        fields = [dict(f) for f in fields]
-        names = {f["name"] for f in fields}
-        if old not in names:
-            raise CommitError(f"no column {old!r} in table schema")
-        if new in names:
-            raise CommitError(f"column {new!r} already exists")
-        _assert_not_partition_column(meta, old)
-        for f in fields:
-            if f["name"] == old:
-                f["name"] = new
-        new_meta = dict(
-            meta,
-            fields=fields,
-            last_column_id=last_id,
-            schema=_spark_schema_of(fields),
-        )
-        lease.verify()
-        return _publish_metadata(path, meta_dir, new_meta, version)
-    finally:
-        lease.release()
-
-
-def drop_column(path: str, name: str) -> int:
-    """Metadata-only drop: the field leaves the table schema, its bytes
-    stay in existing data files until compaction rewrites them, and
-    merge-schema reads stop projecting it (Iceberg drop semantics —
-    re-adding the same name later mints a NEW field id, so old values
-    do not resurrect)."""
-    meta_dir = _meta_dir(path)
-    lease = _acquire_commit_lock(meta_dir)
-    try:
-        version = current_version(path)
-        meta = _load_metadata(path, version)
-        fields, last_id = _table_fields(meta)
-        kept = [dict(f) for f in fields if f["name"] != name]
-        if len(kept) == len(fields):
-            raise CommitError(f"no column {name!r} in table schema")
-        _assert_not_partition_column(meta, name)
-        new_meta = dict(
-            meta,
-            fields=kept,
-            last_column_id=last_id,
-            schema=_spark_schema_of(kept),
-        )
-        lease.verify()
-        return _publish_metadata(path, meta_dir, new_meta, version)
-    finally:
-        lease.release()
-
-
-def rollback(path: str, snapshot_id: int) -> int:
-    """Commit a new metadata version whose current snapshot is an
-    older one (no data is touched; history is preserved). Runs under
-    the table's commit lock with the same O_EXCL version claim as data
-    commits — racing a concurrent commit can no longer truncate the
-    metadata file it just claimed or lose it via a stale hint swap."""
-    meta_dir = _meta_dir(path)
-    lease = _acquire_commit_lock(meta_dir)
-    try:
-        version = current_version(path)  # re-read under the lock
-        meta = _load_metadata(path, version)
-        if snapshot_id not in {s["snapshot_id"] for s in meta["snapshots"]}:
-            raise CommitError(f"unknown snapshot {snapshot_id}")
-        new_meta = dict(meta, current_snapshot_id=snapshot_id)
-        lease.verify()
-        return _publish_metadata(path, meta_dir, new_meta, version)
-    finally:
-        lease.release()
-
-
-def compact(
-    spark: SparkSession, path: str, target_rows_per_file: int = 1_000_000
-) -> int:
-    """Rewrite the current snapshot's data into right-sized files (the
-    small-files problem: a long append history leaves many tiny files;
-    manifest pruning and scan parallelism both degrade). Commits a new
-    ``replace`` snapshot; old snapshots stay readable until expired."""
-    df = read(spark, path)
-    n = df.count()
-    n_files = max(1, (n + target_rows_per_file - 1) // target_rows_per_file)
-    return _commit(path, df.repartition(n_files), "replace", [])
-
-
-def vacuum_orphans(path: str, min_age_sec: float = 3600.0) -> dict:
-    """Garbage-collect artifacts no snapshot references: data files in
-    ``data/snap-*`` directories (crashed writers, failed COW rewrites)
-    and metadata versions above the published one (losing commits).
-
-    ``min_age_sec`` protects in-flight writers — only artifacts older
-    than the horizon are removed (the same contract as Iceberg's
-    remove_orphan_files; pass 0 in tests). The published hint file and
-    everything any snapshot references are never touched.
-
-    Returns {"deleted_files": n, "deleted_meta": m}.
-    """
-    lease = _acquire_commit_lock(_meta_dir(path))
-    try:
-        return _vacuum_locked(path, min_age_sec)
-    finally:
-        lease.release()
-
-
-def _vacuum_locked(path: str, min_age_sec: float) -> dict:
-    version = current_version(path)
-    meta = _load_metadata(path, version)
-    referenced: set[str] = set()
-    for s in meta["snapshots"]:
-        try:
-            man = _load_manifest(path, s["snapshot_id"])
-        except FileNotFoundError:
-            continue
-        referenced.update(f["path"] for f in man["files"])
-    now = time.time()
-    deleted_files = 0
-    data_root = os.path.join(path, "data")
-    if os.path.isdir(data_root):
-        for snap_dir in sorted(os.listdir(data_root)):
-            d = os.path.join(data_root, snap_dir)
-            if not os.path.isdir(d):
-                continue
-            # recursive: partitioned snapshots nest files under
-            # hive key=value directories — a flat listdir would both
-            # miss orphans and (worse) judge a LIVE partitioned
-            # snapshot "empty" and rmtree it
-            for root, _dirs, names in sorted(os.walk(d)):
-                for name in sorted(names):
-                    fp = os.path.join(root, name)
-                    rel = os.path.relpath(fp, path)
-                    if rel in referenced:
-                        continue
-                    if not name.endswith(".parquet"):
-                        continue  # _SUCCESS etc. cleaned with last file
-                    if now - os.path.getmtime(fp) < min_age_sec:
-                        continue
-                    os.remove(fp)
-                    deleted_files += 1
-            has_parquet = any(
-                n.endswith(".parquet")
-                for _r, _ds, ns in os.walk(d)
-                for n in ns
-            )
-            if not has_parquet:
-                import shutil
-
-                shutil.rmtree(d)
-    deleted_meta = 0
-    meta_dir = _meta_dir(path)
-    known_snaps = {s["snapshot_id"] for s in meta["snapshots"]}
-    for name in sorted(os.listdir(meta_dir)):
-        fp = os.path.join(meta_dir, name)
-        if name.startswith("v") and name.endswith(".metadata.json"):
-            v = int(name[1:].split(".")[0])
-            if v > version and now - os.path.getmtime(fp) >= min_age_sec:
-                os.remove(fp)
-                deleted_meta += 1
-        elif name.startswith("snap-") and name.endswith(".json"):
-            sid = int(name[5:].split(".")[0])
-            if (
-                sid not in known_snaps
-                and now - os.path.getmtime(fp) >= min_age_sec
-            ):
-                os.remove(fp)
-                deleted_meta += 1
-    return {"deleted_files": deleted_files, "deleted_meta": deleted_meta}
-
-
 def expire_snapshots(path: str, keep_last: int = 1) -> dict:
     """Drop all but the newest ``keep_last`` snapshots (the current one
-    is always kept) and delete data files referenced by no retained
-    snapshot. Runs under the commit lock + O_EXCL version claim like
-    every other metadata writer. Returns {"expired": [...],
-    "deleted_files": n}."""
+    is always kept) with their manifests. No data file is deleted: the
+    table is append-only, so the current snapshot still references every
+    file an expired one did. Runs under the commit lock + O_EXCL version
+    claim like every other metadata writer. Returns {"expired": [...]}."""
     lease = _acquire_commit_lock(_meta_dir(path))
     try:
         return _expire_locked(path, keep_last, lease)
@@ -1405,8 +842,8 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
 
 def _carried_summaries(meta: dict) -> dict:
     """Table-level state rescued from expired snapshots (see
-    _expire_locked): streaming watermarks + the pipeline file ledger
-    survive snapshot expiration here."""
+    _expire_locked): the pipeline file ledger survives snapshot
+    expiration here."""
     return meta.get("carried_summaries") or {}
 
 
@@ -1418,51 +855,17 @@ def _expire_locked(path: str, keep_last: int, lease: _LockLease) -> dict:
     keep_ids.add(meta["current_snapshot_id"])
     expired = [s for s in snaps if s["snapshot_id"] not in keep_ids]
     if not expired:
-        return {"expired": [], "deleted_files": 0}
+        return {"expired": []}
 
-    # Exactly-once state lives in snapshot SUMMARIES: the streaming
-    # sink's (stream_id, epoch) watermark and the tile pipeline's
-    # source-file ledger. Dropping a snapshot must not drop that state
-    # — a restarted stream/pipeline would re-append already-committed
-    # data — so it is folded forward into table-level metadata before
-    # the snapshot entries go (Iceberg keeps the analogous Delta-style
-    # txn watermark in table metadata for the same reason).
-    carried = _carried_summaries(meta)
-    epochs = dict(carried.get("streaming_epochs") or {})
-    pfiles = set(carried.get("pipeline_files") or [])
-    pchunks = set(carried.get("pipeline_chunks") or [])
+    # The tile pipeline's source-file ledger lives in snapshot SUMMARIES.
+    # Dropping a snapshot must not drop it — a restarted pipeline would
+    # re-append already-committed tiles — so it is folded forward into
+    # table-level metadata before the snapshot entries go (Iceberg keeps
+    # the analogous Delta-style txn watermark in table metadata for the
+    # same reason).
+    pfiles = set(_carried_summaries(meta).get("pipeline_files") or [])
     for s in expired:
-        summ = s.get("summary") or {}
-        q = summ.get("streaming_query")
-        if q is not None and "streaming_epoch" in summ:
-            e = summ["streaming_epoch"]
-            epochs[q] = max(epochs.get(q, e), e)
-        pfiles.update(summ.get("pipeline_files") or [])
-        if "pipeline_chunk" in summ:
-            pchunks.add(summ["pipeline_chunk"])
-    new_carried = {
-        k: v
-        for k, v in (
-            ("streaming_epochs", epochs),
-            ("pipeline_files", sorted(pfiles)),
-            ("pipeline_chunks", sorted(pchunks)),
-        )
-        if v
-    }
-
-    retained_files = set()
-    for sid in keep_ids:
-        retained_files.update(f["path"] for f in _load_manifest(path, sid)["files"])
-    deleted = 0
-    for s in expired:
-        man = _load_manifest(path, s["snapshot_id"])
-        for fmeta in man["files"]:
-            if fmeta["path"] in retained_files:
-                continue
-            fp = os.path.join(path, fmeta["path"])
-            if os.path.exists(fp):
-                os.remove(fp)
-                deleted += 1
+        pfiles.update((s.get("summary") or {}).get("pipeline_files") or [])
         os.remove(
             os.path.join(_meta_dir(path), f"snap-{s['snapshot_id']}.json")
         )
@@ -1471,11 +874,8 @@ def _expire_locked(path: str, keep_last: int, lease: _LockLease) -> dict:
         meta,
         snapshots=[s for s in snaps if s["snapshot_id"] in keep_ids],
     )
-    if new_carried:
-        new_meta["carried_summaries"] = new_carried
+    if pfiles:
+        new_meta["carried_summaries"] = {"pipeline_files": sorted(pfiles)}
     lease.verify()
     _publish_metadata(path, _meta_dir(path), new_meta, version)
-    return {
-        "expired": [s["snapshot_id"] for s in expired],
-        "deleted_files": deleted,
-    }
+    return {"expired": [s["snapshot_id"] for s in expired]}

@@ -1,189 +1,15 @@
-"""Structured Streaming lane (SURVEY.md §2.8).
+"""Stream-stream interval join (SURVEY.md §2.8).
 
-The reference has no streaming; the north_rule's requirement is
-*resumability*, served primarily by the batch commit log
-(ksj2gp_spark.sinks.write). This module adds the streaming-native
-equivalents for incremental event/image feeds:
-
-* ``windowed_event_counts`` — watermarked tumbling-window aggregation
-  (the streaming form of the ``events_tumbling`` batch query).
-* ``run_stream_to_parquet`` — file-source stream → foreachBatch parquet
-  append with a checkpoint: restart resumes from the last committed
-  offsets without reprocessing (exactly-once per epoch id).
-* ``sessionize`` — custom stateful operator via
-  ``applyInPandasWithState`` (gap-based sessions per user).
+``attribution_join`` attributes each purchase to every same-user click
+in the preceding window. Batch and streaming inputs share the one
+implementation: on streams, watermarks and the time-range condition
+bound the join state. The contract query ``events_attribution`` runs its
+batch form.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
-
-
-def read_event_stream(
-    spark: SparkSession, path: str, schema=None, max_files: int = 10
-) -> DataFrame:
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Watermarked tumbling (or, with ``slide``, sliding) window counts
-    per event type. Late rows past the watermark are dropped; state is
-    bounded."""
-    # Watermarks require TIMESTAMP (with tz); parquet NTZ is cast up.
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(win.alias("win"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "sum_value_cents"
-            ),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value_cents",
-        )
-    )
-
-
-def run_stream_to_parquet(
-    agg: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-):
-    """foreachBatch append with checkpointed offsets — the streaming
-    commit log. Restarting with the same checkpoint resumes from the
-    last committed epoch (no reprocessing of completed batches)."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int):
-        (
-            batch_df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def dedup_stream(
-    events: DataFrame,
-    key_cols: tuple[str, ...] = ("event_id",),
-    watermark: str = "10 minutes",
-    key_only: bool = False,
-) -> DataFrame:
-    """Streaming exact dedup on the composite key ``(key_cols, ts)`` —
-    NOT on ``key_cols`` alone: the event time must be part of the
-    dedup key for the watermark to evict state, so a replayed event
-    with the same id but a perturbed timestamp is treated as a new
-    event. Duplicates arriving within the watermark horizon
-    (at-least-once sources, replayed batches) are dropped; state stays
-    bounded because keys older than the watermark are evicted.
-
-    ``key_only=True`` switches to ``dropDuplicatesWithinWatermark``
-    (Spark ≥3.5): a replayed event with the same id but a *perturbed*
-    timestamp is also dropped, at the cost of a wider state horizon
-    (state lives until the watermark passes the FIRST sighting + delay,
-    rather than keying exactly on the event time)."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    wm = events.withWatermark("ts", watermark)
-    if key_only:
-        return wm.dropDuplicatesWithinWatermark(list(key_cols))
-    return wm.dropDuplicates([*key_cols, "ts"])
-
-
-SESSION_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long, closed boolean"
-)
-_STATE_SCHEMA = "start long, last long, n long"
-
-
-def _sessionize_fn(gap_sec: int):
-    def fn(key, pdfs, state):
-        user_id = key[0]
-        if state.hasTimedOut:
-            start, last, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start, unit="us")],
-                    "session_end": [pd.Timestamp(last, unit="us")],
-                    "n_events": [n],
-                    "closed": [True],
-                }
-            )
-            return
-        ts_min = ts_max = None
-        n_new = 0
-        for pdf in pdfs:
-            ts = pd.to_datetime(pdf["ts"])
-            lo, hi = ts.min(), ts.max()
-            ts_min = lo if ts_min is None else min(ts_min, lo)
-            ts_max = hi if ts_max is None else max(ts_max, hi)
-            n_new += len(pdf)
-        lo_us = int(ts_min.value // 1000)
-        hi_us = int(ts_max.value // 1000)
-        if state.exists:
-            start, last, n = state.get
-            state.update((min(start, lo_us), max(last, hi_us), n + n_new))
-        else:
-            state.update((lo_us, hi_us, n_new))
-        state.setTimeoutDuration(gap_sec * 1000)
-        start, last, n = state.get
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_start": [pd.Timestamp(start, unit="us")],
-                "session_end": [pd.Timestamp(last, unit="us")],
-                "n_events": [n],
-                "closed": [False],
-            }
-        )
-
-    return fn
-
-
-def sessionize(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
-    """Gap-based sessions per user via applyInPandasWithState — the
-    custom stateful-operator shape Spark doesn't ship built-in."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_fn(gap_sec),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def attribution_join(

@@ -1,4 +1,4 @@
-"""Iceberg-style table layer: snapshots, time travel, rollback,
+"""Iceberg-style table layer: append-only snapshots, time travel,
 manifest pruning, crash-safe commits (sinks/iceberg.py)."""
 
 import json
@@ -36,20 +36,10 @@ def test_append_and_read_current(spark, table):
     assert hist[1]["summary"]["total_rows"] == 250
 
 
-def test_time_travel_and_rollback(spark, table):
+def test_time_travel_reads_older_snapshot(spark, table):
     path, s1, s2 = table
     assert iceberg.read(spark, path, snapshot_id=s1).count() == 100
-    iceberg.rollback(path, s1)
-    assert iceberg.read(spark, path).count() == 100
-    # history preserved; s2 still readable after rollback
     assert iceberg.read(spark, path, snapshot_id=s2).count() == 250
-
-
-def test_overwrite_starts_fresh(spark, table):
-    path, _, _ = table
-    df = spark.range(0, 10).select(F.col("id"), F.lit(0).alias("bucket"))
-    iceberg.overwrite(df, path)
-    assert iceberg.read(spark, path).count() == 10
 
 
 def test_manifest_pruning_skips_files(spark, tmp_path):
@@ -90,22 +80,16 @@ def test_crashed_commit_invisible(spark, table):
     assert iceberg.read(spark, path).count() == 253
 
 
-def test_expire_snapshots_deletes_orphan_files(spark, table):
+def test_expire_snapshots_keeps_shared_files(spark, table):
     path, s1, s2 = table
+    files = [f["path"] for f in iceberg._live_files(path)]
     out = iceberg.expire_snapshots(path, keep_last=1)
     assert out["expired"] == [s1]
-    # s1's files are shared with s2 (append) → nothing deleted
-    assert out["deleted_files"] == 0
+    # s1's files are shared with s2 (append-only) → every file stays
+    assert all(os.path.exists(os.path.join(path, f)) for f in files)
     assert iceberg.read(spark, path).count() == 250
     with pytest.raises(iceberg.CommitError):
         iceberg.read(spark, path, snapshot_id=s1)
-
-    # overwrite then expire → old files actually deleted
-    df = spark.range(0, 10).select(F.col("id"), F.lit(0).alias("bucket"))
-    iceberg.overwrite(df, path)
-    out2 = iceberg.expire_snapshots(path, keep_last=1)
-    assert out2["deleted_files"] > 0
-    assert iceberg.read(spark, path).count() == 10
 
 
 def test_images_table_roundtrip(spark, tmp_path):
@@ -121,31 +105,16 @@ def test_images_table_roundtrip(spark, tmp_path):
     assert dict(back.dtypes)["phash"] == "bigint"
 
 
-def test_compact_rewrites_small_files(spark, tmp_path):
-    path = str(tmp_path / "many_files")
-    for i in range(5):
-        iceberg.append(spark.range(i * 100, (i + 1) * 100).repartition(4), path)
-    files_before = len(iceberg._live_files(path))
-    assert files_before == 20
-    iceberg.compact(spark, path, target_rows_per_file=10_000)
-    assert len(iceberg._live_files(path)) == 1
-    assert iceberg.read(spark, path).count() == 500
-    # expiring old snapshots reclaims the small files
-    out = iceberg.expire_snapshots(path, keep_last=1)
-    assert out["deleted_files"] == files_before
-    assert iceberg.read(spark, path).count() == 500
-
-
 def test_schema_evolution_add_column(spark, tmp_path):
     """Appending with an added column: old files read as null for the
-    new column under merge_schema (Iceberg add-column semantics)."""
+    new column (Iceberg add-column semantics)."""
     path = str(tmp_path / "evolve")
     iceberg.append(spark.range(0, 50).select(F.col("id")), path)
     iceberg.append(
         spark.range(50, 80).select(F.col("id"), (F.col("id") * 2).alias("extra")),
         path,
     )
-    df = iceberg.read(spark, path, merge_schema=True)
+    df = iceberg.read(spark, path)
     assert set(df.columns) == {"id", "extra"}
     assert df.count() == 80
     assert df.filter(F.col("extra").isNull()).count() == 50
@@ -153,103 +122,6 @@ def test_schema_evolution_add_column(spark, tmp_path):
     meta = iceberg._load_metadata(path)
     names = {f["name"] for f in meta["schema"]["fields"]}
     assert names == {"id", "extra"}
-
-
-def test_delete_where_cow_with_stats_pruning(spark, tmp_path):
-    """COW delete: only files overlapping the predicate's bounds are
-    rewritten; time travel still reads the pre-delete rows."""
-    path = str(tmp_path / "del_tbl")
-    # value-sorted across files → tight per-file id stats
-    df = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 7).alias("bucket")
-    ).repartitionByRange(5, "id").sortWithinPartitions("id")
-    s1 = iceberg.append(df, path)
-    n_files = len(iceberg._live_files(path))
-    assert n_files >= 4
-
-    out = iceberg.delete_where(
-        spark, path, "id >= 100 AND id < 200", bounds={"id": (100, 199)}
-    )
-    assert out["rows_deleted"] == 100
-    assert out["files_kept"] > 0  # stats pruning kept untouched files
-    assert out["files_rewritten"] < n_files
-    got = iceberg.read(spark, path)
-    assert got.count() == 900
-    assert got.filter("id >= 100 AND id < 200").count() == 0
-    # time travel: the pre-delete snapshot still sees everything
-    assert iceberg.read(spark, path, snapshot_id=s1).count() == 1000
-    # a fully-disjoint delete is a metadata no-op
-    out2 = iceberg.delete_where(
-        spark, path, "id > 5000", bounds={"id": (5001, 10**9)}
-    )
-    assert out2["rows_deleted"] == 0 and out2["files_rewritten"] == 0
-
-
-def test_delete_where_null_predicate_rows_kept(spark, tmp_path):
-    """Rows where the predicate evaluates NULL survive the delete."""
-    path = str(tmp_path / "del_null")
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, None), (3, 30.0)], "id int, v double"
-    )
-    iceberg.append(df, path)
-    out = iceberg.delete_where(spark, path, "v > 20")
-    assert out["rows_deleted"] == 1
-    got = iceberg.read(spark, path).toPandas().sort_values("id")
-    assert list(got["id"]) == [1, 2]  # NULL-v row kept
-
-
-def test_merge_upsert_cow_with_auto_pruning(spark, tmp_path):
-    """Keyed MERGE: same-key rows replaced, new keys appended; files
-    outside the updates' key range are carried over untouched."""
-    path = str(tmp_path / "merge_tbl")
-    # even keys only → odd keys are insertable WITHIN the key range
-    df = spark.range(0, 1000).select(
-        (F.col("id") * 2).alias("id"), (F.col("id") * 10).alias("v")
-    ).repartitionByRange(5, "id").sortWithinPartitions("id")
-    iceberg.append(df, path)
-    n_files = len(iceberg._live_files(path))
-
-    updates = spark.createDataFrame(
-        [(150, -1), (160, -2), (151, -3)], "id long, v long"
-    )
-    out = iceberg.merge_upsert(spark, path, updates, ["id"])
-    assert out["rows_updated"] == 2
-    assert out["rows_inserted"] == 1
-    # updates span keys 150..160 → only the file covering that slice
-    # is rewritten; the rest carry over by reference
-    assert 0 < out["files_rewritten"] < n_files
-    assert out["files_kept"] > 0
-    got = iceberg.read(spark, path)
-    assert got.count() == 1001
-    vals = {r["id"]: r["v"] for r in got.filter("id in (150,160,151,170)").collect()}
-    assert vals == {150: -1, 160: -2, 151: -3, 170: 850}
-
-
-def test_vacuum_orphans_removes_unreferenced_only(spark, tmp_path):
-    """Crash leftovers (orphan data dir, claimed-but-unpublished
-    metadata) are GC'd; everything referenced survives; readers
-    unaffected."""
-    path = str(tmp_path / "vac_tbl")
-    iceberg.append(spark.range(0, 100).select(F.col("id")), path)
-    iceberg.append(spark.range(100, 150).select(F.col("id")), path)
-
-    # crash debris: orphan snapshot data + losing-commit metadata
-    spark.range(0, 5).write.parquet(os.path.join(path, "data", "snap-77"))
-    with open(os.path.join(path, "metadata", "v99.metadata.json"), "w") as f:
-        f.write("{}")
-    with open(os.path.join(path, "metadata", "snap-77.json"), "w") as f:
-        f.write("{}")
-
-    # min_age guard: fresh debris survives a vacuum with a horizon
-    out0 = iceberg.vacuum_orphans(path, min_age_sec=3600)
-    assert out0 == {"deleted_files": 0, "deleted_meta": 0}
-
-    out = iceberg.vacuum_orphans(path, min_age_sec=0)
-    assert out["deleted_files"] > 0
-    assert out["deleted_meta"] == 2
-    assert not os.path.exists(os.path.join(path, "data", "snap-77"))
-    assert iceberg.read(spark, path).count() == 150
-    assert iceberg.read(spark, path, snapshot_id=1).count() == 100
 
 
 def test_concurrent_appends_lose_cleanly_never_silently(spark, tmp_path):
@@ -351,107 +223,32 @@ def test_usurped_writer_aborts_at_commit_point(tmp_path):
 
 
 def test_admin_ops_serialize_with_commits(spark, tmp_path):
-    """rollback/expire_snapshots go through the same commit lock and
-    O_EXCL version claim as data commits: racing writers can no longer
-    overwrite each other's metadata version or lose a hint swap."""
+    """expire_snapshots goes through the same commit lock and O_EXCL
+    version claim as appends: racing writers can no longer overwrite
+    each other's metadata version or lose a hint swap."""
     import threading
 
     path = str(tmp_path / "tbl_admin")
     iceberg.append(spark.range(0, 10).select(F.col("id")), path)
     iceberg.append(spark.range(10, 20).select(F.col("id")), path)
 
-    # hold the commit lock in this thread; rollback must block until
-    # released rather than publishing concurrently
+    # hold the commit lock in this thread; expire_snapshots must block
+    # until released rather than publishing concurrently
     lease = iceberg._acquire_commit_lock(os.path.join(path, "metadata"))
     done = []
 
-    def do_rollback():
-        done.append(iceberg.rollback(path, 1))
+    def do_expire():
+        done.append(iceberg.expire_snapshots(path, keep_last=1))
 
-    t = threading.Thread(target=do_rollback)
+    t = threading.Thread(target=do_expire)
     t.start()
     t.join(0.4)
-    assert not done, "rollback ran while the commit lock was held"
+    assert not done, "expire_snapshots ran while the commit lock was held"
     lease.release()
     t.join(10)
-    assert done and iceberg.read(spark, path).count() == 10
-    # expire under the lock path produces a dense, claimed version
-    res = iceberg.expire_snapshots(path, keep_last=2)
-    assert isinstance(res, dict)
-
-
-def test_rename_column_is_metadata_only_and_id_mapped(spark, tmp_path):
-    """Iceberg rename semantics: old data files keep the old parquet
-    column name; the field ID carries the values to the new name."""
-    path = str(tmp_path / "ren")
-    iceberg.append(
-        spark.range(0, 40).select(F.col("id"), (F.col("id") * 3).alias("v")),
-        path,
-    )
-    files_before = {f["path"] for f in iceberg._live_files(path)}
-    iceberg.rename_column(path, "v", "value")
-    # no data file was rewritten
-    assert {f["path"] for f in iceberg._live_files(path)} == files_before
-    df = iceberg.read(spark, path, merge_schema=True)
-    assert set(df.columns) == {"id", "value"}
-    assert df.filter(F.col("value") == F.col("id") * 3).count() == 40
-    # appends after the rename write the new name; both eras reconcile
-    iceberg.append(
-        spark.range(40, 60).select(
-            F.col("id"), (F.col("id") * 3).alias("value")
-        ),
-        path,
-    )
-    df2 = iceberg.read(spark, path, merge_schema=True)
-    assert df2.count() == 60
-    assert df2.filter(F.col("value") == F.col("id") * 3).count() == 60
-
-    with pytest.raises(iceberg.CommitError):
-        iceberg.rename_column(path, "nope", "x")
-    with pytest.raises(iceberg.CommitError):
-        iceberg.rename_column(path, "id", "value")
-
-
-def test_drop_column_then_readd_does_not_resurrect(spark, tmp_path):
-    """Dropping a column hides it from reads; re-adding the same NAME
-    mints a new field id, so old values must NOT come back."""
-    path = str(tmp_path / "drop")
-    iceberg.append(
-        spark.range(0, 30).select(F.col("id"), F.lit("old").alias("tag")),
-        path,
-    )
-    iceberg.drop_column(path, "tag")
-    df = iceberg.read(spark, path, merge_schema=True)
-    assert set(df.columns) == {"id"}
-    # re-add "tag" via a new append: fresh field id
-    iceberg.append(
-        spark.range(30, 40).select(F.col("id"), F.lit("new").alias("tag")),
-        path,
-    )
-    df2 = iceberg.read(spark, path, merge_schema=True)
-    assert set(df2.columns) == {"id", "tag"}
-    tags = {r.tag for r in df2.collect()}
-    assert tags == {None, "new"}  # "old" stays buried in the old files
-    assert df2.filter(F.col("tag").isNull()).count() == 30
-
-
-def test_rename_interleaves_with_time_travel(spark, tmp_path):
-    path = str(tmp_path / "tt")
-    s1 = iceberg.append(
-        spark.range(0, 10).select(F.col("id"), F.col("id").alias("a")), path
-    )
-    iceberg.rename_column(path, "a", "b")
-    s2 = iceberg.append(
-        spark.range(10, 20).select(F.col("id"), F.col("id").alias("b")), path
-    )
-    # current read: everything under the current name
-    cur = iceberg.read(spark, path, merge_schema=True)
-    assert set(cur.columns) == {"id", "b"}
-    assert cur.filter(F.col("b") == F.col("id")).count() == 20
-    # time travel to s1 still reads (current schema names apply)
-    old = iceberg.read(spark, path, snapshot_id=s1, merge_schema=True)
-    assert old.count() == 10
-    assert s2 > s1
+    assert done == [{"expired": [1]}]
+    assert [h["snapshot_id"] for h in iceberg.history(path)] == [2]
+    assert iceberg.read(spark, path).count() == 20
 
 
 class TestPartitionedTables:
@@ -531,12 +328,6 @@ class TestPartitionedTables:
             for x, y in zip(a, b):
                 assert (pd.isna(x) and pd.isna(y)) or x == y, c
         assert got["bucket"].dtype == want["bucket"].dtype
-        # merge-schema read takes the same many-partition path
-        gm = I.read(spark, t, merge_schema=True).toPandas()
-        gm = gm.sort_values("image_id")
-        for c in want.columns:
-            for x, y in zip(list(gm[c]), list(want[c])):
-                assert (pd.isna(x) and pd.isna(y)) or x == y, c
         # narrow scan still takes the group path and prunes
         _, info = I.scan(spark, t, bounds={"bucket": (3, 3)})
         assert info["files_read"] < info["files_total"]
@@ -576,30 +367,7 @@ class TestPartitionedTables:
         with _pytest.raises(I.CommitError):
             I.append(df, t, partition_by=["admin_code"])
 
-    def test_cow_delete_and_vacuum_on_partitioned_table(
-        self, spark, tmp_path
-    ):
-        from ksj2gp_spark.sinks import iceberg as I
-
-        t = str(tmp_path / "t4")
-        df = self._tiles(spark).withColumn(
-            "pref", F.substring("admin_code", 1, 2)
-        )
-        I.append(df, t, partition_by=["pref"])
-        # predicate ON the partition column: pruning keeps other prefs,
-        # survivors keep their partition values
-        r = I.delete_where(
-            spark, t, "pref = '13'", bounds={"pref": ("13", "13")}
-        )
-        assert r["files_kept"] > 0 and r["rows_deleted"] == 10
-        got = I.read(spark, t).toPandas()
-        assert len(got) == 30 and "13" not in set(got["pref"])
-        # vacuum must NOT judge live partitioned snapshots empty
-        I.expire_snapshots(t, keep_last=1)
-        I.vacuum_orphans(t, min_age_sec=0.0)
-        assert I.read(spark, t).count() == 30
-
-    def test_merge_schema_read_on_partitioned_table(self, spark, tmp_path):
+    def test_added_column_read_on_partitioned_table(self, spark, tmp_path):
         from ksj2gp_spark.sinks import iceberg as I
 
         t = str(tmp_path / "t5")
@@ -608,32 +376,10 @@ class TestPartitionedTables:
         )
         I.append(df, t, partition_by=["pref"])
         I.append(df.withColumn("extra", F.lit(7)), t)
-        got = I.read(spark, t, merge_schema=True).toPandas()
+        got = I.read(spark, t).toPandas()
         assert len(got) == 40
         assert set(got["pref"]) == {"13", "14", "15", "16"}
         assert got["extra"].isna().sum() == 20
-
-
-def test_partition_spec_columns_cannot_be_renamed_or_dropped(
-    spark, tmp_path
-):
-    """Spec evolution is unsupported — renaming/dropping a column the
-    partition spec references would desync directory names from the
-    schema; both must refuse."""
-    import pandas as pd
-
-    t = str(tmp_path / "guard_tbl")
-    df = spark.createDataFrame(
-        pd.DataFrame({"k": ["aa", "ab"], "v": [1, 2]})
-    )
-    iceberg.append(df, t, partition_by=["k"])
-    with pytest.raises(iceberg.CommitError, match="partition spec"):
-        iceberg.rename_column(t, "k", "k2")
-    with pytest.raises(iceberg.CommitError, match="partition spec"):
-        iceberg.drop_column(t, "k")
-    # non-spec columns still evolve
-    iceberg.rename_column(t, "v", "v2")
-    assert "v2" in iceberg.read(spark, t, merge_schema=True).columns
 
 
 def test_pipeline_rejects_identity_partitioned_image_table(
@@ -659,9 +405,8 @@ def test_pipeline_rejects_identity_partitioned_image_table(
 
 def test_spec_adoption_on_nonempty_table_refused(spark, tmp_path):
     """Introducing a partition spec on a table that already holds
-    unpartitioned files must fail: legacy files carry no partition
-    values and would become unreadable (or silently NULL the column
-    under merge_schema)."""
+    unpartitioned files must fail: those files carry no partition
+    values and would become unreadable."""
     import pandas as pd
 
     t = str(tmp_path / "adopt_tbl")
@@ -671,10 +416,6 @@ def test_spec_adoption_on_nonempty_table_refused(spark, tmp_path):
     iceberg.append(df, t)  # unpartitioned
     with pytest.raises(iceberg.CommitError, match="cannot introduce"):
         iceberg.append(df, t, partition_by=["k"])
-    # after overwrite (fresh file set) adoption is still refused:
-    # overwrite passes parent_files=[] so it CAN establish a spec
-    iceberg.overwrite(df, t)
-    assert iceberg.read(spark, t).count() == 2
 
 
 def test_date_identity_partition_prunes_and_merges(spark, tmp_path):
@@ -699,36 +440,6 @@ def test_date_identity_partition_prunes_and_merges(spark, tmp_path):
         spark, t, bounds={"d": (dt.date(2024, 2, 1), dt.date(2024, 2, 28))}
     )
     assert info["files_read"] < info["files_total"]
-    out = iceberg.delete_where(
-        spark, t, "d = DATE'2024-01-01'",
-        bounds={"d": (dt.date(2024, 1, 1), dt.date(2024, 1, 1))},
-    )
-    assert out["rows_deleted"] == 3 and out["files_kept"] > 0
-    assert iceberg.read(spark, t).count() == 3
-
-
-def test_diff_snapshots_incremental_rows(spark, tmp_path):
-    """diff_snapshots returns exactly the rows appended between two
-    snapshots (only the added files are read), incl. identity
-    partition values; empty diff gives an empty frame."""
-    import pandas as pd
-
-    t = str(tmp_path / "diff_tbl")
-    df1 = spark.createDataFrame(
-        pd.DataFrame({"k": ["aa"] * 3, "v": [1, 2, 3]})
-    )
-    s1 = iceberg.append(df1, t, partition_by=["k"])
-    df2 = spark.createDataFrame(
-        pd.DataFrame({"k": ["ab"] * 2, "v": [10, 11]})
-    )
-    s2 = iceberg.append(df2, t)
-    got = iceberg.diff_snapshots(spark, t, s1, s2).toPandas()
-    assert sorted(got["v"]) == [10, 11]
-    assert set(got["k"]) == {"ab"}  # partition value re-attached
-    # full scan when since is None
-    assert iceberg.diff_snapshots(spark, t, None).count() == 5
-    # empty diff
-    assert iceberg.diff_snapshots(spark, t, s2, s2).count() == 0
 
 
 # -- round-4 advisor findings: schema-evolution safety + exactly-once
@@ -738,7 +449,7 @@ def test_diff_snapshots_incremental_rows(spark, tmp_path):
 def test_evolve_rejects_incompatible_type_change(spark, tmp_path):
     """A frame carrying a non-promotable type for a known column must
     fail the COMMIT, not silently rewrite the table schema (which
-    would NULL older files' values on merge reads)."""
+    would NULL older files' values on read)."""
     t = str(tmp_path / "evolve_bad")
     iceberg.append(
         spark.range(0, 10).select(F.col("id"), F.col("id").alias("v")), t
@@ -756,8 +467,8 @@ def test_evolve_rejects_incompatible_type_change(spark, tmp_path):
 
 
 def test_evolve_promotes_int_to_long_and_keeps_wider_type(spark, tmp_path):
-    """int→long is a safe promotion: the table widens, and BOTH read
-    paths surface one consistent bigint column across mixed-era files.
+    """int→long is a safe promotion: the table widens, and the read
+    surfaces one consistent bigint column across mixed-era files.
     A later narrower (int) write keeps the table's wider type."""
     t = str(tmp_path / "evolve_ok")
     iceberg.append(
@@ -772,10 +483,9 @@ def test_evolve_promotes_int_to_long_and_keeps_wider_type(spark, tmp_path):
         ),
         t,
     )
-    for merge in (False, True):
-        df = iceberg.read(spark, t, merge_schema=merge)
-        assert dict(df.dtypes)["v"] == "bigint", merge
-        assert sorted(r.v for r in df.collect()) == list(range(8)), merge
+    df = iceberg.read(spark, t)
+    assert dict(df.dtypes)["v"] == "bigint"
+    assert sorted(r.v for r in df.collect()) == list(range(8))
     # narrower write after promotion: values land, type stays bigint
     iceberg.append(
         spark.range(8, 9).select(
@@ -786,41 +496,6 @@ def test_evolve_promotes_int_to_long_and_keeps_wider_type(spark, tmp_path):
     df = iceberg.read(spark, t)
     assert dict(df.dtypes)["v"] == "bigint"
     assert df.count() == 9
-
-
-def test_plain_read_after_rename_raises_with_pointer(spark, tmp_path):
-    """Non-merge reads over files written under an older id→name
-    binding must raise a descriptive error (not surface mixed column
-    sets); merge_schema=True is the documented escape hatch."""
-    t = str(tmp_path / "ren_plain")
-    iceberg.append(
-        spark.range(0, 10).select(F.col("id"), F.col("id").alias("a")), t
-    )
-    iceberg.rename_column(t, "a", "b")
-    with pytest.raises(iceberg.CommitError, match="merge_schema=True"):
-        iceberg.read(spark, t).collect()
-    assert iceberg.read(spark, t, merge_schema=True).count() == 10
-
-
-def test_expire_carries_streaming_watermark_forward(spark, tmp_path):
-    """expire_snapshots must not drop the (stream_id, epoch) watermark
-    with the snapshot entries — a restarted stream would re-append its
-    already-committed micro-batches."""
-    t = str(tmp_path / "exp_stream")
-    df = spark.range(0, 4).select(F.col("id"))
-    iceberg.append(
-        df, t,
-        summary_extra={"streaming_query": "q1", "streaming_epoch": 7},
-    )
-    iceberg.append(df, t)  # later non-streaming snapshot
-    assert iceberg.last_streaming_epoch(t, "q1") == 7
-    out = iceberg.expire_snapshots(t, keep_last=1)
-    assert out["expired"]  # the epoch-bearing snapshot is gone...
-    assert iceberg.last_streaming_epoch(t, "q1") == 7  # ...watermark isn't
-    # idempotent across further expirations and appends
-    iceberg.append(df, t)
-    iceberg.expire_snapshots(t, keep_last=1)
-    assert iceberg.last_streaming_epoch(t, "q1") == 7
 
 
 def test_expire_carries_pipeline_ledger_forward(spark, tmp_path):
@@ -834,13 +509,11 @@ def test_expire_carries_pipeline_ledger_forward(spark, tmp_path):
     iceberg.append(
         df, t,
         summary_extra={
-            "pipeline_chunk": "c0",
             "pipeline_files": ["data/f1.parquet", "data/f2.parquet"],
         },
     )
     iceberg.append(df, t)
     iceberg.expire_snapshots(t, keep_last=1)
-    assert pmod.committed_pipeline_chunks(t) == {"c0"}
     assert pmod.committed_pipeline_files(t) == {
         "data/f1.parquet", "data/f2.parquet"
     }

@@ -329,57 +329,6 @@ def test_py_files_artifact_importable(tmp_path):
     assert out.stdout.strip() == "('N03', 2024) 5475"
 
 
-def test_incremental_pipeline_processes_only_new_files(spark, tmp_path):
-    """Append batch 1 → run; append batch 2 → the incremental run joins
-    only batch-2's files, and the union of all committed chunks equals
-    a full recompute."""
-    tbl = str(tmp_path / "inc_tbl")
-    out = str(tmp_path / "inc_out")
-    polys = fixtures.polygon_layer()
-
-    b1 = fixtures.images_df(spark, 600, with_bytes=False)
-    pipeline.write_images_table(b1, tbl, files_per_commit=3)
-    s1_summary, cursor = pipeline.run_tile_pipeline_incremental(
-        spark, tbl, polys, out, since_snapshot=None,
-        scheme="grid", res=10, n_chunks=3,
-    )
-    assert len(s1_summary) >= 2  # range partitioner may emit <3 files
-    rows_after_b1 = write.read_tiles(spark, out).count()
-
-    b2 = (
-        fixtures.images_df(spark, 900, with_bytes=False)
-        .filter(F.col("image_id") >= "img00000600")
-    )
-    pipeline.write_images_table(b2, tbl, files_per_commit=3)
-    s2_summary, cursor2 = pipeline.run_tile_pipeline_incremental(
-        spark, tbl, polys, out, since_snapshot=cursor,
-        scheme="grid", res=10, n_chunks=3,
-    )
-    assert cursor2 != cursor
-    # only batch-2 rows were processed in the increment
-    inc_rows = sum(m["rows"] for m in s2_summary.values())
-    got = write.read_tiles(spark, out)
-    assert got.count() == rows_after_b1 + inc_rows
-
-    # equivalence: union of increments == full recompute over the table
-    full = pipeline.spatial.fused_assign_or_knn(
-        iceberg.read(spark, tbl), polys, scheme="grid", res=10
-    )
-    import pandas as pd_
-
-    key = ["image_id", "rank", "admin_code"]
-    a = got.select(*key).toPandas().sort_values(key).reset_index(drop=True)
-    b = full.select(*key).toPandas().sort_values(key).reset_index(drop=True)
-    pd_.testing.assert_frame_equal(a, b)
-
-    # re-running the same increment is a no-op (chunks committed)
-    s3_summary, _ = pipeline.run_tile_pipeline_incremental(
-        spark, tbl, polys, out, since_snapshot=cursor,
-        scheme="grid", res=10, n_chunks=3,
-    )
-    assert all(m.get("skipped") for m in s3_summary.values())
-
-
 def test_iceberg_pipeline_resumes_without_duplicates(spark, tmp_path):
     """run_tile_pipeline_iceberg: a crash mid-run leaves committed
     chunk snapshots; files that land AFTER the crash re-stripe any
@@ -422,7 +371,7 @@ def test_iceberg_pipeline_resumes_without_duplicates(spark, tmp_path):
     finally:
         pmod.iceberg.append = real_append
 
-    assert len(P.committed_pipeline_chunks(tbl)) == 2
+    assert len(I.history(tbl)) == 2  # one snapshot per committed chunk
     n_committed_files = len(P.committed_pipeline_files(tbl))
     assert n_committed_files > 0
 

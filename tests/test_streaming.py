@@ -1,319 +1,9 @@
-"""Structured Streaming tests: windowed aggregation equals the batch
-query, checkpoint restart resumes without reprocessing, and the
-stateful sessionize operator."""
-
-import glob
-import os
-import shutil
+"""Structured Streaming test: the stream-stream interval join keeps
+its state across checkpointed restarts and equals the batch join."""
 
 import pandas as pd
-import pytest
 
 from ksj2gp_spark.streaming import events as stream_ops
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def event_dir(spark, tmp_path):
-    """Events split into two files BY TIME (second file strictly newer),
-    so incremental delivery respects event-time order and the watermark
-    never classifies file 2 as late."""
-    from pyspark.sql import Window, functions as F
-
-    src = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    w = Window.orderBy("ts", "event_id")
-    ranked = src.withColumn("rn", F.row_number().over(w))
-    n = src.count()
-    d = str(tmp_path / "events_in")
-    os.makedirs(d)
-    files = []
-    for i, half in enumerate(
-        [ranked.filter(F.col("rn") <= n // 2), ranked.filter(F.col("rn") > n // 2)]
-    ):
-        tmp_out = str(tmp_path / f"half{i}")
-        half.drop("rn").coalesce(1).write.parquet(tmp_out)
-        part = glob.glob(os.path.join(tmp_out, "part-*.parquet"))[0]
-        dst = os.path.join(d, f"{i}.parquet")
-        shutil.copy(part, dst)
-        files.append(dst)
-    staged = str(tmp_path / "staged")
-    os.makedirs(staged)
-    return d, files, staged
-
-
-def test_windowed_counts_match_batch(spark, tmp_path, event_dir):
-    d, _, _ = event_dir
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    stream = stream_ops.read_event_stream(spark, d)
-    agg = stream_ops.windowed_event_counts(stream, "5 minutes", "10 minutes")
-    q = stream_ops.run_stream_to_parquet(agg, out, ckpt)
-    q.awaitTermination(120)
-
-    from pyspark.sql import functions as F
-
-    got = (
-        spark.read.parquet(out)
-        .groupBy("window_start", "event_type")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("sum_value_cents").alias("sum_value_cents"),
-        )
-        .toPandas()
-    )
-    batch = (
-        spark.read.parquet(d)
-        .groupBy(
-            F.window("ts", "5 minutes").alias("win"), F.col("event_type")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "sum_value_cents"
-            ),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value_cents",
-        )
-        .toPandas()
-    )
-    k = ["window_start", "event_type"]
-    got = got.sort_values(k).reset_index(drop=True)
-    batch = batch.sort_values(k).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, batch, check_dtype=False)
-
-
-def test_checkpoint_restart_resumes(spark, tmp_path, event_dir):
-    _, files, staged = event_dir
-    out = str(tmp_path / "out2")
-    ckpt = str(tmp_path / "ckpt2")
-
-    # Epoch 1: only file 0 present.
-    shutil.copy(files[0], staged)
-    stream = stream_ops.read_event_stream(spark, staged)
-    agg = stream_ops.windowed_event_counts(stream)
-    q = stream_ops.run_stream_to_parquet(agg, out, ckpt)
-    q.awaitTermination(120)
-    epochs_1 = set(
-        r["epoch_id"]
-        for r in spark.read.parquet(out).select("epoch_id").distinct().collect()
-    )
-
-    # Restart with the second file added: only the new data is processed
-    # (new epoch ids appear; old epochs are not rewritten).
-    shutil.copy(files[1], staged)
-    stream = stream_ops.read_event_stream(spark, staged)
-    agg = stream_ops.windowed_event_counts(stream)
-    q = stream_ops.run_stream_to_parquet(agg, out, ckpt)
-    q.awaitTermination(120)
-    df = spark.read.parquet(out)
-    epochs_2 = set(
-        r["epoch_id"] for r in df.select("epoch_id").distinct().collect()
-    )
-    assert epochs_1 < epochs_2  # strictly more epochs, old ones intact
-
-    # Final per-window maxima equal the full batch aggregation.
-    from pyspark.sql import functions as F
-
-    got = (
-        df.groupBy("window_start", "event_type")
-        .agg(F.max("n_events").alias("n_events"))
-        .agg(F.sum("n_events"))
-        .collect()[0][0]
-    )
-    total = spark.read.parquet(staged).count()
-    assert got == total
-
-
-def test_sessionize_stateful(spark, tmp_path):
-    pdf = pd.DataFrame(
-        {
-            "event_id": range(6),
-            "ts": pd.to_datetime(
-                [
-                    "2024-01-01 00:00:00",
-                    "2024-01-01 00:05:00",
-                    "2024-01-01 02:00:00",
-                    "2024-01-01 00:01:00",
-                    "2024-01-01 00:02:00",
-                    "2024-01-01 00:03:00",
-                ]
-            ),
-            "user_id": [1, 1, 1, 2, 2, 2],
-            "event_type": ["view"] * 6,
-            "value": [1.0] * 6,
-            "props": ["{}"] * 6,
-        }
-    )
-    d = str(tmp_path / "sess_in")
-    spark.createDataFrame(pdf).write.parquet(d)
-    out = str(tmp_path / "sess_out")
-    ckpt = str(tmp_path / "sess_ckpt")
-
-    stream = stream_ops.read_event_stream(spark, d)
-    sessions = stream_ops.sessionize(stream, gap_sec=1800)
-
-    def write_batch(batch_df, epoch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        sessions.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .foreachBatch(write_batch)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out).toPandas()
-    # one state row per user covering all its events (single epoch here)
-    by_user = got.groupby("user_id")["n_events"].max()
-    assert by_user[1] == 3 and by_user[2] == 3
-
-
-def test_stream_tile_assign_resumes(spark, tmp_path):
-    """Streaming spatial join: availableNow run processes current
-    files; a later run with the same checkpoint processes ONLY new
-    files (no reprocessing, no duplicate tiles)."""
-    from ksj2gp_spark import fixtures
-    from ksj2gp_spark.operators import spatial as sp
-    from ksj2gp_spark.streaming import tiles as st
-
-    src = str(tmp_path / "imgs_src")
-    out = str(tmp_path / "tiles_out")
-    ckpt = str(tmp_path / "ckpt_tiles")
-
-    wave1 = fixtures.images_df(spark, 1000, with_bytes=False, partitions=2)
-    wave1.write.mode("append").parquet(src)
-
-    stream = st.read_image_stream(spark, src, max_files=1)
-    q = st.stream_tile_assign(
-        stream, fixtures.polygon_layer(), out, ckpt, scheme="grid", res=10
-    )
-    q.awaitTermination(120)
-
-    got1 = spark.read.parquet(out)
-    batch = sp.fused_assign_or_knn(
-        wave1, fixtures.polygon_layer(), scheme="grid", res=10, k=3
-    ).toPandas()
-    assert got1.count() == len(batch)
-
-    # second wave: new ids only
-    wave2 = (
-        fixtures.images_df(spark, 1500, with_bytes=False, partitions=2)
-        .filter("image_id >= 'img00001000'")
-    )
-    n2 = wave2.count()
-    assert n2 == 500
-    wave2.write.mode("append").parquet(src)
-
-    stream2 = st.read_image_stream(spark, src, max_files=1)
-    q2 = st.stream_tile_assign(
-        stream2, fixtures.polygon_layer(), out, ckpt, scheme="grid", res=10
-    )
-    q2.awaitTermination(120)
-
-    got2 = spark.read.parquet(out).toPandas()
-    # wave-1 rows not reprocessed (exactly one copy), wave-2 present
-    per_id = got2.groupby(["image_id", "rank", "polygon_id"]).size()
-    assert (per_id == 1).all()
-    assert got2["image_id"].nunique() == 1500
-
-
-def test_dedup_stream_drops_replayed_rows(spark, tmp_path):
-    """At-least-once replay: the same event file appended twice; the
-    watermarked streaming dedup emits each (event_id, ts) once."""
-    from pyspark.sql import functions as F
-
-    from ksj2gp_spark.streaming import events as ev
-
-    src = str(tmp_path / "dup_src")
-    out = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-
-    base = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .limit(2000)
-        .cache()
-    )
-    n_distinct = base.select("event_id", "ts").distinct().count()
-    base.write.mode("append").parquet(src)
-    base.write.mode("append").parquet(src)  # replay
-
-    stream = ev.read_event_stream(spark, src, max_files=2)
-    deduped = ev.dedup_stream(stream)
-    q = ev.run_stream_to_parquet(deduped, out, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    assert got.count() == n_distinct
-    assert (
-        got.groupBy("event_id", "ts").count().filter(F.col("count") > 1).count()
-        == 0
-    )
-
-
-def test_sliding_window_counts_stream(spark, tmp_path):
-    """Sliding-window streaming agg (15m window / 5m slide): totals
-    equal the batch events_sliding query on the same input."""
-    import __spark_entry__ as entry_mod
-    from ksj2gp_spark.streaming import events as ev
-
-    src = str(tmp_path / "slide_src")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
-    out = str(tmp_path / "slide_out")
-    ckpt = str(tmp_path / "slide_ckpt")
-    stream = ev.read_event_stream(spark, src, max_files=10)
-    agg = ev.windowed_event_counts(
-        stream, window="15 minutes", watermark="1 day", slide="5 minutes"
-    )
-    q = ev.run_stream_to_parquet(agg, out, ckpt)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    from pyspark.sql import functions as F
-
-    total_stream = got.agg(F.sum("n_events")).collect()[0][0]
-    batch = entry_mod.q_events_sliding(spark, "/root/testdata/sf0.001")
-    total_batch = batch.agg(F.sum("n_events")).collect()[0][0]
-    assert total_stream == total_batch
-
-
-def test_dedup_stream_key_only_drops_perturbed_replays(spark, tmp_path):
-    """key_only=True: a replayed event with the same id but a shifted
-    timestamp is ALSO dropped (dropDuplicatesWithinWatermark)."""
-    from pyspark.sql import functions as F
-
-    from ksj2gp_spark.streaming import events as ev
-
-    src = str(tmp_path / "pert_src")
-    out = str(tmp_path / "pert_out")
-    ckpt = str(tmp_path / "pert_ckpt")
-
-    base = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .limit(1000)
-        .cache()
-    )
-    n_ids = base.select("event_id").distinct().count()
-    base.write.mode("append").parquet(src)
-    # replay with the timestamp nudged by 1 second — same event_id
-    base.withColumn(
-        "ts", F.col("ts").cast("timestamp") + F.expr("INTERVAL 1 SECOND")
-    ).write.mode("append").parquet(src)
-
-    stream = ev.read_event_stream(spark, src, max_files=2)
-    deduped = ev.dedup_stream(stream, key_only=True)
-    q = ev.run_stream_to_parquet(deduped, out, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    assert got.select("event_id").distinct().count() == n_ids
-    assert (
-        got.groupBy("event_id").count().filter(F.col("count") > 1).count() == 0
-    )
 
 
 def test_stream_stream_attribution_join_buffers_across_runs(spark, tmp_path):
@@ -360,8 +50,8 @@ def test_stream_stream_attribution_join_buffers_across_runs(spark, tmp_path):
     ).write.parquet(purch_dir)
 
     def run_once():
-        c = stream_ops.read_event_stream(spark, clicks_dir)
-        p = stream_ops.read_event_stream(spark, purch_dir)
+        c = spark.readStream.schema(full.schema).parquet(clicks_dir)
+        p = spark.readStream.schema(full.schema).parquet(purch_dir)
         joined = stream_ops.attribution_join(c, p, max_delay="30 minutes")
 
         def write_batch(batch_df, epoch_id):
@@ -397,125 +87,3 @@ def test_stream_stream_attribution_join_buffers_across_runs(spark, tmp_path):
     assert {(r.click_id, r.purchase_id) for r in got.collect()} == {
         (0, 4), (1, 4), (1, 7)
     }
-
-
-def test_stream_to_iceberg_exactly_once(spark, tmp_path):
-    """Streaming → Iceberg table: availableNow run lands all rows; a
-    replayed foreachBatch epoch (the crash-between-append-and-
-    checkpoint window) is a no-op; a restart with the same checkpoint
-    appends only new files."""
-    from ksj2gp_spark import fixtures
-    from ksj2gp_spark.sinks import iceberg
-    from ksj2gp_spark.streaming import tiles as st
-    from ksj2gp_spark.streaming.iceberg_sink import (
-        iceberg_batch_writer,
-        run_stream_to_iceberg,
-    )
-
-    src = str(tmp_path / "imgs_src")
-    table = str(tmp_path / "iceberg_tbl")
-    ckpt = str(tmp_path / "ckpt_ice")
-
-    wave1 = fixtures.images_df(
-        spark, 400, with_bytes=False, partitions=2
-    ).drop("bytes")
-    wave1.write.mode("append").parquet(src)
-
-    stream = st.read_image_stream(spark, src, max_files=1).drop("bytes")
-    q = run_stream_to_iceberg(stream, table, ckpt)
-    q.awaitTermination(120)
-    assert iceberg.read(spark, table).count() == 400
-
-    # simulate the replay window: re-deliver an already committed epoch
-    writer = iceberg_batch_writer(table, ckpt)
-    last = iceberg.last_streaming_epoch(table, ckpt)
-    assert last is not None
-    v_before = iceberg.current_version(table)
-    writer(wave1, last)  # replay -> must be a no-op
-    assert iceberg.current_version(table) == v_before
-    assert iceberg.read(spark, table).count() == 400
-
-    # restart with new files: only the delta lands, exactly once
-    wave2 = (
-        fixtures.images_df(spark, 600, with_bytes=False, partitions=2)
-        .drop("bytes")
-        .filter("image_id >= 'img00000400'")
-    )
-    wave2.write.mode("append").parquet(src)
-    stream2 = st.read_image_stream(spark, src, max_files=1).drop("bytes")
-    q2 = run_stream_to_iceberg(stream2, table, ckpt)
-    q2.awaitTermination(120)
-    got = iceberg.read(spark, table).toPandas()
-    assert len(got) == 600
-    assert got["image_id"].nunique() == 600
-
-
-def test_iceberg_sink_rejects_epoch_below_watermark(spark, tmp_path):
-    """Reusing a stream_id with a reset checkpoint restarts epochs at
-    0 below the committed watermark — that must raise, not silently
-    drop every batch of the new stream."""
-    import pytest as _pytest
-
-    from ksj2gp_spark import fixtures
-    from ksj2gp_spark.sinks import iceberg
-    from ksj2gp_spark.streaming.iceberg_sink import iceberg_batch_writer
-
-    table = str(tmp_path / "wm_tbl")
-    df = fixtures.images_df(spark, 10, with_bytes=False).drop("bytes")
-    w = iceberg_batch_writer(table, "stream-A")
-    w(df, 0)
-    w(df, 5)
-    assert iceberg.last_streaming_epoch(table, "stream-A") == 5
-    w(df, 5)  # replay of the last epoch: no-op
-    assert iceberg.read(spark, table).count() == 20
-    with _pytest.raises(ValueError, match="below the table's committed"):
-        w(df, 1)
-
-
-def test_windowed_agg_streams_into_iceberg(spark, tmp_path, event_dir):
-    """End-to-end composition: file stream → watermarked tumbling
-    window counts → exactly-once Iceberg appends. After both delivery
-    waves the table's FINALIZED windows must equal the batch
-    aggregation over the same data (append mode only emits windows the
-    watermark has closed), and re-running with the same checkpoint
-    adds nothing."""
-    from pyspark.sql import functions as F
-
-    from ksj2gp_spark.sinks import iceberg
-    from ksj2gp_spark.streaming import events as se
-    from ksj2gp_spark.streaming.iceberg_sink import run_stream_to_iceberg
-
-    src, _files, _staged = event_dir
-    table = str(tmp_path / "win_tbl")
-    ckpt = str(tmp_path / "ckpt_win")
-
-    for _ in range(2):  # two availableNow runs over the growing source
-        stream = se.read_event_stream(spark, src, max_files=1)
-        agg = se.windowed_event_counts(stream)
-        q = run_stream_to_iceberg(agg, table, ckpt)
-        q.awaitTermination(180)
-
-    got = iceberg.read(spark, table).toPandas()
-    # exactly-once: one row per (window, type)
-    assert not got.duplicated(["window_start", "event_type"]).any()
-
-    batch = (
-        se.windowed_event_counts(spark.read.parquet(src))
-        .toPandas()
-        .set_index(["window_start", "event_type"])
-    )
-    got_i = got.set_index(["window_start", "event_type"])
-    # every emitted (finalized) window matches the batch answer exactly
-    assert len(got_i) > 0
-    for idx, row in got_i.iterrows():
-        assert row["n_events"] == batch.loc[idx, "n_events"], idx
-        assert row["sum_value_cents"] == batch.loc[idx, "sum_value_cents"]
-
-    # idempotent re-run: no new snapshots of data
-    before = iceberg.read(spark, table).count()
-    stream = se.read_event_stream(spark, src, max_files=1)
-    q = run_stream_to_iceberg(
-        se.windowed_event_counts(stream), table, ckpt
-    )
-    q.awaitTermination(120)
-    assert iceberg.read(spark, table).count() == before
